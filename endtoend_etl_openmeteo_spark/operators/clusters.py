@@ -527,9 +527,13 @@ def _round_half_up(x: float, dp: int) -> float:
     (``Double.toString`` ≡ Python ``repr(float)``), then setScale(dp,
     HALF_UP) — NOT Python's banker's ``round``. Bit-for-bit parity is
     what lets the local power iteration reproduce the distributed loop's
-    per-round quantized fixed point."""
+    per-round quantized fixed point. NaN and ±inf come back unchanged,
+    as Spark's round returns them (Decimal cannot quantize them)."""
+    import math
     from decimal import ROUND_HALF_UP, Decimal
 
+    if not math.isfinite(x):
+        return float(x)
     return float(
         Decimal(repr(float(x))).quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP)
     )
@@ -542,10 +546,11 @@ def _round_half_up_vec(x, dp: int):
     Decimal path whenever the scaled value's fractional part is decidedly
     away from the .5 tie boundary (the shortest-repr decimal deviates
     from the double by <= half an ulp, and the scaling multiply adds at
-    most a few ulps, so a guard band of 1e-3 at |y| <= ~1e10 covers the
-    combined error with orders-of-magnitude margin). Values inside the
-    guard band — or too large for the fractional part to be trustworthy —
-    fall back per-element to the exact Decimal path, so the result is
+    most a few ulps — under 1e-4 of the scaled value's fractional part
+    while |y| < 2^36 — so a guard band of 1e-3 covers the combined error
+    with margin). Values inside the guard band, at |y| >= 2^36, or
+    non-finite (NaN compares False, so only an explicit mask catches it)
+    fall back per-element to the exact scalar path, so the result is
     bit-for-bit `[_round_half_up(v, dp) for v in x]` at C speed for the
     overwhelming majority of elements (the ADVICE-flagged O(N·iters)
     Python-Decimal wall on near-threshold graphs)."""
@@ -553,9 +558,12 @@ def _round_half_up_vec(x, dp: int):
 
     scale = 10.0 ** dp
     y = x * scale
-    out = np.floor(y + 0.5) / scale
-    frac = y - np.floor(y)
-    unsafe = (np.abs(frac - 0.5) <= 1e-3) | (np.abs(y) >= 2.0 ** 36)
+    with np.errstate(invalid="ignore"):
+        out = np.floor(y + 0.5) / scale
+        frac = y - np.floor(y)
+    unsafe = (
+        (np.abs(frac - 0.5) <= 1e-3) | (np.abs(y) >= 2.0 ** 36) | ~np.isfinite(y)
+    )
     if unsafe.any():
         for i in np.nonzero(unsafe)[0]:
             out[i] = _round_half_up(float(x[i]), dp)

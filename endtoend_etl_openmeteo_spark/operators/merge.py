@@ -7,7 +7,8 @@ provides it as a library operator:
 
     union(affected target partitions, new batch)
       → row_number() over key ordered by order_col desc → keep first
-      → dynamic partition overwrite
+      → ONE partitioned write into a staging dir beside the target
+      → per-partition directory renames into the target
 
 Scale design (the part that must survive 100 TB):
 - **Partition-scoped, never full-table.** Only partitions present in the
@@ -15,10 +16,18 @@ Scale design (the part that must survive 100 TB):
   100 TB table touches a handful of partitions. The partition values of the
   batch are collected (small by construction — a batch's distinct partition
   keys) and pushed as an IN filter so partition pruning limits the
-  read-back.
+  read-back. A caller that already collected them passes ``batch_parts``.
 - The dedup window shuffles on the merge keys only — no global sort.
-- ``partitionOverwriteMode=dynamic`` makes the final write replace exactly
-  the touched partitions atomically-per-partition.
+- **Written once, committed by rename.** The merged rows are written once,
+  ``partitionBy(partition_cols)``, into a fresh staging directory on the
+  target's own filesystem, so the plan never reads the files it replaces
+  and the staged copy survives executor loss. Each staged leaf partition
+  directory then replaces its target counterpart with Hadoop
+  ``FileSystem`` renames — the rename Spark's own dynamic-overwrite
+  committer does, without its session-global ``partitionOverwriteMode``.
+  The old directory moves into staging BEFORE the new one moves into
+  place, so every partition's data exists somewhere at every instant;
+  staging is deleted only after the last partition commits.
 """
 
 from __future__ import annotations
@@ -50,37 +59,65 @@ def dedup_last_write_wins(
     )
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _path_exists(spark: SparkSession, path: str) -> bool:
     """Quiet existence check through Hadoop's FileSystem (a speculative
     spark.read would log a full FileNotFoundException stack on first run)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     fs.delete(hpath, True)
 
 
-def _stage_and_reread(
-    spark: SparkSession, df: DataFrame, base_path: str
-) -> tuple[DataFrame, str]:
-    """Materialize ``df`` to a staging dir beside ``base_path`` and re-read.
+def _leaf_partitions(fs, root, depth: int) -> list[tuple[str, object]]:
+    """(relative path like ``a=1/b=2``, Hadoop Path) of each partition
+    directory ``depth`` levels under ``root``; ``[("", root)]`` at depth 0.
+    Hidden names (``_SUCCESS``, ``.crc`` files) are skipped, as readers
+    skip them."""
+    level = [("", root)]
+    for _ in range(depth):
+        children = []
+        for rel, path in level:
+            for st in fs.listStatus(path):
+                name = st.getPath().getName()
+                if st.isDirectory() and not name.startswith(("_", ".")):
+                    children.append((f"{rel}/{name}" if rel else name, st.getPath()))
+        level = children
+    return level
 
-    Needed before dynamic-partition-overwriting files the plan itself reads.
-    localCheckpoint would be cheaper but stores UNREPLICATED executor-local
-    blocks: on a real cluster an executor loss mid-write truncates lineage
-    and fails the merge unrecoverably. The staging copy lives on the same
-    durable filesystem (HDFS/S3) as the target, so it survives executor
-    loss; caller deletes it after the final write commits.
-    """
-    staging = base_path.rstrip("/") + f"__stage_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    return spark.read.parquet(staging), staging
+
+def _commit_staged(spark: SparkSession, staged: str, old: str, target: str,
+                   depth: int) -> None:
+    """Move each leaf partition under ``staged`` into ``target``, first
+    moving the partition it replaces to the same place under ``old``.
+
+    Hadoop's rename into an EXISTING directory nests the source inside it
+    instead of replacing it, so the target leaf is always moved away
+    before the new one is renamed in. A ``False`` rename raises."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, staged_root = _fs(spark, staged)
+
+    def sub(root: str, rel: str):
+        return Path(f"{root}/{rel}" if rel else root)
+
+    def rename(src, dst) -> None:
+        fs.mkdirs(dst.getParent())
+        if not fs.rename(src, dst):
+            raise OSError(f"rename {src} -> {dst} failed")
+
+    for rel, src in _leaf_partitions(fs, staged_root, depth):
+        dst = sub(target, rel)
+        if fs.exists(dst):
+            rename(dst, sub(old, rel))
+        rename(src, dst)
 
 
 def merge_upsert(
@@ -90,84 +127,92 @@ def merge_upsert(
     keys: list[str],
     order_col: str,
     partition_cols: list[str] | None = None,
+    batch_parts: list | None = None,
 ) -> None:
     """Last-write-wins merge of ``new`` into the Parquet table at
     ``target_path`` keyed by ``keys``, newest-by-``order_col`` winning —
     the reference's upsert semantics (S8/J4/T4).
 
+    ``batch_parts`` is the batch's distinct partition values as rows
+    (what ``new.select(*partition_cols).distinct().collect()`` returns);
+    a caller that needs them too (the gold refresh) collects them once and
+    passes them in. Without it the merge collects them itself.
+
     Idempotent: re-merging the same batch leaves the table unchanged.
     An EMPTY batch is a no-op — without the early return it would fall
     through to ``affected = target`` (no partition predicate) and
-    stage + rewrite the ENTIRE table to change nothing, paying a
-    full-table copy and exposing every partition to the overwrite
-    window (a quarantine gate that rejects a whole micro-batch hits
-    exactly this).
+    rewrite the ENTIRE table to change nothing (a quarantine gate that
+    rejects a whole micro-batch hits exactly this).
+
+    The first write into a missing target is one direct write. Otherwise
+    the merged partitions are staged and committed by rename (module
+    docstring). A failed staged write deletes staging and leaves the
+    target untouched; a commit that fails part-way keeps staging — it
+    holds the not-yet-committed and the replaced partitions — and names
+    it in the raised error.
     """
     partition_cols = partition_cols or []
 
-    exists = _path_exists(spark, target_path)
-    if exists:
-        target = spark.read.parquet(target_path)
-
-    if exists:
-        if partition_cols:
-            # Partition-scoped read-back: only partitions the batch touches.
-            # eqNullSafe, not ==: a plain equality against a NULL partition
-            # value never matches, the null partition's existing rows are
-            # excluded from `affected`, and the dynamic overwrite would
-            # replace the whole __HIVE_DEFAULT_PARTITION__ with batch rows
-            # only — silent deletion of every pre-existing key there.
-            batch_parts = new.select(*partition_cols).distinct().collect()
-            if not batch_parts:
-                return  # empty batch: nothing to merge, nothing to touch
-            pred = None
-            for row in batch_parts:
-                clause = None
-                for c in partition_cols:
-                    eq = F.col(c).eqNullSafe(F.lit(row[c]))
-                    clause = eq if clause is None else (clause & eq)
-                pred = clause if pred is None else (pred | clause)
-            affected = target.filter(pred) if pred is not None else target
-        else:
-            if new.isEmpty():
-                return  # empty batch: a full-table rewrite would be a no-op
-            affected = target
-        # source tag: on an exact order_col tie the BATCH row must win
-        # (the reference's ON CONFLICT DO UPDATE always takes the new row)
-        merged = dedup_last_write_wins(
-            affected.withColumn("__src", F.lit(0)).unionByName(
-                new.select(*affected.columns).withColumn("__src", F.lit(1))
-            ),
-            keys,
-            order_col,
-            tiebreak_cols=["__src"],
-        ).drop("__src")
-    else:
-        merged = dedup_last_write_wins(new, keys, order_col)
-
-    # Dynamic overwrite rewrites only the partitions present in `merged`
-    # (engine conf partitionOverwriteMode=dynamic); when the target already
-    # exists the DataFrame must be materialized durably first — it reads the
-    # very files the write will replace.
-    staging = None
-    if exists:
-        merged, staging = _stage_and_reread(spark, merged, target_path)
-    # Pin dynamic overwrite for THIS write instead of trusting the ambient
-    # session conf: under Spark's static default, overwrite+partitionBy
-    # deletes every partition NOT in the batch — near-total data loss from
-    # a one-partition merge (the index_maintain set-and-restore pattern).
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        if partition_cols:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        writer = merged.write.mode("overwrite")
+    if not _path_exists(spark, target_path):
+        writer = dedup_last_write_wins(new, keys, order_col).write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        if staging is not None:
-            _delete_path(spark, staging)
+        return
+
+    target = spark.read.parquet(target_path)
+    if partition_cols:
+        # Partition-scoped read-back: only partitions the batch touches.
+        # eqNullSafe, not ==: a plain equality against a NULL partition
+        # value never matches, the null partition's existing rows would be
+        # excluded from `affected`, and the commit would replace the whole
+        # __HIVE_DEFAULT_PARTITION__ with batch rows only — silent deletion
+        # of every pre-existing key there.
+        if batch_parts is None:
+            batch_parts = new.select(*partition_cols).distinct().collect()
+        if not batch_parts:
+            return  # empty batch: nothing to merge, nothing to touch
+        pred = None
+        for row in batch_parts:
+            clause = None
+            for c in partition_cols:
+                eq = F.col(c).eqNullSafe(F.lit(row[c]))
+                clause = eq if clause is None else (clause & eq)
+            pred = clause if pred is None else (pred | clause)
+        affected = target.filter(pred)
+    else:
+        if new.isEmpty():
+            return  # empty batch: a full-table rewrite would be a no-op
+        affected = target
+    # source tag: on an exact order_col tie the BATCH row must win
+    # (the reference's ON CONFLICT DO UPDATE always takes the new row)
+    merged = dedup_last_write_wins(
+        affected.withColumn("__src", F.lit(0)).unionByName(
+            new.select(*affected.columns).withColumn("__src", F.lit(1))
+        ),
+        keys,
+        order_col,
+        tiebreak_cols=["__src"],
+    ).drop("__src")
+
+    staging = target_path.rstrip("/") + f"__stage_{uuid.uuid4().hex[:8]}"
+    staged = f"{staging}/new"
+    try:
+        writer = merged.write
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(staged)
+    except BaseException:
+        _delete_path(spark, staging)
+        raise
+    try:
+        _commit_staged(spark, staged, f"{staging}/old", target_path, len(partition_cols))
+    except Exception as e:
+        raise RuntimeError(
+            f"merge into {target_path} failed part-way through its commit; "
+            f"uncommitted and replaced partitions are kept in {staging}"
+        ) from e
+    _delete_path(spark, staging)
 
 
 def agg_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:

@@ -23,6 +23,7 @@ from endtoend_etl_openmeteo_spark.operators.explode import (
     unzip_hourly,
 )
 from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
+from endtoend_etl_openmeteo_spark.schemas import FCT_CITY_DAY_SCHEMA
 from endtoend_etl_openmeteo_spark.sources.bronze import read_bronze
 
 
@@ -83,6 +84,21 @@ def run_elt(
             (F.col("timestamp") >= F.lit(start)) & (F.col("timestamp") < F.lit(end))
         )
 
+    return _load_and_refresh(spark, hourly, silver_path, gold_path)
+
+
+def _load_and_refresh(
+    spark: SparkSession, hourly: DataFrame, silver_path: str, gold_path: str | None
+) -> DataFrame:
+    """Merge ``hourly`` into silver, then refresh gold for the cities it
+    touched (or return the mart over silver when there is no gold table).
+
+    The touched cities are collected ONCE and shared by the merge's
+    partition scope and the gold refresh. Silver and gold are re-read
+    with known schemas — the batch's own and FCT_CITY_DAY_SCHEMA — so no
+    footer-inference job runs; partition discovery still appends ``city``
+    last, as an inferring read would."""
+    parts = hourly.select("city").distinct().collect()
     merge_upsert(
         spark,
         hourly,
@@ -90,13 +106,15 @@ def run_elt(
         keys=["city", "timestamp"],
         order_col="_ingested_at",
         partition_cols=["city"],
+        batch_parts=parts,
     )
-
-    silver = spark.read.parquet(silver_path)
-    if gold_path is not None:
-        refresh_gold_incremental(spark, hourly, silver, gold_path)
-        return spark.read.parquet(gold_path)
-    return fct_city_day(silver)
+    silver = spark.read.schema(hourly.schema).parquet(silver_path)
+    if gold_path is None:
+        return fct_city_day(silver)
+    refresh_gold_incremental(
+        spark, hourly, silver, gold_path, touched=[r.city for r in parts]
+    )
+    return spark.read.schema(FCT_CITY_DAY_SCHEMA).parquet(gold_path)
 
 
 def backfill_missing(
@@ -157,22 +175,9 @@ def backfill_missing(
         raw = payloads_to_df(spark, payloads)
         write_bronze(raw, bronze_path)  # archive; processing uses `raw` directly
         dq_gate(flatten_validation_records(raw), REFERENCE_WEATHER_SUITE)
-        batch_hourly = unzip_hourly(raw)
-        merge_upsert(
-            spark,
-            batch_hourly,
-            silver_path,
-            keys=["city", "timestamp"],
-            order_col="_ingested_at",
-            partition_cols=["city"],
-        )
-        silver = spark.read.parquet(silver_path)
-        if gold_path is not None:
-            refresh_gold_incremental(spark, batch_hourly, silver, gold_path)
-            return spark.read.parquet(gold_path)
-        return fct_city_day(silver)
+        return _load_and_refresh(spark, unzip_hourly(raw), silver_path, gold_path)
     if gold_path is not None:
-        return spark.read.parquet(gold_path)
+        return spark.read.schema(FCT_CITY_DAY_SCHEMA).parquet(gold_path)
     return fct_city_day(silver)
 
 
@@ -181,19 +186,22 @@ def refresh_gold_incremental(
     batch: DataFrame,
     silver: DataFrame,
     gold_path: str,
+    touched: list | None = None,
 ) -> None:
     """Rebuild the gold mart ONLY for the city partitions the batch touched.
 
     The reference recomputes the whole mart on every dbt run
     (fct_city_day.sql materialized='table'); at 100 TB that full rebuild is
     the scale killer — a 24-row hourly batch must not re-aggregate years of
-    history. Touched cities come from the batch (small by construction);
-    partition pruning limits the silver re-read, and dynamic partition
-    overwrite replaces only those cities' gold partitions.
+    history. Touched cities come from the batch (small by construction) —
+    or from ``touched`` when the caller already collected them; partition
+    pruning limits the silver re-read, and dynamic partition overwrite
+    replaces only those cities' gold partitions.
     """
     from endtoend_etl_openmeteo_spark.operators.merge import _path_exists
 
-    touched = [r.city for r in batch.select("city").distinct().collect()]
+    if touched is None:
+        touched = [r.city for r in batch.select("city").distinct().collect()]
     if not touched:
         return  # empty batch: no partition to refresh
     if not _path_exists(spark, gold_path):
@@ -214,5 +222,12 @@ def refresh_gold_incremental(
     # write never overwrites its own input (localCheckpoint here would add an
     # unreplicated-block availability risk on a real cluster for nothing).
     updated = fct_city_day(scoped)
-    # dynamic partitionOverwriteMode (engine conf): only touched cities move
-    updated.write.mode("overwrite").partitionBy("city").parquet(gold_path)
+    # Dynamic overwrite pinned on THIS writer, not trusted from the session:
+    # under Spark's static default, overwrite+partitionBy would delete every
+    # city partition the batch did not touch.
+    (
+        updated.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("city")
+        .parquet(gold_path)
+    )

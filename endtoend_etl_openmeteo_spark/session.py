@@ -10,9 +10,12 @@ Design decisions:
   explicit ``from_utc_timestamp``.
 - AQE on — runtime partition coalescing and skew-join splitting are the
   scale-out levers that matter at 100 TB (skewed city/user keys).
-- ``partitionOverwriteMode=dynamic`` — ``merge_upsert`` rewrites only the
-  partitions that received new keys, never the whole table (a full-table
-  rewrite is the thing that does NOT survive a 100x scale-up).
+- ``partitionOverwriteMode=dynamic`` — an overwrite with ``partitionBy``
+  replaces only the partitions it writes, never the whole table (a
+  full-table rewrite is the thing that does NOT survive a 100x scale-up).
+  Writers whose correctness depends on it also pin it per write
+  (``.option("partitionOverwriteMode", "dynamic")``); ``merge_upsert``
+  does not use it at all — it commits staged partitions by rename.
 - shuffle partitions default to the local core count; on a real cluster this
   is overridden (or left to AQE's coalescing with a high initial value).
 """

@@ -467,11 +467,10 @@ def run_streaming_elt(
         from endtoend_etl_openmeteo_spark.operators.dq import dq_gate, split_valid
 
         # Evaluate the bronze JSON flatten ONCE per epoch, not once per
-        # sink: without the checkpoint the quarantine write, the merge's
-        # partition-discovery collect, the merge union write, and the
-        # gold-refresh collect each re-read and re-flatten the landing
-        # files (~4x ingest cost) — the run_streaming_corpus_ingest
-        # discipline. Executor loss mid-epoch fails the task and
+        # sink: without the checkpoint the quarantine write, the
+        # touched-cities collect, the merge's staged write, and the gold
+        # refresh each re-read and re-flatten the landing files — the
+        # run_streaming_corpus_ingest discipline. Executor loss mid-epoch fails the task and
         # Structured Streaming replays the epoch from source, so the
         # unreplicated blocks are recoverable here.
         batch = raw_batch.localCheckpoint(eager=True)
@@ -503,6 +502,9 @@ def run_streaming_elt(
                 )
             else:
                 dq_gate(batch, expectations)
+        # one collect of the touched cities, shared by the merge's
+        # partition scope and the gold refresh
+        parts = batch.select("city").distinct().collect()
         merge_upsert(
             batch.sparkSession,
             batch,
@@ -510,6 +512,7 @@ def run_streaming_elt(
             keys=["city", "timestamp"],
             order_col="_ingested_at",
             partition_cols=["city"],
+            batch_parts=parts,
         )
         if gold_path is not None:
             # bronze -> silver -> gold inside ONE micro-batch: the gold
@@ -527,6 +530,7 @@ def run_streaming_elt(
                 batch,
                 batch.sparkSession.read.parquet(silver_path),
                 gold_path,
+                touched=[r.city for r in parts],
             )
 
     return _start_foreach_batch(hourly, merge_batch, checkpoint_path, available_now)
@@ -621,7 +625,8 @@ def run_streaming_mart_maintenance(
         )
         # localCheckpoint before the overwrite commit: `merged` reads the
         # very files the new version supersedes — materialize first so the
-        # plan cannot observe its own write (the _stage_and_reread rule).
+        # plan cannot observe its own write (merge_upsert stages its
+        # merged rows outside the target for the same reason).
         # Released after the commit: a maintenance tick must leave ZERO
         # pinned blocks behind or a long-lived mart driver leaks one
         # state copy per epoch.

@@ -143,3 +143,29 @@ def test_vectorized_half_up_matches_decimal_path():
         got = _round_half_up_vec(x, dp)
         want = [_round_half_up(float(v), dp) for v in batch]
         assert got.tolist() == want
+
+
+def test_vectorized_half_up_non_finite_matches_scalar_and_spark(spark):
+    """NaN and ±inf compare False against every guard-band bound, so only
+    an explicit mask routes them to the scalar path; both paths must
+    return them unchanged, as Spark's round does."""
+    import math
+
+    import numpy as np
+
+    from endtoend_etl_openmeteo_spark.operators.clusters import (
+        _round_half_up,
+        _round_half_up_vec,
+    )
+
+    vals = [math.nan, math.inf, -math.inf, 0.123456789049, -2.5e-11]
+    got = _round_half_up_vec(np.asarray(vals, dtype=np.float64), 10).tolist()
+    want = [_round_half_up(v, 10) for v in vals]
+    spark_row = spark.createDataFrame([(v,) for v in vals], "x double").select(
+        F.round("x", 10).alias("r")
+    ).collect()
+    for g, w, s in zip(got, want, (r.r for r in spark_row)):
+        if math.isnan(w):
+            assert math.isnan(g) and math.isnan(s)
+        else:
+            assert g == w == s

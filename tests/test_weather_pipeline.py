@@ -236,6 +236,97 @@ def test_merge_rewrites_only_touched_partitions(spark, workdir):
     assert ("Warsaw", 99.0) in got and len(got) == 5
 
 
+def _stage_dirs(path):
+    """Staging directories left beside the table at ``path``."""
+    base = Path(path)
+    return [p.name for p in base.parent.iterdir() if p.name.startswith(base.name + "__stage_")]
+
+
+def _leaf_files(path):
+    """:func:`_partition_files` one level down — {"a=../b=..": files} for
+    a table partitioned on two columns."""
+    return {
+        f"{top.name}/{leaf}": files
+        for top in Path(path).iterdir()
+        if top.is_dir() and not top.name.startswith(("_", "."))
+        for leaf, files in _partition_files(str(top)).items()
+    }
+
+
+def test_merge_commits_leaf_partitions_two_levels_deep(spark, workdir):
+    """Two partition columns: the commit renames leaf directories at depth
+    2 (a NULL and an escaped second-level value included), replaces only
+    the touched leaves, and keeps the untouched sibling leaf under the
+    same parent."""
+    path = str(workdir / "t2")
+    t0, t1 = dt.datetime(2026, 1, 1), dt.datetime(2026, 1, 2)
+    schema = "k long, a string, b string, v string, ord timestamp"
+    merge_upsert(
+        spark,
+        spark.createDataFrame(
+            [(1, "x", "p", "v1", t0), (2, "x", None, "v2", t0),
+             (3, "x", "q", "v3", t0), (4, "y", "p", "v4", t0),
+             (7, "y", "c:d/e", "v7", t0)],
+            schema,
+        ),
+        path, ["k"], "ord", partition_cols=["a", "b"],
+    )
+    before = _leaf_files(path)
+    assert set(before) == {
+        "a=x/b=p", "a=x/b=__HIVE_DEFAULT_PARTITION__", "a=x/b=q", "a=y/b=p",
+        "a=y/b=c%3Ad%2Fe",
+    }
+
+    merge_upsert(
+        spark,
+        spark.createDataFrame(
+            [(2, "x", None, "v2new", t1), (5, "x", None, "v5", t1),
+             (6, "x", "p", "v6", t1), (7, "y", "c:d/e", "v7new", t1)],
+            schema,
+        ),
+        path, ["k"], "ord", partition_cols=["a", "b"],
+    )
+    after = _leaf_files(path)
+    touched = {p for p in before if before[p] != after.get(p)}
+    assert touched == {
+        "a=x/b=p", "a=x/b=__HIVE_DEFAULT_PARTITION__", "a=y/b=c%3Ad%2Fe"
+    }
+    assert set(after) == set(before)  # replaced, not nested inside the old leaf
+    rows = {r.k: (r.a, r.b, r.v) for r in spark.read.parquet(path).collect()}
+    assert rows == {
+        1: ("x", "p", "v1"), 2: ("x", None, "v2new"), 3: ("x", "q", "v3"),
+        4: ("y", "p", "v4"), 5: ("x", None, "v5"), 6: ("x", "p", "v6"),
+        7: ("y", "c:d/e", "v7new"),
+    }
+    assert _stage_dirs(path) == []
+
+
+def test_merge_failed_staged_write_leaves_target_untouched(spark, workdir):
+    """A batch whose staged write fails at execution (an ANSI cast error
+    inside the merged plan) must leave every target file byte-identical
+    and delete its staging directory."""
+    path = str(workdir / "silver_fail")
+    t0 = dt.datetime(2025, 10, 1, 12, 0)
+    ing = dt.datetime(2025, 10, 1, 13, 0)
+    initial = spark.createDataFrame(
+        [(c, t0, 1.0, 0.0, 1.0, ing) for c in ("Warsaw", "Berlin")],
+        WEATHER_HOURLY_SCHEMA,
+    )
+    merge_upsert(spark, initial, path, ["city", "timestamp"], "_ingested_at", ["city"])
+    before = _partition_files(path)
+
+    bad = spark.createDataFrame(
+        [("Warsaw", t0, "not-a-number", 0.0, 1.0, dt.datetime(2025, 10, 1, 14, 0))],
+        "city string, timestamp timestamp, temperature_2m string, "
+        "precipitation double, wind_speed_10m double, _ingested_at timestamp",
+    ).withColumn("temperature_2m", F.col("temperature_2m").cast("double"))
+    with pytest.raises(Exception, match="(?i)cast|not-a-number"):
+        merge_upsert(spark, bad, path, ["city", "timestamp"], "_ingested_at", ["city"])
+
+    assert _partition_files(path) == before
+    assert _stage_dirs(path) == []
+
+
 def test_merge_readback_prunes_to_batch_partitions(spark, workdir):
     """The read-back side of the scope claim: the merge's union plan filters
     the target on the batch's partition values, so partition pruning limits
@@ -315,6 +406,84 @@ def test_elt_end_to_end_idempotent_and_gated(spark, workdir):
     assert spark.read.parquet(silver).count() == before
 
 
+def test_warm_elt_cycle_job_count_stays_pinned(spark, workdir):
+    """One warm run_elt cycle into an existing silver and gold: the touched
+    cities are collected once, the merge writes once, and silver and gold
+    are re-read with known schemas. Any of those regressing adds whole
+    scheduled jobs that no result check would notice, so the count itself
+    is pinned via the status tracker (observed 9; a staged re-read, a
+    second merge write, a second cities collect or an inferring re-read
+    each adds at least one)."""
+    bronze = str(workdir / "bronze")
+    silver = str(workdir / "silver")
+    gold = str(workdir / "gold")
+    write_bronze(_bronze_df(spark, GOOD_ROWS), bronze)
+    at = F.lit("2025-10-31 13:00:00").cast("timestamp")
+    run_elt(spark, bronze, silver, gold, ingested_at=at)  # cold: creates both
+
+    sc = spark.sparkContext
+    label = "jc_warm_elt"
+    sc.setJobGroup(label, label)
+    try:
+        out = run_elt(spark, bronze, silver, gold, ingested_at=at)
+    finally:
+        sc.setJobGroup(None, None)
+    n = len(sc.statusTracker().getJobIdsForGroup(label))
+    assert n <= 9, f"warm run_elt cycle ran {n} jobs"
+    assert _stage_dirs(silver) == []
+    assert out.columns == [
+        "day", "temperature_2m", "precipitation", "wind_speed_10m", "city"
+    ]
+
+
+def test_gold_refresh_and_merge_keep_other_cities_under_static_overwrite(
+    spark, workdir
+):
+    """Neither the merge nor the gold refresh may trust the session's
+    partitionOverwriteMode: under Spark's static default an overwrite with
+    partitionBy deletes every partition the write does not carry, so a
+    one-city batch would wipe every other city."""
+    from endtoend_etl_openmeteo_spark.pipeline import refresh_gold_incremental
+
+    silver_path = str(workdir / "silver")
+    gold_path = str(workdir / "gold")
+    ing = dt.datetime(2025, 10, 2)
+    rows = [
+        (c, dt.datetime(2025, 10, 1, h), t, 0.0, 1.0, ing)
+        for c, t in (("Warsaw", 10.0), ("Berlin", 20.0), ("Paris", 30.0))
+        for h in range(4)
+    ]
+    keys = ["city", "timestamp"]
+    merge_upsert(
+        spark, spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA), silver_path,
+        keys, "_ingested_at", ["city"],
+    )
+    silver = spark.read.parquet(silver_path)
+    refresh_gold_incremental(spark, silver, silver, gold_path)
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "static")
+    try:
+        batch = spark.createDataFrame(
+            [("Warsaw", dt.datetime(2025, 10, 1, 5), 50.0, 0.0, 1.0, ing)],
+            WEATHER_HOURLY_SCHEMA,
+        )
+        merge_upsert(spark, batch, silver_path, keys, "_ingested_at", ["city"])
+        refresh_gold_incremental(
+            spark, batch, spark.read.parquet(silver_path), gold_path
+        )
+    finally:
+        spark.conf.set(conf, prev)
+
+    assert spark.read.parquet(silver_path).count() == 13
+    gold = {
+        r.city: round(r.temperature_2m, 6)
+        for r in spark.read.parquet(gold_path).collect()
+    }
+    assert gold == {"Warsaw": 18.0, "Berlin": 20.0, "Paris": 30.0}
+
+
 def test_fct_city_day_matches_reference_shape(spark):
     silver = spark.createDataFrame(_silver_rows(), WEATHER_HOURLY_SCHEMA)
     mart = fct_city_day(silver)
@@ -386,7 +555,7 @@ def test_merge_tie_on_order_col_keeps_batch_row(spark, tmp_path):
 def test_merge_preserves_null_partition_rows(spark, tmp_path):
     """eqNullSafe read-back: merging a batch that touches the NULL
     partition must keep that partition's other existing keys (plain ==
-    never matches null, and dynamic overwrite would wipe them)."""
+    never matches null, and the partition commit would wipe them)."""
     import datetime as dt
 
     from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
