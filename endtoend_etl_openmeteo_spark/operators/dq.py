@@ -5,9 +5,12 @@ Re-expresses the reference's Great Expectations suite
 single-pass aggregate compiler:
 
 - every expectation compiles to one violation-counting aggregate column;
-- ALL expectations run in ONE ``agg()`` over the data — one scan, one job,
-  no per-expectation passes (GE evaluates per-expectation; at 100 TB that
-  multiplier is the difference between one scan and eight);
+- ALL expectations are evaluated in one scan, with no per-expectation
+  passes (GE evaluates per-expectation; at 100 TB that multiplier is the
+  difference between one scan and eight). :func:`dq_gate` attaches them
+  as an ``Observation`` to one ``noop`` write, which is one Spark job;
+  :func:`compile_expectations` returns them as an ``agg()``, which under
+  AQE runs as two jobs (the shuffle stage, then the final aggregate);
 - ``between`` ignores nulls, exactly like GE: a null value passes a bounds
   check and only fails an explicit ``not_null`` (parity detail, SURVEY §2.11);
 - ``mostly`` thresholds generalize pass/fail to
@@ -101,6 +104,13 @@ def _element_count(e: Expectation) -> Column:
     return F.count(F.col(e.column))
 
 
+#: Schema of the per-expectation results (compile_expectations, dq_gate).
+RESULT_SCHEMA = (
+    "expectation string, col_name string, violations long, n_rows long, "
+    "passed boolean"
+)
+
+
 def compile_expectations(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     """Compile a suite into ONE aggregate pass.
 
@@ -111,11 +121,7 @@ def compile_expectations(df: DataFrame, expectations: list[Expectation]) -> Data
     if not expectations:
         # stack(lit(0)) with no value columns fails analysis — an empty
         # suite passes vacuously (zero rows), it doesn't crash the stream
-        return df.sparkSession.createDataFrame(
-            [],
-            "expectation string, col_name string, violations long, "
-            "n_rows long, passed boolean",
-        )
+        return df.sparkSession.createDataFrame([], RESULT_SCHEMA)
     aggs = (
         [F.count(F.lit(1)).alias("n_rows")]
         + [_violation_count(e).alias(f"v{i}") for i, e in enumerate(expectations)]
@@ -197,25 +203,25 @@ def split_valid(
     return df.filter(~viol), df.filter(viol)
 
 
-def observe_expectations(
-    df: DataFrame, expectations: list[Expectation], name: str = "dq"
-):
+def observe_expectations(df: DataFrame, expectations: list[Expectation]):
     """Attach the expectation metrics to df's NEXT action via
     ``DataFrame.observe`` — the metrics ride the write/collect itself, so
     monitoring costs ZERO extra scans (vs compile_expectations' dedicated
     aggregate pass). Returns ``(observed_df, observation)``; after an
     action runs, feed the observation to :func:`observation_results`.
 
-    This is the MONITOR mode: the action has already happened when the
-    metrics surface, so it cannot block a load — gating stays with
-    :func:`dq_gate`, which must scan before the write. ``unique`` is
-    rejected (observe disallows distinct aggregates).
+    Attached to a load's own write this is a MONITOR: the action has
+    already happened when the metrics surface, so it cannot block the
+    load. :func:`dq_gate` attaches it to a scan of its own instead.
+    ``unique`` is rejected (observe disallows distinct aggregates). The
+    observation is unnamed (Spark gives it a random name), so it cannot
+    clash with another observation on the same plan.
     """
     from pyspark.sql import Observation
 
     if any(e.kind == "unique" for e in expectations):
         raise ValueError("unique needs a distinct aggregate; observe() cannot")
-    obs = Observation(name)
+    obs = Observation()
     aggs = (
         [F.count(F.lit(1)).alias("n_rows")]
         + [_violation_count(e).alias(f"v{i}") for i, e in enumerate(expectations)]
@@ -245,17 +251,30 @@ def observation_results(obs, expectations: list[Expectation]) -> list[dict]:
 def dq_gate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     """Run the suite; raise DQValidationError if any expectation fails.
 
-    Returns the metrics DataFrame's collected rows re-wrapped for
-    inspection on success (small: one row per expectation) — REALLY
-    re-wrapped: the gate already paid its one full aggregate scan, so
-    the returned frame is a local relation and a consumer's
-    show()/collect() cannot re-scan the (possibly 100 TB) input."""
-    results = compile_expectations(df, expectations)
-    collected = results.collect()
-    failures = [r.asDict() for r in collected if not r["passed"]]
+    The suite rides one ``noop`` write over ``df`` as an observation
+    (:func:`observe_expectations`), so the gate is one scan and one Spark
+    job. Other observations attached to ``df`` are filled by the same
+    scan. A suite with a ``unique`` expectation needs a distinct
+    aggregate, which ``observe`` forbids, so it runs
+    :func:`compile_expectations` instead (two jobs under AQE).
+
+    On success, returns the results (one row per expectation,
+    :data:`RESULT_SCHEMA`) as a local relation, so a consumer's
+    show()/collect() cannot re-scan the (possibly 100 TB) input. On
+    failure, ``DQValidationError.failures`` holds the failing rows as
+    dicts with the same keys."""
+    if not expectations or any(e.kind == "unique" for e in expectations):
+        results = [r.asDict() for r in compile_expectations(df, expectations).collect()]
+    else:
+        observed, obs = observe_expectations(df, expectations)
+        observed.write.format("noop").mode("overwrite").save()
+        results = observation_results(obs, expectations)
+    failures = [r for r in results if not r["passed"]]
     if failures:
         raise DQValidationError(failures)
-    return df.sparkSession.createDataFrame(collected, results.schema)
+    return df.sparkSession.createDataFrame(
+        [tuple(r.values()) for r in results], RESULT_SCHEMA
+    )
 
 
 #: The reference's exact GE suite (ge/validate_raw_weather.py:143-168),

@@ -16,7 +16,7 @@ Scale design (the part that must survive 100 TB):
   100 TB table touches a handful of partitions. The partition values of the
   batch are collected (small by construction — a batch's distinct partition
   keys) and pushed as an IN filter so partition pruning limits the
-  read-back. A caller that already collected them passes ``batch_parts``.
+  read-back. A caller that already has them passes ``batch_parts``.
 - The dedup window shuffles on the merge keys only — no global sort.
 - **Written once, committed by rename.** The merged rows are written once,
   ``partitionBy(partition_cols)``, into a fresh staging directory on the
@@ -36,6 +36,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def dedup_last_write_wins(
@@ -128,6 +129,7 @@ def merge_upsert(
     order_col: str,
     partition_cols: list[str] | None = None,
     batch_parts: list | None = None,
+    schema: StructType | str | None = None,
 ) -> None:
     """Last-write-wins merge of ``new`` into the Parquet table at
     ``target_path`` keyed by ``keys``, newest-by-``order_col`` winning —
@@ -135,8 +137,15 @@ def merge_upsert(
 
     ``batch_parts`` is the batch's distinct partition values as rows
     (what ``new.select(*partition_cols).distinct().collect()`` returns);
-    a caller that needs them too (the gold refresh) collects them once and
-    passes them in. Without it the merge collects them itself.
+    a caller that already has them (``run_elt`` observes them during the
+    DQ gate's scan) passes them in. Without it the merge collects them
+    itself. A value with no rows in ``new`` is allowed: that partition is
+    rewritten with its own rows.
+
+    ``schema`` is the target's schema (a StructType or DDL string), when
+    the caller knows it; the target is then read with it and no
+    footer-inference job runs. Partition discovery still places the
+    partition columns last. Without it the schema is inferred.
 
     Idempotent: re-merging the same batch leaves the table unchanged.
     An EMPTY batch is a no-op — without the early return it would fall
@@ -160,7 +169,8 @@ def merge_upsert(
         writer.parquet(target_path)
         return
 
-    target = spark.read.parquet(target_path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    target = reader.parquet(target_path)
     if partition_cols:
         # Partition-scoped read-back: only partitions the batch touches.
         # eqNullSafe, not ==: a plain equality against a NULL partition

@@ -2,10 +2,13 @@
 
     extract → validate → load → transform
 
-collapses into ONE Spark job: bronze JSON scan → flatten → DQ gate →
+collapses into one function call: bronze JSON scan → flatten → DQ gate →
 partition-scoped merge into silver → daily mart. The reference's process
-boundaries (Airflow tasks, XCom, psycopg2) become Spark stage boundaries;
-the only shuffles are the merge's key dedup and the mart's groupBy.
+boundaries (Airflow tasks, XCom, psycopg2) become Spark job boundaries. A
+warm cycle into existing silver and gold runs five jobs: the gate's scan
+(which also observes the batch's cities), the merge's staged write (two
+under AQE) and the gold refresh's write (two). The only shuffles are the
+merge's key dedup and the mart's groupBy.
 
 Reference lifecycle traced at /root/reference/airflow/dags/
 etl_openmeteo.py:179-183 (extract:20-109, validate:111-149, load:151-177)
@@ -14,7 +17,7 @@ and dbt/models/marts/fct_city_day.sql:1-11.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from endtoend_etl_openmeteo_spark.operators.dq import REFERENCE_WEATHER_SUITE, dq_gate
@@ -23,7 +26,10 @@ from endtoend_etl_openmeteo_spark.operators.explode import (
     unzip_hourly,
 )
 from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
-from endtoend_etl_openmeteo_spark.schemas import FCT_CITY_DAY_SCHEMA
+from endtoend_etl_openmeteo_spark.schemas import (
+    FCT_CITY_DAY_SCHEMA,
+    WEATHER_HOURLY_SCHEMA,
+)
 from endtoend_etl_openmeteo_spark.sources.bronze import read_bronze
 
 
@@ -70,12 +76,19 @@ def run_elt(
     Idempotent under re-runs and overlapping windows (T2): the merge
     reconciles duplicates exactly like the reference's ON CONFLICT loader.
     Returns the gold DataFrame.
+
+    The batch's cities are observed by the gate's own scan of the
+    validation records, not collected from ``hourly``. After a passing
+    gate every record has a non-null ``time``, so under ``nullpad`` with
+    no ``time_range`` they are exactly ``hourly``'s cities. With
+    ``time_range`` or ``truncate`` they can include a city with no rows
+    left; that city's silver and gold partitions are rewritten with the
+    same content.
     """
     raw = read_bronze(spark, bronze_path)
 
     # validate BEFORE load — failure blocks the load (etl_openmeteo.py:135-149)
-    records = flatten_validation_records(raw)
-    dq_gate(records, REFERENCE_WEATHER_SUITE)
+    parts = _validate(spark, raw)
 
     hourly = unzip_hourly(raw, policy=policy, ingested_at=ingested_at)
     if time_range is not None:
@@ -84,21 +97,50 @@ def run_elt(
             (F.col("timestamp") >= F.lit(start)) & (F.col("timestamp") < F.lit(end))
         )
 
-    return _load_and_refresh(spark, hourly, silver_path, gold_path)
+    return _load_and_refresh(spark, hourly, silver_path, gold_path, parts)
+
+
+def _validate(spark: SparkSession, raw: DataFrame) -> list | None:
+    """Gate ``raw``'s validation records with the reference suite (raises
+    DQValidationError) and return the batch's cities, observed by the
+    gate's own scan.
+
+    The cities are ``Row(city=...)``s, as ``select("city").distinct()
+    .collect()`` returns them; the struct keeps a NULL city, which a bare
+    ``collect_set`` would drop. None means no action ran over the records
+    (a gate replaced by a no-op, say), and the caller collects the cities
+    itself. Observations are filled by a query listener, so a missing
+    value is trusted only after the listener bus has drained."""
+    obs = Observation()
+    records = flatten_validation_records(raw).observe(
+        obs, F.collect_set(F.struct("city")).alias("cities")
+    )
+    dq_gate(records, REFERENCE_WEATHER_SUITE)
+    row = obs._jo.getRowOrEmpty()
+    if not row.isDefined():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        row = obs._jo.getRowOrEmpty()
+    return obs.get["cities"] if row.isDefined() else None
 
 
 def _load_and_refresh(
-    spark: SparkSession, hourly: DataFrame, silver_path: str, gold_path: str | None
+    spark: SparkSession,
+    hourly: DataFrame,
+    silver_path: str,
+    gold_path: str | None,
+    parts: list | None = None,
 ) -> DataFrame:
     """Merge ``hourly`` into silver, then refresh gold for the cities it
     touched (or return the mart over silver when there is no gold table).
 
-    The touched cities are collected ONCE and shared by the merge's
-    partition scope and the gold refresh. Silver and gold are re-read
-    with known schemas — the batch's own and FCT_CITY_DAY_SCHEMA — so no
+    ``parts`` is the batch's cities as ``Row(city=...)``s; without it they
+    are collected here, once. Either way they are shared by the merge's
+    partition scope and the gold refresh. Silver and gold are read with
+    known schemas — the batch's own and FCT_CITY_DAY_SCHEMA — so no
     footer-inference job runs; partition discovery still appends ``city``
     last, as an inferring read would."""
-    parts = hourly.select("city").distinct().collect()
+    if parts is None:
+        parts = hourly.select("city").distinct().collect()
     merge_upsert(
         spark,
         hourly,
@@ -107,6 +149,7 @@ def _load_and_refresh(
         order_col="_ingested_at",
         partition_cols=["city"],
         batch_parts=parts,
+        schema=hourly.schema,
     )
     silver = spark.read.schema(hourly.schema).parquet(silver_path)
     if gold_path is None:
@@ -147,9 +190,6 @@ def backfill_missing(
     Returns the refreshed gold mart. Idempotent: re-running after a full
     backfill finds no gaps and changes nothing.
     """
-    from endtoend_etl_openmeteo_spark.operators.explode import (
-        flatten_validation_records,
-    )
     from endtoend_etl_openmeteo_spark.operators.gaps import (
         chunk_hours,
         find_missing_hours,
@@ -157,7 +197,7 @@ def backfill_missing(
     from endtoend_etl_openmeteo_spark.sources.bronze import write_bronze
     from endtoend_etl_openmeteo_spark.sources.http import payloads_to_df
 
-    silver = spark.read.parquet(silver_path)
+    silver = spark.read.schema(WEATHER_HOURLY_SCHEMA).parquet(silver_path)
     missing = find_missing_hours(silver, start, end, ["city"], keys=city_dim)
     batches = chunk_hours(missing, ["city"], chunk_size=chunk_size).collect()
 
@@ -174,8 +214,8 @@ def backfill_missing(
     if payloads:
         raw = payloads_to_df(spark, payloads)
         write_bronze(raw, bronze_path)  # archive; processing uses `raw` directly
-        dq_gate(flatten_validation_records(raw), REFERENCE_WEATHER_SUITE)
-        return _load_and_refresh(spark, unzip_hourly(raw), silver_path, gold_path)
+        parts = _validate(spark, raw)
+        return _load_and_refresh(spark, unzip_hourly(raw), silver_path, gold_path, parts)
     if gold_path is not None:
         return spark.read.schema(FCT_CITY_DAY_SCHEMA).parquet(gold_path)
     return fct_city_day(silver)
@@ -194,7 +234,7 @@ def refresh_gold_incremental(
     (fct_city_day.sql materialized='table'); at 100 TB that full rebuild is
     the scale killer — a 24-row hourly batch must not re-aggregate years of
     history. Touched cities come from the batch (small by construction) —
-    or from ``touched`` when the caller already collected them; partition
+    or from ``touched`` when the caller already has them; partition
     pruning limits the silver re-read, and dynamic partition overwrite
     replaces only those cities' gold partitions.
     """

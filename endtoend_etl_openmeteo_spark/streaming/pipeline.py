@@ -513,6 +513,7 @@ def run_streaming_elt(
             order_col="_ingested_at",
             partition_cols=["city"],
             batch_parts=parts,
+            schema=batch.schema,
         )
         if gold_path is not None:
             # bronze -> silver -> gold inside ONE micro-batch: the gold
@@ -528,7 +529,7 @@ def run_streaming_elt(
             refresh_gold_incremental(
                 batch.sparkSession,
                 batch,
-                batch.sparkSession.read.parquet(silver_path),
+                batch.sparkSession.read.schema(batch.schema).parquet(silver_path),
                 gold_path,
                 touched=[r.city for r in parts],
             )

@@ -153,3 +153,118 @@ def test_mostly_denominator_is_nonnull_elements_like_ge(spark):
         df, [Expectation("between", "x", lo=0.0, hi=10.0, mostly=0.8)]
     ).collect()[0]
     assert res2["passed"] is True
+
+
+def _gate_outcome(df, suite):
+    """dq_gate's verdict as comparable rows: every result row on success,
+    the failing rows on failure."""
+    try:
+        return True, [r.asDict() for r in dq_gate(df, suite).collect()]
+    except DQValidationError as e:
+        return False, e.failures
+
+
+def _compiled_outcome(df, suite):
+    rows = [r.asDict() for r in compile_expectations(df, suite).collect()]
+    failures = [r for r in rows if not r["passed"]]
+    return (False, failures) if failures else (True, rows)
+
+
+def test_gate_matches_compiled_aggregate_row_for_row(spark):
+    """The one-job observed gate and the compiled aggregate agree on every
+    row, with nulls, out-of-range values and a ``mostly`` threshold met
+    exactly (2 of 10 non-null winds above 10 at mostly=0.8) or missed by
+    one row."""
+    boundary = Expectation("between", "wind_speed_10m", lo=0.0, hi=10.0, mostly=0.8)
+    suite = REFERENCE_WEATHER_SUITE + [boundary]
+
+    def rows(n_windy, extra=()):
+        base = [
+            ("Warsaw", "s3://x", 52.0, 21.0, "UTC", f"2025-10-31T{h:02d}:00",
+             None if h == 0 else 10.0 + h, 0.0, 20.0 if h < n_windy else 5.0)
+            for h in range(10)
+        ]
+        # null wind: not an element of the bounds domain
+        base.append(("Warsaw", "s3://x", 52.0, 21.0, "UTC", "2025-10-31T11:00",
+                     12.0, 0.0, None))
+        return base + list(extra)
+
+    out_of_range = [
+        ("Berlin", "s3://y", 52.5, 13.4, "UTC", None, 150.0, -5.0, 1.0),
+        (None, "s3://y", 52.5, None, "UTC", "2025-10-31T12:00", 1.0, 0.0, 1.0),
+    ]
+    cases = {
+        "boundary met": rows(2),
+        "boundary missed": rows(3),
+        "nulls and out of range": rows(2, out_of_range),
+    }
+    for label, data in cases.items():
+        df = _df(spark, data)
+        got, want = _gate_outcome(df, suite), _compiled_outcome(df, suite)
+        assert got == want, label
+    assert _gate_outcome(_df(spark, rows(2)), suite)[0] is True
+    passed, failures = _gate_outcome(_df(spark, rows(3)), suite)
+    assert not passed and [f["expectation"] for f in failures] == [boundary.name]
+
+
+def test_gate_failures_carry_n_rows(spark):
+    """Consumers (the ELT benchmark among them) read the failure dicts'
+    keys, n_rows included."""
+    with pytest.raises(DQValidationError) as exc:
+        dq_gate(_df(spark, BAD + GOOD), REFERENCE_WEATHER_SUITE)
+    for f in exc.value.failures:
+        assert set(f) == {"expectation", "col_name", "violations", "n_rows", "passed"}
+        assert f["n_rows"] == 4 and f["passed"] is False
+
+
+def test_unique_suite_gates_through_the_aggregate(spark):
+    suite = [Expectation("not_null", "time"), Expectation("unique", "city")]
+    with pytest.raises(DQValidationError) as exc:
+        dq_gate(_df(spark, GOOD + [GOOD[0]]), suite)
+    assert [(f["expectation"], f["violations"]) for f in exc.value.failures] == [
+        ("unique_city", 1)
+    ]
+    assert all(r.passed for r in dq_gate(_df(spark, GOOD), suite).collect())
+
+
+def test_empty_input_passes_without_hanging(spark):
+    """Zero rows (and zero partitions) still complete the observation; a
+    gate that waited on a metric no action fills would never return."""
+    import threading
+
+    inputs = [
+        _df(spark, []),
+        spark.createDataFrame(spark.sparkContext.emptyRDD(), VALIDATION_RECORD_SCHEMA),
+    ]
+    results = []
+
+    def run():
+        results.extend(dq_gate(df, REFERENCE_WEATHER_SUITE).collect() for df in inputs)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "dq_gate did not return on an empty input"
+    for rows in results:
+        assert len(rows) == 8
+        assert all(r.passed and r.violations == 0 and r.n_rows == 0 for r in rows)
+
+
+def test_gate_runs_one_job(spark):
+    """The whole suite, and any observation already attached to the input,
+    rides one scan: one Spark job by the status tracker."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    df = _df(spark, GOOD + EDGE)
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    label = "jc_dq_gate"
+    sc.setJobGroup(label, label)
+    try:
+        dq_gate(observed, REFERENCE_WEATHER_SUITE)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(label)) == 1
+    assert obs.get == {"rows": 3}

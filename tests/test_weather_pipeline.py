@@ -406,14 +406,26 @@ def test_elt_end_to_end_idempotent_and_gated(spark, workdir):
     assert spark.read.parquet(silver).count() == before
 
 
+def _jobs_in(spark, label, fn):
+    """(fn(), number of Spark jobs fn scheduled), by the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(label))
+
+
 def test_warm_elt_cycle_job_count_stays_pinned(spark, workdir):
-    """One warm run_elt cycle into an existing silver and gold: the touched
-    cities are collected once, the merge writes once, and silver and gold
-    are re-read with known schemas. Any of those regressing adds whole
-    scheduled jobs that no result check would notice, so the count itself
-    is pinned via the status tracker (observed 9; a staged re-read, a
-    second merge write, a second cities collect or an inferring re-read
-    each adds at least one)."""
+    """One warm run_elt cycle into an existing silver and gold: the DQ
+    gate's one scan also observes the touched cities, the merge writes
+    once, and silver and gold are read with known schemas. Any of those
+    regressing adds whole scheduled jobs that no result check would
+    notice, so the count itself is pinned via the status tracker
+    (observed 5: the gate 1, the merge write 2, the gold write 2; a
+    cities collect, a staged re-read, a second merge write, an aggregate
+    gate or an inferring read each adds at least one)."""
     bronze = str(workdir / "bronze")
     silver = str(workdir / "silver")
     gold = str(workdir / "gold")
@@ -421,19 +433,107 @@ def test_warm_elt_cycle_job_count_stays_pinned(spark, workdir):
     at = F.lit("2025-10-31 13:00:00").cast("timestamp")
     run_elt(spark, bronze, silver, gold, ingested_at=at)  # cold: creates both
 
-    sc = spark.sparkContext
-    label = "jc_warm_elt"
-    sc.setJobGroup(label, label)
-    try:
-        out = run_elt(spark, bronze, silver, gold, ingested_at=at)
-    finally:
-        sc.setJobGroup(None, None)
-    n = len(sc.statusTracker().getJobIdsForGroup(label))
-    assert n <= 9, f"warm run_elt cycle ran {n} jobs"
+    out, n = _jobs_in(
+        spark, "jc_warm_elt", lambda: run_elt(spark, bronze, silver, gold, ingested_at=at)
+    )
+    assert n <= 5, f"warm run_elt cycle ran {n} jobs"
     assert _stage_dirs(silver) == []
     assert out.columns == [
         "day", "temperature_2m", "precipitation", "wind_speed_10m", "city"
     ]
+
+
+def _hours_payload(hours, temp):
+    return {
+        "latitude": 52.23,
+        "longitude": 21.01,
+        "timezone": "UTC",
+        "hourly": {
+            "time": [h.strftime("%Y-%m-%dT%H:%M") for h in hours],
+            "temperature_2m": [temp] * len(hours),
+            "precipitation": [0.0] * len(hours),
+            "wind_speed_10m": [1.0] * len(hours),
+        },
+    }
+
+
+def test_backfill_job_count_stays_pinned(spark, workdir):
+    """One backfill_missing call that fetches payloads, into an existing
+    silver and gold, runs 10 jobs: the gap search's collect 4, the bronze
+    archive write 1, the gate (which also observes the cities) 1, the
+    merge write 2 and the gold write 2. The silver read uses the known
+    schema, so no inference job runs; a cities collect or an aggregate
+    gate would each add jobs."""
+    from endtoend_etl_openmeteo_spark.pipeline import (
+        backfill_missing,
+        refresh_gold_incremental,
+    )
+
+    silver = str(workdir / "silver")
+    gold = str(workdir / "gold")
+    base = dt.datetime(2025, 10, 1)
+    ing = dt.datetime(2025, 10, 2)
+    rows = [
+        (c, base + dt.timedelta(hours=h), 10.0, 0.0, 1.0, ing)
+        for c in ("Warsaw", "Berlin")
+        for h in range(24)
+        if (c, h) not in (("Warsaw", 3), ("Warsaw", 4), ("Berlin", 20))
+    ]
+    merge_upsert(
+        spark, spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA), silver,
+        ["city", "timestamp"], "_ingested_at", ["city"],
+    )
+    refresh_gold_incremental(spark, spark.read.parquet(silver), spark.read.parquet(silver), gold)
+
+    def backfill():
+        return backfill_missing(
+            spark, silver, str(workdir / "bronze"), base, base + dt.timedelta(hours=23),
+            lambda city, hours: _hours_payload(hours, 42.0), gold_path=gold,
+        )
+
+    out, n = _jobs_in(spark, "jc_backfill", backfill)
+    assert n <= 10, f"backfill_missing ran {n} jobs"
+    assert spark.read.parquet(silver).count() == 48
+    assert _stage_dirs(silver) == []
+    assert out.columns == [
+        "day", "temperature_2m", "precipitation", "wind_speed_10m", "city"
+    ]
+    assert spark.read.parquet(silver).columns[-1] == "city"
+    gold_avg = {r.city: round(r.temperature_2m, 6) for r in out.collect()}
+    assert gold_avg == {
+        "Warsaw": round((22 * 10.0 + 2 * 42.0) / 24, 6),
+        "Berlin": round((23 * 10.0 + 42.0) / 24, 6),
+    }
+
+
+def test_elt_time_range_excluding_a_city_keeps_its_rows(spark, workdir):
+    """The batch's cities come from the gate's scan of every record, so a
+    time_range that leaves one city with no rows still names it. Its
+    silver and gold partitions are rewritten with their own rows: the
+    content must stay the same, and no staging directory may remain."""
+    bronze = str(workdir / "bronze")
+    silver = str(workdir / "silver")
+    gold = str(workdir / "gold")
+    write_bronze(_bronze_df(spark, GOOD_ROWS), bronze)
+    at = F.lit("2025-10-31 13:00:00").cast("timestamp")
+    run_elt(spark, bronze, silver, gold, ingested_at=at)
+
+    def city_rows(path, city):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(path).filter(F.col("city") == city).collect()
+        )
+
+    paris = (city_rows(silver, "Paris"), city_rows(gold, "Paris"))
+    later = F.lit("2025-10-31 14:00:00").cast("timestamp")
+    # Paris' hours are 00-03; the window holds only the 12:00 hour
+    run_elt(
+        spark, bronze, silver, gold, ingested_at=later,
+        time_range=("2025-10-31 12:00:00", "2025-10-31 13:00:00"),
+    )
+    assert (city_rows(silver, "Paris"), city_rows(gold, "Paris")) == paris
+    assert {r._ingested_at for r in spark.read.parquet(silver).filter(
+        F.col("city") != "Paris").collect()} == {dt.datetime(2025, 10, 31, 14)}
+    assert _stage_dirs(silver) == [] and _stage_dirs(gold) == []
 
 
 def test_gold_refresh_and_merge_keep_other_cities_under_static_overwrite(
