@@ -36,7 +36,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def dedup_last_write_wins(
@@ -129,7 +128,6 @@ def merge_upsert(
     order_col: str,
     partition_cols: list[str] | None = None,
     batch_parts: list | None = None,
-    schema: StructType | str | None = None,
 ) -> None:
     """Last-write-wins merge of ``new`` into the Parquet table at
     ``target_path`` keyed by ``keys``, newest-by-``order_col`` winning —
@@ -142,10 +140,10 @@ def merge_upsert(
     itself. A value with no rows in ``new`` is allowed: that partition is
     rewritten with its own rows.
 
-    ``schema`` is the target's schema (a StructType or DDL string), when
-    the caller knows it; the target is then read with it and no
-    footer-inference job runs. Partition discovery still places the
-    partition columns last. Without it the schema is inferred.
+    The target is read with ``new``'s schema, so no footer-inference job
+    runs; partition discovery still places the partition columns last.
+    The batch's schema is the table's: rewritten partitions carry exactly
+    ``new``'s columns.
 
     Idempotent: re-merging the same batch leaves the table unchanged.
     An EMPTY batch is a no-op — without the early return it would fall
@@ -169,8 +167,7 @@ def merge_upsert(
         writer.parquet(target_path)
         return
 
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    target = reader.parquet(target_path)
+    target = spark.read.schema(new.schema).parquet(target_path)
     if partition_cols:
         # Partition-scoped read-back: only partitions the batch touches.
         # eqNullSafe, not ==: a plain equality against a NULL partition

@@ -17,6 +17,7 @@ and dbt/models/marts/fct_city_day.sql:1-11.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,17 +79,19 @@ def run_elt(
     Returns the gold DataFrame.
 
     The batch's cities are observed by the gate's own scan of the
-    validation records, not collected from ``hourly``. After a passing
-    gate every record has a non-null ``time``, so under ``nullpad`` with
-    no ``time_range`` they are exactly ``hourly``'s cities. With
-    ``time_range`` or ``truncate`` they can include a city with no rows
-    left; that city's silver and gold partitions are rewritten with the
-    same content.
+    validation records. After a passing gate every record has a non-null
+    ``time``, so under ``nullpad`` with no ``time_range`` they are exactly
+    ``hourly``'s cities and no separate collect runs. With ``time_range``
+    or ``truncate`` a city can be left with no rows, and its silver and
+    gold partitions must not be rewritten to change nothing, so the
+    cities are collected from ``hourly`` instead.
     """
     raw = read_bronze(spark, bronze_path)
 
     # validate BEFORE load — failure blocks the load (etl_openmeteo.py:135-149)
     parts = _validate(spark, raw)
+    if time_range is not None or policy != "nullpad":
+        parts = None
 
     hourly = unzip_hourly(raw, policy=policy, ingested_at=ingested_at)
     if time_range is not None:
@@ -107,20 +110,25 @@ def _validate(spark: SparkSession, raw: DataFrame) -> list | None:
 
     The cities are ``Row(city=...)``s, as ``select("city").distinct()
     .collect()`` returns them; the struct keeps a NULL city, which a bare
-    ``collect_set`` would drop. None means no action ran over the records
-    (a gate replaced by a no-op, say), and the caller collects the cities
-    itself. Observations are filled by a query listener, so a missing
-    value is trusted only after the listener bus has drained."""
+    ``collect_set`` would drop. The city observation is registered before
+    the gate's own, so it is normally filled by the time the gate's
+    ``obs.get`` returns. It stays empty only when no action ran over the
+    records (a gate replaced by a no-op, say); the listener bus is then
+    given a bounded drain before None is returned, and the caller
+    collects the cities itself."""
     obs = Observation()
     records = flatten_validation_records(raw).observe(
         obs, F.collect_set(F.struct("city")).alias("cities")
     )
     dq_gate(records, REFERENCE_WEATHER_SUITE)
-    row = obs._jo.getRowOrEmpty()
-    if not row.isDefined():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        row = obs._jo.getRowOrEmpty()
-    return obs.get["cities"] if row.isDefined() else None
+    if not obs._jo.getRowOrEmpty().isDefined():
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        except Py4JJavaError:
+            pass  # bus still busy: fall back to the caller's collect
+        if not obs._jo.getRowOrEmpty().isDefined():
+            return None
+    return obs.get["cities"]
 
 
 def _load_and_refresh(
@@ -128,13 +136,13 @@ def _load_and_refresh(
     hourly: DataFrame,
     silver_path: str,
     gold_path: str | None,
-    parts: list | None = None,
+    parts: list | None,
 ) -> DataFrame:
     """Merge ``hourly`` into silver, then refresh gold for the cities it
     touched (or return the mart over silver when there is no gold table).
 
-    ``parts`` is the batch's cities as ``Row(city=...)``s; without it they
-    are collected here, once. Either way they are shared by the merge's
+    ``parts`` is the batch's cities as ``Row(city=...)``s; when it is None
+    they are collected here, once. Either way they are shared by the merge's
     partition scope and the gold refresh. Silver and gold are read with
     known schemas — the batch's own and FCT_CITY_DAY_SCHEMA — so no
     footer-inference job runs; partition discovery still appends ``city``
@@ -149,7 +157,6 @@ def _load_and_refresh(
         order_col="_ingested_at",
         partition_cols=["city"],
         batch_parts=parts,
-        schema=hourly.schema,
     )
     silver = spark.read.schema(hourly.schema).parquet(silver_path)
     if gold_path is None:

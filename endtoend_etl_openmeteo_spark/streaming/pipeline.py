@@ -513,7 +513,6 @@ def run_streaming_elt(
             order_col="_ingested_at",
             partition_cols=["city"],
             batch_parts=parts,
-            schema=batch.schema,
         )
         if gold_path is not None:
             # bronze -> silver -> gold inside ONE micro-batch: the gold

@@ -506,11 +506,13 @@ def test_backfill_job_count_stays_pinned(spark, workdir):
     }
 
 
-def test_elt_time_range_excluding_a_city_keeps_its_rows(spark, workdir):
-    """The batch's cities come from the gate's scan of every record, so a
-    time_range that leaves one city with no rows still names it. Its
-    silver and gold partitions are rewritten with their own rows: the
-    content must stay the same, and no staging directory may remain."""
+def test_elt_time_range_excluding_a_city_leaves_its_partitions_untouched(
+    spark, workdir
+):
+    """A time_range that leaves one city with no rows must not touch that
+    city: its silver and gold partition files stay exactly as they were
+    (a rewrite would give new part-file names), its rows stay equal, and
+    no staging directory remains."""
     bronze = str(workdir / "bronze")
     silver = str(workdir / "silver")
     gold = str(workdir / "gold")
@@ -523,13 +525,22 @@ def test_elt_time_range_excluding_a_city_keeps_its_rows(spark, workdir):
             tuple(r) for r in spark.read.parquet(path).filter(F.col("city") == city).collect()
         )
 
+    def city_files(path, city):
+        return sorted(
+            (str(f), f.stat().st_mtime_ns)
+            for f in (Path(path) / f"city={city}").rglob("*") if f.is_file()
+        )
+
     paris = (city_rows(silver, "Paris"), city_rows(gold, "Paris"))
+    paris_files = (city_files(silver, "Paris"), city_files(gold, "Paris"))
+    assert paris_files[0] and paris_files[1]
     later = F.lit("2025-10-31 14:00:00").cast("timestamp")
     # Paris' hours are 00-03; the window holds only the 12:00 hour
     run_elt(
         spark, bronze, silver, gold, ingested_at=later,
         time_range=("2025-10-31 12:00:00", "2025-10-31 13:00:00"),
     )
+    assert (city_files(silver, "Paris"), city_files(gold, "Paris")) == paris_files
     assert (city_rows(silver, "Paris"), city_rows(gold, "Paris")) == paris
     assert {r._ingested_at for r in spark.read.parquet(silver).filter(
         F.col("city") != "Paris").collect()} == {dt.datetime(2025, 10, 31, 14)}
