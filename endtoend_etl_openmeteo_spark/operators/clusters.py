@@ -10,10 +10,12 @@ algorithm failure mode on Spark: an unbounded plan tree).
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from endtoend_etl_openmeteo_spark.session import release_checkpoint
+from endtoend_etl_openmeteo_spark.session import pinned, release_checkpoint
 
 
 #: Symmetric-edge cap for the driver-local graph solves (union-find /
@@ -82,63 +84,74 @@ def dedup_clusters(
         # every node its own cluster — would return as if converged:
         # downstream keep-one-per-cluster would keep every duplicate
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-    edges_ck = (
+    edges = (
         pairs.selectExpr("id_a AS src", "id_b AS dst")
         .unionByName(pairs.selectExpr("id_b AS src", "id_a AS dst"))
         .distinct()
-        .localCheckpoint(eager=True)  # pair generation may be expensive
-        # (e.g. an LSH pipeline) — never re-execute it per iteration;
-        # released before return (only the final labels survive the call)
     )
-    # Size the iteration parallelism to the graph, not the session default:
-    # near-dup graphs are usually tiny relative to the corpus, and paying
-    # 32-partition shuffle overhead per round dominates small inputs.
-    n_edges = edges_ck.count()
-    spark = pairs.sparkSession
-    # Adaptive local solve — the AQE broadcast philosophy applied to
-    # connectivity: a metadata-sized edge set (<= ~25 MB at the default
-    # threshold) is solved with driver-side union-find in milliseconds
-    # instead of 3-5 distributed rounds x several jobs each (measured ~2 s
-    # of pure scheduling on graphs of a few thousand edges). Near-dup
-    # graphs are tiny relative to the corpus by construction — a 100-TB
-    # corpus with 10M near-dup PAIRS still fits (the nodes are only the
-    # docs that HAVE a duplicate); anything larger takes the distributed
-    # pointer-jumping path below, which is the scale story. Both paths
-    # produce identical labels (min reachable id) — pinned by
-    # tests/test_clusters.py on the same graphs.
-    if n_edges <= local_edge_threshold:
+    # pair generation may be expensive (e.g. an LSH pipeline) — never
+    # re-execute it per iteration; the edge table is scaffolding, only
+    # the final labels survive the call (callers own their blocks)
+    with pinned(edges) as edges_ck:
+        n_edges = edges_ck.count()
+        # Adaptive local solve — the AQE broadcast philosophy applied to
+        # connectivity: a metadata-sized edge set (<= ~25 MB at the
+        # default threshold) is solved with driver-side union-find in
+        # milliseconds instead of 3-5 distributed rounds x several jobs
+        # each (measured ~2 s of pure scheduling on graphs of a few
+        # thousand edges). Near-dup graphs are tiny relative to the corpus
+        # by construction — a 100-TB corpus with 10M near-dup PAIRS still
+        # fits (the nodes are only the docs that HAVE a duplicate);
+        # anything larger takes the distributed pointer-jumping path,
+        # which is the scale story. Both paths produce identical labels
+        # (min reachable id) — pinned by tests/test_clusters.py on the
+        # same graphs.
+        if n_edges > local_edge_threshold:
+            return _pointer_jumping_labels(edges_ck, n_edges, max_iterations)
         srcs, dsts = _arrow_edge_lists(edges_ck)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in zip(srcs, dsts):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        comp_min: dict = {}
-        for node in parent:
-            r = find(node)
-            m = comp_min.get(r)
-            if m is None or node < m:
-                comp_min[r] = node
         out_schema = edges_ck.select(
             F.col("src").alias("id"), F.col("src").alias("cluster_id")
         ).schema
-        release_checkpoint(edges_ck)
-        # match the distributed path's contract: the returned frame is
-        # materialized and owned by the caller
-        return _local_result_df(
-            spark, [(n, comp_min[find(n)]) for n in sorted(parent)], out_schema
-        )
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in zip(srcs, dsts):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp_min: dict = {}
+    for node in parent:
+        r = find(node)
+        m = comp_min.get(r)
+        if m is None or node < m:
+            comp_min[r] = node
+    # match the distributed path's contract: the returned frame is
+    # materialized and owned by the caller
+    return _local_result_df(
+        pairs.sparkSession,
+        [(n, comp_min[find(n)]) for n in sorted(parent)],
+        out_schema,
+    )
+
+
+def _pointer_jumping_labels(
+    edges_ck: DataFrame, n_edges: int, max_iterations: int
+) -> DataFrame:
+    """:func:`dedup_clusters`' distributed path over the pinned symmetric
+    edge table."""
+    spark = edges_ck.sparkSession
+    # Size the iteration parallelism to the graph, not the session default:
+    # near-dup graphs are usually tiny relative to the corpus, and paying
+    # 32-partition shuffle overhead per round dominates small inputs.
     target = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 20_000 + 1))
     edges = edges_ck.repartition(target, "dst")
     labels = (
@@ -204,7 +217,6 @@ def dedup_clusters(
             break
         prev_sig = cur_sig
     if not converged and prev_sig is not None:
-        release_checkpoint(edges_ck)
         if prev_labels is not None:
             release_checkpoint(prev_labels)  # don't leak the last round
         raise RuntimeError(
@@ -212,9 +224,6 @@ def dedup_clusters(
             "(a component's diameter exceeds the cap); raise max_iterations — "
             "returning split clusters would keep duplicate documents silently"
         )
-    # Only the final labels checkpoint survives the call; the edge table
-    # is scaffolding (callers own the returned frame's blocks).
-    release_checkpoint(edges_ck)
     return labels
 
 
@@ -439,81 +448,78 @@ def kmeans(
     """
     from endtoend_etl_openmeteo_spark.operators.dedup import cpu_parallelize
 
+    vecs = cpu_parallelize(vectors).select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
+    )
     # LAZY checkpoint: the dimensionality/count aggregate right below is
     # the action that materializes it, so projection and validation run
     # as ONE corpus pass instead of a checkpoint job plus an aggregate
     # job (the bpe_train fused-pass pattern).
-    v_ck = cpu_parallelize(vectors).select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    ).localCheckpoint(eager=False)
+    with pinned(vecs, eager=False) as v_ck:
+        # Uniform dimensionality is a hard precondition: the per-dimension avg
+        # below subscripts every vector up to the seed dimension, which under
+        # ANSI mode raises INVALID_ARRAY_INDEX mid-job on a ragged vector.
+        # Fail fast with a clear message instead (one 1-row aggregate, which
+        # doubles as the row count used to size the iteration parallelism).
+        sizes = v_ck.agg(
+            F.min(F.size("vec")).alias("lo"),
+            F.max(F.size("vec")).alias("hi"),
+            F.count("*").alias("n"),
+        ).collect()[0]
+        if sizes["lo"] != sizes["hi"]:
+            raise ValueError(
+                "kmeans requires uniform vector dimensionality; got sizes "
+                f"{sizes['lo']}..{sizes['hi']} in column {vec_col!r}"
+            )
+        # Size the per-iteration job to the data: every iteration is a full
+        # job over v, and on a small corpus 32 near-empty tasks' scheduling
+        # overhead dominates the arithmetic (measured ~1 s/iteration for
+        # 2,000 vectors). Narrow coalesce over the checkpoint blocks — at
+        # real corpus sizes this is a no-op.
+        spark_ctx = vectors.sparkSession.sparkContext
+        target = max(1, min(spark_ctx.defaultParallelism, int(sizes["n"]) // 256 + 1))
+        v = v_ck.coalesce(target) if target < v_ck.rdd.getNumPartitions() else v_ck
 
-    # Uniform dimensionality is a hard precondition: the per-dimension avg
-    # below subscripts every vector up to the seed dimension, which under
-    # ANSI mode raises INVALID_ARRAY_INDEX mid-job on a ragged vector.
-    # Fail fast with a clear message instead (one 1-row aggregate, which
-    # doubles as the row count used to size the iteration parallelism).
-    sizes = v_ck.agg(
-        F.min(F.size("vec")).alias("lo"),
-        F.max(F.size("vec")).alias("hi"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    if sizes["lo"] != sizes["hi"]:
-        release_checkpoint(v_ck)
-        raise ValueError(
-            "kmeans requires uniform vector dimensionality; got sizes "
-            f"{sizes['lo']}..{sizes['hi']} in column {vec_col!r}"
+        # k seed rows → driver: [(cluster, [dim doubles]), ...]
+        seed = v.orderBy("id").limit(k).select("vec").collect()
+        if len(seed) < k:
+            # kmeans_train_sampled's contract, enforced here too: silently
+            # training fewer than k centroids (or IndexError on an empty
+            # corpus) leaves downstream cell layouts mis-sized with no signal
+            raise ValueError(
+                f"cannot seed k={k} centroids from {len(seed)} vectors — "
+                "shrink k or grow the corpus"
+            )
+        cent: list[tuple[int, list[float]]] = [
+            (i, list(r["vec"])) for i, r in enumerate(seed)
+        ]
+
+        # Centroid update: ONE map-side-combined exchange of (cluster, dim
+        # avgs) — k·partitions rows of dim+1 columns — instead of the
+        # posexplode shape's n·dim-row shuffle plus a second collect_list
+        # exchange. The dim-wide aggregate expression is identical every
+        # iteration, so its generated code compiles once per session.
+        dim = len(cent[0][1])
+
+        def _avg(i):
+            a = F.avg(F.element_at("vec", i + 1))
+            return a if iter_dp is None else F.round(a, iter_dp)
+
+        avgs = [_avg(i).alias(f"c{i}") for i in range(dim)]
+        for _ in range(iterations):
+            assignments = _assign_literal(v, cent)
+            updated = assignments.groupBy("cluster").agg(*avgs).collect()
+            cent = sorted(
+                (r["cluster"], [r[f"c{i}"] for i in range(dim)]) for r in updated
+            )
+        # Final assignment AGAINST the returned centroids, so the two halves of
+        # the result are consistent (the in-loop assignment predates the last
+        # centroid update) — and so kmeans_assign(v, centroids) reproduces it.
+        # Checkpointing it lets the (much larger) input checkpoint ``v`` be
+        # released on exit instead of leaking one corpus copy per kmeans call.
+        assignments = (
+            _assign_literal(v, cent).select("id", "cluster").localCheckpoint(eager=True)
         )
-    # Size the per-iteration job to the data: every iteration is a full
-    # job over v, and on a small corpus 32 near-empty tasks' scheduling
-    # overhead dominates the arithmetic (measured ~1 s/iteration for
-    # 2,000 vectors). Narrow coalesce over the checkpoint blocks — at
-    # real corpus sizes this is a no-op.
-    spark_ctx = vectors.sparkSession.sparkContext
-    target = max(1, min(spark_ctx.defaultParallelism, int(sizes["n"]) // 256 + 1))
-    v = v_ck.coalesce(target) if target < v_ck.rdd.getNumPartitions() else v_ck
-
-    # k seed rows → driver: [(cluster, [dim doubles]), ...]
-    seed = v.orderBy("id").limit(k).select("vec").collect()
-    if len(seed) < k:
-        # kmeans_train_sampled's contract, enforced here too: silently
-        # training fewer than k centroids (or IndexError on an empty
-        # corpus) leaves downstream cell layouts mis-sized with no signal
-        release_checkpoint(v_ck)
-        raise ValueError(
-            f"cannot seed k={k} centroids from {len(seed)} vectors — "
-            "shrink k or grow the corpus"
-        )
-    cent: list[tuple[int, list[float]]] = [
-        (i, list(r["vec"])) for i, r in enumerate(seed)
-    ]
-
-    # Centroid update: ONE map-side-combined exchange of (cluster, dim
-    # avgs) — k·partitions rows of dim+1 columns — instead of the
-    # posexplode shape's n·dim-row shuffle plus a second collect_list
-    # exchange. The dim-wide aggregate expression is identical every
-    # iteration, so its generated code compiles once per session.
-    dim = len(cent[0][1])
-
-    def _avg(i):
-        a = F.avg(F.element_at("vec", i + 1))
-        return a if iter_dp is None else F.round(a, iter_dp)
-
-    avgs = [_avg(i).alias(f"c{i}") for i in range(dim)]
-    for _ in range(iterations):
-        assignments = _assign_literal(v, cent)
-        updated = assignments.groupBy("cluster").agg(*avgs).collect()
-        cent = sorted(
-            (r["cluster"], [r[f"c{i}"] for i in range(dim)]) for r in updated
-        )
-    # Final assignment AGAINST the returned centroids, so the two halves of
-    # the result are consistent (the in-loop assignment predates the last
-    # centroid update) — and so kmeans_assign(v, centroids) reproduces it.
-    # Checkpointing it lets the (much larger) input checkpoint ``v`` be
-    # released here instead of leaking one corpus copy per kmeans call.
-    assignments = (
-        _assign_literal(v, cent).select("id", "cluster").localCheckpoint(eager=True)
-    )
-    release_checkpoint(v_ck)
     spark = vectors.sparkSession
     centroids = spark.createDataFrame(
         [(cl, c) for cl, c in cent], "cluster int, centroid array<double>"
@@ -644,58 +650,73 @@ def pagerank(
     ~20 scheduled jobs; the dedup_clusters adaptive-local-solve
     pattern). Pass 0 to force the distributed path.
     """
-    edges_ck = (
+    edges = (
         pairs.selectExpr("id_a AS src", "id_b AS dst")
         .unionByName(pairs.selectExpr("id_b AS src", "id_a AS dst"))
         .distinct()
+    )
+    spark = pairs.sparkSession
+    local = None
+    with ExitStack() as scoped:
         # materialized ONCE: both the degree aggregate and the per-round
         # join (or the local solve's one Arrow transfer) read these
         # blocks instead of re-running the pair generator
-        .localCheckpoint(eager=True)
-    )
-    n_edges = edges_ck.count()
-    spark = pairs.sparkSession
-    # Adaptive local solve (the dedup_clusters discipline): a
-    # metadata-sized graph runs the power iteration driver-side in
-    # milliseconds instead of 6 rounds x 3 exchanges of scheduled jobs.
-    # Identical ranks by construction (see _pagerank_local); pinned by
-    # tests/test_pagerank.py on the same graphs against the distributed
-    # path. NULL-keyed edges stay on the distributed path, whose SQL
-    # join semantics (a NULL edge carries no flow, its node still ranks
-    # on teleport) are authoritative.
-    if n_edges <= local_edge_threshold:
-        arrow_edges = edges_ck.toArrow()
-        if (
-            arrow_edges.column(0).null_count == 0
-            and arrow_edges.column(1).null_count == 0
-        ):
-            # derive the id type from the SYMMETRIZED edge frame (the
-            # dedup_clusters rule): nodes come from id_a AND id_b, and
-            # the union coercion is what the distributed path returns —
-            # an id_a-only schema could mistype when the columns differ
-            # (e.g. int vs long)
-            out_schema = edges_ck.select(
-                F.col("src").alias("id"), F.lit(0.0).alias("rank")
-            ).schema
-            release_checkpoint(edges_ck)
-            return _pagerank_local(
-                spark,
-                arrow_edges.column(0).to_pylist(),
-                arrow_edges.column(1).to_pylist(),
-                out_schema,
-                damping,
-                iterations,
-                iter_dp,
-            )
-    edges = edges_ck
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    edges_deg = edges.join(deg, "src").localCheckpoint(eager=True)
-    nodes = deg.select(F.col("src").alias("id")).localCheckpoint(eager=True)
-    release_checkpoint(edges_ck)  # edges_deg/nodes own the data now
+        with pinned(edges) as edges_ck:
+            # Adaptive local solve (the dedup_clusters discipline): a
+            # metadata-sized graph runs the power iteration driver-side in
+            # milliseconds instead of 6 rounds x 3 exchanges of scheduled
+            # jobs. Identical ranks by construction (see _pagerank_local);
+            # pinned by tests/test_pagerank.py on the same graphs against
+            # the distributed path. NULL-keyed edges stay on the
+            # distributed path, whose SQL join semantics (a NULL edge
+            # carries no flow, its node still ranks on teleport) are
+            # authoritative.
+            if edges_ck.count() <= local_edge_threshold:
+                arrow_edges = edges_ck.toArrow()
+                if (
+                    arrow_edges.column(0).null_count == 0
+                    and arrow_edges.column(1).null_count == 0
+                ):
+                    # derive the id type from the SYMMETRIZED edge frame
+                    # (the dedup_clusters rule): nodes come from id_a AND
+                    # id_b, and the union coercion is what the distributed
+                    # path returns — an id_a-only schema could mistype
+                    # when the columns differ (e.g. int vs long)
+                    local = (
+                        arrow_edges.column(0).to_pylist(),
+                        arrow_edges.column(1).to_pylist(),
+                        edges_ck.select(
+                            F.col("src").alias("id"), F.lit(0.0).alias("rank")
+                        ).schema,
+                    )
+            if local is None:
+                deg = edges_ck.groupBy("src").agg(F.count("*").alias("deg"))
+                edges_deg = scoped.enter_context(pinned(edges_ck.join(deg, "src")))
+                nodes = scoped.enter_context(
+                    pinned(deg.select(F.col("src").alias("id")))
+                )
+        # edges_ck is released: edges_deg/nodes own the data now
+        if local is not None:
+            return _pagerank_local(spark, *local, damping, iterations, iter_dp)
+        return _power_iteration(edges_deg, nodes, damping, iterations, iter_dp)
+
+
+def _power_iteration(
+    edges_deg: DataFrame,
+    nodes: DataFrame,
+    damping: float,
+    iterations: int,
+    iter_dp: int,
+) -> DataFrame:
+    """:func:`pagerank`'s distributed loop over the pinned degree-annotated
+    edges and node list. Returns the final ranks, checkpointed and owned
+    by the caller: a pagerank call leaves behind exactly one n-row
+    checkpoint."""
     n = nodes.count()  # bounded: one scalar
-    if n == 0:
-        release_checkpoint(edges_deg)
-        return nodes.withColumn("rank", F.lit(0.0))
+    if n == 0:  # an empty frame that outlives the pinned node list
+        return nodes.sparkSession.createDataFrame(
+            [], nodes.withColumn("rank", F.lit(0.0)).schema
+        )
     teleport = (F.lit(1.0) - F.lit(damping)) / F.lit(float(n))
     ranks = nodes.select(
         "id", F.round(F.lit(1.0) / F.lit(float(n)), iter_dp).alias("rank")
@@ -722,11 +743,9 @@ def pagerank(
             if prev_ck is not None:
                 release_checkpoint(prev_ck)
             prev_ck = ranks
-    # Materialize the final ranks so every internal block (edge table,
-    # node list, in-loop lineage cuts) can be released before returning —
-    # a pagerank call leaves behind exactly one n-row checkpoint.
+    # Materialize the final ranks so the in-loop lineage cut can be
+    # released before returning (the caller releases the edge scaffolding).
     ranks = ranks.localCheckpoint(eager=True)
-    for internal in (prev_ck, edges_deg, nodes):
-        if internal is not None:
-            release_checkpoint(internal)
+    if prev_ck is not None:
+        release_checkpoint(prev_ck)
     return ranks

@@ -18,10 +18,12 @@ Scale design:
 
 from __future__ import annotations
 
+from contextlib import ExitStack, nullcontext
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from endtoend_etl_openmeteo_spark.session import release_checkpoint
+from endtoend_etl_openmeteo_spark.session import pinned, release_checkpoint
 
 
 #: Whitespace class shared by the Spark normalizers and their DuckDB
@@ -277,49 +279,51 @@ def minhash_lsh_pairs(
     base = cpu_parallelize(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh")
     ).withColumn("sig", minhash_signature(F.col("sh"), n_hashes, hash_family))
-    if materialize:
-        # LAZY checkpoint: the verified-pairs materialization below is the
-        # first action, so the shingle/signature pass and the pair pass run
-        # as one job — the blocks still compute exactly once (persist
-        # semantics make the three readers share them within that job),
-        # where an eager checkpoint paid a separate materialization job
-        # (the bpe_train fused-pass pattern)
-        base = base.localCheckpoint(eager=False)
-
-    banded = base.select(
-        "id",
-        F.explode(
-            minhash_bands(F.col("sig"), n_hashes, bands, hash_family)
-        ).alias("bb"),
-    ).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-    sh = base.select("id", "sh")
-    verified = (
-        candidates.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+    # LAZY checkpoint: the verified-pairs materialization below is the
+    # first action, so the shingle/signature pass and the pair pass run as
+    # one job — the blocks still compute exactly once (persist semantics
+    # make the three readers share them within that job), where an eager
+    # checkpoint paid a separate materialization job (the bpe_train
+    # fused-pass pattern)
+    with (pinned(base, eager=False) if materialize else nullcontext(base)) as base:
+        banded = base.select(
+            "id",
+            F.explode(
+                minhash_bands(F.col("sig"), n_hashes, bands, hash_family)
+            ).alias("bb"),
+        ).select(
+            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    if not materialize:
-        return verified
-    verified = verified.localCheckpoint(eager=True)
-    release_checkpoint(base)
-    return verified
+
+        a, b = banded.alias("a"), banded.alias("b")
+        candidates = (
+            a.join(b, ["band", "bucket"])
+            .filter(F.col("a.id") < F.col("b.id"))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
+        )
+
+        sh = base.select("id", "sh")
+        verified = (
+            candidates.join(
+                sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"),
+                "id_a",
+            )
+            .join(
+                sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"),
+                "id_b",
+            )
+            .withColumn(
+                "jaccard",
+                F.size(F.array_intersect("sh_a", "sh_b"))
+                / F.size(F.array_union("sh_a", "sh_b")),
+            )
+            .filter(F.col("jaccard") >= jaccard_threshold)
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        )
+        if not materialize:
+            return verified
+        return verified.localCheckpoint(eager=True)
 
 
 def ngram_jaccard_pairs(
@@ -469,103 +473,82 @@ def incremental_neardup(
     """
     from endtoend_etl_openmeteo_spark.operators.merge import _path_exists
 
-    new_sigs = (
+    sigs = (
         cpu_parallelize(new_df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh"))
         .withColumn("sig", minhash_signature(F.col("sh"), n_hashes))
         .select("id", "sig")
-        # lazy: the pairs checkpoint below is the first action — one job
-        # computes signatures AND pairs; the three readers (band, verify,
-        # append) share the blocks it pins (the bpe_train fused-pass
-        # pattern)
-        .localCheckpoint(eager=False)
     )
-
     def banded(sigs: DataFrame) -> DataFrame:
         return sigs.select(
-            "id", "sig", F.explode(minhash_bands(F.col("sig"), n_hashes, bands)).alias("bb")
-        ).select("id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    new_banded = banded(new_sigs)
-    old_sigs = None
-    if batch_id is not None:
-        # Batch-stamped layout: the stored view is every sibling batch's
-        # subdir — NEVER this batch's own (a partial subdir from a crashed
-        # earlier attempt must not count as "already indexed").
-        sibling_paths = _sibling_batch_paths(spark, index_path, batch_id)
-        if sibling_paths:
-            old_sigs = spark.read.parquet(*sibling_paths).select("id", "sig")
-    elif _path_exists(spark, index_path):
-        old_sigs = spark.read.parquet(index_path).select("id", "sig")
-    if old_sigs is not None:
-        touched = new_banded.select("band", "bucket").distinct()
-        old_side = banded(old_sigs).join(F.broadcast(touched), ["band", "bucket"])
-    else:
-        old_side = banded(new_sigs).limit(0)
-
-    right = old_side.withColumn("is_new", F.lit(False)).unionByName(
-        new_banded.withColumn("is_new", F.lit(True))
-    )
-    a, b = new_banded.alias("a"), right.alias("b")
-    est = F.aggregate(
-        F.zip_with(
-            F.col("a.sig"), F.col("b.sig"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(float(n_hashes))
-    pairs = (
-        a.join(b, ["band", "bucket"])
-        # new-new pairs once (id_a < id_b); new-old pairs always (new, old)
-        .filter(
-            (~F.col("b.is_new") & (F.col("a.id") != F.col("b.id")))
-            | (F.col("b.is_new") & (F.col("a.id") < F.col("b.id")))
+            "id",
+            "sig",
+            F.explode(minhash_bands(F.col("sig"), n_hashes, bands)).alias("bb"),
+        ).select(
+            "id",
+            "sig",
+            F.col("bb.band").alias("band"),
+            F.col("bb.bucket").alias("bucket"),
         )
-        .select(
-            F.col("a.id").alias("new_id"),
-            F.col("b.id").alias("match_id"),
-            F.round(est, 6).alias("est_jaccard"),
-            F.col("b.is_new").alias("match_is_new"),
+
+    # lazy: the pairs checkpoint below is the first action — one job
+    # computes signatures AND pairs; the three readers (band, verify,
+    # append) share the blocks it pins (the bpe_train fused-pass pattern).
+    # The index append is their last consumer, so they are released on
+    # exit and repeated ingest batches don't pin one copy per batch.
+    with pinned(sigs, eager=False) as new_sigs:
+        new_banded = banded(new_sigs)
+        old_sigs = None
+        if batch_id is not None:
+            # Batch-stamped layout: the stored view is every sibling batch's
+            # subdir — NEVER this batch's own (a partial subdir from a crashed
+            # earlier attempt must not count as "already indexed").
+            sibling_paths = _sibling_batch_paths(spark, index_path, batch_id)
+            if sibling_paths:
+                old_sigs = spark.read.parquet(*sibling_paths).select("id", "sig")
+        elif _path_exists(spark, index_path):
+            old_sigs = spark.read.parquet(index_path).select("id", "sig")
+        if old_sigs is not None:
+            touched = new_banded.select("band", "bucket").distinct()
+            old_side = banded(old_sigs).join(F.broadcast(touched), ["band", "bucket"])
+        else:
+            old_side = banded(new_sigs).limit(0)
+
+        right = old_side.withColumn("is_new", F.lit(False)).unionByName(
+            new_banded.withColumn("is_new", F.lit(True))
         )
-        .filter(F.col("est_jaccard") >= est_threshold)
-        .distinct()
-        .localCheckpoint(eager=True)  # materialize BEFORE the index append
-    )
-    # Right-size the index files to the NOVEL rows actually written (a
-    # mostly-duplicate batch writes 1 file, not files sized to the raw
-    # batch), never to cpu_parallelize's session-wide partition count
-    # riding in from the signature checkpoint: a 30-doc contract batch
-    # otherwise lands as 32 near-empty parquet files, and the index
-    # directory accretes tasks-per-batch files forever. ~50k signatures
-    # (~6 MB) per file. Sizing needs the novel COUNT only when the raw
-    # batch could overflow one file — the common small batch coalesces
-    # to 1 with zero extra jobs (novel <= batch, and coalesce only ever
-    # reduces partitions); a large batch checkpoints the anti-join once
-    # so the count and the write share one evaluation.
-    novel = (
-        new_sigs
-        if old_sigs is None
-        else new_sigs.join(old_sigs.select("id"), "id", "left_anti")
-    )
-    novel_ck = None
-    if new_sigs.count() <= 50_000:
-        out = novel.coalesce(1)
-    else:
-        if novel is not new_sigs:
-            novel = novel_ck = novel.localCheckpoint(eager=True)
-        out = novel.coalesce(max(1, novel.count() // 50_000))
-    if batch_id is not None:
-        # Whole-subdir overwrite: replaces any partial earlier attempt.
-        out.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
-    else:
-        out.write.mode("append").parquet(index_path)
-    # The index append was the last consumer of the signature checkpoint
-    # (``pairs`` is already materialized above) — release it so repeated
-    # ingest batches don't pin one signature copy per batch forever.
-    release_checkpoint(new_sigs)
-    if novel_ck is not None:
-        release_checkpoint(novel_ck)
+        a, b = new_banded.alias("a"), right.alias("b")
+        est = F.aggregate(
+            F.zip_with(
+                F.col("a.sig"), F.col("b.sig"),
+                lambda x, y: F.when(x == y, 1).otherwise(0),
+            ),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        ) / F.lit(float(n_hashes))
+        pairs = (
+            a.join(b, ["band", "bucket"])
+            # new-new pairs once (id_a < id_b); new-old pairs always (new, old)
+            .filter(
+                (~F.col("b.is_new") & (F.col("a.id") != F.col("b.id")))
+                | (F.col("b.is_new") & (F.col("a.id") < F.col("b.id")))
+            )
+            .select(
+                F.col("a.id").alias("new_id"),
+                F.col("b.id").alias("match_id"),
+                F.round(est, 6).alias("est_jaccard"),
+                F.col("b.is_new").alias("match_is_new"),
+            )
+            .filter(F.col("est_jaccard") >= est_threshold)
+            .distinct()
+            .localCheckpoint(eager=True)  # materialize BEFORE the index append
+        )
+        try:
+            # ~50k signatures (~6 MB) per index file
+            _append_novel(new_sigs, old_sigs, index_path, batch_id, 50_000)
+        except BaseException:
+            release_checkpoint(pairs)  # the caller owns it only on return
+            raise
     return pairs
 
 
@@ -596,71 +579,88 @@ def incremental_exact_dedup(
     """
     from endtoend_etl_openmeteo_spark.operators.merge import _path_exists
 
-    new_fp = (
-        cpu_parallelize(new_df.select(F.col(id_col), F.col(text_col)))
-        .select(
-            F.col(id_col).alias("id"), F.md5(normalized_text(text_col)).alias("fp")
+    fp = cpu_parallelize(new_df.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col).alias("id"), F.md5(normalized_text(text_col)).alias("fp")
+    )
+    # lazy: materialized by the pairs checkpoint below — one job for
+    # digests AND pairs; the three readers (pairs, novelty, append) share
+    # the pinned blocks (the bpe_train fused-pass pattern)
+    with pinned(fp, eager=False) as new_fp:
+        old_fp = None
+        if batch_id is not None:
+            sibling_paths = _sibling_batch_paths(spark, index_path, batch_id)
+            if sibling_paths:
+                old_fp = spark.read.parquet(*sibling_paths).select("id", "fp")
+        elif _path_exists(spark, index_path):
+            old_fp = spark.read.parquet(index_path).select("id", "fp")
+        if old_fp is not None:
+            touched = new_fp.select("fp").distinct()
+            old_side = old_fp.join(F.broadcast(touched), ["fp"])
+        else:
+            old_side = new_fp.limit(0)
+        right = old_side.withColumn("is_new", F.lit(False)).unionByName(
+            new_fp.withColumn("is_new", F.lit(True))
         )
-        # lazy: materialized by the pairs checkpoint below — one job for
-        # digests AND pairs; the three readers (pairs, novelty, append)
-        # share the pinned blocks (the bpe_train fused-pass pattern)
-        .localCheckpoint(eager=False)
-    )
-    old_fp = None
-    if batch_id is not None:
-        sibling_paths = _sibling_batch_paths(spark, index_path, batch_id)
-        if sibling_paths:
-            old_fp = spark.read.parquet(*sibling_paths).select("id", "fp")
-    elif _path_exists(spark, index_path):
-        old_fp = spark.read.parquet(index_path).select("id", "fp")
-    if old_fp is not None:
-        touched = new_fp.select("fp").distinct()
-        old_side = old_fp.join(F.broadcast(touched), ["fp"])
-    else:
-        old_side = new_fp.limit(0)
-    right = old_side.withColumn("is_new", F.lit(False)).unionByName(
-        new_fp.withColumn("is_new", F.lit(True))
-    )
-    a, b = new_fp.alias("a"), right.alias("b")
-    pairs = (
-        a.join(b, ["fp"])
-        # new-new pairs once (id_a < id_b); new-old pairs always (new, old)
-        .filter(
-            (~F.col("b.is_new") & (F.col("a.id") != F.col("b.id")))
-            | (F.col("b.is_new") & (F.col("a.id") < F.col("b.id")))
+        a, b = new_fp.alias("a"), right.alias("b")
+        pairs = (
+            a.join(b, ["fp"])
+            # new-new pairs once (id_a < id_b); new-old pairs always (new, old)
+            .filter(
+                (~F.col("b.is_new") & (F.col("a.id") != F.col("b.id")))
+                | (F.col("b.is_new") & (F.col("a.id") < F.col("b.id")))
+            )
+            .select(
+                F.col("a.id").alias("new_id"),
+                F.col("b.id").alias("match_id"),
+                F.col("b.is_new").alias("match_is_new"),
+            )
+            .distinct()
+            .localCheckpoint(eager=True)  # materialize BEFORE the index append
         )
-        .select(
-            F.col("a.id").alias("new_id"),
-            F.col("b.id").alias("match_id"),
-            F.col("b.is_new").alias("match_is_new"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # materialize BEFORE the index append
-    )
-    # same novel-sized file policy as the MinHash tier: ~200k 24-byte
-    # digests (~5 MB) per index file, never one file per checkpoint task
-    # and never more files than the novel rows warrant; the common small
-    # batch coalesces to 1 file with zero extra jobs
-    novel = (
-        new_fp
-        if old_fp is None
-        else new_fp.join(old_fp.select("id"), "id", "left_anti")
-    )
-    novel_ck = None
-    if new_fp.count() <= 200_000:
-        out = novel.coalesce(1)
-    else:
-        if novel is not new_fp:
-            novel = novel_ck = novel.localCheckpoint(eager=True)
-        out = novel.coalesce(max(1, novel.count() // 200_000))
-    if batch_id is not None:
-        out.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
-    else:
-        out.write.mode("append").parquet(index_path)
-    release_checkpoint(new_fp)
-    if novel_ck is not None:
-        release_checkpoint(novel_ck)
+        try:
+            # ~200k 24-byte digests (~5 MB) per index file
+            _append_novel(new_fp, old_fp, index_path, batch_id, 200_000)
+        except BaseException:
+            release_checkpoint(pairs)  # the caller owns it only on return
+            raise
     return pairs
+
+
+def _append_novel(
+    batch: DataFrame,
+    old: DataFrame | None,
+    index_path: str,
+    batch_id: str | None,
+    rows_per_file: int,
+) -> None:
+    """Index the batch rows whose id the index does not hold yet — the
+    last step of the incremental screens, after their pairs are
+    materialized.
+
+    Right-sizes the index files to the NOVEL rows actually written (a
+    mostly-duplicate batch writes 1 file, not files sized to the raw
+    batch), never to cpu_parallelize's session-wide partition count
+    riding in from the batch checkpoint: a 30-doc contract batch would
+    otherwise land as 32 near-empty parquet files, and the index
+    directory would accrete tasks-per-batch files forever. Sizing needs
+    the novel COUNT only when the raw batch could overflow one file —
+    the common small batch coalesces to 1 with zero extra jobs (novel <=
+    batch, and coalesce only ever reduces partitions); a large batch
+    checkpoints the anti-join once so the count and the write share one
+    evaluation."""
+    novel = batch if old is None else batch.join(old.select("id"), "id", "left_anti")
+    with ExitStack() as scoped:
+        if batch.count() <= rows_per_file:
+            out = novel.coalesce(1)
+        else:
+            if novel is not batch:
+                novel = scoped.enter_context(pinned(novel))
+            out = novel.coalesce(max(1, novel.count() // rows_per_file))
+        if batch_id is not None:
+            # Whole-subdir overwrite: replaces any partial earlier attempt.
+            out.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
+        else:
+            out.write.mode("append").parquet(index_path)
 
 
 def _sibling_batch_paths(spark: SparkSession, index_path: str, batch_id: str) -> list[str]:
@@ -767,12 +767,10 @@ def compact_dedup_index(
     # folds any duplicates a crashed earlier tick (segment written, source
     # dirs not yet deleted) or a rerun-after-consolidation left behind —
     # ticks are self-healing instead of accreting copies forever
-    merged = merged.dropDuplicates(["id"])
-    merged = merged.localCheckpoint(eager=True)  # outlive the source dirs
-    rows = merged.count()
-    files = max(1, rows // rows_per_file)
-    merged.coalesce(files).write.mode("overwrite").parquet(seg)
-    release_checkpoint(merged)
+    with pinned(merged.dropDuplicates(["id"])) as merged:  # outlive the sources
+        rows = merged.count()
+        files = max(1, rows // rows_per_file)
+        merged.coalesce(files).write.mode("overwrite").parquet(seg)
     for d in doomed:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{index_path}/{d}"), True)
     return {"batches_merged": len(doomed), "rows_merged": int(rows)}

@@ -576,18 +576,23 @@ def delete_from_stored_index(
     # trap for the write. A batch beyond LOCAL_TOMBSTONE_ROWS_MAX (a
     # caller outside the design envelope — e.g. a 10M-id purge) is
     # detected by the limit probe and falls back to a fully distributed
-    # distinct+write instead of silently OOMing the driver.
-    from endtoend_etl_openmeteo_spark.session import local_df, release_checkpoint
+    # distinct+write instead of silently OOMing the driver. The probe
+    # reads a lazy checkpoint, so the fallback writes the blocks the
+    # probe pinned instead of evaluating the id lineage a second time.
+    # It reads through one task: a multi-task limit scans partitions in
+    # rounds, and the checkpoint would pay a job of its own to fill the
+    # partitions the first round skipped.
+    from endtoend_etl_openmeteo_spark.session import local_df, pinned
 
-    dids = ids.distinct()
-    rows = [tuple(r) for r in dids.limit(LOCAL_TOMBSTONE_ROWS_MAX + 1).collect()]
+    with pinned(ids.distinct(), eager=False) as dids:
+        rows = [
+            tuple(r)
+            for r in dids.coalesce(1).limit(LOCAL_TOMBSTONE_ROWS_MAX + 1).collect()
+        ]
+        if len(rows) > LOCAL_TOMBSTONE_ROWS_MAX:
+            n = dids.select("id").distinct().count()
+            dids.write.mode("append").parquet(_tombstone_path(path))
     if len(rows) > LOCAL_TOMBSTONE_ROWS_MAX:
-        ck = dids.localCheckpoint(eager=True)  # one evaluation of the lineage
-        try:
-            n = ck.select("id").distinct().count()
-            ck.write.mode("append").parquet(_tombstone_path(path))
-        finally:
-            release_checkpoint(ck)
         _consolidate_tombstones(spark, path)
         return n
     n = len({r[0] for r in rows})
@@ -652,16 +657,13 @@ def _consolidate_tombstones(
         # output to the bound so the fold still shrinks the file count
         import math
 
-        from endtoend_etl_openmeteo_spark.session import release_checkpoint
+        from endtoend_etl_openmeteo_spark.session import pinned
 
-        ck = distinct.localCheckpoint(eager=True)
-        try:
+        with pinned(distinct) as ck:
             n = ck.count()
             ck.coalesce(
                 max(1, math.ceil(n / LOCAL_TOMBSTONE_ROWS_MAX))
             ).write.mode("append").parquet(_tombstone_path(path))
-        finally:
-            release_checkpoint(ck)
     else:
         local_df(spark, rows, "id long, part string").write.mode("append").parquet(
             _tombstone_path(path)

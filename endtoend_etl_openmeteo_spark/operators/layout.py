@@ -14,6 +14,8 @@ index, README.md:434-440 in /root/reference/).
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -415,68 +417,65 @@ def sequence_pack(
     # would step DOWN (Spark defaults to -1 when start > stop) and emit
     # spurious zero/negative-length spans
     base = docs.select(F.col(id_col), n_eff).filter(F.col("__n") > 0)
-    if materialize:
-        base = base.localCheckpoint(eager=True)
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts_row = base.select(
-        F.percentile_approx(id_col, qs, 10_000).alias("c")
-    ).collect()[0]["c"]
-    if cuts_row is None:  # empty corpus
-        return base.select(
-            F.col(id_col),
-            F.lit(None).cast("long").alias("seq_id"),
-            F.lit(None).cast("long").alias("seq_off"),
-            F.lit(None).cast("long").alias("doc_off"),
-            F.lit(None).cast("long").alias("span_len"),
-        ).limit(0)
-    cuts = F.array(*[F.lit(c) for c in cuts_row])
-    keyed = base.withColumn(
-        "__b", F.size(F.filter(cuts, lambda c: c < F.col(id_col)))
-    )
-    off_map = _bucket_prefix_offsets(keyed, F.sum("__n"))
-    if off_map is None:  # all-empty docs filtered away
-        off_map = F.create_map(F.lit(0), F.lit(0))
-    from pyspark.sql import Window
+    from endtoend_etl_openmeteo_spark.session import pinned
 
-    w = (
-        Window.partitionBy("__b")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    L = F.lit(int(seq_len))
-    off = (
-        F.element_at(off_map, F.col("__b"))
-        + F.coalesce(F.sum("__n").over(w), F.lit(0))
-    )
-    first_seq = F.floor(F.col("__off") / L)
-    last_seq = F.floor((F.col("__off") + F.col("__n") - 1) / L)
-    span_start = F.greatest(F.col("__off"), F.col("seq_id") * L)
-    span_end = F.least(F.col("__off") + F.col("__n"), (F.col("seq_id") + 1) * L)
-    spans = (
-        keyed.withColumn("__off", off.cast("long"))
-        .select(
-            F.col(id_col),
-            "__off",
-            "__n",
-            F.explode(F.sequence(first_seq, last_seq)).alias("seq_id"),
+    with (pinned(base) if materialize else nullcontext(base)) as base:
+        qs = [i / n_buckets for i in range(1, n_buckets)]
+        cuts_row = base.select(
+            F.percentile_approx(id_col, qs, 10_000).alias("c")
+        ).collect()[0]["c"]
+        if cuts_row is None:  # empty corpus
+            return docs.select(
+                F.col(id_col),
+                F.lit(None).cast("long").alias("seq_id"),
+                F.lit(None).cast("long").alias("seq_off"),
+                F.lit(None).cast("long").alias("doc_off"),
+                F.lit(None).cast("long").alias("span_len"),
+            ).limit(0)
+        cuts = F.array(*[F.lit(c) for c in cuts_row])
+        keyed = base.withColumn(
+            "__b", F.size(F.filter(cuts, lambda c: c < F.col(id_col)))
         )
-        .select(
-            F.col(id_col),
-            F.col("seq_id").cast("long").alias("seq_id"),
-            (span_start - F.col("seq_id") * L).cast("long").alias("seq_off"),
-            (span_start - F.col("__off")).cast("long").alias("doc_off"),
-            (span_end - span_start).cast("long").alias("span_len"),
-        )
-    )
-    if not materialize:
-        return spans
-    # the minhash_lsh_pairs discipline: pin the span frame (one bounded
-    # row per (doc, seq) overlap), then release the internal base blocks
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
+        off_map = _bucket_prefix_offsets(keyed, F.sum("__n"))
+        if off_map is None:  # all-empty docs filtered away
+            off_map = F.create_map(F.lit(0), F.lit(0))
+        from pyspark.sql import Window
 
-    spans = spans.localCheckpoint(eager=True)
-    release_checkpoint(base)
-    return spans
+        w = (
+            Window.partitionBy("__b")
+            .orderBy(id_col)
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        L = F.lit(int(seq_len))
+        off = (
+            F.element_at(off_map, F.col("__b"))
+            + F.coalesce(F.sum("__n").over(w), F.lit(0))
+        )
+        first_seq = F.floor(F.col("__off") / L)
+        last_seq = F.floor((F.col("__off") + F.col("__n") - 1) / L)
+        span_start = F.greatest(F.col("__off"), F.col("seq_id") * L)
+        span_end = F.least(F.col("__off") + F.col("__n"), (F.col("seq_id") + 1) * L)
+        spans = (
+            keyed.withColumn("__off", off.cast("long"))
+            .select(
+                F.col(id_col),
+                "__off",
+                "__n",
+                F.explode(F.sequence(first_seq, last_seq)).alias("seq_id"),
+            )
+            .select(
+                F.col(id_col),
+                F.col("seq_id").cast("long").alias("seq_id"),
+                (span_start - F.col("seq_id") * L).cast("long").alias("seq_off"),
+                (span_start - F.col("__off")).cast("long").alias("doc_off"),
+                (span_end - span_start).cast("long").alias("span_len"),
+            )
+        )
+        if not materialize:
+            return spans
+        # the minhash_lsh_pairs discipline: pin the span frame (one bounded
+        # row per (doc, seq) overlap), then release the internal base blocks
+        return spans.localCheckpoint(eager=True)
 
 
 def weighted_mixture_index(

@@ -42,6 +42,7 @@ from endtoend_etl_openmeteo_spark.operators.dedup import (
     normalized_text,
     token_counts,
 )
+from endtoend_etl_openmeteo_spark.session import overlap
 
 
 def _tokens(text_col: str):
@@ -249,14 +250,7 @@ def write_inverted_index(
             return write_inverted_index(
                 docs, index_path, id_col, text_col, n_buckets, lease=False
             )
-    # The corpus-stats aggregate and the postings write are independent
-    # scans of ``docs`` — overlap them from a driver thread (guide-§2.6
-    # back-fill: the agg's tasks fill cores the write's tail frees)
-    # instead of paying the two jobs end to end.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_stats = pool.submit(_full_stats, docs, text_col)
+    def write_postings() -> None:
         idx = inverted_index(docs, id_col, text_col).withColumn(
             "bkt", _term_bucket(F.col("term"), n_buckets)
         )
@@ -271,7 +265,14 @@ def write_inverted_index(
         idx.repartition(F.col("bkt")).write.partitionBy("bkt").mode(
             "append"
         ).parquet(index_path)
-        n_docs, avgdl, total_tokens, n_text_docs = f_stats.result()
+
+    # The corpus-stats aggregate and the postings write are independent
+    # scans of ``docs`` — overlap them (guide-§2.6 back-fill: the agg's
+    # tasks fill cores the write's tail frees) instead of paying the two
+    # jobs end to end.
+    (n_docs, avgdl, total_tokens, n_text_docs), _ = overlap(
+        lambda: _full_stats(docs, text_col), write_postings
+    )
     _write_stats(
         spark,
         index_path,
@@ -400,14 +401,13 @@ def append_inverted_index(
     # batch-stats aggregate ∥ postings write: two independent scans of
     # the same batch (the write_inverted_index overlap), both inside the
     # marker bracket so the crash window is unchanged
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_stats = pool.submit(_full_stats, docs, text_col)
-        idx.repartition(F.col("bkt")).write.partitionBy("bkt").mode(
-            "append"
-        ).parquet(index_path)
-        b_docs, _, b_tokens, b_text_docs = f_stats.result()
+    (b_docs, _, b_tokens, b_text_docs), _ = overlap(
+        lambda: _full_stats(docs, text_col),
+        lambda: idx.repartition(F.col("bkt"))
+        .write.partitionBy("bkt")
+        .mode("append")
+        .parquet(index_path),
+    )
     n_docs = stats["n_docs"] + b_docs
     total_tokens = stats["total_tokens"] + b_tokens
     # Back-compat CONTRACT for pre-n_text_docs sidecars: assume the
@@ -490,19 +490,18 @@ def delete_from_inverted_index(
         marker.write(_json.dumps({"op": "delete"}).encode())
     finally:
         marker.close()
-    # batch-stats aggregate ∥ the hinted-tombstone computation below:
-    # independent scans of the same batch (the write_inverted_index
-    # overlap), both inside the marker bracket. Context-managed like the
-    # sibling write/append paths: if the tombstone build or the stored
-    # delete raises, the pool still shuts down instead of leaving a
-    # non-daemon worker pinning the stats job past interpreter exit.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _stats_pool:
-        _f_stats = _stats_pool.submit(_full_stats, docs, text_col)
-        b_docs, b_tokens, b_text_docs = _delete_tombstones_and_stats(
-            spark, docs, index_path, id_col, text_col, stats, _f_stats
-        )
+    # batch-stats aggregate ∥ the hinted-tombstone delete: independent
+    # scans of the same batch (the write_inverted_index overlap), both
+    # inside the marker bracket
+    (b_docs, _, b_tokens, b_text_docs), _ = overlap(
+        lambda: _full_stats(docs, text_col),
+        lambda: delete_from_stored_index(
+            spark,
+            _delete_tombstones(docs, id_col, text_col, stats["n_buckets"]),
+            index_path,
+            lease=False,
+        ),
+    )
     n_docs = max(0, stats["n_docs"] - b_docs)
     total_tokens = max(0, stats["total_tokens"] - b_tokens)
     n_text_docs = max(0, stats["n_text_docs"] - b_text_docs)
@@ -524,32 +523,27 @@ def delete_from_inverted_index(
     return n_docs, avgdl
 
 
-def _delete_tombstones_and_stats(
-    spark, docs, index_path: str, id_col: str, text_col: str, stats: dict, _f_stats
-):
-    """The tombstone computation + stored delete of
-    :func:`delete_from_inverted_index`, factored so the stats pool wraps
-    it in a ``with`` block. Returns (b_docs, b_tokens, b_text_docs)."""
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        delete_from_stored_index,
-    )
+def _delete_tombstones(
+    docs: DataFrame, id_col: str, text_col: str, n_buckets: int
+) -> DataFrame:
+    """The (doc_id, part) tombstones of :func:`delete_from_inverted_index`.
 
-    # Tombstones carry the term-bucket PARTITION HINT ("bkt=<b>", one row
-    # per distinct bucket the doc's terms hash into — computable here
-    # because the doc text is in hand), so the vacuum tick prunes its
-    # discovery scan to exactly the touched buckets instead of reading
-    # the whole index. A posting-less doc (NULL/empty PASSED text) still
-    # writes a BARE tombstone: if it was genuinely ingested posting-less
-    # the tombstone is a harmless no-op, but if the caller's text
-    # diverged from the ingested row (out of contract — the stats
-    # reversal is already wrong) the bare id makes vacuum's full-scan
-    # fallback find and remove the REAL postings instead of silently
-    # leaving the doc serving forever.
+    Tombstones carry the term-bucket PARTITION HINT ("bkt=<b>", one row
+    per distinct bucket the doc's terms hash into — computable here
+    because the doc text is in hand), so the vacuum tick prunes its
+    discovery scan to exactly the touched buckets instead of reading
+    the whole index. A posting-less doc (NULL/empty PASSED text) still
+    writes a BARE tombstone: if it was genuinely ingested posting-less
+    the tombstone is a harmless no-op, but if the caller's text
+    diverged from the ingested row (out of contract — the stats
+    reversal is already wrong) the bare id makes vacuum's full-scan
+    fallback find and remove the REAL postings instead of silently
+    leaving the doc serving forever."""
     hinted = (
         inverted_index(docs, id_col, text_col)
         .select(
             "doc_id",
-            _term_bucket(F.col("term"), stats["n_buckets"]).alias("__b"),
+            _term_bucket(F.col("term"), n_buckets).alias("__b"),
         )
         .distinct()
         .select(
@@ -562,11 +556,7 @@ def _delete_tombstones_and_stats(
         .join(hinted.select("doc_id"), "doc_id", "left_anti")
         .select("doc_id", F.lit(None).cast("string").alias("part"))
     )
-    delete_from_stored_index(
-        spark, hinted.unionByName(bare), index_path, lease=False
-    )
-    b_docs, _, b_tokens, b_text_docs = _f_stats.result()
-    return b_docs, b_tokens, b_text_docs
+    return hinted.unionByName(bare)
 
 
 def read_index_stats(spark, index_path: str) -> dict:

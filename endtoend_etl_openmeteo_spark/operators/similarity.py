@@ -1735,7 +1735,7 @@ def compact_streamed_ivfpq_index(
     lesson); a file-less epoch dir ranks oldest (it holds no data, so
     folding it is a no-op on the index SET)."""
     from endtoend_etl_openmeteo_spark.operators.index_maintain import index_lease
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
+    from endtoend_etl_openmeteo_spark.session import pinned
 
     jvm = spark._jvm
     root = jvm.org.apache.hadoop.fs.Path(path)
@@ -1779,25 +1779,24 @@ def compact_streamed_ivfpq_index(
             (int(d.rsplit("_", 1)[-1]) for d in segs), default=-1
         )
         seg = f"{path}/_epoch=__seg_{seg_n:06d}"
+        import math
+
         # basePath keeps `cell` a partition column when reading subdirs
         merged = (
             spark.read.option("basePath", path)
             .parquet(*[f"{path}/{d}" for d in readable])
             .select("id", "codes", "cell")
             .dropDuplicates(["id"])
-            .localCheckpoint(eager=True)  # outlive the source dirs
         )
-        rows = merged.count()
-        import math
-
-        files = max(1, math.ceil(rows / rows_per_file))
-        (
-            merged.repartition(files, F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(seg)
-        )
-        release_checkpoint(merged)
+        with pinned(merged) as merged:  # outlive the source dirs
+            rows = merged.count()
+            files = max(1, math.ceil(rows / rows_per_file))
+            (
+                merged.repartition(files, F.col("cell"))
+                .write.mode("overwrite")
+                .partitionBy("cell")
+                .parquet(seg)
+            )
         for d in doomed:
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}"), True)
         return {"epochs_merged": len(doomed), "rows_merged": int(rows)}

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import uuid
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1119,10 +1120,9 @@ def vt_merge(
     # action and materializes the blocks in the same job; the rewrite
     # reads them instead of re-running the caller's lineage. Released
     # before returning (the fused-pass shape).
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
+    from endtoend_etl_openmeteo_spark.session import pinned
 
-    new = new.localCheckpoint(eager=False)
-    try:
+    with pinned(new, eager=False) as new:
         bounds = new.agg(
             F.min(k0).alias("lo"),
             F.max(k0).alias("hi"),
@@ -1186,8 +1186,6 @@ def vt_merge(
             carry_from=manifest,
             dirty_paths={e["path"] for e in touched},
         )
-    finally:
-        release_checkpoint(new)
 
 
 class _EpochReplayedMidCommit(Exception):
@@ -1968,23 +1966,25 @@ def vt_apply_cdc(
     # the first action and materializes the blocks in the same job (the
     # fused-pass shape), the later consumers read pinned blocks instead
     # of re-running the join. Released before returning.
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
+    from endtoend_etl_openmeteo_spark.session import pinned
 
-    changes = changes.localCheckpoint(eager=False)
-    # the feed may carry columns the replica predates (the source evolved
-    # additively between the diffed versions): merge them in, vt_merge's
-    # rule, so applying a diff reproduces v_to's schema too — projecting
-    # them away would silently break the documented round-trip identity
-    feed_schema = StructType(
-        [f for f in changes.schema.fields if f.name != "change_type"]
-    )
-    schema = StructType.fromJson(
-        json.loads(
-            _merge_schema(schema.json() if schema is not None else None, feed_schema)
+    with pinned(changes, eager=False) as changes:
+        # the feed may carry columns the replica predates (the source
+        # evolved additively between the diffed versions): merge them in,
+        # vt_merge's rule, so applying a diff reproduces v_to's schema
+        # too — projecting them away would silently break the documented
+        # round-trip identity
+        feed_schema = StructType(
+            [f for f in changes.schema.fields if f.name != "change_type"]
         )
-    )
+        schema = StructType.fromJson(
+            json.loads(
+                _merge_schema(
+                    schema.json() if schema is not None else None, feed_schema
+                )
+            )
+        )
 
-    try:
         bounds = changes.agg(
             F.min(k0).alias("lo"),
             F.max(k0).alias("hi"),
@@ -2054,8 +2054,6 @@ def vt_apply_cdc(
             carry_from=manifest,
             dirty_paths={e["path"] for e in touched},
         )
-    finally:
-        release_checkpoint(changes)
 
 
 def vt_merge_mor(
@@ -2119,11 +2117,9 @@ def vt_merge_mor(
     # the batch, the delete-file write materializes the join; later
     # consumers read pinned blocks (the fused-pass shape). Both released
     # before returning.
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
+    from endtoend_etl_openmeteo_spark.session import pinned
 
-    new = new.localCheckpoint(eager=False)
-    joined_ck: DataFrame | None = None
-    try:
+    with pinned(new, eager=False) as new, ExitStack() as scoped:
         bounds = new.agg(
             F.min(k0).alias("lo"),
             F.max(k0).alias("hi"),
@@ -2165,10 +2161,9 @@ def vt_merge_mor(
                 # batch-key-sized (inner join against the broadcast
                 # probe); materialized by the delete-file write below,
                 # then the loser branch reads the same blocks
-                joined_ck = scan.join(F.broadcast(probe), keys).localCheckpoint(
-                    eager=False
+                joined = scoped.enter_context(
+                    pinned(scan.join(F.broadcast(probe), keys), eager=False)
                 )
-                joined = joined_ck
                 # NULL order sorts as -infinity — the COW path's semantics
                 # (dedup_last_write_wins orders DESC NULLS LAST, so a NULL-
                 # order row loses to any non-NULL one and batch wins
@@ -2238,10 +2233,6 @@ def vt_merge_mor(
             dirty_paths=hit,
         )
         return version, len(hit), rows_superseded
-    finally:
-        release_checkpoint(new)
-        if joined_ck is not None:
-            release_checkpoint(joined_ck)
 
 
 def vt_optimize(

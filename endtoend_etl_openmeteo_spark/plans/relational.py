@@ -432,27 +432,23 @@ def _seed_two_appends(
     commit order, and every seeded query reads whole snapshots, so the
     final table content is order-independent. Returns the version with
     BOTH appends visible (max of the two commits)."""
-    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
     from endtoend_etl_openmeteo_spark.operators.versioned import (
         vt_append,
         vt_init,
     )
+    from endtoend_etl_openmeteo_spark.session import overlap
 
     vt_init(spark, table)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(
-                vt_append,
-                spark,
-                part,
-                table,
-                stats_cols=stats_cols,
-                bloom_cols=bloom_cols,
-            )
-            for part in parts
-        ]
-        return max(f.result() for f in futs)
+    appends = [
+        partial(
+            vt_append, spark, part, table,
+            stats_cols=stats_cols, bloom_cols=bloom_cols,
+        )
+        for part in parts
+    ]
+    return max(overlap(*appends))
 
 
 @register(
@@ -972,7 +968,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         vt_merge,
         vt_read,
     )
-    from endtoend_etl_openmeteo_spark.session import scratch_dir
+    from endtoend_etl_openmeteo_spark.session import overlap, scratch_dir
 
     base = tbl(spark, sf_dir, "events").select(
         "event_id", "value", F.lit(1).cast("long").alias("ord")
@@ -981,17 +977,12 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     source, replica = f"{work}/source", f"{work}/replica"
     try:
         # the two tables' seeding commits are independent (distinct
-        # dirs, same immutable input) — overlap them (guide-§2.6; the
-        # q_ann_ivfpq_stored contract-row thread-pool pattern)
-        from concurrent.futures import ThreadPoolExecutor
-
+        # dirs, same immutable input) — overlap them (guide-§2.6)
         def seed(t: str) -> None:
             vt_init(spark, t)
             vt_append(spark, base, t, stats_cols=["event_id"])
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(seed, t) for t in (source, replica)]:
-                f.result()
+        overlap(lambda: seed(source), lambda: seed(replica))
         newer = base.filter(F.col("event_id") % 7 == 0).select(
             "event_id",
             (F.col("value") + 500).alias("value"),

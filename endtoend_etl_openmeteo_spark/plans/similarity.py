@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -177,73 +179,10 @@ def _table_fingerprint(sf_dir: str, table: str = "embeddings") -> tuple:
         return ()  # unknown -> still cached per (key, empty-fp)
 
 
-def clear_trained_models(disk: bool = False) -> None:
+def clear_trained_models() -> None:
     """Drop every cached quantizer model — harness hook for explicit
-    invalidation (e.g. between data regenerations). ``disk=True`` also
-    removes the persisted tier."""
+    invalidation (e.g. between data regenerations)."""
     _TRAINED.clear()
-    if disk:
-        import shutil
-
-        shutil.rmtree(_model_cache_dir(), ignore_errors=True)
-
-
-def _model_cache_dir():
-    from pathlib import Path
-
-    return Path(__file__).resolve().parents[2] / "spark-warehouse" / "_model_cache"
-
-
-def _model_cache_file(key: tuple):
-    import hashlib
-
-    return _model_cache_dir() / f"{hashlib.md5(repr(key).encode()).hexdigest()}.json"
-
-
-def _load_model(key: tuple):
-    """Disk tier of the quantizer cache: the ``_quantizer.json`` sidecar
-    pattern (operators/similarity.write_ivf_index) applied to the
-    in-plan trainers, keyed by (kind, table, params, content
-    fingerprint) — a FRESH PROCESS (each driver bench run) loads the
-    deterministic trained model instead of re-training it, the
-    train-once/serve-many split made durable. The key embeds the data
-    fingerprint, so regenerated testdata misses cleanly; repr(key) is
-    stored and compared to guard md5-filename collisions."""
-    import json
-
-    f = _model_cache_file(key)
-    try:
-        payload = json.loads(f.read_text())
-        if payload["key"] != repr(key):
-            return None
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(payload["schema"])
-        return [tuple(r) for r in payload["rows"]], schema
-    except (OSError, ValueError, KeyError, TypeError, AttributeError):
-        # any malformed sidecar — invalid JSON, valid JSON of the wrong
-        # shape (rows not a list, schema not a StructType json) — is a
-        # cache MISS that retrains and self-heals, never a plan crash
-        return None
-
-
-def _store_model(key: tuple, rows: list, schema) -> None:
-    import json
-    import os
-    import uuid
-
-    d = _model_cache_dir()
-    try:
-        d.mkdir(parents=True, exist_ok=True)
-        tmp = d / f".tmp_{uuid.uuid4().hex}"
-        tmp.write_text(
-            json.dumps(
-                {"key": repr(key), "rows": rows, "schema": schema.jsonValue()}
-            )
-        )
-        os.replace(tmp, _model_cache_file(key))  # atomic vs racing writers
-    except OSError:
-        pass  # cache is an optimization; training already succeeded
 
 
 def _cached_model_rows(spark: SparkSession, key: tuple, build) -> tuple[list, object]:
@@ -254,19 +193,14 @@ def _cached_model_rows(spark: SparkSession, key: tuple, build) -> tuple[list, ob
     trip per plan build."""
     key = key + (_table_fingerprint(key[1]),)
     if key not in _TRAINED:
-        loaded = _load_model(key)
-        if loaded is None:
-            built = build()
-            if isinstance(built, tuple):
-                # (rows, schema) straight from a *_rows trainer — the
-                # model never round-trips through a frame at all (the
-                # createDataFrame→collect of model-sized rows measured
-                # ~2 s on a cold session, pure Janino/py4j fixed cost)
-                loaded = built
-            else:
-                loaded = ([tuple(r) for r in built.collect()], built.schema)
-            _store_model(key, loaded[0], loaded[1])
-        _TRAINED[key] = loaded
+        built = build()
+        if not isinstance(built, tuple):
+            # a *_rows trainer returns (rows, schema) directly, so the
+            # model never round-trips through a frame at all (the
+            # createDataFrame→collect of model-sized rows measured ~2 s
+            # on a cold session, pure Janino/py4j fixed cost)
+            built = ([tuple(r) for r in built.collect()], built.schema)
+        _TRAINED[key] = built
     return _TRAINED[key]
 
 
@@ -545,9 +479,7 @@ def q_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the embeddings table is fixed-size across SFs, so every leg
     # exchange at the session's 32 partitions is per-task fixed cost
     # (the bounded_shuffle contract-row rationale, session.py).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from endtoend_etl_openmeteo_spark.session import bounded_shuffle
+    from endtoend_etl_openmeteo_spark.session import bounded_shuffle, overlap
 
     def topk_set(fn) -> set:
         return {
@@ -562,16 +494,16 @@ def q_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("pq", q_ann_pq),
     ]
     with bounded_shuffle(spark, 8):
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            fut_exact = pool.submit(topk_set, q_ann_cosine)
-            futs = [(name, pool.submit(topk_set, fn)) for name, fn in methods]
-            exact = fut_exact.result()
-            # max(.., 1): an empty exact set (degenerate corpus) reads as
-            # recall 0 -> False verdicts, never a ZeroDivisionError
-            rows = [
-                (name, len(exact & fut.result()) / max(len(exact), 1) >= 0.5)
-                for name, fut in futs
-            ]
+        exact, *found = overlap(
+            partial(topk_set, q_ann_cosine),
+            *(partial(topk_set, fn) for _, fn in methods),
+        )
+    # max(.., 1): an empty exact set (degenerate corpus) reads as recall
+    # 0 -> False verdicts, never a ZeroDivisionError
+    rows = [
+        (name, len(exact & got) / max(len(exact), 1) >= 0.5)
+        for (name, _), got in zip(methods, found)
+    ]
     return spark.createDataFrame(rows, "method string, recall_ok boolean")
 
 
@@ -604,7 +536,12 @@ def q_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         stored_ivf_topk,
         write_ivf_index,
     )
-    from endtoend_etl_openmeteo_spark.session import scratch_dir
+    from endtoend_etl_openmeteo_spark.session import (
+        bounded_shuffle,
+        overlap,
+        pinned,
+        scratch_dir,
+    )
 
     emb = tbl(spark, sf_dir, "embeddings")
     centroids = _cached_model(
@@ -612,41 +549,34 @@ def q_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ivf_kmeans", sf_dir, 10, 2),
         lambda: (kmeans_train_sampled_rows(emb, k=10, iterations=2), _CENTROID_SCHEMA),
     )
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
-
     # one assignment pass feeds BOTH the index write and the in-plan
     # comparator — lazily it re-runs the broadcast argmin per consumer
-    cells = (
+    assigned = (
         kmeans_assign(emb, centroids, keep_vec=True)
         .withColumnRenamed("id", "vec_id")
         .withColumnRenamed("vec", "embedding")
-        .localCheckpoint(eager=True)
     )
     queries = emb.filter(F.col("vec_id") < 5)
+
+    def rows_of(df) -> list:
+        return sorted(tuple(r) for r in df.collect())
+
     idx_dir = scratch_dir(prefix="ivf_idx_")
+    # Harness shuffle pin: the whole lifecycle materializes inside, and
+    # the embeddings table is fixed-size across SFs, so every exchange at
+    # the session's 32 partitions is per-task fixed cost. Both serving
+    # branches are k·|queries| rows by contract — collected CONCURRENTLY
+    # and multiset-compared driver-side (the q_ann_recall_contract
+    # treatment: wall-clock ≈ the slower branch, no two-way exceptAll
+    # plan on top).
     try:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from endtoend_etl_openmeteo_spark.session import bounded_shuffle
-
-        # Harness shuffle pin: the whole lifecycle materializes inside,
-        # and the embeddings table is fixed-size across SFs, so every
-        # exchange at the session's 32 partitions is per-task fixed cost.
-        # Both serving branches are k·|queries| rows by contract —
-        # collected CONCURRENTLY and multiset-compared driver-side (the
-        # q_ann_recall_contract treatment: wall-clock ≈ the slower
-        # branch, no two-way exceptAll plan on top).
-        with bounded_shuffle(spark, 8):
+        with pinned(assigned) as cells, bounded_shuffle(spark, 8):
             write_ivf_index(cells, centroids, idx_dir, cell_col="cluster")
-
-            def rows_of(df) -> list:
-                return sorted(tuple(r) for r in df.collect())
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_stored = pool.submit(
+            stored, inplan = overlap(
+                partial(
                     rows_of, stored_ivf_topk(spark, idx_dir, queries, k=10, nprobe=2)
-                )
-                f_inplan = pool.submit(
+                ),
+                partial(
                     rows_of,
                     ivf_topk(
                         cells,
@@ -656,15 +586,14 @@ def q_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
                         nprobe=2,
                         centroids=centroids.withColumnRenamed("cluster", "cell"),
                     ),
-                )
-                stored, inplan = f_stored.result(), f_inplan.result()
-            ok = bool(stored) and stored == inplan
-            return spark.createDataFrame(
-                [("stored_equals_inplan", ok)], "contract string, ok boolean"
+                ),
             )
     finally:
-        release_checkpoint(cells)
         shutil.rmtree(idx_dir, ignore_errors=True)
+    ok = bool(stored) and stored == inplan
+    return spark.createDataFrame(
+        [("stored_equals_inplan", ok)], "contract string, ok boolean"
+    )
 
 
 @register(
@@ -701,7 +630,8 @@ def q_ann_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from endtoend_etl_openmeteo_spark.session import (
         bounded_shuffle,
-        release_checkpoint,
+        overlap,
+        pinned,
         scratch_dir,
     )
 
@@ -717,37 +647,33 @@ def q_ann_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents, books = _ivfpq_locals(rows)
     queries = emb.filter(F.col("vec_id") < 5)
+
+    def rows_of(df) -> list:
+        return sorted(tuple(r) for r in df.collect())
+
     idx_dir = scratch_dir(prefix="ivfpq_idx_")
     # one Arrow encode pass feeds BOTH the index write and the in-plan
-    # comparator (lazily each consumer would re-encode)
-    enc = _encode_with_payload(
-        emb, cents, books, "vec_id", "embedding"
-    ).localCheckpoint(eager=True)
+    # comparator (lazily each consumer would re-encode). Harness shuffle
+    # pin: embeddings is fixed-size across SFs and every branch
+    # materializes inside the pin (the q_ann_ivf_stored rationale). Both
+    # serving branches are k·|queries| rows by contract — collected
+    # concurrently, multiset-compared driver-side.
     try:
-        # Harness shuffle pin: embeddings is fixed-size across SFs and
-        # every branch materializes inside the pin (the q_ann_ivf_stored
-        # rationale). Both serving branches are k·|queries| rows by
-        # contract — collected concurrently, multiset-compared
-        # driver-side.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with bounded_shuffle(spark, 8):
+        with pinned(
+            _encode_with_payload(emb, cents, books, "vec_id", "embedding")
+        ) as enc, bounded_shuffle(spark, 8):
             write_ivfpq_index(
                 enc, None, None, idx_dir, quantizer_locals=(cents, books)
             )
-
-            def rows_of(df) -> list:
-                return sorted(tuple(r) for r in df.collect())
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_stored = pool.submit(
+            stored, inplan = overlap(
+                partial(
                     rows_of,
                     stored_ivfpq_topk(
                         spark, idx_dir, emb, queries, k=10, nprobe=2,
                         n_candidates=50,
                     ),
-                )
-                f_inplan = pool.submit(
+                ),
+                partial(
                     rows_of,
                     ivfpq_topk_rerank(
                         enc, None, None, emb, queries,
@@ -755,15 +681,14 @@ def q_ann_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
                         coarse_row=_coarse_row_from_local(spark, cents),
                         codebook_row=_codebook_row_from_local(spark, books),
                     ),
-                )
-                stored, inplan = f_stored.result(), f_inplan.result()
-            ok = bool(stored) and stored == inplan
-            return spark.createDataFrame(
-                [("stored_equals_inplan", ok)], "contract string, ok boolean"
+                ),
             )
     finally:
-        release_checkpoint(enc)
         shutil.rmtree(idx_dir, ignore_errors=True)
+    ok = bool(stored) and stored == inplan
+    return spark.createDataFrame(
+        [("stored_equals_inplan", ok)], "contract string, ok boolean"
+    )
 
 
 @register(
@@ -814,7 +739,8 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from endtoend_etl_openmeteo_spark.session import (
         bounded_shuffle,
-        release_checkpoint,
+        overlap,
+        pinned,
         scratch_dir,
     )
 
@@ -828,9 +754,6 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents, books = _ivfpq_locals(rows)
     idx_dir = scratch_dir(prefix="ivfpq_del_")
-    enc = _encode_with_payload(
-        emb, cents, books, "vec_id", "embedding"
-    ).localCheckpoint(eager=True)
     # deterministic victims present in every SF's corpus
     victims = [5, 6, 7]
 
@@ -849,11 +772,10 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the q_ann_ivfpq_stored rationale. The survivor set is a pure
         # read of the checkpointed encode frame — it never touches the
         # index dir, so it runs CONCURRENTLY with build→delete→visible-
-        # content (the q_ann_ivfpq_stored contract-row thread-pool
-        # pattern).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with bounded_shuffle(spark, 8):
+        # content.
+        with pinned(
+            _encode_with_payload(emb, cents, books, "vec_id", "embedding")
+        ) as enc, bounded_shuffle(spark, 8):
 
             def build_delete_visible() -> set:
                 write_ivfpq_index(
@@ -877,10 +799,7 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for r in enc.filter(~F.col("id").isin(victims)).collect()
                 }
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_vis = pool.submit(build_delete_visible)
-                f_sur = pool.submit(survivor_set)
-                visible, survivors = f_vis.result(), f_sur.result()
+            visible, survivors = overlap(build_delete_visible, survivor_set)
             hidden = bool(survivors) and visible == survivors
             stats = vacuum_index_tombstones(spark, idx_dir)
             vacuum_ok = (
@@ -896,7 +815,6 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "contract string, ok boolean",
         )
     finally:
-        release_checkpoint(enc)
         shutil.rmtree(idx_dir, ignore_errors=True)
 
 
@@ -934,7 +852,8 @@ def q_ann_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_train_rows,
     )
     from endtoend_etl_openmeteo_spark.session import (
-        release_checkpoint,
+        bounded_shuffle,
+        pinned,
         scratch_dir,
     )
     from endtoend_etl_openmeteo_spark.streaming import run_streaming_ann_ingest
@@ -974,7 +893,6 @@ def q_ann_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             await_or_raise,
             stamp_wave_mtimes,
         )
-        from endtoend_etl_openmeteo_spark.session import bounded_shuffle
 
         stamp_wave_mtimes([landing], [wave1])
         # epochs are metadata-sized here — pin the streaming lifecycle's
@@ -989,21 +907,19 @@ def q_ann_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        with bounded_shuffle(spark, 8):
-            # INDEX-CONTENT equality, the sharp form of stream-equals-
-            # batch: encode is deterministic given the sidecar quantizers,
-            # so the streamed index's (id, cell, codes) set must equal one
-            # batch encode of the same vectors — and serving equality
-            # follows via q_ann_ivfpq_stored's stored-equals-inplan
-            # contract (no need to run two full rerank pipelines here).
-            streamed = (
-                spark.read.parquet(index)
-                .select("id", F.col("cell").cast("int").alias("cell"), "codes")
-                .localCheckpoint(eager=True)
+        # INDEX-CONTENT equality, the sharp form of stream-equals-batch:
+        # encode is deterministic given the sidecar quantizers, so the
+        # streamed index's (id, cell, codes) set must equal one batch
+        # encode of the same vectors — and serving equality follows via
+        # q_ann_ivfpq_stored's stored-equals-inplan contract (no need to
+        # run two full rerank pipelines here).
+        with bounded_shuffle(spark, 8), pinned(
+            spark.read.parquet(index).select(
+                "id", F.col("cell").cast("int").alias("cell"), "codes"
             )
-            batch = _encode_with_payload(
-                emb, cents, books, "vec_id", "embedding"
-            ).localCheckpoint(eager=True)
+        ) as streamed, pinned(
+            _encode_with_payload(emb, cents, books, "vec_id", "embedding")
+        ) as batch:
             n_total = emb.count()
             complete = (
                 streamed.groupBy()
@@ -1021,9 +937,6 @@ def q_ann_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg((F.count("*") == 0).alias("ok"))
                 .select(F.lit("stream_equals_batch").alias("contract"), "ok")
             )
-            out = complete.unionByName(equal).localCheckpoint(eager=True)
-            release_checkpoint(streamed)
-            release_checkpoint(batch)
-            return out
+            return complete.unionByName(equal).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -7,6 +7,8 @@ Java regex and RE2 so the DuckDB oracles express identical semantics.
 
 from __future__ import annotations
 
+from contextlib import ExitStack, contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1672,7 +1674,11 @@ def q_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         stored_bm25_topk,
         write_inverted_index,
     )
-    from endtoend_etl_openmeteo_spark.session import bounded_shuffle, scratch_dir
+    from endtoend_etl_openmeteo_spark.session import (
+        bounded_shuffle,
+        overlap,
+        scratch_dir,
+    )
 
     docs = (
         tbl(spark, sf_dir, "documents")
@@ -1688,11 +1694,8 @@ def q_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Harness shuffle pin: bounded 500-doc slice, lifecycle proof —
         # the q_index_compact rationale. The survivor rebuild never
         # touches the index dir, so it runs CONCURRENTLY with
-        # build→delete→serve (the q_ann_ivfpq_stored contract-row
-        # thread-pool pattern); post-vacuum count and re-serve are
+        # build→delete→serve; post-vacuum count and re-serve are
         # likewise independent reads of the vacuumed index.
-        from concurrent.futures import ThreadPoolExecutor
-
         with bounded_shuffle(spark, 8):
 
             def build_delete_serve() -> list:
@@ -1711,22 +1714,14 @@ def q_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 )
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_served = pool.submit(build_delete_serve)
-                f_want = pool.submit(survivor_rebuild)
-                served, want = f_served.result(), f_want.result()
+            served, want = overlap(build_delete_serve, survivor_rebuild)
             equal = bool(served) and served == want
             vacuum_index_tombstones(spark, idx, id_col="doc_id")
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_gone = pool.submit(
-                    lambda: spark.read.parquet(idx)
-                    .filter(F.col("doc_id") < 10)
-                    .count()
-                )
-                f_reserve = pool.submit(
-                    lambda: rows_of(stored_bm25_topk(spark, idx, SEARCH_TERMS, k=10))
-                )
-                vac_ok = f_gone.result() == 0 and f_reserve.result() == served
+            gone, reserved = overlap(
+                lambda: spark.read.parquet(idx).filter(F.col("doc_id") < 10).count(),
+                lambda: rows_of(stored_bm25_topk(spark, idx, SEARCH_TERMS, k=10)),
+            )
+            vac_ok = gone == 0 and reserved == served
         return spark.createDataFrame(
             [
                 ("delete_equals_survivor_rebuild", equal),
@@ -2041,43 +2036,39 @@ _DEDUP_CONTRACT_MAX_ID = 500
 
 
 def _dedup_contract_rows(spark: SparkSession, sf_dir: str) -> list:
-    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
+    from endtoend_etl_openmeteo_spark.session import overlap
 
     def verdict(df) -> tuple:
         r = df.collect()[0]
         return (r["contract"], r["ok"])
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        # the incremental-screen verdict depends only on the doc slice —
-        # start it FIRST so its scratch-index lifecycle overlaps the
-        # shared-input build (truth/emitted checkpoints) it doesn't use
-        f_incr = pool.submit(_dedup_incr_verdict, spark, sf_dir)
-        frames, checkpoints = _dedup_contract_parts(spark, sf_dir)
-        try:
-            futs = [pool.submit(verdict, df) for df in frames.values()]
-            rows = [f.result() for f in futs] + [f_incr.result()]
-        finally:
-            # a failing verdict must not leak the pinned checkpoint blocks
-            for c in checkpoints:
-                release_checkpoint(c)
-    return rows
+    def shared_input_verdicts() -> list:
+        with _dedup_contract_parts(spark, sf_dir) as frames:
+            return overlap(*(partial(verdict, df) for df in frames.values()))
+
+    # the incremental-screen verdict depends only on the doc slice, so
+    # its scratch-index lifecycle overlaps the shared-input build
+    # (truth/emitted checkpoints) it doesn't use
+    rows, incr = overlap(
+        shared_input_verdicts, lambda: _dedup_incr_verdict(spark, sf_dir)
+    )
+    return rows + [incr]
 
 
-def _dedup_contract_parts(spark: SparkSession, sf_dir: str) -> tuple:
-    """(verdict frames by contract name, checkpointed shared inputs) —
-    split out so tests can pin each verdict plan's exchange budget
-    without collecting."""
+@contextmanager
+def _dedup_contract_parts(spark: SparkSession, sf_dir: str):
+    """Yields the verdict frames by contract name, over shared inputs
+    checkpointed for the block's duration — split out so tests can pin
+    each verdict plan's exchange budget without collecting."""
     max_id = _DEDUP_CONTRACT_MAX_ID
 
-    from endtoend_etl_openmeteo_spark.operators.clusters import dedup_clusters
     from endtoend_etl_openmeteo_spark.operators.dedup import (
         cpu_parallelize,
         shingles,
-        simhash64,
     )
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
+    from endtoend_etl_openmeteo_spark.session import overlap, pinned
 
     docs = tbl(spark, sf_dir, "documents").filter(F.col("doc_id") < max_id)
 
@@ -2092,9 +2083,13 @@ def _dedup_contract_parts(spark: SparkSession, sf_dir: str) -> tuple:
         # O(shared-shingle pairs) instead of O(slice^2) intersects
         # (measured 4.0 s -> 0.7 s; the round(i/union, 6) double equals
         # the old array_intersect form's).
-        sh = cpu_parallelize(docs.select("doc_id", "text")).select(
+        postings = cpu_parallelize(docs.select("doc_id", "text")).select(
             F.col("doc_id").alias("id"), F.explode(shingles("text", 3)).alias("s")
-        ).localCheckpoint(eager=True)  # postings feed sizes AND the self-join
+        )
+        with pinned(postings) as sh:  # feeds sizes AND the self-join
+            return stack.enter_context(pinned(jaccard_pairs(sh)))
+
+    def jaccard_pairs(sh) -> DataFrame:
         sz = sh.groupBy("id").agg(F.count("*").alias("n"))  # shingles distinct
         pa, pb = sh.alias("pa"), sh.alias("pb")
         inter = (
@@ -2103,7 +2098,7 @@ def _dedup_contract_parts(spark: SparkSession, sf_dir: str) -> tuple:
             .groupBy(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
             .agg(F.count("*").alias("i"))
         )
-        t = (
+        return (
             inter.join(
                 F.broadcast(
                     sz.select(F.col("id").alias("id_a"), F.col("n").alias("na"))
@@ -2124,27 +2119,32 @@ def _dedup_contract_parts(spark: SparkSession, sf_dir: str) -> tuple:
                 ).alias("j"),
             )
             .filter(F.col("j") >= 0.5)
-            .localCheckpoint(eager=True)  # consumed by three contracts
         )
-        release_checkpoint(sh)
-        return t
 
     def build_emitted() -> DataFrame:
         # three verdicts consume the emitted pairs — materialize once
-        return minhash_lsh_pairs(
-            docs, "doc_id", "text", n_hashes=32, bands=8, jaccard_threshold=0.5
-        ).localCheckpoint(eager=True)
+        return stack.enter_context(
+            pinned(
+                minhash_lsh_pairs(
+                    docs, "doc_id", "text", n_hashes=32, bands=8,
+                    jaccard_threshold=0.5,
+                )
+            )
+        )
 
-    # The truth build and the minhash pipeline are INDEPENDENT given the
-    # doc slice — run them concurrently (guide-§2.6 back-fill; wall ≈
-    # the slower build instead of the sum; each leg's internal shape is
-    # unchanged and stays pinned by the plan tests).
-    from concurrent.futures import ThreadPoolExecutor
+    with ExitStack() as stack:
+        # The truth build and the minhash pipeline are INDEPENDENT given
+        # the doc slice — run them concurrently (guide-§2.6 back-fill;
+        # wall ≈ the slower build instead of the sum; each leg's internal
+        # shape is unchanged and stays pinned by the plan tests). Both
+        # checkpoints stay pinned until the caller's block exits.
+        truth, emitted = overlap(build_truth, build_emitted)
+        yield _dedup_verdicts(docs, truth, emitted)
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_truth = _pool.submit(build_truth)
-        _f_emitted = _pool.submit(build_emitted)
-        truth, emitted = _f_truth.result(), _f_emitted.result()
+
+def _dedup_verdicts(docs, truth, emitted) -> dict:
+    from endtoend_etl_openmeteo_spark.operators.clusters import dedup_clusters
+    from endtoend_etl_openmeteo_spark.operators.dedup import cpu_parallelize
 
     def row(name, ok_col):
         return F.lit(name).alias("contract"), ok_col.alias("ok")
@@ -2224,15 +2224,12 @@ def _dedup_contract_parts(spark: SparkSession, sf_dir: str) -> tuple:
     # contract 5 (incremental_exactdup) lives in _dedup_incr_verdict —
     # it depends only on the doc slice, so the caller overlaps it with
     # this shared-input build
-    return (
-        {
-            "minhash_precision": precision,
-            "minhash_recall_07": recall,
-            "simhash_exactdup": simhash_ok,
-            "clusters_consistent": clusters_ok,
-        },
-        [truth, emitted],
-    )
+    return {
+        "minhash_precision": precision,
+        "minhash_recall_07": recall,
+        "simhash_exactdup": simhash_ok,
+        "clusters_consistent": clusters_ok,
+    }
 
 
 def _dedup_incr_verdict(spark: SparkSession, sf_dir: str) -> tuple:

@@ -23,6 +23,7 @@ Design decisions:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -152,9 +153,6 @@ def scratch_dir(prefix: str = "scratch_") -> str:
     return tempfile.mkdtemp(prefix=prefix)
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
 def bounded_shuffle(spark: SparkSession, n: int):
     """Temporarily pin ``spark.sql.shuffle.partitions`` to ``n``.
@@ -184,18 +182,59 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# --- localCheckpoint lifecycle -------------------------------------------
+# --- localCheckpoint lifecycle and job overlap ----------------------------
 #
-# ``df.localCheckpoint(eager=True)`` pins its blocks in the block manager
-# until the RDD is garbage-collected JVM-side — which for a long-lived
-# driver (bench loops, serving sessions, maintenance ticks) is effectively
-# never. Iterative operators therefore release superseded per-iteration
-# checkpoints as soon as the next round is materialized, and release their
-# internal scaffolding (edge tables, tokenized corpora) before returning —
-# the ONLY blocks a plan may leave behind are the ones backing the
-# DataFrame it returns. Suite drivers (bench.py, tools/check_oracle.py,
-# tests) then call :func:`release_persistent_rdds` after consuming each
-# result, so session storage memory returns to ~0 between queries.
+# ``df.localCheckpoint()`` pins its blocks in the block manager until the
+# RDD is garbage-collected JVM-side — which for a long-lived driver (bench
+# loops, serving sessions, maintenance ticks) is effectively never. A
+# checkpoint that does not outlive its function is therefore taken with
+# :func:`pinned`, which releases it on exit, also when the body raises.
+# Only two kinds of checkpoint are taken bare: the frame a function
+# returns (the caller owns it, and suite drivers — bench.py,
+# tools/check_oracle.py, tests — free it with
+# :func:`release_persistent_rdds` after consuming the result), and a
+# loop-carried iterate that the next round releases.
+# ``tests/test_plans.py`` enforces the split.
+#
+# Independent Spark jobs run side by side through :func:`overlap`, never
+# a hand-built thread pool: its threads carry the caller's job group and
+# local properties, so every job stays attributed to the query that
+# scheduled it.
+
+
+@contextmanager
+def pinned(df, eager: bool = True):
+    """Checkpoint ``df`` (``localCheckpoint(eager)``), yield the
+    checkpointed frame, and release its blocks on exit. Neither the
+    yielded frame nor anything lazily derived from it may be used after
+    the block exits."""
+    ck = df.localCheckpoint(eager=eager)
+    try:
+        yield ck
+    finally:
+        release_checkpoint(ck)
+
+
+def overlap(*thunks) -> list:
+    """Run the zero-argument ``thunks`` concurrently, one thread each, and
+    return their results in argument order. Each thread inherits the
+    caller's local properties (job group included) through
+    ``pyspark.inheritable_thread_target``. Every thunk finishes before
+    this returns or re-raises the first failed thunk's error."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(SparkSession.active())
+    if not callable(inherit):
+        # PYSPARK_PIN_THREAD=false: pyspark hands the session back, and
+        # without pinned threads there are no per-thread properties to carry
+        def inherit(thunk):
+            return thunk
+
+    with ThreadPoolExecutor(max_workers=max(len(thunks), 1)) as pool:
+        futs = [pool.submit(inherit(t)) for t in thunks]
+    return [f.result() for f in futs]
 
 
 def release_checkpoint(df) -> None:

@@ -19,13 +19,14 @@ micro-batch); state for the windowed aggregate is bounded by the watermark.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from endtoend_etl_openmeteo_spark.operators.explode import unzip_hourly
-from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
-from endtoend_etl_openmeteo_spark.session import release_checkpoint
+from endtoend_etl_openmeteo_spark.session import pinned, release_checkpoint
 from endtoend_etl_openmeteo_spark.sources.bronze import BRONZE_READ_SCHEMA
 
 
@@ -305,42 +306,6 @@ def run_streaming_corpus_ingest(
                 est_threshold=est_threshold,
                 batch_id=f"{run_id}-{int(epoch_id)}",
             )
-        # pairs is eagerly checkpointed inside the operator (it must
-        # materialize BEFORE the index append), so reusing it twice below
-        # re-reads checkpoint blocks, not the landing files. The CALLER
-        # owns the release — done after the sinks, or a long-lived ingest
-        # pins one pairs copy per epoch forever.
-        dup_ids = (
-            pairs.filter(~F.col("match_is_new"))
-            .select(F.col("new_id").alias("__dup_id"))
-            .unionByName(
-                pairs.filter(F.col("match_is_new")).select(
-                    F.col("match_id").alias("__dup_id")
-                )
-            )
-            .distinct()
-        )
-        annotated = batch.join(
-            F.broadcast(dup_ids), batch[id_col] == dup_ids["__dup_id"], "left"
-        )
-        stamped = (
-            annotated.withColumn("_run_id", F.lit(run_id))
-            .withColumn("_epoch_id", F.lit(int(epoch_id)))
-        )
-        # with a quarantine, TWO sinks consume `stamped` — checkpoint it
-        # so the landing files and the dedup join evaluate once per
-        # epoch, not once per sink; LAZY: the first sink write is the
-        # action that materializes it (the bpe_train fused-pass
-        # pattern), the second reads its blocks; released with `pairs`
-        # below
-        stamped_ck = (
-            stamped.localCheckpoint(eager=False)
-            if quarantine_path is not None
-            else None
-        )
-        if stamped_ck is not None:
-            stamped = stamped_ck
-
         def sink(df: DataFrame, path: str) -> None:
             (
                 df.drop("__dup_id")
@@ -350,7 +315,37 @@ def run_streaming_corpus_ingest(
                 .parquet(path)
             )
 
-        try:
+        # pairs is eagerly checkpointed inside the operator (it must
+        # materialize BEFORE the index append), so reusing it twice below
+        # re-reads checkpoint blocks, not the landing files. The CALLER
+        # owns the release — done after the sinks, or a long-lived ingest
+        # pins one pairs copy per epoch forever.
+        with ExitStack() as scoped:
+            scoped.callback(release_checkpoint, pairs)
+            dup_ids = (
+                pairs.filter(~F.col("match_is_new"))
+                .select(F.col("new_id").alias("__dup_id"))
+                .unionByName(
+                    pairs.filter(F.col("match_is_new")).select(
+                        F.col("match_id").alias("__dup_id")
+                    )
+                )
+                .distinct()
+            )
+            annotated = batch.join(
+                F.broadcast(dup_ids), batch[id_col] == dup_ids["__dup_id"], "left"
+            )
+            stamped = (
+                annotated.withColumn("_run_id", F.lit(run_id))
+                .withColumn("_epoch_id", F.lit(int(epoch_id)))
+            )
+            if quarantine_path is not None:
+                # TWO sinks consume `stamped` — checkpoint it so the
+                # landing files and the dedup join evaluate once per
+                # epoch, not once per sink; LAZY: the first sink write is
+                # the action that materializes it (the bpe_train
+                # fused-pass pattern), the second reads its blocks
+                stamped = scoped.enter_context(pinned(stamped, eager=False))
             sink(stamped.filter(F.col("__dup_id").isNull()), corpus_path)
             if quarantine_path is not None:
                 sink(
@@ -359,10 +354,6 @@ def run_streaming_corpus_ingest(
                     ),
                     quarantine_path,
                 )
-        finally:
-            release_checkpoint(pairs)
-            if stamped_ck is not None:
-                release_checkpoint(stamped_ck)
 
     return _start_foreach_batch(docs, screen_batch, checkpoint_path, available_now)
 
@@ -465,72 +456,42 @@ def run_streaming_elt(
 
     def merge_batch(raw_batch: DataFrame, epoch_id: int) -> None:
         from endtoend_etl_openmeteo_spark.operators.dq import dq_gate, split_valid
+        from endtoend_etl_openmeteo_spark.pipeline import _load_and_refresh
 
         # Evaluate the bronze JSON flatten ONCE per epoch, not once per
         # sink: without the checkpoint the quarantine write, the
         # touched-cities collect, the merge's staged write, and the gold
         # refresh each re-read and re-flatten the landing files — the
-        # run_streaming_corpus_ingest discipline. Executor loss mid-epoch fails the task and
-        # Structured Streaming replays the epoch from source, so the
-        # unreplicated blocks are recoverable here.
-        batch = raw_batch.localCheckpoint(eager=True)
-        batch_ck = batch
-        try:
-            _merge_batch_body(batch, epoch_id)
-        finally:
-            release_checkpoint(batch_ck)
-
-    def _merge_batch_body(batch: DataFrame, epoch_id: int) -> None:
-        from endtoend_etl_openmeteo_spark.operators.dq import dq_gate, split_valid
-
-        if expectations is not None:
-            if quarantine_path is not None:
-                batch, bad = split_valid(batch, expectations)
-                # Replay-safe: partition by (run, epoch) and dynamically
-                # overwrite, so a retried micro-batch REPLACES its own
-                # quarantine rows instead of appending duplicates (plain
-                # append would break the T3 exactly-once story on retry),
-                # while other runs' partitions are untouched.
-                (
-                    bad.withColumn("_quarantined_at", F.current_timestamp())
-                    .withColumn("_run_id", F.lit(run_id))
-                    .withColumn("_epoch_id", F.lit(int(epoch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_run_id", "_epoch_id")
-                    .parquet(quarantine_path)
-                )
-            else:
-                dq_gate(batch, expectations)
-        # one collect of the touched cities, shared by the merge's
-        # partition scope and the gold refresh
-        parts = batch.select("city").distinct().collect()
-        merge_upsert(
-            batch.sparkSession,
-            batch,
-            silver_path,
-            keys=["city", "timestamp"],
-            order_col="_ingested_at",
-            partition_cols=["city"],
-            batch_parts=parts,
-        )
-        if gold_path is not None:
-            # bronze -> silver -> gold inside ONE micro-batch: the gold
-            # mart refresh is scoped to the cities this batch touched
-            # (partition-pruned silver re-read + dynamic overwrite of just
-            # those city partitions), so per-epoch cost tracks batch size,
-            # not mart history — T2's hourly dashboard refresh without the
-            # reference's full-mart dbt rebuild.
-            from endtoend_etl_openmeteo_spark.pipeline import (
-                refresh_gold_incremental,
-            )
-
-            refresh_gold_incremental(
-                batch.sparkSession,
-                batch,
-                batch.sparkSession.read.schema(batch.schema).parquet(silver_path),
-                gold_path,
-                touched=[r.city for r in parts],
+        # run_streaming_corpus_ingest discipline. Executor loss mid-epoch
+        # fails the task and Structured Streaming replays the epoch from
+        # source, so the unreplicated blocks are recoverable here.
+        with pinned(raw_batch) as batch:
+            if expectations is not None:
+                if quarantine_path is not None:
+                    batch, bad = split_valid(batch, expectations)
+                    # Replay-safe: partition by (run, epoch) and
+                    # dynamically overwrite, so a retried micro-batch
+                    # REPLACES its own quarantine rows instead of
+                    # appending duplicates (plain append would break the
+                    # T3 exactly-once story on retry), while other runs'
+                    # partitions are untouched.
+                    (
+                        bad.withColumn("_quarantined_at", F.current_timestamp())
+                        .withColumn("_run_id", F.lit(run_id))
+                        .withColumn("_epoch_id", F.lit(int(epoch_id)))
+                        .write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("_run_id", "_epoch_id")
+                        .parquet(quarantine_path)
+                    )
+                else:
+                    dq_gate(batch, expectations)
+            # the batch path's merge → silver re-read → gold refresh, with
+            # the touched cities collected once; with gold_path set the
+            # mart refresh is scoped to this epoch's cities, so per-epoch
+            # cost tracks batch size, not mart history
+            _load_and_refresh(
+                batch.sparkSession, batch, silver_path, gold_path, None
             )
 
     return _start_foreach_batch(hourly, merge_batch, checkpoint_path, available_now)
@@ -630,10 +591,7 @@ def run_streaming_mart_maintenance(
         # Released after the commit: a maintenance tick must leave ZERO
         # pinned blocks behind or a long-lived mart driver leaks one
         # state copy per epoch.
-        merged_ck = merged.localCheckpoint(eager=True)
-        try:
+        with pinned(merged) as merged_ck:
             vt_overwrite_epoch(sess, merged_ck, mart_table, run_id, int(epoch_id))
-        finally:
-            release_checkpoint(merged_ck)
 
     return _start_foreach_batch(events, maintain, checkpoint_path, available_now)

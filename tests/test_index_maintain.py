@@ -435,21 +435,43 @@ def test_over_envelope_tombstone_batches_stay_distributed(
         (F.col("id") % 4).alias("cell"), F.col("id"), (F.col("id") * 3).alias("v")
     ).write.partitionBy("cell").mode("overwrite").parquet(path)
 
+    sc = spark.sparkContext
+
+    def jobs_of(label, fn):
+        sc.setJobGroup(label, label)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(label))
+
+    # in-envelope: the probe over the lazy checkpoint costs no extra job
+    # (the shuffle map job, the probe and the one-file write)
+    n, jobs = jobs_of(
+        "in-envelope", lambda: delete_from_stored_index(spark, [99], path)
+    )
+    assert n == 1 and jobs <= 3, jobs
     monkeypatch.setattr(im, "LOCAL_TOMBSTONE_ROWS_MAX", 3)
-    # 8-id batch > the 3-row envelope: forces the distributed write path
-    n = delete_from_stored_index(spark, list(range(8)), path)
+    # 8-id batch > the 3-row envelope: forces the distributed write path.
+    # The probe pins the deduped batch, so the id lineage (the shuffle
+    # map job over the caller's frame) runs once: 6 jobs, where probing
+    # and then checkpointing the lineage again took 8.
+    n, jobs = jobs_of(
+        "over-envelope", lambda: delete_from_stored_index(spark, list(range(8)), path)
+    )
     assert n == 8
+    assert jobs <= 6, jobs
     tomb = _read_tombstones(spark, path)
-    assert {r[0] for r in tomb.collect()} == set(range(8))
+    assert {r[0] for r in tomb.collect()} == set(range(8)) | {99}
     # churn more single-id deletes so the sidecar passes the fold
     # threshold with the tiny envelope still pinned: the fold must also
     # take its distributed branch and lose nothing
     for i in range(8, 8 + im.TOMBSTONE_CONSOLIDATE_FILES):
         delete_from_stored_index(spark, [i], path)
     tomb = _read_tombstones(spark, path)
-    want = set(range(8 + im.TOMBSTONE_CONSOLIDATE_FILES))
+    want = set(range(8 + im.TOMBSTONE_CONSOLIDATE_FILES)) | {99}
     assert {r[0] for r in tomb.collect()} == want
     stats = vacuum_index_tombstones(spark, path)
     assert stats["rows_removed"] == len(want)
     got = sorted(r["id"] for r in spark.read.parquet(path).collect())
-    assert got == list(range(len(want), 100))
+    assert got == list(range(len(want) - 1, 99))

@@ -127,6 +127,121 @@ def test_incremental_neardup_releases_signatures(spark, tmp_path):
     assert persistent_rdd_ids(spark) - base == set()
 
 
+def test_incremental_neardup_releases_everything_when_the_index_append_fails(
+    spark, tmp_path, monkeypatch
+):
+    """The signature checkpoint is pinned for the call and the pairs
+    checkpoint is the caller's only on return: a failing index append
+    must leave no block of either behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from endtoend_etl_openmeteo_spark.operators.dedup import incremental_neardup
+
+    idx = str(tmp_path / "idx")
+    write_parquet = DataFrameWriter.parquet
+
+    def failing_index_write(self, path, *args, **kwargs):
+        if str(path).startswith(idx):
+            raise RuntimeError("index volume full")
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_index_write)
+    batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
+        "doc_id long, text string",
+    )
+    base = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="index volume full"):
+        incremental_neardup(spark, batch, idx, "doc_id", "text", batch_id="b0")
+    assert persistent_rdd_ids(spark) - base == set()
+
+
+def test_pinned_releases_when_the_body_raises(spark):
+    from endtoend_etl_openmeteo_spark.session import pinned
+
+    base = persistent_rdd_ids(spark)
+    with pytest.raises(ZeroDivisionError):
+        with pinned(spark.range(10)) as ck:
+            assert ck.count() == 10
+            assert len(persistent_rdd_ids(spark) - base) == 1
+            1 / 0
+    assert persistent_rdd_ids(spark) - base == set()
+
+
+def test_overlap_runs_concurrently_and_returns_in_argument_order(spark):
+    import threading
+
+    from endtoend_etl_openmeteo_spark.session import overlap
+
+    second_ran = threading.Event()
+
+    def first():
+        # finishes LAST: only returns once the second thunk has run, which
+        # a serial runner would never reach (the wait times out instead)
+        assert second_ran.wait(timeout=30)
+        return "first"
+
+    def second():
+        second_ran.set()
+        return "second"
+
+    assert overlap(first, second) == ["first", "second"]
+    assert overlap() == []
+
+
+def test_overlap_waits_for_every_thunk_then_reraises_the_first_error(spark):
+    import threading
+    import time
+
+    from endtoend_etl_openmeteo_spark.session import overlap
+
+    second_failed = threading.Event()
+    finished = []
+
+    def fails_after_second():
+        assert second_failed.wait(timeout=30)
+        raise ValueError("first thunk")
+
+    def fails_at_once():
+        second_failed.set()
+        raise KeyError("second thunk")
+
+    def slow_success():
+        assert second_failed.wait(timeout=30)
+        time.sleep(0.5)  # still running when both errors are raised
+        finished.append("slow")
+        return "ok"
+
+    with pytest.raises(ValueError, match="first thunk"):
+        overlap(fails_after_second, fails_at_once, slow_success)
+    assert finished == ["slow"]
+
+
+def test_overlap_runs_without_pinned_threads():
+    """With PYSPARK_PIN_THREAD=false pyspark has no per-thread properties
+    to carry into the threads; overlap still runs its thunks."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from endtoend_etl_openmeteo_spark.session import get_spark, overlap\n"
+        "s = get_spark('unpinned', master='local[1]')\n"
+        "print(overlap(lambda: s.range(3).count(), lambda: 2))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "PYSPARK_PIN_THREAD": "false"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "[3, 2]"
+
+
 #: Checkpoint-heavy declared queries — the ones the round-5 verdict saw
 #: degrade 14x in-suite. Consume each, release, and the session must come
 #: back to zero pinned RDDs: the serving/maintenance-tick longevity claim.

@@ -84,6 +84,94 @@ VECTORIZED_PYTHON_ALLOWED = frozenset(
 )
 
 
+#: The only (module, function) pairs under the package allowed a bare
+#: ``.localCheckpoint(``. A function's returned frame is owned by its
+#: caller, which frees it with ``session.release_persistent_rdds``; a
+#: loop-carried iterate is released by the next round. Every other
+#: checkpoint is taken with ``session.pinned``, which releases it even
+#: when the body raises.
+UNSCOPED_CHECKPOINTS_ALLOWED = frozenset(
+    {
+        ("session", "pinned"),  # the primitive itself
+        # loop-carried iterates (plus the final round, which is returned)
+        ("operators.bpe", "bpe_train"),
+        ("operators.clusters", "_pointer_jumping_labels"),
+        ("operators.clusters", "_power_iteration"),
+        # frames returned to the caller, or the blocks they read
+        ("operators.clusters", "_local_result_df"),
+        ("operators.clusters", "kmeans"),
+        ("operators.dedup", "minhash_lsh_pairs"),
+        ("operators.dedup", "incremental_neardup"),
+        ("operators.dedup", "incremental_exact_dedup"),
+        ("operators.layout", "sequence_pack"),
+        ("plans.advanced", "q_tpch_q11"),
+        ("plans.advanced", "q_tpch_q15"),
+        ("plans.advanced", "q_tpch_q17"),
+        ("plans.llm", "q_bloom_decontaminate"),
+        ("plans.relational", "q_bloom_lookup"),
+        ("plans.relational", "q_cdc_apply"),
+        ("plans.relational", "q_merge_mor"),
+        ("plans.relational", "q_mor_delete"),
+        ("plans.relational", "q_optimize_cluster"),
+        ("plans.relational", "q_rename_count"),
+        ("plans.relational", "q_snapshot_diff"),
+        ("plans.relational", "q_snapshot_merge"),
+        ("plans.relational", "q_time_travel"),
+        ("plans.similarity", "q_ann_stream_ingest"),
+        ("plans.text", "q_corpus_ingest"),
+        ("plans.text", "q_index_compact"),
+        ("plans.timeseries", "q_stream_join"),
+        ("plans.timeseries", "q_stream_window"),
+    }
+)
+
+
+def test_checkpoints_are_scoped_and_threads_carry_the_job_group():
+    """Static guard over the package source: a bare ``.localCheckpoint(``
+    only in UNSCOPED_CHECKPOINTS_ALLOWED (everything else goes through
+    ``session.pinned``), and no ``ThreadPoolExecutor`` or
+    ``threading.Thread`` outside ``session.py`` (concurrent jobs go
+    through ``session.overlap``, whose threads inherit the caller's job
+    group)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(plans.__file__).resolve().parents[1]
+    unscoped, threads, seen = [], [], set()
+
+    def walk(node, mod: str, fn):
+        for child in ast.iter_child_nodes(node):
+            name = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else fn
+            )
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "localCheckpoint"
+            ):
+                seen.add((mod, name))
+                if (mod, name) not in UNSCOPED_CHECKPOINTS_ALLOWED:
+                    unscoped.append(f"{mod}.{name}:{child.lineno}")
+            ident = (
+                getattr(child, "id", None)
+                or getattr(child, "attr", None)
+                or (child.name if isinstance(child, ast.alias) else None)
+            )
+            if mod != "session" and ident in ("ThreadPoolExecutor", "Thread"):
+                threads.append(f"{mod}:{child.lineno}")
+            walk(child, mod, name)
+
+    for path in sorted(pkg.rglob("*.py")):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        walk(ast.parse(path.read_text()), mod, None)
+    assert not unscoped, f"take these checkpoints with session.pinned: {unscoped}"
+    assert not threads, f"overlap jobs with session.overlap: {threads}"
+    stale = UNSCOPED_CHECKPOINTS_ALLOWED - seen
+    assert not stale, f"allowlisted functions without a checkpoint: {stale}"
+
+
 @pytest.fixture(scope="module")
 def all_plans(spark, registry):
     """One physical plan per registered query, computed once per module —
@@ -174,11 +262,9 @@ def test_dedup_contract_lazy_plan_shape(spark):
     composed-union budget; the shared inputs are checkpointed now, so
     the four in-plan verdicts together sit well under it."""
     from endtoend_etl_openmeteo_spark.plans.text import _dedup_contract_parts
-    from endtoend_etl_openmeteo_spark.session import release_checkpoint
     from tools.plan_budget import count_shuffles
 
-    frames, checkpoints = _dedup_contract_parts(spark, SF)
-    try:
+    with _dedup_contract_parts(spark, SF) as frames:
         n = sum(count_shuffles(_physical(df)) for df in frames.values())
         assert n <= 21, n
         assert set(frames) == {
@@ -187,9 +273,6 @@ def test_dedup_contract_lazy_plan_shape(spark):
             "simhash_exactdup",
             "clusters_consistent",
         }
-    finally:
-        for c in checkpoints:
-            release_checkpoint(c)
 
 
 def test_single_exchange_aggregate_shapes(spark, registry):

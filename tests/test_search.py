@@ -545,3 +545,21 @@ def test_serving_surfaces_crashed_append_marker(spark, tmp_path):
     assert {
         r["doc_id"] for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
     } == {1, 2, 3}
+
+
+def test_index_build_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """write_inverted_index overlaps its corpus-stats job with the
+    postings write; both must carry the caller's job group, so a traced
+    query can attribute every job it schedules."""
+    from endtoend_etl_openmeteo_spark.operators.search import write_inverted_index
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("bm25-build", "index build")
+    try:
+        write_inverted_index(_corpus(spark), str(tmp_path / "idx"), n_buckets=4)
+    finally:
+        sc.setJobGroup(None, None)
+    assert tracker.getJobIdsForGroup("bm25-build")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

@@ -185,18 +185,13 @@ def test_zero_norm_vector_does_not_abort_topk(spark):
     assert max(r.rank for r in out) == by_n[2].rank
 
 
-def test_trained_model_cache_invalidates_on_data_change(spark, tmp_path, monkeypatch):
+def test_trained_model_cache_invalidates_on_data_change(spark, tmp_path):
     """Round-5 ADVICE: _TRAINED keyed only by (kind, sf_dir, params) served
     stale models after in-place testdata regeneration. The content
     fingerprint (file mtimes/sizes) must force a rebuild."""
     import os
 
-    from endtoend_etl_openmeteo_spark.plans import similarity as S
     from endtoend_etl_openmeteo_spark.plans.similarity import _cached_model
-
-    # isolate the disk tier: tmp-keyed sidecars must not accrete in the
-    # repo's shared spark-warehouse/_model_cache forever
-    monkeypatch.setattr(S, "_model_cache_dir", lambda: tmp_path / "_mc")
 
     sf = str(tmp_path)
     p = tmp_path / "embeddings.parquet"
@@ -222,54 +217,6 @@ def test_trained_model_cache_invalidates_on_data_change(spark, tmp_path, monkeyp
         os.utime(os.path.join(p, f), ns=(newest + 10**9, newest + 10**9))
     _cached_model(spark, key, build)
     assert len(builds) == 2
-
-
-def test_trained_model_disk_tier_survives_process_cache_clear(
-    spark, tmp_path, monkeypatch
-):
-    """Round-8 verdict task 7: the trained quantizer persists to a disk
-    sidecar keyed by (kind, table, params, content fingerprint), so a
-    fresh process LOADS instead of retrains — and a changed fingerprint
-    or corrupt sidecar falls back to training."""
-    from endtoend_etl_openmeteo_spark.plans import similarity as S
-
-    monkeypatch.setattr(S, "_model_cache_dir", lambda: tmp_path / "_mc")
-
-    sf = str(tmp_path)
-    p = tmp_path / "embeddings.parquet"
-    spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(4)],
-        "vec_id long, embedding array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(str(p))
-
-    builds = []
-
-    def build():
-        builds.append(1)
-        return spark.createDataFrame(
-            [(0, [1.25, -2.0]), (1, [0.5, 3.5])],
-            "cluster int, centroid array<double>",
-        )
-
-    key = ("disk_kind", sf, 7)
-    first = S._cached_model(spark, key, build).collect()
-    assert len(builds) == 1
-
-    # simulate a fresh process: wipe the in-memory tier only
-    S._TRAINED.clear()
-    again = S._cached_model(spark, key, build).collect()
-    assert len(builds) == 1  # loaded from disk, not retrained
-    assert sorted(map(tuple, again)) == sorted(map(tuple, first))
-
-    # a corrupt sidecar must fall back to training, then self-heal
-    S._TRAINED.clear()
-    fp = S._table_fingerprint(sf)
-    S._model_cache_file(key + (fp,)).write_text("{not json")
-    S._cached_model(spark, key, build)
-    assert len(builds) == 2
-    S._TRAINED.clear()
-    S._cached_model(spark, key, build)
-    assert len(builds) == 2  # rewritten sidecar serves again
 
 
 def test_stored_ivf_prunes_unprobed_cells_and_matches_inplan(spark, emb, tmp_path):
@@ -607,36 +554,6 @@ def test_pq_assign_null_and_ragged_vectors_yield_null_code_rows(spark, emb):
         for r in ivfpq_encode(clean, coarse, books).collect()
     }
     assert {i: v for i, v in rows.items() if i < 9000} == clean_rows
-
-
-def test_model_cache_md5_collision_is_clean_miss(tmp_path, monkeypatch):
-    """The durable quantizer cache stores repr(key) and compares it on
-    load, so an md5-filename collision (a VALID sidecar belonging to a
-    DIFFERENT key) is a clean miss that retrains — never a silent serve
-    of the wrong model."""
-    import json
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from endtoend_etl_openmeteo_spark.plans import similarity as psim
-
-    monkeypatch.setattr(psim, "_model_cache_dir", lambda: tmp_path)
-    key = ("kmeans", "/root/testdata/sf0.001", 10, ())
-    schema = StructType([StructField("a", LongType())])
-    # positive control: store-then-load round-trips for the right key
-    psim._store_model(key, [(1,)], schema)
-    assert psim._load_model(key) == ([(1,)], schema)
-    # collision: same filename, well-formed payload, WRONG stored key
-    psim._model_cache_file(key).write_text(
-        json.dumps(
-            {
-                "key": repr(("other", "key")),
-                "rows": [[1]],
-                "schema": schema.jsonValue(),
-            }
-        )
-    )
-    assert psim._load_model(key) is None
 
 
 def test_delete_and_vacuum_stored_ivfpq(spark, emb, tmp_path):
