@@ -35,8 +35,8 @@ def _local_result_df(spark, rows: list, schema) -> DataFrame:
     frame with SIZE-ADAPTIVE slicing (~50k rows per slice, min 1): a bare
     ``createDataFrame(rows)`` lands the local rows in defaultParallelism
     Python slices and the checkpoint then pays one Python-runner round
-    trip PER SLICE (the ``session.local_df`` trap — measured ~1.3 s cold
-    for a 1000-row label frame split 32 ways)."""
+    trip PER SLICE (measured ~1.3 s cold for a 1000-row label frame split
+    32 ways)."""
     rdd = spark.sparkContext.parallelize(rows, max(1, len(rows) // 50_000))
     return spark.createDataFrame(rdd, schema).localCheckpoint(eager=True)
 

@@ -30,6 +30,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from endtoend_etl_openmeteo_spark.session import local_rows
+
 
 @dataclass(frozen=True)
 class Expectation:
@@ -121,7 +123,7 @@ def compile_expectations(df: DataFrame, expectations: list[Expectation]) -> Data
     if not expectations:
         # stack(lit(0)) with no value columns fails analysis — an empty
         # suite passes vacuously (zero rows), it doesn't crash the stream
-        return df.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        return local_rows(df.sparkSession, [], RESULT_SCHEMA)
     aggs = (
         [F.count(F.lit(1)).alias("n_rows")]
         + [_violation_count(e).alias(f"v{i}") for i, e in enumerate(expectations)]
@@ -272,8 +274,8 @@ def dq_gate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     failures = [r for r in results if not r["passed"]]
     if failures:
         raise DQValidationError(failures)
-    return df.sparkSession.createDataFrame(
-        [tuple(r.values()) for r in results], RESULT_SCHEMA
+    return local_rows(
+        df.sparkSession, [tuple(r.values()) for r in results], RESULT_SCHEMA
     )
 
 

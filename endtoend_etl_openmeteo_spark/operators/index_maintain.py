@@ -57,6 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from endtoend_etl_openmeteo_spark.session import local_df, local_rows, pinned
+
 logger = logging.getLogger(__name__)
 
 #: Hive's directory-name sentinel for a NULL partition value.
@@ -141,10 +143,16 @@ class AtomicCreateLease(LeaseBackend):
     def try_acquire(self, payload: str) -> bool:
         try:
             out = self.fs.create(self.lock, False)  # create-fails-if-exists
-        except Exception:
+        except Exception as e:
             # only an existing lock is a CONFLICT; permission/connectivity
-            # failures must surface as themselves
-            if not self.fs.exists(self.lock):
+            # failures must surface as themselves. The create's own
+            # already-exists error decides, because the holder may release
+            # the lock before an exists() check could see it.
+            java = getattr(e, "java_exception", None)
+            already = java is not None and java.getClass().getName() == (
+                "org.apache.hadoop.fs.FileAlreadyExistsException"
+            )
+            if not already and not self.fs.exists(self.lock):
                 raise
             return False
         try:
@@ -565,25 +573,22 @@ def delete_from_stored_index(
             cols.append(F.lit(None).cast("string").alias("part"))
         ids = vec_ids.select(*cols)
     else:
-        ids = spark.createDataFrame(
-            [(int(i), None) for i in vec_ids], "id long, part string"
+        ids = local_rows(
+            spark, [(int(i), None) for i in vec_ids], "id long, part string"
         )
     # The tombstone batch is bounded metadata (O(deletes)); collect it
     # ONCE and write the local rows back as a single file — evaluating
     # the caller's id lineage a second time for the count (BM25's hinted
-    # frame tokenizes the batch) was the delete path's dominant cost,
-    # and local_df avoids the createDataFrame+coalesce(1) Python-runner
-    # trap for the write. A batch beyond LOCAL_TOMBSTONE_ROWS_MAX (a
-    # caller outside the design envelope — e.g. a 10M-id purge) is
-    # detected by the limit probe and falls back to a fully distributed
-    # distinct+write instead of silently OOMing the driver. The probe
-    # reads a lazy checkpoint, so the fallback writes the blocks the
-    # probe pinned instead of evaluating the id lineage a second time.
+    # frame tokenizes the batch) was the delete path's dominant cost. A
+    # batch beyond LOCAL_TOMBSTONE_ROWS_MAX (a caller outside the design
+    # envelope — e.g. a 10M-id purge) is detected by the limit probe and
+    # falls back to a fully distributed distinct+write instead of
+    # silently OOMing the driver. The probe reads a lazy checkpoint, so
+    # the fallback writes the blocks the probe pinned instead of
+    # evaluating the id lineage a second time.
     # It reads through one task: a multi-task limit scans partitions in
     # rounds, and the checkpoint would pay a job of its own to fill the
     # partitions the first round skipped.
-    from endtoend_etl_openmeteo_spark.session import local_df, pinned
-
     with pinned(ids.distinct(), eager=False) as dids:
         rows = [
             tuple(r)
@@ -628,8 +633,6 @@ def _consolidate_tombstones(
     metadata — the union file lands BEFORE the old files are removed, so
     a concurrent listing sees a superset (duplicates are erased by
     ``_read_tombstones``'s distinct), never a gap."""
-    from endtoend_etl_openmeteo_spark.session import local_df
-
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(_tombstone_path(path))
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -655,10 +658,6 @@ def _consolidate_tombstones(
         # driver bound): fold DISTRIBUTEDLY — checkpoint first so the
         # write never reads the directory it is appending to, size the
         # output to the bound so the fold still shrinks the file count
-        import math
-
-        from endtoend_etl_openmeteo_spark.session import pinned
-
         with pinned(distinct) as ck:
             n = ck.count()
             ck.coalesce(
@@ -713,8 +712,6 @@ def vacuum_index_tombstones(
     tomb_pairs = tomb.collect()
     tomb_id_set = {r[0] for r in tomb_pairs}
     n_tomb = len(tomb_id_set)
-    from endtoend_etl_openmeteo_spark.session import local_df
-
     tomb_ids = local_df(spark, [(i,) for i in sorted(tomb_id_set)], f"{id_col} long")
     top_parts = {
         s.getPath().getName().split("=", 1)[0]

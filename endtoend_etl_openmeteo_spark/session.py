@@ -120,18 +120,35 @@ def get_spark(
     return spark
 
 
-def local_df(spark: SparkSession, rows: list, schema: str) -> "DataFrame":
-    """A SINGLE-PARTITION DataFrame from driver-local rows — the frame to
-    use when bounded metadata (tombstone batches, manifest rows, contract
-    sets) must be written as one file.
+def local_rows(spark: SparkSession, rows: list, schema) -> "DataFrame":
+    """Driver-local rows (tuples in ``schema``'s field order; a struct
+    field may be a dict) as a JVM local relation: the rows become a
+    ``pyarrow.Table`` and cross into the JVM once, so every consumer
+    scans them there, without a Python worker. ``schema`` is a
+    ``StructType`` or a DDL string. Values convert the way Arrow converts
+    them, so an int lands in a double column as a double, as the bronze
+    JSON reader reads it. Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps the
+    Arrow batches in an RDD instead, which also needs no Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    ``createDataFrame(rows).coalesce(1)`` is a measured ~5 s trap in
-    local[32]: the local rows land in defaultParallelism (=32) Python
-    partitions, and the coalesced single task then pays one Python-worker
-    round trip PER PARENT PARTITION, serially. Parallelizing to one slice
-    up front makes the same write one round trip (~0.3 s).
-    """
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def local_df(spark: SparkSession, rows: list, schema: str) -> "DataFrame":
+    """A SINGLE-PARTITION :func:`local_rows` frame — the frame to use when
+    bounded metadata (tombstone batches, manifest rows, contract sets)
+    must be written as one file."""
+    return local_rows(spark, rows, schema).coalesce(1)
 
 
 def scratch_dir(prefix: str = "scratch_") -> str:

@@ -7,10 +7,11 @@ discovery turns the key scheme into prunable columns, so a per-city or
 per-day read never lists the rest of the corpus.
 
 The HTTP fetch itself (S1/S2) is a driver-side concern: a batch of API
-payloads enters the engine as ``spark.createDataFrame`` rows or a JSON
-fixture directory — the engine is deliberately source-agnostic past that
-point (no HTTP inside executors; at scale ingestion parallelism comes from
-many small files, which the file index handles).
+payloads enters the engine as a local relation
+(``sources.http.payloads_to_df``) or a JSON fixture directory — the
+engine is deliberately source-agnostic past that point (no HTTP inside
+executors; at scale ingestion parallelism comes from many small files,
+which the file index handles).
 """
 
 from __future__ import annotations

@@ -10,7 +10,9 @@ executor-side fetching — so this module is:
 1. request construction + driver-side fetch (stdlib urllib, gated so the
    engine works fully offline), and
 2. `payloads_to_df` — the seam where fetched payloads enter Spark with the
-   explicit raw schema, ready for `write_bronze`.
+   explicit raw schema, as a JVM local relation (`session.local_rows`):
+   `write_bronze`, the DQ gate and the merge then scan the batch without
+   a Python worker.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from endtoend_etl_openmeteo_spark.session import local_rows
 from endtoend_etl_openmeteo_spark.sources.bronze import BRONZE_READ_SCHEMA
 
 FORECAST_URL = "https://api.open-meteo.com/v1/forecast"
@@ -70,9 +73,10 @@ def fetch_payload(url: str, timeout_s: float = 30.0) -> dict[str, Any]:
 def payloads_to_df(
     spark: SparkSession, payloads: list[tuple[str, dict[str, Any]]]
 ) -> DataFrame:
-    """(city, payload-dict) pairs → bronze-shaped DataFrame (explicit raw
-    schema §1.2 + city/ds/hour partition columns derived from the first
-    hourly timestamp, mirroring s3_writer.py:59-61)."""
+    """(city, payload-dict) pairs → bronze-shaped local relation (explicit
+    raw schema §1.2 + city/ds/hour partition columns derived from the first
+    hourly timestamp, mirroring s3_writer.py:59-61). Integer JSON numbers
+    become doubles, as ``read_bronze`` reads them."""
     rows = []
     for city, p in payloads:
         hourly = p.get("hourly") or {}
@@ -81,19 +85,19 @@ def payloads_to_df(
         ds = first[:10] if first else None
         hour = first[11:13] if first and len(first) >= 13 else None
         rows.append(
-            {
-                "latitude": p.get("latitude"),
-                "longitude": p.get("longitude"),
-                "timezone": p.get("timezone"),
-                "hourly": {
+            (
+                p.get("latitude"),
+                p.get("longitude"),
+                p.get("timezone"),
+                {
                     "time": times,
                     "temperature_2m": hourly.get("temperature_2m") or [],
                     "precipitation": hourly.get("precipitation") or [],
                     "wind_speed_10m": hourly.get("wind_speed_10m") or [],
                 },
-                "city": city,
-                "ds": ds,
-                "hour": hour,
-            }
+                city,
+                ds,
+                hour,
+            )
         )
-    return spark.createDataFrame(rows, BRONZE_READ_SCHEMA)
+    return local_rows(spark, rows, BRONZE_READ_SCHEMA)

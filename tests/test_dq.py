@@ -268,3 +268,20 @@ def test_gate_runs_one_job(spark):
         sc.setJobGroup(None, None)
     assert len(sc.statusTracker().getJobIdsForGroup(label)) == 1
     assert obs.get == {"rows": 3}
+
+
+def test_gate_result_is_a_local_relation(spark):
+    """The gate's result frame, on the observed path, the aggregate path
+    and an empty suite, is a JVM local relation: a consumer's collect()
+    scans it without a Python worker and never re-scans the input."""
+    suites = [
+        REFERENCE_WEATHER_SUITE,
+        [Expectation("not_null", "time"), Expectation("unique", "city")],
+        [],
+    ]
+    for suite in suites:
+        res = dq_gate(_df(spark, GOOD), suite)
+        qe = res._jdf.queryExecution()
+        assert qe.optimizedPlan().toString().startswith("LocalRelation"), suite
+        assert qe.executedPlan().toString().startswith("LocalTableScan"), suite
+        assert len(res.collect()) == len(suite)

@@ -307,6 +307,33 @@ def test_broken_then_reacquired_lease_not_deleted_by_stale_holder(spark, tmp_pat
     assert not lock.exists()  # fresh's own exit releases normally
 
 
+def test_lease_conflict_holds_when_the_holder_releases_mid_acquire(spark, tmp_path):
+    """A create that fails because the lock exists is a conflict even when
+    the holder releases the lock before the loser can look: the loser
+    retries instead of raising the create's error."""
+    from endtoend_etl_openmeteo_spark.operators.index_maintain import AtomicCreateLease
+
+    (tmp_path / "idx").mkdir()
+    holder = AtomicCreateLease(spark, str(tmp_path / "idx"))
+    assert holder.try_acquire("holder")
+
+    class ReleasedAfterCreate:
+        """The real filesystem, with the lock gone by the exists() check."""
+
+        def __init__(self, fs):
+            self.fs = fs
+
+        def create(self, path, overwrite):
+            return self.fs.create(path, overwrite)
+
+        def exists(self, path):
+            return False
+
+    loser = AtomicCreateLease(spark, str(tmp_path / "idx"))
+    loser.fs = ReleasedAfterCreate(loser.fs)
+    assert loser.try_acquire("loser") is False
+
+
 def test_rename_cas_backend_serializes_writers_and_loser_retries(spark, tmp_path):
     """The injectable lease backend (round-9 verdict task 4): driving
     index_lease through RenameCasLease — the versioned format's

@@ -68,6 +68,64 @@ def test_payloads_to_df_bronze_shape(spark):
     assert rows["Paris"].ds is None and rows["Paris"].hourly.time == []
 
 
+def test_payloads_to_df_matches_read_bronze(spark, tmp_path):
+    """The batch payloads_to_df builds is what read_bronze reads back:
+    from the bronze files write_bronze makes of it, and from the raw
+    payload JSON landed in the bronze layout. Integer JSON numbers read
+    as doubles, as the JSON reader reads them. The batch is a JVM local
+    relation, so no consumer starts a Python worker."""
+    import json
+
+    from endtoend_etl_openmeteo_spark.sources.bronze import read_bronze, write_bronze
+
+    def hourly(times, temps, precips, winds):
+        return {
+            "time": times,
+            "temperature_2m": temps,
+            "precipitation": precips,
+            "wind_speed_10m": winds,
+        }
+
+    landed = [
+        ("Warsaw", {"latitude": 52, "longitude": 21, "timezone": "Europe/Warsaw",
+                    "hourly": hourly(["2025-10-31T12:00", "2025-10-31T13:00"],
+                                     [1, None], [0, 0.5], [5, 7.25])}),
+        (None, {"latitude": 48.5, "longitude": 2, "timezone": "UTC",
+                "hourly": hourly(["2025-10-31T14:00"], [None], [None], [3])}),
+        ("Kraków", {"latitude": 50.06, "longitude": 19.94, "timezone": None,
+                    "hourly": hourly(["2025-11-01T00:00"], [-2.5], [0], [1])}),
+    ]
+    unlanded = [
+        ("Paris", {"latitude": 48.86, "longitude": 2.35, "timezone": "UTC", "hourly": {}}),
+        ("Oslo", {"latitude": 59.91, "longitude": 10.75, "timezone": "Europe/Oslo"}),
+    ]
+    df = payloads_to_df(spark, landed + unlanded)
+    assert df._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
+
+    def rows(frame):
+        return sorted(frame.collect(), key=lambda r: (r.city or "", r.ds or ""))
+
+    want = rows(df)
+    assert [r.city for r in want] == [None, "Kraków", "Oslo", "Paris", "Warsaw"]
+    warsaw = want[-1]
+    assert (warsaw.latitude, warsaw.longitude) == (52.0, 21.0)
+    assert warsaw.hourly.temperature_2m == [1.0, None]
+    assert want[2].hourly.time == [] and want[2].ds is None
+
+    written = str(tmp_path / "written")
+    write_bronze(df, written)
+    assert rows(read_bronze(spark, written)) == want
+
+    raw = tmp_path / "raw"
+    for city, p in landed:
+        t = p["hourly"]["time"][0]
+        part = raw / f"city={city or '__HIVE_DEFAULT_PARTITION__'}" / f"ds={t[:10]}"
+        (part / f"hour={t[11:13]}").mkdir(parents=True)
+        (part / f"hour={t[11:13]}" / "part-00000.json").write_text(json.dumps(p) + "\n")
+    landed_cities = {c for c, _ in landed}
+    assert rows(read_bronze(spark, str(raw))) == [r for r in want if r.city in landed_cities]
+
+
 def test_bucketed_join_has_no_exchange(spark):
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     customer = spark.read.parquet(f"{SF}/customer.parquet")

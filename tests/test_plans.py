@@ -172,6 +172,45 @@ def test_checkpoints_are_scoped_and_threads_carry_the_job_group():
     assert not stale, f"allowlisted functions without a checkpoint: {stale}"
 
 
+#: The ELT path's modules: bronze landing → DQ gate → merge → gold, and
+#: the stored-index maintenance that shares its one-file metadata writes.
+ELT_PATH_MODULES = (
+    "pipeline.py",
+    "streaming/pipeline.py",
+    "sources",
+    "operators/dq.py",
+    "operators/explode.py",
+    "operators/gaps.py",
+    "operators/merge.py",
+    "operators/index_maintain.py",
+)
+
+
+def test_elt_path_builds_local_frames_through_local_rows():
+    """Static guard: on the ELT path, driver-local rows enter Spark only
+    through ``session.local_rows`` (a JVM local relation). A
+    ``createDataFrame(`` or ``parallelize(`` there would build a
+    pickled-row frame whose every scan starts a Python worker."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(plans.__file__).resolve().parents[1]
+    paths = []
+    for entry in ELT_PATH_MODULES:
+        p = pkg / entry
+        paths += sorted(p.rglob("*.py")) if p.is_dir() else [p]
+    assert all(p.is_file() for p in paths), paths
+    offenders = [
+        f"{p.relative_to(pkg)}:{node.lineno}"
+        for p in paths
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        in ("createDataFrame", "parallelize")
+    ]
+    assert not offenders, f"build these frames with session.local_rows: {offenders}"
+
+
 @pytest.fixture(scope="module")
 def all_plans(spark, registry):
     """One physical plan per registered query, computed once per module —
