@@ -49,6 +49,19 @@ def _zip_hourly(policy: str) -> Column:
     return F.arrays_zip(*aliased)
 
 
+def parse_time(time: Column, strict: bool = True) -> Column:
+    """An hourly ``time`` string as a timestamp. ``strict=False`` gives NULL
+    for a malformed string where the strict parse raises (ANSI mode).
+
+    X8 parity: the reference normalizes trailing 'Z' before fromisoformat
+    (etl_openmeteo.py:66). With the session timezone pinned UTC (engine
+    conf), a Z-suffixed instant and the bare string denote the same value,
+    and bare strings parse at any precision (Spark rejects minute-precision
+    strings with an explicit offset, so stripping beats rewriting)."""
+    bare = F.regexp_replace(time, "Z$", "")
+    return F.to_timestamp(bare) if strict else F.try_to_timestamp(bare)
+
+
 def unzip_hourly(
     raw: DataFrame,
     policy: str = "nullpad",
@@ -74,15 +87,9 @@ def unzip_hourly(
         F.col(city_col).alias("city"),
         F.explode(zipped).alias("h"),
     )
-    # X8 parity: the reference normalizes trailing 'Z' before fromisoformat
-    # (etl_openmeteo.py:66). With the session timezone pinned UTC (engine
-    # conf), a Z-suffixed instant and the bare string denote the same value,
-    # and bare strings parse at any precision (Spark rejects minute-precision
-    # strings with an explicit offset, so stripping beats rewriting).
-    ts = F.to_timestamp(F.regexp_replace(F.col("h.time"), "Z$", ""))
     return exploded.select(
         "city",
-        ts.alias("timestamp"),
+        parse_time(F.col("h.time")).alias("timestamp"),
         *[F.col(f"h.{m}").cast("double").alias(m) for m in MEASURES],
     ).filter(F.col("timestamp").isNotNull()).withColumn(
         "_ingested_at", ingested_at if ingested_at is not None else F.current_timestamp()

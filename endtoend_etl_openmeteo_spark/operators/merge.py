@@ -5,18 +5,20 @@ The reference's ``INSERT ... ON CONFLICT (city,"timestamp") DO UPDATE``
 key. OSS Spark without a table format has no MERGE INTO, so the engine
 provides it as a library operator:
 
-    union(affected target partitions, new batch)
+    union(the batch's existing target partitions, new batch)
       → row_number() over key ordered by order_col desc → keep first
       → ONE partitioned write into a staging dir beside the target
       → per-partition directory renames into the target
 
-Scale design (the part that must survive 100 TB):
-- **Partition-scoped, never full-table.** Only partitions present in the
-  new batch are read back and rewritten; a 24-row hourly batch against a
-  100 TB table touches a handful of partitions. The partition values of the
-  batch are collected (small by construction — a batch's distinct partition
-  keys) and pushed as an IN filter so partition pruning limits the
-  read-back. A caller that already has them passes ``batch_parts``.
+Scale design:
+- **Partition-scoped, never full-table.** Only the leaf partition
+  directories the batch's partition values name are listed, read back and
+  rewritten; every other partition is neither listed nor opened. The cost
+  therefore follows the partition key: the pipeline partitions silver by
+  month, so an hourly batch rewrites one month (two at a month boundary),
+  whatever the history's length. The batch's partition values are
+  collected (small by construction) unless the caller passes them as
+  ``batch_parts``.
 - The dedup window shuffles on the merge keys only — no global sort.
 - **Written once, committed by rename.** The merged rows are written once,
   ``partitionBy(partition_cols)``, into a fresh staging directory on the
@@ -27,7 +29,9 @@ Scale design (the part that must survive 100 TB):
   committer does, without its session-global ``partitionOverwriteMode``.
   The old directory moves into staging BEFORE the new one moves into
   place, so every partition's data exists somewhere at every instant;
-  staging is deleted only after the last partition commits.
+  staging is deleted only after the last partition commits. A staged leaf
+  that was not read back would replace a partition with only the batch's
+  rows, so it fails the merge before the first rename.
 """
 
 from __future__ import annotations
@@ -77,6 +81,47 @@ def _delete_path(spark: SparkSession, path: str) -> None:
     fs.delete(hpath, True)
 
 
+def leaf_path(spark: SparkSession, partition_cols: list[str], row) -> str:
+    """The relative leaf directory (``a=1/b=2``; ``""`` with no partition
+    columns) that Spark's partitioned writer gives ``row``'s values of
+    ``partition_cols``: names and values escaped by Spark's own
+    ``escapePathName``, a NULL or empty value as
+    ``__HIVE_DEFAULT_PARTITION__``. Values are rendered as strings the way
+    the writer casts them for strings, integers and dates; a value the
+    writer renders differently names no existing directory, and the
+    merge's staged-leaf check then raises rather than lose rows."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    parts = []
+    for c in partition_cols:
+        v = row[c]
+        if v is None or v == "":
+            value = utils.DEFAULT_PARTITION_NAME()
+        else:
+            value = utils.escapePathName(str(v))
+        parts.append(f"{utils.escapePathName(c)}={value}")
+    return "/".join(parts)
+
+
+def read_partitions(
+    spark: SparkSession, path: str, schema, leaves
+) -> DataFrame | None:
+    """The table at ``path`` restricted to its existing leaf directories
+    among ``leaves`` (relative paths, as :func:`leaf_path` gives them), read
+    with ``schema``; None when none exists. Only those directories are
+    listed: ``basePath`` keeps their partition columns, so the read never
+    lists the table's other partitions (above Spark's
+    ``parallelPartitionDiscovery.threshold`` of 32 directories, a listing
+    of the whole table runs a Spark job of its own)."""
+    fs, _ = _fs(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = path.rstrip("/")
+    paths = [f"{root}/{rel}" if rel else root for rel in sorted(leaves)]
+    existing = [p for p in paths if fs.exists(Path(p))]
+    if not existing:
+        return None
+    return spark.read.schema(schema).option("basePath", root).parquet(*existing)
+
+
 def _leaf_partitions(fs, root, depth: int) -> list[tuple[str, object]]:
     """(relative path like ``a=1/b=2``, Hadoop Path) of each partition
     directory ``depth`` levels under ``root``; ``[("", root)]`` at depth 0.
@@ -95,15 +140,26 @@ def _leaf_partitions(fs, root, depth: int) -> list[tuple[str, object]]:
 
 
 def _commit_staged(spark: SparkSession, staged: str, old: str, target: str,
-                   depth: int) -> None:
+                   depth: int, read_back: set[str]) -> None:
     """Move each leaf partition under ``staged`` into ``target``, first
     moving the partition it replaces to the same place under ``old``.
 
-    Hadoop's rename into an EXISTING directory nests the source inside it
-    instead of replacing it, so the target leaf is always moved away
-    before the new one is renamed in. A ``False`` rename raises."""
+    ``read_back`` is the set of leaves whose existing rows the staged write
+    merged. A staged leaf outside it holds only the batch's rows, and its
+    rename would drop the target partition's other rows, so a
+    :class:`ValueError` is raised before the first rename. Hadoop's rename
+    into an EXISTING directory nests the source inside it instead of
+    replacing it, so the target leaf is always moved away before the new
+    one is renamed in. A ``False`` rename raises :class:`OSError`."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
     fs, staged_root = _fs(spark, staged)
+    leaves = _leaf_partitions(fs, staged_root, depth)
+    stray = sorted(rel for rel, _ in leaves if rel not in read_back)
+    if stray:
+        raise ValueError(
+            f"merge into {target} staged partitions it did not read back: "
+            f"{stray[:5]}; batch_parts must name every partition of the batch"
+        )
 
     def sub(root: str, rel: str):
         return Path(f"{root}/{rel}" if rel else root)
@@ -113,7 +169,7 @@ def _commit_staged(spark: SparkSession, staged: str, old: str, target: str,
         if not fs.rename(src, dst):
             raise OSError(f"rename {src} -> {dst} failed")
 
-    for rel, src in _leaf_partitions(fs, staged_root, depth):
+    for rel, src in leaves:
         dst = sub(target, rel)
         if fs.exists(dst):
             rename(dst, sub(old, rel))
@@ -138,18 +194,20 @@ def merge_upsert(
     a caller that already has them (``run_elt`` observes them during the
     DQ gate's scan) passes them in. Without it the merge collects them
     itself. A value with no rows in ``new`` is allowed: that partition is
-    rewritten with its own rows.
+    rewritten with its own rows. A batch row in a partition that
+    ``batch_parts`` misses raises ValueError, and the target is left as
+    it was.
 
-    The target is read with ``new``'s schema, so no footer-inference job
-    runs; partition discovery still places the partition columns last.
-    The batch's schema is the table's: rewritten partitions carry exactly
-    ``new``'s columns.
+    Only the named partitions' leaf directories are read back, with
+    ``new``'s schema, so no footer-inference job runs and no other
+    partition is listed; partition discovery places the partition columns
+    last. The batch's schema is the table's: rewritten partitions carry
+    exactly ``new``'s columns.
 
     Idempotent: re-merging the same batch leaves the table unchanged.
-    An EMPTY batch is a no-op — without the early return it would fall
-    through to ``affected = target`` (no partition predicate) and
-    rewrite the ENTIRE table to change nothing (a quarantine gate that
-    rejects a whole micro-batch hits exactly this).
+    An EMPTY batch is a no-op — without the early return an unpartitioned
+    table would be rewritten whole to change nothing (a quarantine gate
+    that rejects a whole micro-batch hits exactly this).
 
     The first write into a missing target is one direct write. Otherwise
     the merged partitions are staged and committed by rename (module
@@ -167,39 +225,27 @@ def merge_upsert(
         writer.parquet(target_path)
         return
 
-    target = spark.read.schema(new.schema).parquet(target_path)
     if partition_cols:
-        # Partition-scoped read-back: only partitions the batch touches.
-        # eqNullSafe, not ==: a plain equality against a NULL partition
-        # value never matches, the null partition's existing rows would be
-        # excluded from `affected`, and the commit would replace the whole
-        # __HIVE_DEFAULT_PARTITION__ with batch rows only — silent deletion
-        # of every pre-existing key there.
         if batch_parts is None:
             batch_parts = new.select(*partition_cols).distinct().collect()
         if not batch_parts:
             return  # empty batch: nothing to merge, nothing to touch
-        pred = None
-        for row in batch_parts:
-            clause = None
-            for c in partition_cols:
-                eq = F.col(c).eqNullSafe(F.lit(row[c]))
-                clause = eq if clause is None else (clause & eq)
-            pred = clause if pred is None else (pred | clause)
-        affected = target.filter(pred)
+        read_back = {leaf_path(spark, partition_cols, row) for row in batch_parts}
+    elif new.isEmpty():
+        return  # empty batch: a full-table rewrite would be a no-op
     else:
-        if new.isEmpty():
-            return  # empty batch: a full-table rewrite would be a no-op
-        affected = target
+        read_back = {""}
+
     # source tag: on an exact order_col tie the BATCH row must win
     # (the reference's ON CONFLICT DO UPDATE always takes the new row)
+    rows = new.withColumn("__src", F.lit(1))
+    affected = read_partitions(spark, target_path, new.schema, read_back)
+    if affected is not None:
+        rows = affected.withColumn("__src", F.lit(0)).unionByName(
+            rows.select(*affected.columns, "__src")
+        )
     merged = dedup_last_write_wins(
-        affected.withColumn("__src", F.lit(0)).unionByName(
-            new.select(*affected.columns).withColumn("__src", F.lit(1))
-        ),
-        keys,
-        order_col,
-        tiebreak_cols=["__src"],
+        rows, keys, order_col, tiebreak_cols=["__src"]
     ).drop("__src")
 
     staging = target_path.rstrip("/") + f"__stage_{uuid.uuid4().hex[:8]}"
@@ -213,7 +259,13 @@ def merge_upsert(
         _delete_path(spark, staging)
         raise
     try:
-        _commit_staged(spark, staged, f"{staging}/old", target_path, len(partition_cols))
+        _commit_staged(
+            spark, staged, f"{staging}/old", target_path, len(partition_cols),
+            read_back,
+        )
+    except ValueError:
+        _delete_path(spark, staging)  # raised before the first rename
+        raise
     except Exception as e:
         raise RuntimeError(
             f"merge into {target_path} failed part-way through its commit; "

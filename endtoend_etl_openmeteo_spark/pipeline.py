@@ -6,9 +6,25 @@ collapses into one function call: bronze JSON scan → flatten → DQ gate →
 partition-scoped merge into silver → daily mart. The reference's process
 boundaries (Airflow tasks, XCom, psycopg2) become Spark job boundaries. A
 warm cycle into existing silver and gold runs five jobs: the gate's scan
-(which also observes the batch's cities), the merge's staged write (two
+(which also observes the batch's months), the merge's staged write (two
 under AQE) and the gold refresh's write (two). The only shuffles are the
 merge's key dedup and the mart's groupBy.
+
+**Layout: silver and gold are partitioned by month** — the UTC calendar
+month (``ym``, ``yyyy-MM``) of silver's ``timestamp`` and of gold's
+``day``, which agree for every row. The hourly DAG lands every city every
+hour, so a city partition would scope nothing: each cycle would rewrite
+every city's whole history. By month, a cycle's merge and gold refresh
+read and rewrite the batch's month only (two at a month boundary), and a
+cycle's cost stays flat as history grows. ``city`` is a data column.
+
+Month, not day: a daily partition schedules more jobs and tasks per
+cycle, and above Spark's ``parallelPartitionDiscovery.threshold`` (32
+directories) every listing of the whole table — the gold frame
+``run_elt`` returns, silver's read when there is no gold table, the
+backfill's gap search — runs a Spark listing job of its own. Months stay
+under that threshold for 32 months of history. The merge and the gold
+refresh list only the batch's leaf directories, so they never pay it.
 
 Reference lifecycle traced at /root/reference/airflow/dags/
 etl_openmeteo.py:179-183 (extract:20-109, validate:111-149, load:151-177)
@@ -20,18 +36,47 @@ from __future__ import annotations
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from endtoend_etl_openmeteo_spark.operators.dq import REFERENCE_WEATHER_SUITE, dq_gate
 from endtoend_etl_openmeteo_spark.operators.explode import (
     flatten_validation_records,
+    parse_time,
     unzip_hourly,
 )
-from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
+from endtoend_etl_openmeteo_spark.operators.merge import (
+    _path_exists,
+    leaf_path,
+    merge_upsert,
+    read_partitions,
+)
 from endtoend_etl_openmeteo_spark.schemas import (
     FCT_CITY_DAY_SCHEMA,
     WEATHER_HOURLY_SCHEMA,
 )
 from endtoend_etl_openmeteo_spark.sources.bronze import read_bronze
+
+#: The partition column of silver and gold (module docstring).
+MONTH = "ym"
+
+
+def month_of(ts: Column) -> Column:
+    """``ts``'s calendar month as ``yyyy-MM`` in the session time zone
+    (pinned UTC): the value of :data:`MONTH`."""
+    return F.date_format(ts, "yyyy-MM")
+
+
+#: Silver as stored: the hourly rows plus their month.
+SILVER_SCHEMA = T.StructType(
+    WEATHER_HOURLY_SCHEMA.fields + [T.StructField(MONTH, T.StringType())]
+)
+#: Gold as stored: the mart with ``city`` as its last data column, plus the
+#: month. :func:`read_gold` returns the first five, the columns (and order)
+#: ``run_elt`` and ``backfill_missing`` return.
+GOLD_SCHEMA = T.StructType(
+    [f for f in FCT_CITY_DAY_SCHEMA.fields if f.name != "city"]
+    + [FCT_CITY_DAY_SCHEMA["city"], T.StructField(MONTH, T.StringType())]
+)
 
 
 def fct_city_day(silver: DataFrame) -> DataFrame:
@@ -78,13 +123,14 @@ def run_elt(
     reconciles duplicates exactly like the reference's ON CONFLICT loader.
     Returns the gold DataFrame.
 
-    The batch's cities are observed by the gate's own scan of the
-    validation records. After a passing gate every record has a non-null
-    ``time``, so under ``nullpad`` with no ``time_range`` they are exactly
-    ``hourly``'s cities and no separate collect runs. With ``time_range``
-    or ``truncate`` a city can be left with no rows, and its silver and
-    gold partitions must not be rewritten to change nothing, so the
-    cities are collected from ``hourly`` instead.
+    The batch's months are observed by the gate's own scan of the
+    validation records, parsing ``time`` as the explode does. After a
+    passing gate every record has a non-null ``time``, so under
+    ``nullpad`` with no ``time_range`` they are exactly ``hourly``'s
+    months and no separate collect runs. With ``time_range`` or
+    ``truncate`` a month can be left with no rows, and its silver and gold
+    partitions must not be rewritten to change nothing, so the months are
+    collected from ``hourly`` instead.
     """
     raw = read_bronze(spark, bronze_path)
 
@@ -105,20 +151,23 @@ def run_elt(
 
 def _validate(spark: SparkSession, raw: DataFrame) -> list | None:
     """Gate ``raw``'s validation records with the reference suite (raises
-    DQValidationError) and return the batch's cities, observed by the
+    DQValidationError) and return the batch's months, observed by the
     gate's own scan.
 
-    The cities are ``Row(city=...)``s, as ``select("city").distinct()
-    .collect()`` returns them; the struct keeps a NULL city, which a bare
-    ``collect_set`` would drop. The city observation is registered before
-    the gate's own, so it is normally filled by the time the gate's
-    ``obs.get`` returns. It stays empty only when no action ran over the
-    records (a gate replaced by a no-op, say); the listener bus is then
-    given a bounded drain before None is returned, and the caller
-    collects the cities itself."""
+    The months are ``Row(ym=...)``s, as ``select(MONTH).distinct()
+    .collect()`` returns them. ``time`` is parsed exactly as
+    ``unzip_hourly`` parses it, so the observed set is the batch's; the
+    lenient parse gives a malformed time a NULL month here, and the
+    merge's strict parse still raises on it. The month observation is
+    registered before the gate's own, so it is normally filled by the
+    time the gate's ``obs.get`` returns. It stays empty only when no
+    action ran over the records (a gate replaced by a no-op, say); the
+    listener bus is then given a bounded drain before None is returned,
+    and the caller collects the months itself."""
     obs = Observation()
+    month = month_of(parse_time(F.col("time"), strict=False)).alias(MONTH)
     records = flatten_validation_records(raw).observe(
-        obs, F.collect_set(F.struct("city")).alias("cities")
+        obs, F.collect_set(F.struct(month)).alias("months")
     )
     dq_gate(records, REFERENCE_WEATHER_SUITE)
     if not obs._jo.getRowOrEmpty().isDefined():
@@ -128,7 +177,7 @@ def _validate(spark: SparkSession, raw: DataFrame) -> list | None:
             pass  # bus still busy: fall back to the caller's collect
         if not obs._jo.getRowOrEmpty().isDefined():
             return None
-    return obs.get["cities"]
+    return obs.get["months"]
 
 
 def _load_and_refresh(
@@ -138,33 +187,38 @@ def _load_and_refresh(
     gold_path: str | None,
     parts: list | None,
 ) -> DataFrame:
-    """Merge ``hourly`` into silver, then refresh gold for the cities it
-    touched (or return the mart over silver when there is no gold table).
+    """Merge ``hourly`` into silver's month partitions, then refresh gold
+    for the months it touched (or return the mart over silver when there
+    is no gold table).
 
-    ``parts`` is the batch's cities as ``Row(city=...)``s; when it is None
-    they are collected here, once. Either way they are shared by the merge's
-    partition scope and the gold refresh. Silver and gold are read with
-    known schemas — the batch's own and FCT_CITY_DAY_SCHEMA — so no
-    footer-inference job runs; partition discovery still appends ``city``
-    last, as an inferring read would."""
+    ``parts`` is the batch's months as ``Row(ym=...)``s; when it is None
+    they are collected here, once. Either way they are shared by the
+    merge's partition scope and the gold refresh. Silver and gold are read
+    with known schemas, so no footer-inference job runs."""
+    batch = hourly.withColumn(MONTH, month_of(F.col("timestamp")))
     if parts is None:
-        parts = hourly.select("city").distinct().collect()
+        parts = batch.select(MONTH).distinct().collect()
     merge_upsert(
         spark,
-        hourly,
+        batch,
         silver_path,
         keys=["city", "timestamp"],
         order_col="_ingested_at",
-        partition_cols=["city"],
+        partition_cols=[MONTH],
         batch_parts=parts,
     )
-    silver = spark.read.schema(hourly.schema).parquet(silver_path)
     if gold_path is None:
-        return fct_city_day(silver)
+        return fct_city_day(spark.read.schema(SILVER_SCHEMA).parquet(silver_path))
     refresh_gold_incremental(
-        spark, hourly, silver, gold_path, touched=[r.city for r in parts]
+        spark, batch, silver_path, gold_path, touched=[r[MONTH] for r in parts]
     )
-    return spark.read.schema(FCT_CITY_DAY_SCHEMA).parquet(gold_path)
+    return read_gold(spark, gold_path)
+
+
+def read_gold(spark: SparkSession, gold_path: str) -> DataFrame:
+    """The gold mart at ``gold_path``: ``day``, the three averages and
+    ``city``, in that order, without the month partition column."""
+    return spark.read.schema(GOLD_SCHEMA).parquet(gold_path).drop(MONTH)
 
 
 def backfill_missing(
@@ -204,7 +258,7 @@ def backfill_missing(
     from endtoend_etl_openmeteo_spark.sources.bronze import write_bronze
     from endtoend_etl_openmeteo_spark.sources.http import payloads_to_df
 
-    silver = spark.read.schema(WEATHER_HOURLY_SCHEMA).parquet(silver_path)
+    silver = spark.read.schema(SILVER_SCHEMA).parquet(silver_path)
     missing = find_missing_hours(silver, start, end, ["city"], keys=city_dim)
     batches = chunk_hours(missing, ["city"], chunk_size=chunk_size).collect()
 
@@ -224,57 +278,57 @@ def backfill_missing(
         parts = _validate(spark, raw)
         return _load_and_refresh(spark, unzip_hourly(raw), silver_path, gold_path, parts)
     if gold_path is not None:
-        return spark.read.schema(FCT_CITY_DAY_SCHEMA).parquet(gold_path)
+        return read_gold(spark, gold_path)
     return fct_city_day(silver)
 
 
 def refresh_gold_incremental(
     spark: SparkSession,
     batch: DataFrame,
-    silver: DataFrame,
+    silver_path: str,
     gold_path: str,
     touched: list | None = None,
 ) -> None:
-    """Rebuild the gold mart ONLY for the city partitions the batch touched.
+    """Rebuild the gold mart ONLY for the months the batch touched.
 
     The reference recomputes the whole mart on every dbt run
     (fct_city_day.sql materialized='table'); at 100 TB that full rebuild is
-    the scale killer — a 24-row hourly batch must not re-aggregate years of
-    history. Touched cities come from the batch (small by construction) —
-    or from ``touched`` when the caller already has them; partition
-    pruning limits the silver re-read, and dynamic partition overwrite
-    replaces only those cities' gold partitions.
+    the scale killer — an hourly batch must not re-aggregate years of
+    history. Touched months (``yyyy-MM`` strings) come from ``touched``, or
+    from the batch's ``timestamp`` when the caller has none. Only those
+    months' silver leaf directories are listed and read, every
+    ``(city, day)`` in them is re-aggregated, and dynamic partition
+    overwrite replaces only those months' gold partitions. A missing gold
+    table is built from all of silver.
     """
-    from endtoend_etl_openmeteo_spark.operators.merge import _path_exists
-
     if touched is None:
-        touched = [r.city for r in batch.select("city").distinct().collect()]
+        touched = [
+            r[0] for r in batch.select(month_of(F.col("timestamp"))).distinct().collect()
+        ]
     if not touched:
         return  # empty batch: no partition to refresh
     if not _path_exists(spark, gold_path):
-        fct_city_day(silver).write.mode("overwrite").partitionBy("city").parquet(
-            gold_path
-        )
+        silver = spark.read.schema(SILVER_SCHEMA).parquet(silver_path)
+        _gold_rows(silver).write.mode("overwrite").partitionBy(MONTH).parquet(gold_path)
         return
-    # eqNullSafe fold, not isin(): IN against a NULL element matches
-    # nothing, so a NULL-city batch (whose rows merge_upsert deliberately
-    # preserves in silver's __HIVE_DEFAULT_PARTITION__) would leave the
-    # gold mart's null-city partition silently stale forever
-    pred = None
-    for c in touched:
-        eq = F.col("city").eqNullSafe(F.lit(c))
-        pred = eq if pred is None else (pred | eq)
-    scoped = silver.filter(pred)
+    leaves = {leaf_path(spark, [MONTH], {MONTH: m}) for m in touched}
+    silver = read_partitions(spark, silver_path, SILVER_SCHEMA, leaves)
+    if silver is None:
+        return  # no silver rows in those months: gold has none either
     # No materialization needed: the plan reads silver_path only — the gold
-    # write never overwrites its own input (localCheckpoint here would add an
-    # unreplicated-block availability risk on a real cluster for nothing).
-    updated = fct_city_day(scoped)
+    # write never overwrites its own input.
     # Dynamic overwrite pinned on THIS writer, not trusted from the session:
     # under Spark's static default, overwrite+partitionBy would delete every
-    # city partition the batch did not touch.
+    # month partition the batch did not touch.
     (
-        updated.write.mode("overwrite")
+        _gold_rows(silver).write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("city")
+        .partitionBy(MONTH)
         .parquet(gold_path)
     )
+
+
+def _gold_rows(silver: DataFrame) -> DataFrame:
+    """:func:`fct_city_day` over ``silver`` in gold's stored column order."""
+    mart = fct_city_day(silver).withColumn(MONTH, month_of(F.col("day")))
+    return mart.select(*GOLD_SCHEMA.fieldNames())

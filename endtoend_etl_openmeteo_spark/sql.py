@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from endtoend_etl_openmeteo_spark.pipeline import MONTH
 from endtoend_etl_openmeteo_spark.session import ensure_engine_conf
 from endtoend_etl_openmeteo_spark.sources.tables import TABLES, tbl
 
@@ -30,9 +31,10 @@ def register_weather_views(
     """Register the weather tables the way dbt exposes its models:
     `weather_hourly` (silver source), `stg_weather_hourly` (typed staging
     view — dbt/models/staging/stg_weather_hourly.sql:1-7) and, if present,
-    `fct_city_day`."""
+    `fct_city_day`. The month partition column of the pipeline's tables
+    is left out, as the dbt models have none."""
     ensure_engine_conf(spark)
-    silver = spark.read.parquet(silver_path)
+    silver = spark.read.parquet(silver_path).drop(MONTH)
     silver.createOrReplaceTempView("weather_hourly")
     spark.sql(
         """
@@ -44,7 +46,9 @@ def register_weather_views(
         """
     ).createOrReplaceTempView("stg_weather_hourly")
     if gold_path is not None:
-        spark.read.parquet(gold_path).createOrReplaceTempView("fct_city_day")
+        spark.read.parquet(gold_path).drop(MONTH).createOrReplaceTempView(
+            "fct_city_day"
+        )
 
 
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

@@ -443,7 +443,7 @@ def run_streaming_elt(
     ``available_now`` drains all pending files then stops — the
     test/backfill mode; production passes False and a processingTime
     trigger. With ``gold_path`` set, each micro-batch also refreshes the
-    gold daily mart incrementally for the cities it touched (streaming
+    gold daily mart incrementally for the months it touched (streaming
     bronze → silver → gold end-to-end).
     """
     hourly = streaming_hourly(stream_bronze(spark, bronze_path), policy=policy)
@@ -460,7 +460,7 @@ def run_streaming_elt(
 
         # Evaluate the bronze JSON flatten ONCE per epoch, not once per
         # sink: without the checkpoint the quarantine write, the
-        # touched-cities collect, the merge's staged write, and the gold
+        # touched-months collect, the merge's staged write, and the gold
         # refresh each re-read and re-flatten the landing files — the
         # run_streaming_corpus_ingest discipline. Executor loss mid-epoch
         # fails the task and Structured Streaming replays the epoch from
@@ -486,10 +486,9 @@ def run_streaming_elt(
                     )
                 else:
                     dq_gate(batch, expectations)
-            # the batch path's merge → silver re-read → gold refresh, with
-            # the touched cities collected once; with gold_path set the
-            # mart refresh is scoped to this epoch's cities, so per-epoch
-            # cost tracks batch size, not mart history
+            # the batch path's merge → gold refresh, with the touched
+            # months collected once; both are scoped to this epoch's
+            # months, so per-epoch cost tracks batch size, not history
             _load_and_refresh(
                 batch.sparkSession, batch, silver_path, gold_path, None
             )

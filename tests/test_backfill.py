@@ -9,7 +9,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from endtoend_etl_openmeteo_spark.pipeline import backfill_missing
+from endtoend_etl_openmeteo_spark.pipeline import MONTH, backfill_missing, month_of
 from endtoend_etl_openmeteo_spark.schemas import WEATHER_HOURLY_SCHEMA
 
 TMP = Path(__file__).resolve().parent.parent / ".tmp"
@@ -32,9 +32,9 @@ def test_backfill_fills_gaps_then_idempotent(spark, workdir):
         if h not in (3, 4, 20)  # three gaps
     ]
     silver = str(workdir / "silver")
-    spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA).write.partitionBy(
-        "city"
-    ).parquet(silver)
+    spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA).withColumn(
+        MONTH, month_of(F.col("timestamp"))
+    ).write.partitionBy(MONTH).parquet(silver)
 
     calls = []
 

@@ -82,11 +82,13 @@ def test_kmeans_assign_matches_training_assignment(spark):
     assert [(r.id, r.cluster) for r in got] == [(999_999, probe_cluster)]
 
 
-def test_incremental_gold_only_touches_batch_cities(spark, tmp_path_factory):
+def test_incremental_gold_only_touches_batch_months(spark, tmp_path_factory):
     import datetime as dt
 
+    from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
     from endtoend_etl_openmeteo_spark.pipeline import (
-        fct_city_day,
+        MONTH,
+        month_of,
         refresh_gold_incremental,
     )
     from endtoend_etl_openmeteo_spark.schemas import WEATHER_HOURLY_SCHEMA
@@ -97,26 +99,43 @@ def test_incremental_gold_only_touches_batch_cities(spark, tmp_path_factory):
     d.mkdir(parents=True)
     try:
         ing = dt.datetime(2025, 10, 2)
-        rows = [
-            ("Warsaw", dt.datetime(2025, 10, 1, h), 10.0, 0.0, 1.0, ing) for h in range(4)
-        ] + [("Berlin", dt.datetime(2025, 10, 1, h), 20.0, 0.0, 1.0, ing) for h in range(4)]
-        silver = spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA)
-        gold = str(d / "gold")
-        # initial full build
-        refresh_gold_incremental(spark, silver, silver, gold)
-        first = {r.city: r.temperature_2m for r in spark.read.parquet(gold).collect()}
-        assert first == {"Warsaw": 10.0, "Berlin": 20.0}
 
-        # batch touches ONLY Warsaw; silver now has updated Warsaw temps
-        batch = spark.createDataFrame(
-            [("Warsaw", dt.datetime(2025, 10, 1, 5), 50.0, 0.0, 1.0, ing)],
-            WEATHER_HOURLY_SCHEMA,
+        def merge(rows):
+            hourly = spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA)
+            merge_upsert(
+                spark, hourly.withColumn(MONTH, month_of(F.col("timestamp"))),
+                silver, ["city", "timestamp"], "_ingested_at", [MONTH],
+            )
+            return hourly
+
+        def gold_files(month):
+            return sorted(
+                (str(f), f.stat().st_mtime_ns)
+                for f in (Path(gold) / f"{MONTH}={month}").rglob("*") if f.is_file()
+            )
+
+        silver, gold = str(d / "silver"), str(d / "gold")
+        first_rows = merge(
+            [("Warsaw", dt.datetime(2025, 10, 1, h), 10.0, 0.0, 1.0, ing) for h in range(4)]
+            + [("Warsaw", dt.datetime(2025, 9, 1, h), 20.0, 0.0, 1.0, ing) for h in range(4)]
         )
-        silver2 = silver.unionByName(batch)
-        refresh_gold_incremental(spark, batch, silver2, gold)
-        after = {r.city: round(r.temperature_2m, 2) for r in spark.read.parquet(gold).collect()}
-        assert after["Warsaw"] == 18.0  # (4*10 + 50)/5
-        assert after["Berlin"] == 20.0  # untouched partition preserved
+        # initial full build
+        refresh_gold_incremental(spark, first_rows, silver, gold)
+        first = {r.day.month: r.temperature_2m for r in spark.read.parquet(gold).collect()}
+        assert first == {10: 10.0, 9: 20.0}
+        september = gold_files("2025-09")
+        assert september
+
+        # batch touches ONLY October; silver now has an extra October hour
+        batch = merge([("Warsaw", dt.datetime(2025, 10, 1, 5), 50.0, 0.0, 1.0, ing)])
+        refresh_gold_incremental(spark, batch, silver, gold)
+        after = {
+            r.day.month: round(r.temperature_2m, 2)
+            for r in spark.read.parquet(gold).collect()
+        }
+        assert after[10] == 18.0  # (4*10 + 50)/5
+        assert after[9] == 20.0  # untouched partition preserved
+        assert gold_files("2025-09") == september  # and not rewritten
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

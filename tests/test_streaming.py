@@ -86,6 +86,7 @@ def test_streaming_checkpoint_recovery_after_midstream_failure(spark, workdir):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
+    from endtoend_etl_openmeteo_spark.pipeline import MONTH, month_of
     from endtoend_etl_openmeteo_spark.streaming import (
         stream_bronze,
         streaming_hourly,
@@ -103,9 +104,9 @@ def test_streaming_checkpoint_recovery_after_midstream_failure(spark, workdir):
         if calls["n"] == 2:  # first batch commits, second dies mid-stream
             raise RuntimeError("injected executor-side failure")
         merge_upsert(
-            batch.sparkSession, batch, silver,
-            keys=["city", "timestamp"], order_col="_ingested_at",
-            partition_cols=["city"],
+            batch.sparkSession, batch.withColumn(MONTH, month_of(F.col("timestamp"))),
+            silver, keys=["city", "timestamp"], order_col="_ingested_at",
+            partition_cols=[MONTH],
         )
 
     hourly = streaming_hourly(stream_bronze(spark, bronze, max_files_per_trigger=1))

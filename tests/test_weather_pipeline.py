@@ -22,7 +22,14 @@ from endtoend_etl_openmeteo_spark.operators.gaps import (
     find_missing_hours,
 )
 from endtoend_etl_openmeteo_spark.operators.merge import merge_upsert
-from endtoend_etl_openmeteo_spark.pipeline import fct_city_day, run_elt
+from endtoend_etl_openmeteo_spark.pipeline import (
+    MONTH,
+    SILVER_SCHEMA,
+    fct_city_day,
+    month_of,
+    refresh_gold_incremental,
+    run_elt,
+)
 from endtoend_etl_openmeteo_spark.schemas import (
     RAW_OPENMETEO_SCHEMA,
     WEATHER_HOURLY_SCHEMA,
@@ -60,6 +67,26 @@ def _payload(city, ds, hour, times, temps, precips, winds, lat=52.23, lon=21.01)
 
 def _bronze_df(spark, rows):
     return spark.createDataFrame(rows, BRONZE_READ_SCHEMA)
+
+
+def _month_tables(spark, rows, silver, gold=None):
+    """Silver (and gold) in the pipeline's month layout, built from hourly
+    ``rows`` by the merge's first write and the gold refresh's full build."""
+    hourly = spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA)
+    merge_upsert(
+        spark, hourly.withColumn(MONTH, month_of(F.col("timestamp"))), silver,
+        ["city", "timestamp"], "_ingested_at", [MONTH],
+    )
+    if gold is not None:
+        refresh_gold_incremental(spark, hourly, silver, gold)
+
+
+def _month_files(path, month):
+    """(path, mtime_ns) of every file of ``month``'s partition."""
+    return sorted(
+        (str(f), f.stat().st_mtime_ns)
+        for f in (Path(path) / f"{MONTH}={month}").rglob("*") if f.is_file()
+    )
 
 
 GOOD_ROWS = [
@@ -328,9 +355,12 @@ def test_merge_failed_staged_write_leaves_target_untouched(spark, workdir):
 
 
 def test_merge_readback_prunes_to_batch_partitions(spark, workdir):
-    """The read-back side of the scope claim: the merge's union plan filters
-    the target on the batch's partition values, so partition pruning limits
-    the scan to touched partitions (IN-filter pushed to the parquet source)."""
+    """The read-back side of the scope claim: the merge reads the target
+    through its batch's leaf directories only (basePath keeps the
+    partition column), so neither the scan nor the listing reaches
+    another partition."""
+    from endtoend_etl_openmeteo_spark.operators.merge import leaf_path, read_partitions
+
     path = str(workdir / "silver_pruned")
     t0 = dt.datetime(2025, 10, 1, 12, 0)
     ing = dt.datetime(2025, 10, 1, 13, 0)
@@ -341,13 +371,69 @@ def test_merge_readback_prunes_to_batch_partitions(spark, workdir):
     )
     merge_upsert(spark, initial, path, ["city", "timestamp"], "_ingested_at", ["city"])
 
-    # replicate the operator's read-back predicate shape and check pruning
-    target = spark.read.parquet(path)
-    affected = target.filter(F.col("city") == F.lit("Warsaw"))
-    plan = affected._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "city" in plan.split(
-        "PartitionFilters:"
-    )[1].split("]")[0], plan
+    leaves = {leaf_path(spark, ["city"], {"city": c}) for c in ("Warsaw", "Lima")}
+    affected = read_partitions(spark, path, WEATHER_HOURLY_SCHEMA, leaves)
+    assert {Path(f).parent.name for f in affected.inputFiles()} == {"city=Warsaw"}
+    assert [(r.city, r.temperature_2m) for r in affected.collect()] == [("Warsaw", 0.0)]
+    assert affected.columns[-1] == "city"
+    assert read_partitions(spark, path, WEATHER_HOURLY_SCHEMA, {"city=Lima"}) is None
+
+
+def test_merge_raises_when_batch_parts_miss_a_partition(spark, workdir):
+    """``batch_parts`` names the partitions the merge reads back. A batch
+    row in a partition it misses would be staged without that partition's
+    other rows, and its rename would delete them. The merge raises before
+    its first rename instead, leaving every target file byte-identical and
+    no staging directory."""
+    path = str(workdir / "t")
+    t0, t1 = dt.datetime(2026, 1, 1), dt.datetime(2026, 1, 2)
+    schema = "k string, p int, v string, ord timestamp"
+    merge_upsert(
+        spark,
+        spark.createDataFrame(
+            [("k1", 1, "a", t0), ("k2", 2, "b", t0), ("k3", 2, "c", t0)], schema
+        ),
+        path, ["k"], "ord", partition_cols=["p"],
+    )
+    before = _partition_files(path)
+    batch = spark.createDataFrame([("k1", 1, "a2", t1), ("k2", 2, "b2", t1)], schema)
+    with pytest.raises(ValueError, match="did not read back"):
+        merge_upsert(
+            spark, batch, path, ["k"], "ord", partition_cols=["p"],
+            batch_parts=[Row(p=1)],
+        )
+    assert _partition_files(path) == before
+    assert _stage_dirs(path) == []
+    assert {r.k for r in spark.read.parquet(path).collect()} == {"k1", "k2", "k3"}
+
+
+def test_merge_job_count_does_not_grow_with_partition_count(spark, workdir):
+    """A one-partition merge lists and reads only its own leaf directory,
+    so it runs as many jobs against 40 partitions as against 2 (a listing
+    of more than 32 partition directories would run a job of its own)."""
+    t1 = dt.datetime(2026, 1, 2)
+    schema = "k long, p int, v double, ord timestamp"
+
+    def jobs(n_parts):
+        path = str(workdir / f"t{n_parts}")
+        merge_upsert(
+            spark,
+            spark.range(n_parts * 5).selectExpr(
+                "id AS k", f"CAST(id % {n_parts} AS INT) AS p", "1.0D AS v",
+                "TIMESTAMP'2026-01-01 00:00:00' AS ord",
+            ),
+            path, ["k"], "ord", partition_cols=["p"],
+        )
+        batch = spark.createDataFrame([(0, 0, 2.0, t1)], schema)
+        _, n = _jobs_in(
+            spark, f"jc_merge_{n_parts}",
+            lambda: merge_upsert(spark, batch, path, ["k"], "ord", ["p"], [Row(p=0)]),
+        )
+        rows = {r.k: r.v for r in spark.read.parquet(path).filter("p = 0").collect()}
+        assert rows == {k: (2.0 if k == 0 else 1.0) for k in range(0, n_parts * 5, n_parts)}
+        return n
+
+    assert jobs(40) == jobs(2)
 
 
 def test_gap_detection_and_chunking(spark):
@@ -419,12 +505,12 @@ def _jobs_in(spark, label, fn):
 
 def test_warm_elt_cycle_job_count_stays_pinned(spark, workdir):
     """One warm run_elt cycle into an existing silver and gold: the DQ
-    gate's one scan also observes the touched cities, the merge writes
+    gate's one scan also observes the touched months, the merge writes
     once, and silver and gold are read with known schemas. Any of those
     regressing adds whole scheduled jobs that no result check would
     notice, so the count itself is pinned via the status tracker
     (observed 5: the gate 1, the merge write 2, the gold write 2; a
-    cities collect, a staged re-read, a second merge write, an aggregate
+    months collect, a staged re-read, a second merge write, an aggregate
     gate or an inferring read each adds at least one)."""
     bronze = str(workdir / "bronze")
     silver = str(workdir / "silver")
@@ -460,14 +546,11 @@ def _hours_payload(hours, temp):
 def test_backfill_job_count_stays_pinned(spark, workdir):
     """One backfill_missing call that fetches payloads, into an existing
     silver and gold, runs 10 jobs: the gap search's collect 4, the bronze
-    archive write 1, the gate (which also observes the cities) 1, the
+    archive write 1, the gate (which also observes the months) 1, the
     merge write 2 and the gold write 2. The silver read uses the known
-    schema, so no inference job runs; a cities collect or an aggregate
+    schema, so no inference job runs; a months collect or an aggregate
     gate would each add jobs."""
-    from endtoend_etl_openmeteo_spark.pipeline import (
-        backfill_missing,
-        refresh_gold_incremental,
-    )
+    from endtoend_etl_openmeteo_spark.pipeline import backfill_missing
 
     silver = str(workdir / "silver")
     gold = str(workdir / "gold")
@@ -479,11 +562,7 @@ def test_backfill_job_count_stays_pinned(spark, workdir):
         for h in range(24)
         if (c, h) not in (("Warsaw", 3), ("Warsaw", 4), ("Berlin", 20))
     ]
-    merge_upsert(
-        spark, spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA), silver,
-        ["city", "timestamp"], "_ingested_at", ["city"],
-    )
-    refresh_gold_incremental(spark, spark.read.parquet(silver), spark.read.parquet(silver), gold)
+    _month_tables(spark, rows, silver, gold)
 
     def backfill():
         return backfill_missing(
@@ -498,7 +577,7 @@ def test_backfill_job_count_stays_pinned(spark, workdir):
     assert out.columns == [
         "day", "temperature_2m", "precipitation", "wind_speed_10m", "city"
     ]
-    assert spark.read.parquet(silver).columns[-1] == "city"
+    assert spark.read.parquet(silver).columns == SILVER_SCHEMA.fieldNames()
     gold_avg = {r.city: round(r.temperature_2m, 6) for r in out.collect()}
     assert gold_avg == {
         "Warsaw": round((22 * 10.0 + 2 * 42.0) / 24, 6),
@@ -506,93 +585,129 @@ def test_backfill_job_count_stays_pinned(spark, workdir):
     }
 
 
-def test_elt_time_range_excluding_a_city_leaves_its_partitions_untouched(
+def test_elt_time_range_excluding_a_month_leaves_its_partitions_untouched(
     spark, workdir
 ):
-    """A time_range that leaves one city with no rows must not touch that
-    city: its silver and gold partition files stay exactly as they were
+    """A time_range that leaves one month with no rows must not touch that
+    month: its silver and gold partition files stay exactly as they were
     (a rewrite would give new part-file names), its rows stay equal, and
     no staging directory remains."""
     bronze = str(workdir / "bronze")
     silver = str(workdir / "silver")
     gold = str(workdir / "gold")
-    write_bronze(_bronze_df(spark, GOOD_ROWS), bronze)
-    at = F.lit("2025-10-31 13:00:00").cast("timestamp")
+    november = _payload(
+        "Paris", "2025-11-01", "00", [f"2025-11-01T{h:02d}:00" for h in range(4)],
+        [10.0, 11.0, 12.0, 13.0], [0.0] * 4, [3.0] * 4, lat=48.86, lon=2.35,
+    )
+    write_bronze(_bronze_df(spark, GOOD_ROWS + [november]), bronze)
+    at = F.lit("2025-11-01 13:00:00").cast("timestamp")
     run_elt(spark, bronze, silver, gold, ingested_at=at)
 
-    def city_rows(path, city):
+    def month_rows(path, month):
         return sorted(
-            tuple(r) for r in spark.read.parquet(path).filter(F.col("city") == city).collect()
+            tuple(r) for r in spark.read.parquet(path).filter(F.col(MONTH) == month).collect()
         )
 
-    def city_files(path, city):
-        return sorted(
-            (str(f), f.stat().st_mtime_ns)
-            for f in (Path(path) / f"city={city}").rglob("*") if f.is_file()
+    def snapshot(month):
+        return (
+            (_month_files(silver, month), _month_files(gold, month)),
+            (month_rows(silver, month), month_rows(gold, month)),
         )
 
-    paris = (city_rows(silver, "Paris"), city_rows(gold, "Paris"))
-    paris_files = (city_files(silver, "Paris"), city_files(gold, "Paris"))
-    assert paris_files[0] and paris_files[1]
-    later = F.lit("2025-10-31 14:00:00").cast("timestamp")
-    # Paris' hours are 00-03; the window holds only the 12:00 hour
+    nov = snapshot("2025-11")
+    assert nov[0][0] and nov[0][1] and nov[1][0] and nov[1][1]
+    later = F.lit("2025-11-01 14:00:00").cast("timestamp")
+    # the window holds only October's hours: November is left with no rows
     run_elt(
         spark, bronze, silver, gold, ingested_at=later,
-        time_range=("2025-10-31 12:00:00", "2025-10-31 13:00:00"),
+        time_range=("2025-10-31 00:00:00", "2025-11-01 00:00:00"),
     )
-    assert (city_files(silver, "Paris"), city_files(gold, "Paris")) == paris_files
-    assert (city_rows(silver, "Paris"), city_rows(gold, "Paris")) == paris
+    assert snapshot("2025-11") == nov
     assert {r._ingested_at for r in spark.read.parquet(silver).filter(
-        F.col("city") != "Paris").collect()} == {dt.datetime(2025, 10, 31, 14)}
+        F.col(MONTH) != "2025-11").collect()} == {dt.datetime(2025, 11, 1, 14)}
     assert _stage_dirs(silver) == [] and _stage_dirs(gold) == []
 
 
-def test_gold_refresh_and_merge_keep_other_cities_under_static_overwrite(
+def test_gold_refresh_and_merge_keep_other_months_under_static_overwrite(
     spark, workdir
 ):
     """Neither the merge nor the gold refresh may trust the session's
     partitionOverwriteMode: under Spark's static default an overwrite with
     partitionBy deletes every partition the write does not carry, so a
-    one-city batch would wipe every other city."""
-    from endtoend_etl_openmeteo_spark.pipeline import refresh_gold_incremental
-
+    one-month batch would wipe every other month."""
     silver_path = str(workdir / "silver")
     gold_path = str(workdir / "gold")
     ing = dt.datetime(2025, 10, 2)
     rows = [
-        (c, dt.datetime(2025, 10, 1, h), t, 0.0, 1.0, ing)
-        for c, t in (("Warsaw", 10.0), ("Berlin", 20.0), ("Paris", 30.0))
+        ("Warsaw", dt.datetime(2025, m, 1, h), t, 0.0, 1.0, ing)
+        for m, t in ((9, 10.0), (10, 20.0), (11, 30.0))
         for h in range(4)
     ]
-    keys = ["city", "timestamp"]
-    merge_upsert(
-        spark, spark.createDataFrame(rows, WEATHER_HOURLY_SCHEMA), silver_path,
-        keys, "_ingested_at", ["city"],
-    )
-    silver = spark.read.parquet(silver_path)
-    refresh_gold_incremental(spark, silver, silver, gold_path)
+    _month_tables(spark, rows, silver_path, gold_path)
 
     conf = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(conf)
     spark.conf.set(conf, "static")
     try:
-        batch = spark.createDataFrame(
-            [("Warsaw", dt.datetime(2025, 10, 1, 5), 50.0, 0.0, 1.0, ing)],
+        hourly = spark.createDataFrame(
+            [("Warsaw", dt.datetime(2025, 9, 1, 5), 50.0, 0.0, 1.0, ing)],
             WEATHER_HOURLY_SCHEMA,
         )
-        merge_upsert(spark, batch, silver_path, keys, "_ingested_at", ["city"])
-        refresh_gold_incremental(
-            spark, batch, spark.read.parquet(silver_path), gold_path
+        batch = hourly.withColumn(MONTH, month_of(F.col("timestamp")))
+        merge_upsert(
+            spark, batch, silver_path, ["city", "timestamp"], "_ingested_at", [MONTH]
         )
+        refresh_gold_incremental(spark, hourly, silver_path, gold_path)
     finally:
         spark.conf.set(conf, prev)
 
     assert spark.read.parquet(silver_path).count() == 13
     gold = {
-        r.city: round(r.temperature_2m, 6)
+        r.day.month: round(r.temperature_2m, 6)
         for r in spark.read.parquet(gold_path).collect()
     }
-    assert gold == {"Warsaw": 18.0, "Berlin": 20.0, "Paris": 30.0}
+    assert gold == {9: 18.0, 10: 20.0, 11: 30.0}
+
+
+def test_warm_elt_cycle_rewrites_only_its_month_of_24(spark, workdir):
+    """Silver and gold hold 24 months; a warm run_elt cycle landing in one
+    of them leaves every other month's silver and gold files with the same
+    names and mtimes, and it still runs at most 5 jobs (24 partition
+    directories stay under Spark's 32-directory parallel-listing
+    threshold)."""
+    silver = str(workdir / "silver")
+    gold = str(workdir / "gold")
+    bronze = str(workdir / "bronze")
+    ing = dt.datetime(2025, 1, 1)
+    rows = [
+        (c, dt.datetime(2024 + m // 12, m % 12 + 1, d, 12), float(m), 0.0, 1.0, ing)
+        for c in ("Warsaw", "Berlin")
+        for m in range(24)
+        for d in (1, 15)
+    ]
+    _month_tables(spark, rows, silver, gold)
+    months = sorted(p.name for p in Path(silver).iterdir() if p.name.startswith(MONTH))
+    assert len(months) == 24 and sorted(
+        p.name for p in Path(gold).iterdir() if p.name.startswith(MONTH)
+    ) == months
+    others = [m.split("=")[1] for m in months if m != f"{MONTH}=2025-03"]
+    before = {m: (_month_files(silver, m), _month_files(gold, m)) for m in others}
+
+    write_bronze(_bronze_df(spark, [
+        _payload(c, "2025-03-15", "12", ["2025-03-15T12:00"], [55.0], [0.0], [1.0])
+        for c in ("Warsaw", "Berlin")
+    ]), bronze)
+    at = F.lit("2025-03-16 00:00:00").cast("timestamp")
+    out, n = _jobs_in(
+        spark, "jc_warm_24m", lambda: run_elt(spark, bronze, silver, gold, ingested_at=at)
+    )
+    assert n <= 5, f"warm run_elt cycle into 24 months ran {n} jobs"
+    assert {m: (_month_files(silver, m), _month_files(gold, m)) for m in others} == before
+    march = {(r.city, r.day.day): r.temperature_2m for r in out.filter(
+        month_of(F.col("day")) == "2025-03").collect()}
+    assert march == {("Warsaw", 1): 14.0, ("Warsaw", 15): 55.0,
+                     ("Berlin", 1): 14.0, ("Berlin", 15): 55.0}
+    assert out.count() == 2 * 48
 
 
 def test_fct_city_day_matches_reference_shape(spark):

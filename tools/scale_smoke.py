@@ -171,6 +171,109 @@ def merge_smoke(spark, src: str, scratch: Path, replicas: int) -> list[str]:
     return [] if ok else ["merge_upsert"]
 
 
+#: History of :func:`elt_cycle_smoke` at 1x: cities x days of hourly silver.
+ELT_CITIES = 12
+ELT_DAYS = 60
+#: Timed warm cycles per history length, each landing 6 hours of every city.
+ELT_CYCLES = 5
+
+
+def elt_cycle_smoke(spark, scratch: Path, replicas: int) -> list[str]:
+    """The hourly ELT cycle at 1x and Nx history: a warm run_elt cycle must
+    cost what its batch costs, not what silver holds. Silver and gold are
+    partitioned by month, and every cycle lands 6 hours of every city in
+    the history's last month, so at both lengths a cycle rewrites that
+    month's files only. Three checks: equal job counts per cycle, equal
+    numbers of files rewritten per cycle, and the median work-CPU seconds
+    of ELT_CYCLES cycles at Nx within 1.5x of 1x (perfbench's meter: this
+    process and its children, without the JVM's JIT and GC threads). The
+    1x history runs once before Nx to warm the code path and is timed
+    after it, so JIT warm-up cannot flatter Nx."""
+    import datetime as dt
+    from statistics import median
+
+    from endtoend_etl_openmeteo_spark import pipeline
+    from endtoend_etl_openmeteo_spark.sources.bronze import write_bronze
+    from endtoend_etl_openmeteo_spark.sources.http import payloads_to_df
+    from perfbench.usage import CpuClock
+
+    end = dt.datetime(2025, 3, 2)  # cycles land in March, the last month
+    sc = spark.sparkContext
+
+    def files(root: str) -> dict[str, int]:
+        return {str(p): p.stat().st_mtime_ns for p in Path(root).rglob("*.parquet")}
+
+    def landing(path: str, cycle: int) -> None:
+        hours = [end + dt.timedelta(hours=6 * cycle + h) for h in range(6)]
+        payloads = [
+            (f"city_{c:02d}", {
+                "latitude": 50.0 + c, "longitude": 10.0 + c, "timezone": "UTC",
+                "hourly": {
+                    "time": [h.strftime("%Y-%m-%dT%H:%M") for h in hours],
+                    "temperature_2m": [float(c + h.hour % 7) for h in hours],
+                    "precipitation": [0.1] * len(hours),
+                    "wind_speed_10m": [float(c % 5)] * len(hours),
+                },
+            })
+            for c in range(ELT_CITIES)
+        ]
+        write_bronze(payloads_to_df(spark, payloads), path)
+
+    def run(scale: int, tag: str, timed: int) -> tuple[float, list, list]:
+        """(median cycle CPU s, jobs per cycle, files rewritten per cycle)."""
+        root = scratch / f"elt_{tag}"
+        silver, gold = str(root / "silver"), str(root / "gold")
+        hours = ELT_DAYS * scale * 24
+        history = spark.range(ELT_CITIES * hours).select(
+            F.format_string("city_%02d", F.col("id") % ELT_CITIES).alias("city"),
+            F.timestamp_seconds(
+                F.lit(int(end.replace(tzinfo=dt.timezone.utc).timestamp()))
+                - (F.floor(F.col("id") / ELT_CITIES) + 1) * 3600
+            ).alias("timestamp"),
+            (F.col("id") % 31).cast("double").alias("temperature_2m"),
+            F.lit(0.0).alias("precipitation"),
+            (F.col("id") % 13).cast("double").alias("wind_speed_10m"),
+            F.lit(end).cast("timestamp").alias("_ingested_at"),
+        )
+        pipeline._load_and_refresh(spark, history, silver, gold, None)
+        clock = CpuClock()
+        cpu, jobs, rewritten = [], [], []
+        for i in range(1 + timed):  # cycle 0 warms this table's first read
+            bronze = str(root / f"landing_{i}")
+            landing(bronze, i)
+            before = {**files(silver), **files(gold)}
+            group = f"scale_smoke_elt_{tag}_{i}"
+            sc.setJobGroup(group, group)
+            c0 = clock.read()[0]
+            try:
+                pipeline.run_elt(spark, bronze, silver, gold)
+            finally:
+                sc.setJobGroup(None, None)
+            c1 = clock.read()[0]
+            after = {**files(silver), **files(gold)}
+            if i:
+                cpu.append(c1 - c0)
+                jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+                rewritten.append(sum(before.get(f) != m for f, m in after.items()))
+        return (median(cpu) if cpu else 0.0), jobs, rewritten
+
+    run(1, "warm", 0)
+    cn, jobs_n, files_n = run(replicas, f"{replicas}x", ELT_CYCLES)
+    c1, jobs_1, files_1 = run(1, "1x", ELT_CYCLES)
+    ratio = cn / max(c1, 1e-9)
+    budget = 1.5
+    ok = ratio <= budget and jobs_n == jobs_1 and files_n == files_1
+    print(
+        f"{'ok  ' if ok else 'FAIL'} elt_cycle[{ELT_CITIES} cities x "
+        f"{ELT_DAYS * replicas} vs {ELT_DAYS} days]: median cycle CPU of "
+        f"{ELT_CYCLES} 1x={c1:.2f}s {replicas}x={cn:.2f}s ratio={ratio:.2f} "
+        f"(budget {budget}x — flat as history grows); jobs per cycle "
+        f"1x={jobs_1} {replicas}x={jobs_n}, files rewritten per cycle "
+        f"1x={files_1} {replicas}x={files_n} (must match)"
+    )
+    return [] if ok else ["elt_cycle"]
+
+
 def mor_smoke(spark, src: str, scratch: Path, replicas: int) -> list[str]:
     """Versioned-table write paths at Nx table size:
 
@@ -1190,6 +1293,7 @@ def main() -> None:
     scratch.mkdir(parents=True)
     extra_smokes = [
         lambda: merge_smoke(spark, src, scratch, replicas),
+        lambda: elt_cycle_smoke(spark, scratch, replicas),
         lambda: skew_window_smoke(spark, scratch, replicas),
         lambda: mor_smoke(spark, src, scratch, replicas),
         lambda: manifest_smoke(spark, scratch, replicas),
