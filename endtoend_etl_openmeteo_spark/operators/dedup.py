@@ -23,6 +23,7 @@ from contextlib import ExitStack, nullcontext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from endtoend_etl_openmeteo_spark import fsio
 from endtoend_etl_openmeteo_spark.session import pinned, release_checkpoint
 
 
@@ -471,8 +472,6 @@ def incremental_neardup(
     ``spark.read.parquet(index_path)`` on it drops the root-level files —
     Spark's partition discovery can't mix leaf files with partition dirs.
     """
-    from endtoend_etl_openmeteo_spark.operators.merge import _path_exists
-
     sigs = (
         cpu_parallelize(new_df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh"))
@@ -506,7 +505,7 @@ def incremental_neardup(
             sibling_paths = _sibling_batch_paths(spark, index_path, batch_id)
             if sibling_paths:
                 old_sigs = spark.read.parquet(*sibling_paths).select("id", "sig")
-        elif _path_exists(spark, index_path):
+        elif fsio.exists(spark, index_path):
             old_sigs = spark.read.parquet(index_path).select("id", "sig")
         if old_sigs is not None:
             touched = new_banded.select("band", "bucket").distinct()
@@ -577,8 +576,6 @@ def incremental_exact_dedup(
     (new_id, match_id, match_is_new); index layout and the batch-stamped
     crash-idempotent overwrite are shared with the MinHash path.
     """
-    from endtoend_etl_openmeteo_spark.operators.merge import _path_exists
-
     fp = cpu_parallelize(new_df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("id"), F.md5(normalized_text(text_col)).alias("fp")
     )
@@ -591,7 +588,7 @@ def incremental_exact_dedup(
             sibling_paths = _sibling_batch_paths(spark, index_path, batch_id)
             if sibling_paths:
                 old_fp = spark.read.parquet(*sibling_paths).select("id", "fp")
-        elif _path_exists(spark, index_path):
+        elif fsio.exists(spark, index_path):
             old_fp = spark.read.parquet(index_path).select("id", "fp")
         if old_fp is not None:
             touched = new_fp.select("fp").distinct()
@@ -669,13 +666,10 @@ def _sibling_batch_paths(spark: SparkSession, index_path: str, batch_id: str) ->
     legacy flat-append layout — an index that started life un-stamped and
     later switched to batch ids must not silently forget its early
     signatures."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    if not fsio.exists(spark, index_path):
         return []
     out = []
-    for status in fs.listStatus(root):
+    for status in fsio.list_status(spark, index_path):
         name = status.getPath().getName()
         if status.isDirectory() and name.startswith("batch=") and name != f"batch={batch_id}":
             out.append(str(status.getPath().toString()))
@@ -718,25 +712,16 @@ def compact_dedup_index(
     SET — which is all the screen's verdicts depend on — never drifts).
     Returns {"batches_merged", "rows_merged"}.
     """
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    if not fsio.exists(spark, index_path):
         return {"batches_merged": 0, "rows_merged": 0}
     batch_dirs = sorted(
         status.getPath().getName()
-        for status in fs.listStatus(root)
+        for status in fsio.list_status(spark, index_path)
         if status.isDirectory() and status.getPath().getName().startswith("batch=")
     )
 
     def newest_file_mtime(dirname: str) -> int:
-        it = fs.listFiles(
-            jvm.org.apache.hadoop.fs.Path(f"{index_path}/{dirname}"), True
-        )
-        newest = -1
-        while it.hasNext():
-            newest = max(newest, it.next().getModificationTime())
-        return newest
+        return fsio.newest_file_mtime(spark, f"{index_path}/{dirname}")
 
     # segments rank OLDEST no matter how their mtime sorts (a fresh
     # segment is newly-written but holds the OLDEST rows); real dirs
@@ -755,7 +740,7 @@ def compact_dedup_index(
     readable = [d for d in doomed if newest_file_mtime(d) != -1]
     if not readable:
         for d in doomed:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{index_path}/{d}"), True)
+            fsio.delete(spark, f"{index_path}/{d}")
         return {"batches_merged": len(doomed), "rows_merged": 0}
     seg_n = 1 + max(
         (int(d.rsplit("_", 1)[-1]) for d in segs),
@@ -772,7 +757,7 @@ def compact_dedup_index(
         files = max(1, rows // rows_per_file)
         merged.coalesce(files).write.mode("overwrite").parquet(seg)
     for d in doomed:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{index_path}/{d}"), True)
+        fsio.delete(spark, f"{index_path}/{d}")
     return {"batches_merged": len(doomed), "rows_merged": int(rows)}
 
 

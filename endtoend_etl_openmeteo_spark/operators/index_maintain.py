@@ -33,11 +33,11 @@ that the commit then clobbers, and the BM25 append's stats-sidecar
 merge is a read-modify-write that a concurrent writer would lose. The
 serialization is ENFORCED, not documented: every writer (append tick or
 compaction tick) takes the index's ``_maintenance.lock`` via
-:func:`index_lease` — an atomic create-fails-if-exists marker, the same
-CAS primitive the versioned format's manifest rename uses
-(operators/versioned.py:14-18) — so the losing writer raises
+:func:`index_lease` — one lease, an atomic create-fails-if-exists marker
+(``fsio.create_new``) — so the losing writer raises
 :class:`LeaseConflictError` immediately and retries, instead of being
-silently clobbered. Readers never take the lease: a reader racing a
+silently clobbered. All file access goes through ``fsio``, the package's
+one Hadoop filesystem layer. Readers never take the lease: a reader racing a
 tick may briefly see a fragmented partition mid-replace — the versioned
 table format (operators/versioned.py) is the transactional story; these
 layouts trade reader snapshots (not writer safety) for zero-manifest
@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from endtoend_etl_openmeteo_spark import fsio
 from endtoend_etl_openmeteo_spark.session import local_df, local_rows, pinned
 
 logger = logging.getLogger(__name__)
@@ -71,174 +72,39 @@ class LeaseConflictError(RuntimeError):
     acquisition time are in the message)."""
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
 def _lease_path(path: str) -> str:
     return f"{path.rstrip('/')}/_maintenance.lock"
 
 
-class LeaseBackend:
-    """The writer-serialization primitive behind :func:`index_lease`,
-    injectable per deployment: ``try_acquire`` must be an ATOMIC
-    create-if-absent in the backend's store (one writer wins, the rest
-    see False). The default :class:`AtomicCreateLease` is correct on
-    filesystems with atomic ``create(overwrite=False)`` (local, HDFS);
-    :class:`RenameCasLease` reuses the versioned format's manifest-CAS
-    primitive (rename refuses an existing destination) for stores where
-    rename-no-replace is the atomic op; object stores with neither need
-    a backend over an external lock service (DynamoDB, ZooKeeper) —
-    subclass and override the three methods.
-
-    ``release_read_retries`` / ``release_read_backoff_s`` bound how long
-    :func:`index_lease` keeps re-reading the lock at release before it
-    concludes the read failures are transient and deletes anyway (it
-    believes it still holds the lock). The defaults (~0.3 s) suit local
-    and HDFS filesystems; object-store deployments whose transient-error
-    windows run longer should raise them on their backend subclass so a
-    flaky read can't delete a successor's lock acquired after a
-    break_lease."""
-
-    #: release-time ownership-read retries before deleting unverified
-    release_read_retries: int = 3
-    #: base backoff between those retries (attempt k sleeps k * base)
-    release_read_backoff_s: float = 0.05
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.fs, self.jvm = _fs(spark, path)
-        self.lock = self.jvm.org.apache.hadoop.fs.Path(_lease_path(path))
-
-    def try_acquire(self, payload: str) -> bool:
-        """Atomically create the lock holding ``payload``. True if WE now
-        hold it; False if another holder exists. Non-conflict failures
-        (permissions, connectivity) must raise, not return False."""
-        raise NotImplementedError
-
-    def read(self) -> str | None:
-        """Current lock payload, or None when the READ ITSELF failed
-        (missing file, transient error) — never conflate the two."""
-        try:
-            stream = self.fs.open(self.lock)
-            try:
-                return bytes(
-                    self.jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                ).decode("utf-8", "replace")
-            finally:
-                stream.close()
-        except Exception:
-            return None
-
-    def delete(self) -> bool:
-        return bool(self.fs.delete(self.lock, False))
+#: Release-time ownership reads retried before the lock is deleted
+#: unverified; attempt k sleeps k * LEASE_RELEASE_READ_BACKOFF_S (~0.3 s
+#: in all, sized for local and HDFS filesystems).
+LEASE_RELEASE_READ_RETRIES = 3
+LEASE_RELEASE_READ_BACKOFF_S = 0.05
 
 
-class AtomicCreateLease(LeaseBackend):
-    """Default backend: ``fs.create(overwrite=False)`` — atomic on local
-    and HDFS filesystems."""
-
-    def try_acquire(self, payload: str) -> bool:
-        try:
-            out = self.fs.create(self.lock, False)  # create-fails-if-exists
-        except Exception as e:
-            # only an existing lock is a CONFLICT; permission/connectivity
-            # failures must surface as themselves. The create's own
-            # already-exists error decides, because the holder may release
-            # the lock before an exists() check could see it.
-            java = getattr(e, "java_exception", None)
-            already = java is not None and java.getClass().getName() == (
-                "org.apache.hadoop.fs.FileAlreadyExistsException"
-            )
-            if not already and not self.fs.exists(self.lock):
-                raise
-            return False
-        try:
-            out.write(payload.encode("utf-8"))
-            out.close()
-        except Exception:
-            # never leave a payload-less lock held by nobody
-            self.fs.delete(self.lock, False)
-            raise
-        return True
-
-
-class RenameCasLease(LeaseBackend):
-    """The versioned format's commit primitive (operators/versioned.py:
-    rename refuses to replace an existing destination) applied to the
-    lease: the payload is written COMPLETE to a temp name, then renamed
-    onto the lock path — one rename wins. For filesystems whose
-    create-no-overwrite is a racy existence check but whose rename is
-    atomic-no-replace; the payload is never observable half-written."""
-
-    def try_acquire(self, payload: str) -> bool:
-        tmp = self.jvm.org.apache.hadoop.fs.Path(
-            f"{self.lock.getParent()}/.lock_tmp_{uuid.uuid4().hex}"
-        )
-        out = self.fs.create(tmp, True)
-        try:
-            try:
-                out.write(payload.encode("utf-8"))
-            finally:
-                out.close()
-        except Exception:
-            # never leave temp litter behind a failed payload write
-            self.fs.delete(tmp, False)
-            raise
-        try:
-            won = bool(self.fs.rename(tmp, self.lock))
-        except Exception:
-            # some FileSystems raise instead of returning false on an
-            # existing destination — but only that case is a CONFLICT;
-            # permission/connectivity failures must surface as themselves
-            self.fs.delete(tmp, False)
-            if not self.fs.exists(self.lock):
-                raise
-            won = False
-        if not won:
-            self.fs.delete(tmp, False)
-        return won
-
-
-#: Backend class used when ``index_lease``/``break_lease`` receive no
-#: explicit backend. A deployment on a rename-CAS store sets this once at
-#: startup (or scopes it with :func:`lease_backend`); the lifecycle
-#: operators (append/delete/vacuum/compact) all route through it, so one
-#: switch covers every maintenance path.
-DEFAULT_LEASE_BACKEND: type = AtomicCreateLease
-
-
-@contextmanager
-def lease_backend(cls: type):
-    """Scoped override of the default lease backend CLASS — lets a test
-    or deployment drive the full maintenance lifecycle (streamed ingest,
-    consolidation, delete, vacuum) under e.g. :class:`RenameCasLease`
-    without threading a backend through every operator signature."""
-    global DEFAULT_LEASE_BACKEND
-    prev = DEFAULT_LEASE_BACKEND
-    DEFAULT_LEASE_BACKEND = cls
+def _lock_payload(spark: SparkSession, lock: str) -> str | None:
+    """The lock's payload, or None when the READ ITSELF failed (missing
+    file, transient error) — never conflated with a mismatch."""
     try:
-        yield
-    finally:
-        DEFAULT_LEASE_BACKEND = prev
+        return fsio.read_bytes(spark, lock).decode("utf-8", "replace")
+    except Exception:
+        return None
 
 
 @contextmanager
-def index_lease(
-    spark: SparkSession,
-    path: str,
-    owner: str | None = None,
-    backend: LeaseBackend | None = None,
-):
+def index_lease(spark: SparkSession, path: str, owner: str | None = None):
     """Exclusive writer lease on a stored-index root: atomically create
-    ``_maintenance.lock`` (``fs.create(overwrite=False)`` — one writer
-    wins, the loser gets :class:`LeaseConflictError`), yield, delete on
-    exit. Underscore-prefixed, so Spark's data-file discovery never sees
-    it. The lease guards WRITERS against each other (append vs append on
-    the shared stats sidecar, append vs compaction's partition
-    overwrite); readers don't take it.
+    ``_maintenance.lock`` (``fsio.create_new``, a ``create(overwrite=
+    False)`` — one writer wins, the loser gets :class:`LeaseConflictError`),
+    yield, delete on exit. Underscore-prefixed, so Spark's data-file
+    discovery never sees it. The lease guards WRITERS against each other
+    (append vs append on the shared stats sidecar, append vs compaction's
+    partition overwrite); readers don't take it.
+
+    The create is atomic on the local filesystem and HDFS. On an object
+    store without atomic create-if-absent the lease does not exclude; the
+    versioned format's manifest commit is the route for those stores.
 
     No auto-expiry: a crashed holder leaves the marker, and the operator
     decision to break it is :func:`break_lease` — silent TTL expiry could
@@ -247,28 +113,19 @@ def index_lease(
     payload is no longer ours (an operator broke the lease and a new
     writer acquired), exit leaves the new holder's lock alone instead of
     deleting it out from under them. A read that keeps FAILING at exit is
-    not a mismatch: after bounded retries the release deletes anyway (we
-    believe we still hold the lock — stranding our own marker would block
-    every future writer until a manual break_lease). The read-then-delete
-    pair is not atomic, so a break_lease + re-acquire landing exactly
-    between our ownership read and the delete can still lose its lock —
-    break_lease is an operator action against a CONFIRMED-dead holder, so
-    a live holder racing it is outside the contract; the versioned
-    format's manifest CAS is the fully-atomic story.
-
-    Atomicity contract lives in the BACKEND (injectable per deployment):
-    the default :class:`AtomicCreateLease` relies on atomic
-    create-no-overwrite (local, HDFS); :class:`RenameCasLease` uses the
-    versioned format's rename-CAS for stores where that is the atomic
-    op; S3-style object stores with neither need a backend over an
-    external lock service — the lease protocol (payload ownership,
-    conflict error, checked release, break_lease) is backend-agnostic.
+    not a mismatch: after LEASE_RELEASE_READ_RETRIES the release deletes
+    anyway (we believe we still hold the lock — stranding our own marker
+    would block every future writer until a manual break_lease). The
+    read-then-delete pair is not atomic, so a break_lease + re-acquire
+    landing exactly between our ownership read and the delete can still
+    lose its lock — break_lease is an operator action against a
+    CONFIRMED-dead holder, so a live holder racing it is outside the
+    contract.
     """
-    be = backend if backend is not None else DEFAULT_LEASE_BACKEND(spark, path)
+    lock = _lease_path(path)
     payload = f"{owner or 'writer'}:{uuid.uuid4().hex}:{int(time.time())}"
-
-    if not be.try_acquire(payload):
-        held = be.read() or ""
+    if not fsio.create_new(spark, lock, payload.encode("utf-8")):
+        held = _lock_payload(spark, lock) or ""
         raise LeaseConflictError(
             f"index {path} is being maintained by another writer"
             f"{f' ({held})' if held else ''} — retry after it releases, or "
@@ -277,43 +134,31 @@ def index_lease(
     try:
         yield
     finally:
-        # ownership check: delete only OUR lock — after a break_lease +
-        # re-acquire, the marker belongs to the new holder. A read that
-        # keeps FAILING is retried, then treated as "still ours": the
-        # alternative (skip the delete) strands our own marker on any
-        # transient FS error at exit and blocks every future writer.
         held = None
-        for attempt in range(max(1, be.release_read_retries)):
-            held = be.read()
+        for attempt in range(LEASE_RELEASE_READ_RETRIES):
+            held = _lock_payload(spark, lock)
             if held is not None:
                 break
-            time.sleep(be.release_read_backoff_s * (attempt + 1))
+            time.sleep(LEASE_RELEASE_READ_BACKOFF_S * (attempt + 1))
         if held is None:
-            # deleting on FAILED reads, not confirmed ownership — correct
-            # for a transient local hiccup, but worth a loud trace: if the
-            # reads failed because the store was flaky AND an operator
-            # break_lease + re-acquire landed meanwhile, this delete just
-            # removed the successor's lock. Raise the backend's
-            # release_read_retries/backoff on deployments where that
-            # window is plausible.
+            # deleting on FAILED reads, not confirmed ownership: if the
+            # store was flaky AND an operator break_lease + re-acquire
+            # landed meanwhile, this removes the successor's lock
             logger.warning(
                 "index lease release at %s: ownership read failed %d times; "
                 "deleting the lock unverified (we believe we still hold it)",
-                be.lock,
-                max(1, be.release_read_retries),
+                lock,
+                LEASE_RELEASE_READ_RETRIES,
             )
-            be.delete()
+            fsio.delete(spark, lock, False)
         elif held == payload:
-            be.delete()
+            fsio.delete(spark, lock, False)
 
 
-def break_lease(
-    spark: SparkSession, path: str, backend: LeaseBackend | None = None
-) -> bool:
+def break_lease(spark: SparkSession, path: str) -> bool:
     """Forcibly remove a dead holder's lease marker (operator action after
     confirming the holder crashed). Returns True if a marker was removed."""
-    be = backend if backend is not None else DEFAULT_LEASE_BACKEND(spark, path)
-    return be.delete()
+    return fsio.delete(spark, _lease_path(path), False)
 
 
 def _is_data_file(name: str) -> bool:
@@ -332,17 +177,15 @@ def partition_file_counts(
     values, so matching/``isin`` must happen on the decoded form. The
     Hive NULL sentinel ``__HIVE_DEFAULT_PARTITION__`` is kept verbatim
     (it is not an escape)."""
-    fs, jvm = _fs(spark, path)
-    root = jvm.org.apache.hadoop.fs.Path(path)
     prefix = f"{part_col}="
     counts: dict[str, int] = {}
-    for status in fs.listStatus(root):
+    for status in fsio.list_status(spark, path):
         name = status.getPath().getName()
         if not (status.isDirectory() and name.startswith(prefix)):
             continue
         n = sum(
             1
-            for f in fs.listStatus(status.getPath())
+            for f in fsio.list_status(spark, status.getPath())
             if _is_data_file(f.getPath().getName())
         )
         raw = name[len(prefix):]
@@ -451,15 +294,15 @@ def compact_partitions(
     else:
         shaped = frag.repartition(F.col(part_col))
 
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # dynamic mode replaces ONLY the partitions present in `shaped` —
-        # exactly the fragmented ones; untouched directories keep their
-        # original files.
-        shaped.write.mode("overwrite").partitionBy(part_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    # dynamic mode replaces ONLY the partitions present in `shaped` —
+    # exactly the fragmented ones; untouched directories keep their
+    # original files. Pinned on the writer, whatever the session's mode.
+    (
+        shaped.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(path)
+    )
 
     after = partition_file_counts(spark, path, part_col)
     return {
@@ -494,18 +337,11 @@ def _read_tombstones(spark, path: str, id_col: str = "id") -> "DataFrame | None"
     back-fill). An id may repeat across parts (a BM25 doc's postings span
     one bucket per term); consumers joining on ``id_col`` alone must
     de-dup first (anti/semi joins don't care)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(_tombstone_path(path))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    it = fs.listFiles(p, False)
-    has_files = False
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            has_files = True
-            break
-    if not has_files:
+    tomb = _tombstone_path(path)
+    if not fsio.exists(spark, tomb) or not any(
+        s.isFile() and s.getPath().getName().endswith(".parquet")
+        for s in fsio.list_status(spark, tomb)
+    ):
         return None
     return (
         spark.read.schema("id long, part string")
@@ -633,14 +469,12 @@ def _consolidate_tombstones(
     metadata — the union file lands BEFORE the old files are removed, so
     a concurrent listing sees a superset (duplicates are erased by
     ``_read_tombstones``'s distinct), never a gap."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(_tombstone_path(path))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    tomb = _tombstone_path(path)
+    if not fsio.exists(spark, tomb):
         return False
     olds = [
         s.getPath()
-        for s in fs.listStatus(p)
+        for s in fsio.list_status(spark, tomb)
         if s.isFile() and s.getPath().getName().endswith(".parquet")
     ]
     if len(olds) <= max_files:
@@ -668,7 +502,7 @@ def _consolidate_tombstones(
             _tombstone_path(path)
         )
     for old in olds:
-        fs.delete(old, False)
+        fsio.delete(spark, old, False)
     return True
 
 
@@ -700,9 +534,6 @@ def vacuum_index_tombstones(
     if lease:
         with index_lease(spark, path, owner="vacuum_tombstones"):
             return vacuum_index_tombstones(spark, path, id_col, lease=False)
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     tomb = _read_tombstones(spark, path, id_col)
     if tomb is None:
         return {"tombstones": 0, "rows_removed": 0, "partitions_rewritten": 0}
@@ -715,7 +546,7 @@ def vacuum_index_tombstones(
     tomb_ids = local_df(spark, [(i,) for i in sorted(tomb_id_set)], f"{id_col} long")
     top_parts = {
         s.getPath().getName().split("=", 1)[0]
-        for s in fs.listStatus(root)
+        for s in fsio.list_status(spark, path)
         if s.isDirectory() and "=" in s.getPath().getName()
     }
     if "_epoch" in top_parts:
@@ -824,7 +655,7 @@ def vacuum_index_tombstones(
     }  # bounded by partition count, metadata-sized
     rows_removed = sum(r["__nd"] for r in hit_rows)
     if not affected:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(_tombstone_path(path)), True)
+        fsio.delete(spark, _tombstone_path(path))
         return {
             "tombstones": int(n_tomb),
             "rows_removed": 0,
@@ -839,32 +670,28 @@ def vacuum_index_tombstones(
     alive = {
         tuple(r[c] for c in part_cols) for r in hit_rows if r["__n"] > r["__nd"]
     }
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.repartition(*[F.col(c) for c in part_cols])
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    (
+        survivors.repartition(*[F.col(c) for c in part_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
     # a partition whose EVERY row was tombstoned emits no survivor rows,
     # so the dynamic overwrite never touches its directory — delete it
     # explicitly or the old files resurface once the sidecar clears
     for t in affected - alive:
         sub = "/".join(f"{c}={v}" for c, v in zip(part_cols, t))
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}"), True)
+        fsio.delete(spark, f"{path}/{sub}")
     if len(part_cols) == 2:
         # two-level layout: a first-level dir (epoch) left childless by
         # the leaf deletions is clutter the consolidator would otherwise
         # carry as a file-less oldest-ranked dir — remove it now
         for top in {t[0] for t in affected - alive}:
-            d = jvm.org.apache.hadoop.fs.Path(f"{path}/{part_cols[0]}={top}")
-            if fs.exists(d) and fs.listStatus(d).__len__() == 0:
-                fs.delete(d, False)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(_tombstone_path(path)), True)
+            d = f"{path}/{part_cols[0]}={top}"
+            if fsio.exists(spark, d) and len(fsio.list_status(spark, d)) == 0:
+                fsio.delete(spark, d, False)
+    fsio.delete(spark, _tombstone_path(path))
     return {
         "tombstones": int(n_tomb),
         "rows_removed": int(rows_removed),

@@ -19,6 +19,8 @@ from contextlib import nullcontext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from endtoend_etl_openmeteo_spark import fsio
+
 
 def _bucket_prefix_offsets(keyed: "DataFrame", agg) -> "Column | None":
     """Driver-side prefix offsets over per-``__b``-bucket totals, returned
@@ -277,9 +279,7 @@ def compact(
     """
     import math
 
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    total_bytes = fs.getContentSummary(jvm_path).getLength()
+    total_bytes = fsio.size(spark, path)
     n = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
 
     df = spark.read.parquet(path)
@@ -295,13 +295,12 @@ def compact(
     # (and a rename onto the surviving directory either fails or, on the
     # local FS, NESTS tmp under it, doubling the data) while compact()
     # reports success
-    tmp_path = spark._jvm.org.apache.hadoop.fs.Path(tmp)
-    if not fs.delete(jvm_path, True):
+    if not fsio.delete(spark, path):
         raise IOError(
             f"compact: could not remove {path} for the swap — the directory "
             f"keeps its old files; the compacted copy is intact at {tmp}"
         )
-    if not fs.rename(tmp_path, jvm_path):
+    if not fsio.rename(spark, tmp, path):
         raise IOError(
             f"compact: rename {tmp} -> {path} failed after the old directory "
             f"was removed — move the compacted copy in manually ({path} is "

@@ -42,6 +42,8 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from endtoend_etl_openmeteo_spark import fsio
+
 _MANIFEST_DIR = "_manifests"
 
 #: Entries per spilled manifest file. Small enough that a dirty rewrite
@@ -63,7 +65,7 @@ def _is_local(spark: SparkSession, table: str) -> bool:
         return True
     if scheme:
         return False
-    return _hadoop(spark, table)[0].getScheme() == "file"
+    return fsio.scheme(spark, table) == "file"
 
 
 def _local_root(table: str) -> str:
@@ -279,24 +281,14 @@ def _write_manifest_file(
             ENTRIES_DDL,
         ).coalesce(1).write.mode("overwrite").parquet(f"{table}/{rel}__dir")
         # single-file rename so the ref points at one immutable file
-        fs, jvm = _hadoop(spark, table)
-        src_dir = jvm.org.apache.hadoop.fs.Path(f"{table}/{rel}__dir")
+        src_dir = f"{table}/{rel}__dir"
         part = next(
             s.getPath()
-            for s in fs.listStatus(src_dir)
+            for s in fsio.list_status(spark, src_dir)
             if s.getPath().getName().endswith(".parquet")
         )
-        fs.rename(part, jvm.org.apache.hadoop.fs.Path(f"{table}/{rel}"))
-        fs.delete(src_dir, True)
-
-
-def _hadoop(spark: SparkSession, path: str):
-    # versioned._fs is the canonical filesystem resolver; imported lazily
-    # (versioned imports this module at call sites — a top-level import
-    # here would cycle)
-    from endtoend_etl_openmeteo_spark.operators.versioned import _fs
-
-    return _fs(spark, path)
+        fsio.rename(spark, part, f"{table}/{rel}")
+        fsio.delete(spark, src_dir)
 
 
 def load_ref_entries(
@@ -426,7 +418,3 @@ def prune_entries_spark(
     return sorted(
         (json.loads(r["entry"]) for r in rows), key=lambda e: e["path"]
     )
-
-
-def ref_paths(refs: list[dict]) -> list[str]:
-    return [r["ref"] for r in refs]

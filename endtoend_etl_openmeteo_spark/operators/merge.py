@@ -41,6 +41,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from endtoend_etl_openmeteo_spark import fsio
+
 
 def dedup_last_write_wins(
     df: DataFrame, keys: list[str], order_col: str,
@@ -61,24 +63,6 @@ def dedup_last_write_wins(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def _fs(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path``."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Quiet existence check through Hadoop's FileSystem (a speculative
-    spark.read would log a full FileNotFoundException stack on first run)."""
-    fs, hpath = _fs(spark, path)
-    return bool(fs.exists(hpath))
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    fs, hpath = _fs(spark, path)
-    fs.delete(hpath, True)
 
 
 def leaf_path(spark: SparkSession, partition_cols: list[str], row) -> str:
@@ -112,26 +96,24 @@ def read_partitions(
     lists the table's other partitions (above Spark's
     ``parallelPartitionDiscovery.threshold`` of 32 directories, a listing
     of the whole table runs a Spark job of its own)."""
-    fs, _ = _fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
     root = path.rstrip("/")
     paths = [f"{root}/{rel}" if rel else root for rel in sorted(leaves)]
-    existing = [p for p in paths if fs.exists(Path(p))]
+    existing = [p for p in paths if fsio.exists(spark, p)]
     if not existing:
         return None
     return spark.read.schema(schema).option("basePath", root).parquet(*existing)
 
 
-def _leaf_partitions(fs, root, depth: int) -> list[tuple[str, object]]:
-    """(relative path like ``a=1/b=2``, Hadoop Path) of each partition
-    directory ``depth`` levels under ``root``; ``[("", root)]`` at depth 0.
+def _leaf_partitions(spark, root: str, depth: int) -> list[tuple[str, object]]:
+    """(relative path like ``a=1/b=2``, path) of each partition directory
+    ``depth`` levels under ``root``; ``[("", root)]`` at depth 0.
     Hidden names (``_SUCCESS``, ``.crc`` files) are skipped, as readers
     skip them."""
     level = [("", root)]
     for _ in range(depth):
         children = []
         for rel, path in level:
-            for st in fs.listStatus(path):
+            for st in fsio.list_status(spark, path):
                 name = st.getPath().getName()
                 if st.isDirectory() and not name.startswith(("_", ".")):
                     children.append((f"{rel}/{name}" if rel else name, st.getPath()))
@@ -151,9 +133,7 @@ def _commit_staged(spark: SparkSession, staged: str, old: str, target: str,
     into an EXISTING directory nests the source inside it instead of
     replacing it, so the target leaf is always moved away before the new
     one is renamed in. A ``False`` rename raises :class:`OSError`."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    fs, staged_root = _fs(spark, staged)
-    leaves = _leaf_partitions(fs, staged_root, depth)
+    leaves = _leaf_partitions(spark, staged, depth)
     stray = sorted(rel for rel, _ in leaves if rel not in read_back)
     if stray:
         raise ValueError(
@@ -161,17 +141,18 @@ def _commit_staged(spark: SparkSession, staged: str, old: str, target: str,
             f"{stray[:5]}; batch_parts must name every partition of the batch"
         )
 
-    def sub(root: str, rel: str):
-        return Path(f"{root}/{rel}" if rel else root)
+    def sub(root: str, rel: str) -> str:
+        root = root.rstrip("/")
+        return f"{root}/{rel}" if rel else root
 
-    def rename(src, dst) -> None:
-        fs.mkdirs(dst.getParent())
-        if not fs.rename(src, dst):
+    def rename(src, dst: str) -> None:
+        fsio.mkdirs(spark, dst.rsplit("/", 1)[0])
+        if not fsio.rename(spark, src, dst):
             raise OSError(f"rename {src} -> {dst} failed")
 
     for rel, src in leaves:
         dst = sub(target, rel)
-        if fs.exists(dst):
+        if fsio.exists(spark, dst):
             rename(dst, sub(old, rel))
         rename(src, dst)
 
@@ -218,7 +199,7 @@ def merge_upsert(
     """
     partition_cols = partition_cols or []
 
-    if not _path_exists(spark, target_path):
+    if not fsio.exists(spark, target_path):
         writer = dedup_last_write_wins(new, keys, order_col).write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
@@ -256,7 +237,7 @@ def merge_upsert(
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(staged)
     except BaseException:
-        _delete_path(spark, staging)
+        fsio.delete(spark, staging)
         raise
     try:
         _commit_staged(
@@ -264,14 +245,14 @@ def merge_upsert(
             read_back,
         )
     except ValueError:
-        _delete_path(spark, staging)  # raised before the first rename
+        fsio.delete(spark, staging)  # raised before the first rename
         raise
     except Exception as e:
         raise RuntimeError(
             f"merge into {target_path} failed part-way through its commit; "
             f"uncommitted and replaced partitions are kept in {staging}"
         ) from e
-    _delete_path(spark, staging)
+    fsio.delete(spark, staging)
 
 
 def agg_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:

@@ -28,6 +28,12 @@ Scale shape:
   (N, avgdl) ride in a ``_stats.json`` sidecar (underscore-prefixed:
   invisible to Spark's data-file discovery), so serving never rescans
   the corpus for them.
+
+Writers (build, append, delete, compaction) hold the index's one
+maintenance lease (``index_maintain.index_lease``). The sidecars are read
+and written through ``fsio``, the package's Hadoop filesystem layer;
+``_stats.json`` is committed temp-then-rename, and an
+``_append_pending.json`` marker brackets each append and delete.
 """
 
 from __future__ import annotations
@@ -37,6 +43,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from endtoend_etl_openmeteo_spark import fsio
 from endtoend_etl_openmeteo_spark.operators.dedup import (
     cpu_parallelize,
     normalized_text,
@@ -159,21 +166,16 @@ def _query_term_buckets(spark, terms: Sequence[str], n_buckets: int) -> list[int
     return sorted({int(row[f"b{i}"]) for i in range(len(terms))})
 
 
-def _stats_path(spark, index_path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_stats.json")
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+def _stats_path(index_path: str) -> str:
+    return f"{index_path}/_stats.json"
 
 
-def _pending_path(spark, index_path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_append_pending.json")
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+def _pending_path(index_path: str) -> str:
+    return f"{index_path}/_append_pending.json"
 
 
 def _require_no_pending(spark, index_path: str) -> None:
-    pend, pfs = _pending_path(spark, index_path)
-    if pfs.exists(pend):
+    if fsio.exists(spark, _pending_path(index_path)):
         raise RuntimeError(
             f"index {index_path} has a leftover _append_pending marker — a "
             "previous append or delete crashed between its data write and "
@@ -195,23 +197,16 @@ def _write_stats(spark, index_path: str, payload: dict) -> None:
     import json as _json
     import uuid as _uuid
 
-    p, fs = _stats_path(spark, index_path)
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/._stats_tmp_{_uuid.uuid4().hex}"
-    )
-    out = fs.create(tmp, True)
+    p = _stats_path(index_path)
+    tmp = f"{index_path}/._stats_tmp_{_uuid.uuid4().hex}"
     try:
-        try:
-            out.write(_json.dumps(payload).encode("utf-8"))
-        finally:
-            out.close()
+        fsio.write_bytes(spark, tmp, _json.dumps(payload).encode("utf-8"))
     except Exception:
-        fs.delete(tmp, False)
+        fsio.delete(spark, tmp, False)
         raise
-    fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
+    fsio.delete(spark, p, False)
+    if not fsio.rename(spark, tmp, p):
+        fsio.delete(spark, tmp, False)
         raise IOError(f"could not commit stats sidecar for {index_path}")
 
 
@@ -255,13 +250,10 @@ def write_inverted_index(
             "bkt", _term_bucket(F.col("term"), n_buckets)
         )
         # clear prior layout under the lease (keep the lock marker itself)
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(index_path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(root):
-            for status in fs.listStatus(root):
+        if fsio.exists(spark, index_path):
+            for status in fsio.list_status(spark, index_path):
                 if status.getPath().getName() != "_maintenance.lock":
-                    fs.delete(status.getPath(), True)
+                    fsio.delete(spark, status.getPath())
         idx.repartition(F.col("bkt")).write.partitionBy("bkt").mode(
             "append"
         ).parquet(index_path)
@@ -380,7 +372,7 @@ def append_inverted_index(
     # anti-join would hide its new postings until the next vacuum —
     # a silent serving gap (TombstonedIdError names the offenders)
     require_no_tombstoned_ids(docs.select(id_col), index_path, id_col=id_col)
-    pend, pfs = _pending_path(spark, index_path)
+    pend = _pending_path(index_path)
     stats = read_index_stats(spark, index_path)
     if "total_tokens" not in stats:
         raise ValueError(
@@ -391,13 +383,9 @@ def append_inverted_index(
     idx = inverted_index(docs, id_col, text_col).withColumn(
         "bkt", _term_bucket(F.col("term"), n_buckets)
     )
-    marker = pfs.create(pend, True)
-    try:
-        # existence is the contract (writers refuse / readers warn over a
-        # leftover marker); the payload is diagnostic only
-        marker.write(_json.dumps({"op": "append"}).encode("utf-8"))
-    finally:
-        marker.close()
+    # existence is the contract (writers refuse / readers warn over a
+    # leftover marker); the payload is diagnostic only
+    fsio.write_bytes(spark, pend, _json.dumps({"op": "append"}).encode("utf-8"))
     # batch-stats aggregate ∥ postings write: two independent scans of
     # the same batch (the write_inverted_index overlap), both inside the
     # marker bracket so the crash window is unchanged
@@ -434,7 +422,7 @@ def append_inverted_index(
             "n_text_docs": n_text_docs,
         },
     )
-    pfs.delete(pend, False)  # stats committed — the append is whole
+    fsio.delete(spark, pend, False)  # stats committed — the append is whole
     return n_docs, avgdl
 
 
@@ -476,7 +464,7 @@ def delete_from_inverted_index(
                 docs, index_path, id_col, text_col, lease=False
             )
     _require_no_pending(spark, index_path)
-    pend, pfs = _pending_path(spark, index_path)
+    pend = _pending_path(index_path)
     stats = read_index_stats(spark, index_path)
     if "n_text_docs" not in stats:
         raise ValueError(
@@ -485,11 +473,7 @@ def delete_from_inverted_index(
         )
     import json as _json
 
-    marker = pfs.create(pend, True)
-    try:
-        marker.write(_json.dumps({"op": "delete"}).encode())
-    finally:
-        marker.close()
+    fsio.write_bytes(spark, pend, _json.dumps({"op": "delete"}).encode())
     # batch-stats aggregate ∥ the hinted-tombstone delete: independent
     # scans of the same batch (the write_inverted_index overlap), both
     # inside the marker bracket
@@ -519,7 +503,7 @@ def delete_from_inverted_index(
             "n_text_docs": n_text_docs,
         },
     )
-    pfs.delete(pend, False)  # stats committed — the delete is whole
+    fsio.delete(spark, pend, False)  # stats committed — the delete is whole
     return n_docs, avgdl
 
 
@@ -584,28 +568,16 @@ def read_index_stats(spark, index_path: str) -> dict:
     import logging as _logging
     import time as _time
 
-    p, fs = _stats_path(spark, index_path)
     last: Exception | None = None
     for attempt in range(3):
         try:
-            stream = fs.open(p)
-            try:
-                data = bytes(
-                    spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                )
-            finally:
-                stream.close()
-            stats = _json.loads(data.decode("utf-8"))
-            pend, pfs = _pending_path(spark, index_path)
-            if pfs.exists(pend):
+            stats = _json.loads(fsio.read_bytes(spark, _stats_path(index_path)))
+            if fsio.exists(spark, _pending_path(index_path)):
                 from endtoend_etl_openmeteo_spark.operators.index_maintain import (
                     _lease_path,
                 )
 
-                lock = spark._jvm.org.apache.hadoop.fs.Path(
-                    _lease_path(index_path)
-                )
-                if not pfs.exists(lock):
+                if not fsio.exists(spark, _lease_path(index_path)):
                     stats["append_pending"] = True
                     _logging.getLogger(__name__).warning(
                         "index %s has a leftover _append_pending marker "

@@ -13,8 +13,12 @@ matching buckets are scored (recall < 1, tunable via bands).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from endtoend_etl_openmeteo_spark import fsio
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -931,12 +935,20 @@ def ivfpq_topk_rerank(
     return _exact_refine(cand, corpus, queries, id_col, vec_col, k)
 
 
-def _quantizer_path(spark, index_path: str):
-    """(Path, FileSystem) for the stored-IVF quantizer sidecar — Hadoop FS
-    so the index works on any scheme the data does (file:/hdfs:/s3:)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path.rstrip('/')}/_quantizer.json")
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+def _quantizer_path(index_path: str) -> str:
+    return f"{index_path.rstrip('/')}/_quantizer.json"
+
+
+def _write_quantizer(spark, index_path: str, payload: dict) -> None:
+    """Write the stored-IVF quantizer sidecar through the Hadoop FS (not
+    open()), so it lives wherever the vector data does (file:/hdfs:/s3:),
+    same as the BM25 index's _stats.json."""
+    payload_bytes = json.dumps(payload).encode("utf-8")
+    fsio.write_bytes(spark, _quantizer_path(index_path), payload_bytes)
+
+
+def _read_quantizer(spark, index_path: str) -> dict:
+    return json.loads(fsio.read_bytes(spark, _quantizer_path(index_path)))
 
 
 def write_ivf_index(
@@ -960,8 +972,6 @@ def write_ivf_index(
     (one per cell, FAISS nlist), each internally splittable, so the
     small-files failure mode of per-term/per-key layouts doesn't apply.
     """
-    import json
-
     spark = cells.sparkSession
     (
         cells.select(
@@ -982,12 +992,7 @@ def write_ivf_index(
     cents = sorted(
         (int(r[0]), [float(x) for x in r[1]]) for r in centroids.collect()
     )
-    # Hadoop FS, not open(): the sidecar must live wherever the vector data
-    # does (file:/hdfs:/s3:), same as the BM25 index's _stats.json.
-    p, fs = _quantizer_path(spark, path)
-    out = fs.create(p, True)
-    out.write(json.dumps({"centroids": cents}).encode("utf-8"))
-    out.close()
+    _write_quantizer(spark, path, {"centroids": cents})
 
 
 def stored_ivf_topk(
@@ -1011,17 +1016,9 @@ def stored_ivf_topk(
     Scoring then matches ivf_topk row for row: same candidate set, same
     rounding, same (cos_sim desc, n_id) tie-break.
     """
-    import json
-
     from pyspark.sql import Window
 
-    p, fs = _quantizer_path(spark, path)
-    stream = fs.open(p)
-    try:
-        raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    cents = json.loads(raw.decode("utf-8"))["centroids"]
+    cents = _read_quantizer(spark, path)["centroids"]
     cell_t = "bigint"
     cents_row = spark.createDataFrame(
         [([(int(c), list(v)) for c, v in cents],)],
@@ -1182,15 +1179,7 @@ def read_ivf_quantizer(spark, path: str) -> DataFrame:
     """The stored index's trained quantizer as a (cluster, centroid)
     DataFrame — read back through the same Hadoop-FS sidecar the writer
     used, so append/serve agree on the centroids byte-for-byte."""
-    import json
-
-    p, fs = _quantizer_path(spark, path)
-    stream = fs.open(p)
-    try:
-        raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    cents = json.loads(raw.decode("utf-8"))["centroids"]
+    cents = _read_quantizer(spark, path)["centroids"]
     return spark.createDataFrame(
         [(int(c), [float(x) for x in v]) for c, v in cents],
         "cluster int, centroid array<double>",
@@ -1316,8 +1305,6 @@ def _write_ivfpq_sidecar(
     so the format can never fork between writers. ``quantizer_locals`` =
     driver-resident (cents, books) — the _cached_model_rows path — skips
     the two frame collects."""
-    import json
-
     if quantizer_locals is not None:
         raw_cents, raw_books = quantizer_locals
         cents = sorted(
@@ -1332,47 +1319,19 @@ def _write_ivfpq_sidecar(
             for r in coarse.collect()
         )
         books = _codebooks_local(codebooks)
-    p, fs = _quantizer_path(spark, path)
-    out = fs.create(p, True)
-    out.write(json.dumps({"centroids": cents, "codebooks": books}).encode("utf-8"))
-    out.close()
+    _write_quantizer(spark, path, {"centroids": cents, "codebooks": books})
 
 
 def _ivfpq_quantizer_payload(spark, path: str) -> tuple[list, list]:
     """(centroid pairs, codebook blocks) straight from the sidecar JSON —
     the driver-side shape _pq_assign_op consumes, no Spark frames."""
-    import json
-
-    p, fs = _quantizer_path(spark, path)
-    stream = fs.open(p)
-    try:
-        raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    payload = json.loads(raw.decode("utf-8"))
+    payload = _read_quantizer(spark, path)
     cents = [(int(c), [float(x) for x in v]) for c, v in payload["centroids"]]
     books = [
         [[float(x) for x in cent] for cent in block]
         for block in payload["codebooks"]
     ]
     return cents, books
-
-
-def read_ivfpq_quantizer(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """The stored IVF-PQ index's two quantizer levels as (coarse,
-    codebooks) DataFrames — byte-identical to what the writer trained, so
-    append/serve re-encode and probe exactly like the build did."""
-    cents, books = _ivfpq_quantizer_payload(spark, path)
-    coarse = spark.createDataFrame(cents, "cell int, centroid array<double>")
-    codebooks = spark.createDataFrame(
-        [
-            (b, c, cent)
-            for b, block in enumerate(books)
-            for c, cent in enumerate(block)
-        ],
-        "block int, cluster int, centroid array<double>",
-    )
-    return coarse, codebooks
 
 
 def _encode_with_payload(
@@ -1406,21 +1365,13 @@ def ivf_cells_for_vectors(
     full-scanning the index (index_maintain.vacuum_index_tombstones).
     ``cell`` is the stable column for every layout — stream consolidation
     rewrites epochs, never cells."""
-    import json
-
     from endtoend_etl_openmeteo_spark.operators.clusters import kmeans_assign
 
     # one sidecar read, then branch on its contents (the PQ branch needs
     # the raw payload shape _encode_with_payload consumes; the flat
     # branch builds its centroid frame from the same parse — never a
     # second filesystem read of _quantizer.json)
-    p, fs = _quantizer_path(spark, path)
-    stream = fs.open(p)
-    try:
-        raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    payload = json.loads(raw.decode("utf-8"))
+    payload = _read_quantizer(spark, path)
     cents = [(int(c), [float(x) for x in v]) for c, v in payload["centroids"]]
     if "codebooks" in payload:
         books = [
@@ -1737,28 +1688,20 @@ def compact_streamed_ivfpq_index(
     from endtoend_etl_openmeteo_spark.operators.index_maintain import index_lease
     from endtoend_etl_openmeteo_spark.session import pinned
 
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
+    if not fsio.exists(spark, path):
         return {"epochs_merged": 0, "rows_merged": 0}
-
-    def newest_file_mtime(dirname: str) -> int:
-        it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(f"{path}/{dirname}"), True)
-        newest = -1
-        while it.hasNext():
-            newest = max(newest, it.next().getModificationTime())
-        return newest
 
     with index_lease(spark, path, owner="compact_streamed_ivfpq"):
         epoch_dirs = sorted(
             s.getPath().getName()
-            for s in fs.listStatus(root)
+            for s in fsio.list_status(spark, path)
             if s.isDirectory() and s.getPath().getName().startswith("_epoch=")
         )
         segs = [d for d in epoch_dirs if d.startswith("_epoch=__seg_")]
         base = [d for d in epoch_dirs if d == "_epoch=__base__"]
-        mtimes = {d: newest_file_mtime(d) for d in epoch_dirs}  # one walk each
+        mtimes = {  # one walk each
+            d: fsio.newest_file_mtime(spark, f"{path}/{d}") for d in epoch_dirs
+        }
         real = sorted(
             (d for d in epoch_dirs if d not in segs and d not in base),
             key=lambda d: (mtimes[d], d),
@@ -1773,7 +1716,7 @@ def compact_streamed_ivfpq_index(
         readable = [d for d in doomed if mtimes[d] != -1]
         if not readable:
             for d in doomed:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}"), True)
+                fsio.delete(spark, f"{path}/{d}")
             return {"epochs_merged": len(doomed), "rows_merged": 0}
         seg_n = 1 + max(
             (int(d.rsplit("_", 1)[-1]) for d in segs), default=-1
@@ -1798,5 +1741,5 @@ def compact_streamed_ivfpq_index(
                 .parquet(seg)
             )
         for d in doomed:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}"), True)
+            fsio.delete(spark, f"{path}/{d}")
         return {"epochs_merged": len(doomed), "rows_merged": int(rows)}

@@ -37,41 +37,10 @@ from contextlib import ExitStack
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from endtoend_etl_openmeteo_spark import fsio
+
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _write_file(spark: SparkSession, path: str, payload: bytes) -> None:
-    fs, jvm = _fs(spark, path)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
-    out.write(bytearray(payload))
-    out.close()
-
-
-def _read_file(spark: SparkSession, path: str) -> bytes:
-    fs, jvm = _fs(spark, path)
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
-    try:
-        # commons-io ships with Hadoop; py4j passes primitive arrays by
-        # value, so a read(buf) loop can't work from Python
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-
-
-def _rename(spark: SparkSession, src: str, dst: str) -> bool:
-    fs, jvm = _fs(spark, src)
-    return bool(
-        fs.rename(
-            jvm.org.apache.hadoop.fs.Path(src), jvm.org.apache.hadoop.fs.Path(dst)
-        )
-    )
 
 
 def _manifest_path(table: str, version: int) -> str:
@@ -80,12 +49,10 @@ def _manifest_path(table: str, version: int) -> str:
 
 def _list_versions(spark: SparkSession, table: str) -> list[int]:
     mdir = f"{table.rstrip('/')}/{_MANIFEST_DIR}"
-    fs, jvm = _fs(spark, mdir)
-    hdir = jvm.org.apache.hadoop.fs.Path(mdir)
-    if not fs.exists(hdir):
+    if not fsio.exists(spark, mdir):
         return []
     versions = []
-    for status in fs.listStatus(hdir):
+    for status in fsio.list_status(spark, mdir):
         name = status.getPath().getName()
         if name.startswith("v") and name.endswith(".json"):
             try:
@@ -110,7 +77,7 @@ def read_manifest(
     ``manifest["files"]`` from spilled manifest refs so every consumer
     sees the full entry list; scan planning passes ``resolve=False`` and
     prunes the refs distributedly instead (:func:`vt_read`/:func:`vt_files`)."""
-    m = json.loads(_read_file(spark, _manifest_path(table, version)))
+    m = json.loads(fsio.read_bytes(spark, _manifest_path(table, version)))
     if resolve and m.get("files_ref") and not m.get("files"):
         from endtoend_etl_openmeteo_spark.operators.manifest_list import (
             load_ref_entries,
@@ -236,12 +203,11 @@ def _commit(
             **(extra or {}),
         }
         tmp = f"{table}/{_MANIFEST_DIR}/_tmp_{uuid.uuid4().hex}.json"
-        _write_file(spark, tmp, json.dumps(manifest).encode())
-        if _rename(spark, tmp, _manifest_path(table, attempt)):
+        fsio.write_bytes(spark, tmp, json.dumps(manifest).encode())
+        if fsio.rename(spark, tmp, _manifest_path(table, attempt)):
             return attempt
         # lost the race: drop the temp, then fail / retry / rebase
-        fs, jvm = _fs(spark, tmp)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
+        fsio.delete(spark, tmp, False)
         latest = latest_version(spark, table)
         if on_conflict == "fail":
             raise ConcurrentWriteError(
@@ -289,8 +255,7 @@ def _write_data(
     table = table.rstrip("/")
     subdir = f"{_DATA_DIR}/{uuid.uuid4().hex[:12]}"
     df.write.mode("overwrite").parquet(f"{table}/{subdir}")
-    fs, jvm = _fs(spark, table)
-    listed = fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{table}/{subdir}"))
+    listed = fsio.list_status(spark, f"{table}/{subdir}")
     names = [
         s.getPath().getName()
         for s in listed
@@ -313,7 +278,9 @@ def _write_data(
     # is — with fs.defaultFS=hdfs://... the data was just written REMOTELY
     # and a pyarrow open of the same string would read the driver's local
     # disk (FileNotFoundError after the write already landed).
-    is_local = scheme == "file" or (scheme == "" and fs.getScheme() == "file")
+    is_local = scheme == "file" or (
+        scheme == "" and fsio.scheme(spark, table) == "file"
+    )
     if is_local:
         import pyarrow.parquet as pq
 
@@ -391,12 +358,8 @@ def _total_bytes(spark: SparkSession, table: str, entries: list[dict]) -> int:
     total = sum(e["bytes"] for e in entries if "bytes" in e)
     legacy = [e["path"] for e in entries if "bytes" not in e]
     if legacy:
-        fs, jvm = _fs(spark, table)
         total += sum(
-            fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{table}/{p}")
-            ).getLen()
-            for p in legacy
+            fsio.status(spark, f"{table}/{p}").getLen() for p in legacy
         )
     return int(total)
 
@@ -847,8 +810,7 @@ def _scan_group(
 
 def vt_init(spark: SparkSession, table: str) -> int:
     """Create an empty versioned table (version 0, no files)."""
-    fs, jvm = _fs(spark, table)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{table.rstrip('/')}/{_MANIFEST_DIR}"))
+    fsio.mkdirs(spark, f"{table.rstrip('/')}/{_MANIFEST_DIR}")
     return _commit(spark, table, [], "init", parent_hint=-1)
 
 
@@ -1284,9 +1246,8 @@ def vt_append_epoch(
     except _EpochReplayedMidCommit:
         # our data files were never referenced by any manifest — orphans;
         # remove them now instead of waiting for a vacuum sweep
-        fs, jvm = _fs(spark, table_s)
         for e in files:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table_s}/{e['path']}"), False)
+            fsio.delete(spark, f"{table_s}/{e['path']}", False)
         return None
 
 
@@ -1353,7 +1314,7 @@ def vt_count(spark: SparkSession, table: str, version: int | None = None) -> int
         # scheme-less paths are local only if the resolved Hadoop fs is
         # (same rule as _write_data — pyarrow would read the driver disk)
         if scheme == "file" or (
-            scheme == "" and _fs(spark, table)[0].getScheme() == "file"
+            scheme == "" and fsio.scheme(spark, table) == "file"
         ):
             import pyarrow.parquet as pq
 
@@ -1483,11 +1444,10 @@ def vt_vacuum(spark: SparkSession, table: str, keep_last: int = 2) -> int:
             doomed.add(e["path"])
             doomed.update(e.get("deletes", []))
     doomed -= referenced
-    fs, jvm = _fs(spark, table)
     for f in sorted(doomed):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table}/{f}"), False)
+        fsio.delete(spark, f"{table}/{f}", False)
     for v in drop:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(_manifest_path(table, v)), False)
+        fsio.delete(spark, _manifest_path(table, v), False)
     # GC spilled manifest files no retained version references (dropped
     # versions' spills, plus orphans from lost CAS attempts). A concurrent
     # writer spills its m_*.parquet BEFORE the CAS rename of vN.json, so an
@@ -1499,15 +1459,13 @@ def vt_vacuum(spark: SparkSession, table: str, keep_last: int = 2) -> int:
     # first commit) has an empty `keep`: no grace anchor exists, so spill GC
     # is skipped entirely — the in-flight/orphan spills survive until a
     # version lands and a later vacuum can reason about their age.
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{table}/{_MANIFEST_DIR}")
-    if fs.exists(mdir) and keep:
+    mdir = f"{table}/{_MANIFEST_DIR}"
+    if fsio.exists(spark, mdir) and keep:
         grace_mtime = min(
-            fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(_manifest_path(table, v))
-            ).getModificationTime()
+            fsio.status(spark, _manifest_path(table, v)).getModificationTime()
             for v in keep
         )
-        for status in fs.listStatus(mdir):
+        for status in fsio.list_status(spark, mdir):
             name = status.getPath().getName()
             rel = f"{_MANIFEST_DIR}/{name}"
             if (
@@ -1516,7 +1474,7 @@ def vt_vacuum(spark: SparkSession, table: str, keep_last: int = 2) -> int:
                 and rel not in kept_manifest_files
                 and status.getModificationTime() < grace_mtime
             ):
-                fs.delete(status.getPath(), False)
+                fsio.delete(spark, status.getPath(), False)
         # GC orphan data/delete SUBDIRS from aborted commits: every writer
         # lands its full data/<uuid>/ (or deletes/<uuid>/) set BEFORE the
         # CAS, so a lost ConcurrentWriteError race leaves a whole subdir
@@ -1539,33 +1497,19 @@ def vt_vacuum(spark: SparkSession, table: str, keep_last: int = 2) -> int:
             if p.startswith((f"{_DATA_DIR}/", "deletes/"))
         }
         for top in (_DATA_DIR, "deletes"):
-            tdir = jvm.org.apache.hadoop.fs.Path(f"{table}/{top}")
-            if not fs.exists(tdir):
+            tdir = f"{table}/{top}"
+            if not fsio.exists(spark, tdir):
                 continue
-            for status in fs.listStatus(tdir):
+            for status in fsio.list_status(spark, tdir):
                 if (
                     not status.isDirectory()
                     or status.getPath().getName() in live_subdirs
                 ):
                     continue
-                newest = _newest_file_mtime(fs, status.getPath())
-                if newest is not None and newest < grace_mtime:
-                    fs.delete(status.getPath(), True)
+                newest = fsio.newest_file_mtime(spark, status.getPath())
+                if newest != -1 and newest < grace_mtime:
+                    fsio.delete(spark, status.getPath())
     return len(doomed)
-
-
-def _newest_file_mtime(fs, hpath) -> int | None:
-    """Max modification time over the FILES under ``hpath`` (recursive);
-    None when no files exist. File mtimes are real on every Hadoop
-    filesystem including object stores — directory mtimes are not, which
-    is why vt_vacuum's subdir grace window keys on this."""
-    it = fs.listFiles(hpath, True)
-    newest = None
-    while it.hasNext():
-        m = it.next().getModificationTime()
-        if newest is None or m > newest:
-            newest = m
-    return newest
 
 
 def _write_delete_files(
@@ -1586,8 +1530,7 @@ def _write_delete_files(
 
     subdir = f"deletes/{uuid.uuid4().hex[:12]}"
     matches.repartition(1).write.parquet(f"{table}/{subdir}")
-    fs, jvm = _fs(spark, table)
-    listed = fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{table}/{subdir}"))
+    listed = fsio.list_status(spark, f"{table}/{subdir}")
     del_paths = [
         f"{subdir}/{s.getPath().getName()}"
         for s in listed
@@ -1601,7 +1544,7 @@ def _write_delete_files(
         .collect()
     }
     if not per_file:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table}/{subdir}"), True)
+        fsio.delete(spark, f"{table}/{subdir}")
         return [], {}, 0
     return del_paths, per_file, sum(per_file.values())
 

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from endtoend_etl_openmeteo_spark import fsio
 from endtoend_etl_openmeteo_spark.operators.dq import REFERENCE_WEATHER_SUITE, dq_gate
 from endtoend_etl_openmeteo_spark.operators.explode import (
     flatten_validation_records,
@@ -45,7 +46,6 @@ from endtoend_etl_openmeteo_spark.operators.explode import (
     unzip_hourly,
 )
 from endtoend_etl_openmeteo_spark.operators.merge import (
-    _path_exists,
     leaf_path,
     merge_upsert,
     read_partitions,
@@ -307,7 +307,7 @@ def refresh_gold_incremental(
         ]
     if not touched:
         return  # empty batch: no partition to refresh
-    if not _path_exists(spark, gold_path):
+    if not fsio.exists(spark, gold_path):
         silver = spark.read.schema(SILVER_SCHEMA).parquet(silver_path)
         _gold_rows(silver).write.mode("overwrite").partitionBy(MONTH).parquet(gold_path)
         return

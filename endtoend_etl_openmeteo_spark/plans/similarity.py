@@ -179,12 +179,6 @@ def _table_fingerprint(sf_dir: str, table: str = "embeddings") -> tuple:
         return ()  # unknown -> still cached per (key, empty-fp)
 
 
-def clear_trained_models() -> None:
-    """Drop every cached quantizer model — harness hook for explicit
-    invalidation (e.g. between data regenerations)."""
-    _TRAINED.clear()
-
-
 def _cached_model_rows(spark: SparkSession, key: tuple, build) -> tuple[list, object]:
     """(rows, schema) of the cached trained model, DRIVER-SIDE — for
     consumers that feed the quantizer straight into the Arrow encode op /

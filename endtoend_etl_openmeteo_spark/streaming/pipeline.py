@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from endtoend_etl_openmeteo_spark import fsio
 from endtoend_etl_openmeteo_spark.operators.explode import unzip_hourly
 from endtoend_etl_openmeteo_spark.session import pinned, release_checkpoint
 from endtoend_etl_openmeteo_spark.sources.bronze import BRONZE_READ_SCHEMA
@@ -40,23 +41,15 @@ def _lineage_run_id(spark: SparkSession, checkpoint_path: str) -> str:
     string) reused across lineages would make the new run's epochs hit
     the old run's vt epoch tags (batches silently skipped) or
     dynamically overwrite the old run's same-numbered partitions
-    (old/new mixed output). Hadoop FS (via versioned.py's shared IO
-    helpers — one copy of the JVM read/write plumbing), so remote
-    checkpoints work."""
-    from endtoend_etl_openmeteo_spark.operators.versioned import (
-        _fs,
-        _read_file,
-        _write_file,
-    )
-
+    (old/new mixed output). Read and written through ``fsio``, the
+    package's Hadoop filesystem layer, so remote checkpoints work."""
     marker = f"{checkpoint_path}/_engine_run_id"
-    fs, jvm = _fs(spark, marker)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
-        return _read_file(spark, marker).decode("ascii").strip()
+    if fsio.exists(spark, marker):
+        return fsio.read_bytes(spark, marker).decode("ascii").strip()
     import uuid as _uuid
 
     run_id = _uuid.uuid4().hex[:12]
-    _write_file(spark, marker, run_id.encode("ascii"))
+    fsio.write_bytes(spark, marker, run_id.encode("ascii"))
     return run_id
 
 

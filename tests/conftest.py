@@ -1,4 +1,5 @@
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -20,3 +21,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), number of Spark jobs fn scheduled)``, by
+    the status tracker. Every call runs under a fresh job group, so a
+    repeated call can never count an earlier call's jobs."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

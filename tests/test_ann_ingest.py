@@ -366,20 +366,18 @@ def test_streamed_epoch_drops_tombstoned_ids(spark, emb, workdir):
     assert not replayed & set(victims)
 
 
-def test_full_streamed_lifecycle_under_rename_cas_lease(spark, emb, workdir):
-    """Round-11 verdict task 6: the CAS backend has a two-thread race
-    test, but the streamed lifecycle always ran on the default
-    AtomicCreateLease. Drive the WHOLE streamed path — ingest wave,
-    kill-and-resume wave, consolidation, hinted delete, vacuum — with
-    RenameCasLease installed as the session default, and assert the CAS
-    backend (not the default) actually brokered every lease: rename-CAS
-    acquisition must work end-to-end, releases must leave no lock
-    behind, and the final content must equal the surviving vectors."""
-    from endtoend_etl_openmeteo_spark.operators import index_maintain as im
+def test_full_streamed_lifecycle_under_the_writer_lease(
+    spark, emb, workdir, monkeypatch
+):
+    """Drive the WHOLE streamed path — ingest wave, kill-and-resume wave,
+    consolidation, hinted delete, vacuum — counting every lease the
+    writers acquire through the lease's one acquire point
+    (``fsio.create_new`` on ``_maintenance.lock``): acquisition must work
+    end-to-end, releases must leave no lock behind, and the final content
+    must equal the surviving vectors."""
+    from endtoend_etl_openmeteo_spark import fsio
     from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        RenameCasLease,
         delete_from_stored_index,
-        lease_backend,
         vacuum_index_tombstones,
     )
     from endtoend_etl_openmeteo_spark.operators.similarity import (
@@ -387,13 +385,13 @@ def test_full_streamed_lifecycle_under_rename_cas_lease(spark, emb, workdir):
     )
 
     acquisitions = []
+    real_create_new = fsio.create_new
 
-    class CountingCasLease(RenameCasLease):
-        def try_acquire(self, payload: str) -> bool:
-            won = super().try_acquire(payload)
-            if won:
-                acquisitions.append(payload.split(":", 1)[0])
-            return won
+    def counting_create_new(spark_, path, payload):
+        won = real_create_new(spark_, path, payload)
+        if won and str(path).endswith("/_maintenance.lock"):
+            acquisitions.append(payload.decode().split(":", 1)[0])
+        return won
 
     landing = str(workdir / "landing")
     index = str(workdir / "index")
@@ -401,30 +399,28 @@ def test_full_streamed_lifecycle_under_rename_cas_lease(spark, emb, workdir):
     coarse, books = ivfpq_train(emb, n_cells=6, m=8, k=16, iterations=2)
     init_streamed_ivfpq_index(None, coarse, books, index)
 
-    with lease_backend(CountingCasLease):
-        assert im.DEFAULT_LEASE_BACKEND is CountingCasLease
-        _land(emb, landing, 0, 300)
-        run_streaming_ann_ingest(
-            spark, landing, index, ckpt, VEC_SCHEMA
-        ).awaitTermination()
-        # kill-and-resume: same checkpoint, only the new file processed
-        _land(emb, landing, 300, 500)
-        run_streaming_ann_ingest(
-            spark, landing, index, ckpt, VEC_SCHEMA
-        ).awaitTermination()
-        ids = sorted(r.id for r in spark.read.parquet(index).select("id").collect())
-        assert ids == list(range(500))
-        compact_streamed_ivfpq_index(spark, index, keep_last=1)
-        # hinted delete + vacuum under the CAS lease
-        vic = emb.filter(F.col("vec_id") < 7)
-        hints = ivf_cells_for_vectors(spark, index, vic)
-        delete_from_stored_index(spark, hints, index)
-        stats = vacuum_index_tombstones(spark, index)
+    monkeypatch.setattr(fsio, "create_new", counting_create_new)
+    _land(emb, landing, 0, 300)
+    run_streaming_ann_ingest(
+        spark, landing, index, ckpt, VEC_SCHEMA
+    ).awaitTermination()
+    # kill-and-resume: same checkpoint, only the new file processed
+    _land(emb, landing, 300, 500)
+    run_streaming_ann_ingest(
+        spark, landing, index, ckpt, VEC_SCHEMA
+    ).awaitTermination()
+    ids = sorted(r.id for r in spark.read.parquet(index).select("id").collect())
+    assert ids == list(range(500))
+    compact_streamed_ivfpq_index(spark, index, keep_last=1)
+    # hinted delete + vacuum under the lease
+    vic = emb.filter(F.col("vec_id") < 7)
+    hints = ivf_cells_for_vectors(spark, index, vic)
+    delete_from_stored_index(spark, hints, index)
+    stats = vacuum_index_tombstones(spark, index)
     assert stats["rows_removed"] == 7
     left = sorted(r.id for r in spark.read.parquet(index).select("id").collect())
     assert left == list(range(7, 500))
-    # the CAS backend brokered the whole lifecycle: every maintenance
-    # stage acquired through it, and no lock file is left behind
+    # every maintenance stage acquired the lease, and no lock file is
+    # left behind
     assert len(acquisitions) >= 4, acquisitions
     assert not (Path(index) / "_maintenance.lock").exists()
-    assert im.DEFAULT_LEASE_BACKEND is im.AtomicCreateLease  # scope restored

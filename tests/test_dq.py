@@ -250,23 +250,17 @@ def test_empty_input_passes_without_hanging(spark):
         assert all(r.passed and r.violations == 0 and r.n_rows == 0 for r in rows)
 
 
-def test_gate_runs_one_job(spark):
+def test_gate_runs_one_job(spark, count_jobs):
     """The whole suite, and any observation already attached to the input,
     rides one scan: one Spark job by the status tracker."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    sc = spark.sparkContext
     df = _df(spark, GOOD + EDGE)
     obs = Observation()
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    label = "jc_dq_gate"
-    sc.setJobGroup(label, label)
-    try:
-        dq_gate(observed, REFERENCE_WEATHER_SUITE)
-    finally:
-        sc.setJobGroup(None, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(label)) == 1
+    _, n = count_jobs(lambda: dq_gate(observed, REFERENCE_WEATHER_SUITE))
+    assert n == 1
     assert obs.get == {"rows": 3}
 
 

@@ -307,15 +307,23 @@ def test_broken_then_reacquired_lease_not_deleted_by_stale_holder(spark, tmp_pat
     assert not lock.exists()  # fresh's own exit releases normally
 
 
-def test_lease_conflict_holds_when_the_holder_releases_mid_acquire(spark, tmp_path):
+def test_lease_conflict_holds_when_the_holder_releases_mid_acquire(
+    spark, tmp_path, monkeypatch
+):
     """A create that fails because the lock exists is a conflict even when
     the holder releases the lock before the loser can look: the loser
-    retries instead of raising the create's error."""
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import AtomicCreateLease
+    gets LeaseConflictError and retries, instead of raising the create's
+    error."""
+    from endtoend_etl_openmeteo_spark import fsio
+    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
+        LeaseConflictError,
+        index_lease,
+    )
 
+    path = str(tmp_path / "idx")
     (tmp_path / "idx").mkdir()
-    holder = AtomicCreateLease(spark, str(tmp_path / "idx"))
-    assert holder.try_acquire("holder")
+    holder = index_lease(spark, path, owner="holder")
+    holder.__enter__()
 
     class ReleasedAfterCreate:
         """The real filesystem, with the lock gone by the exists() check."""
@@ -323,83 +331,70 @@ def test_lease_conflict_holds_when_the_holder_releases_mid_acquire(spark, tmp_pa
         def __init__(self, fs):
             self.fs = fs
 
-        def create(self, path, overwrite):
-            return self.fs.create(path, overwrite)
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
 
         def exists(self, path):
             return False
 
-    loser = AtomicCreateLease(spark, str(tmp_path / "idx"))
-    loser.fs = ReleasedAfterCreate(loser.fs)
-    assert loser.try_acquire("loser") is False
+    real_resolve = fsio._resolve
+
+    def resolve(spark_, p):
+        fs, hp = real_resolve(spark_, p)
+        return ReleasedAfterCreate(fs), hp
+
+    monkeypatch.setattr(fsio, "_resolve", resolve)
+    try:
+        with pytest.raises(LeaseConflictError):
+            with index_lease(spark, path, owner="loser"):
+                pass  # pragma: no cover — must not acquire
+    finally:
+        monkeypatch.undo()
+        holder.__exit__(None, None, None)
+    assert not (tmp_path / "idx" / "_maintenance.lock").exists()
 
 
-def test_rename_cas_backend_serializes_writers_and_loser_retries(spark, tmp_path):
-    """The injectable lease backend (round-9 verdict task 4): driving
-    index_lease through RenameCasLease — the versioned format's
-    rename-refuses-existing-destination CAS — must give the same
-    protocol: one winner, LeaseConflictError for the loser, retry lands
-    after release, no temp litter, ownership-checked exit."""
-    import threading
-
-    import pytest
-
+def test_compaction_and_vacuum_pin_dynamic_overwrite_on_their_writers(
+    spark, tmp_path
+):
+    """In a session set to STATIC partition overwrite, a compaction and a
+    vacuum each replace only the partitions they rewrite: every other
+    partition's files stay byte-identical, and the session's mode still
+    reads static afterwards (the mode is pinned on each writer, never
+    set session-wide)."""
     from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        LeaseConflictError,
-        RenameCasLease,
-        index_lease,
+        delete_from_stored_index,
+        vacuum_index_tombstones,
     )
 
-    path = str(tmp_path / "idx")
-    (tmp_path / "idx").mkdir()
-    lock = tmp_path / "idx" / "_maintenance.lock"
+    def snapshot(part: str) -> dict[str, bytes]:
+        return {
+            p.name: p.read_bytes()
+            for p in (Path(path) / part).iterdir()
+            if p.name.endswith(".parquet")
+        }
 
-    in_hold = threading.Barrier(2, timeout=60)
-    loser_denied = threading.Event()
-    acquired_after_retry = threading.Event()
-    errors = []
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        path = str(tmp_path / "idx")
+        _layout(spark, path, frag_rows=8)
+        tidy = snapshot("part=0")
+        stats = compact_partitions(spark, path, "part", max_files=4)
+        assert stats["partitions_compacted"] == 1
+        assert snapshot("part=0") == tidy
+        assert spark.conf.get(key) == "static"
 
-    def run(fn):
-        try:
-            fn()
-        except Exception as e:  # pragma: no cover
-            errors.append(e)
-
-    def holder():
-        with index_lease(
-            spark, path, owner="hold", backend=RenameCasLease(spark, path)
-        ):
-            in_hold.wait()
-            loser_denied.wait(60)
-
-    def contender():
-        in_hold.wait()  # holder owns the lease now
-        with pytest.raises(LeaseConflictError):
-            with index_lease(
-                spark, path, owner="contend", backend=RenameCasLease(spark, path)
-            ):
-                pass  # pragma: no cover — must not acquire
-        loser_denied.set()
-        for _ in range(100):
-            try:
-                with index_lease(
-                    spark, path, owner="contend",
-                    backend=RenameCasLease(spark, path),
-                ):
-                    acquired_after_retry.set()
-                return
-            except LeaseConflictError:
-                threading.Event().wait(0.05)
-        raise AssertionError("retry never acquired the lease")
-
-    t1 = threading.Thread(target=run, args=(holder,))
-    t2 = threading.Thread(target=run, args=(contender,))
-    t1.start(); t2.start(); t1.join(120); t2.join(120)
-    assert not errors, errors
-    assert acquired_after_retry.is_set()
-    assert not lock.exists()
-    # a losing rename must clean its temp payload up
-    assert not [p for p in (tmp_path / "idx").iterdir() if ".lock_tmp_" in p.name]
+        compacted = snapshot("part=1")
+        assert delete_from_stored_index(spark, [3], path) == 1
+        assert vacuum_index_tombstones(spark, path)["partitions_rewritten"] == 1
+        assert snapshot("part=1") == compacted
+        assert spark.conf.get(key) == "static"
+        got = sorted(r.id for r in spark.read.parquet(path).collect())
+        assert got == [i for i in range(10) if i != 3] + [100 + i for i in range(8)]
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_tombstone_sidecar_stays_bounded_under_delete_churn(spark, tmp_path):
@@ -443,7 +438,7 @@ def test_tombstone_sidecar_stays_bounded_under_delete_churn(spark, tmp_path):
 
 
 def test_over_envelope_tombstone_batches_stay_distributed(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, count_jobs
 ):
     """A delete batch (or sidecar fold) beyond LOCAL_TOMBSTONE_ROWS_MAX
     must take the distributed fallback — never a driver-side collect of
@@ -462,29 +457,17 @@ def test_over_envelope_tombstone_batches_stay_distributed(
         (F.col("id") % 4).alias("cell"), F.col("id"), (F.col("id") * 3).alias("v")
     ).write.partitionBy("cell").mode("overwrite").parquet(path)
 
-    sc = spark.sparkContext
-
-    def jobs_of(label, fn):
-        sc.setJobGroup(label, label)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(label))
-
     # in-envelope: the probe over the lazy checkpoint costs no extra job
     # (the shuffle map job, the probe and the one-file write)
-    n, jobs = jobs_of(
-        "in-envelope", lambda: delete_from_stored_index(spark, [99], path)
-    )
+    n, jobs = count_jobs(lambda: delete_from_stored_index(spark, [99], path))
     assert n == 1 and jobs <= 3, jobs
     monkeypatch.setattr(im, "LOCAL_TOMBSTONE_ROWS_MAX", 3)
     # 8-id batch > the 3-row envelope: forces the distributed write path.
     # The probe pins the deduped batch, so the id lineage (the shuffle
     # map job over the caller's frame) runs once: 6 jobs, where probing
     # and then checkpointing the lineage again took 8.
-    n, jobs = jobs_of(
-        "over-envelope", lambda: delete_from_stored_index(spark, list(range(8)), path)
+    n, jobs = count_jobs(
+        lambda: delete_from_stored_index(spark, list(range(8)), path)
     )
     assert n == 8
     assert jobs <= 6, jobs

@@ -172,10 +172,32 @@ def test_checkpoints_are_scoped_and_threads_carry_the_job_group():
     assert not stale, f"allowlisted functions without a checkpoint: {stale}"
 
 
+def test_hadoop_file_access_goes_through_fsio():
+    """Static guard over the package source: only ``fsio.py`` builds a
+    Hadoop ``Path`` or ``FileSystem`` or reads through commons-io, so the
+    JVM file plumbing exists once; and ``index_maintain.py`` keeps one
+    writer lease, with no pluggable ``LeaseBackend`` or ``backend=``
+    argument."""
+    from pathlib import Path
+
+    pkg = Path(plans.__file__).resolve().parents[1]
+    offenders = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "fsio.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if any(t in line for t in ("hadoop.fs.Path(", "getFileSystem(", "IOUtils."))
+    ]
+    assert not offenders, f"go through endtoend_etl_openmeteo_spark.fsio: {offenders}"
+    lease = (pkg / "operators" / "index_maintain.py").read_text()
+    assert "LeaseBackend" not in lease and "backend=" not in lease
+
+
 #: The ELT path's modules: bronze landing → DQ gate → merge → gold, and
 #: the stored-index maintenance that shares its one-file metadata writes.
 ELT_PATH_MODULES = (
     "pipeline.py",
+    "fsio.py",
     "streaming/pipeline.py",
     "sources",
     "operators/dq.py",
@@ -504,7 +526,7 @@ def test_sequence_pack_lazy_plan_shape(spark):
     assert "LogicalRDD" not in plan  # genuinely lazy — gate sees the pipeline
 
 
-def test_fused_pass_job_counts_stay_pinned(spark):
+def test_fused_pass_job_counts_stay_pinned(spark, count_jobs):
     """The r12 lazy-checkpoint fusions (bpe_train's rewrite+count, the
     minhash signature checkpoint, sequence_pack's shared token-count
     base) delete whole scheduled jobs; nothing else in CI would notice a
@@ -523,7 +545,6 @@ def test_fused_pass_job_counts_stay_pinned(spark):
         release_persistent_rdds,
     )
 
-    sc = spark.sparkContext
     docs = spark.createDataFrame(
         [
             (i, f"the quick brown fox {i % 3} jumps over the lazy dog {i}")
@@ -532,14 +553,8 @@ def test_fused_pass_job_counts_stay_pinned(spark):
         "doc_id long, text string",
     )
 
-    def jobs_for(label, fn):
-        st = sc.statusTracker()
-        sc.setJobGroup(label, label)
-        try:
-            fn()
-        finally:
-            sc.setJobGroup(None, None)
-        n = len(st.getJobIdsForGroup(label))
+    def jobs_for(fn):
+        _, n = count_jobs(fn)
         release_persistent_rdds(spark)
         return n
 
@@ -547,14 +562,14 @@ def test_fused_pass_job_counts_stay_pinned(spark):
         merges, toked = bpe_train(docs, n_merges=4)
         release_checkpoint(toked)
 
-    assert jobs_for("jc_bpe", run_bpe) <= 11  # observed 10; eager adds ~4
+    assert jobs_for(run_bpe) <= 11  # observed 10; eager adds ~4
 
     def run_minhash():
         release_checkpoint(minhash_lsh_pairs(docs, "doc_id", "text"))
 
-    assert jobs_for("jc_minhash", run_minhash) <= 6  # observed 6; eager adds 1
+    assert jobs_for(run_minhash) <= 6  # observed 6; eager adds 1
 
     toks = docs.select("doc_id", F.lit(7).alias("n_tokens"))
     assert (
-        jobs_for("jc_seqpack", lambda: sequence_pack(toks, 16).collect()) <= 8
+        jobs_for(lambda: sequence_pack(toks, 16).collect()) <= 8
     )  # observed 8

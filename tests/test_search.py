@@ -192,6 +192,7 @@ def test_append_inverted_index_equals_full_rebuild(spark, tmp_path):
 def test_append_refuses_legacy_sidecar(spark, tmp_path):
     import json
 
+    from endtoend_etl_openmeteo_spark import fsio
     from endtoend_etl_openmeteo_spark.operators.search import (
         _stats_path,
         append_inverted_index,
@@ -201,10 +202,11 @@ def test_append_refuses_legacy_sidecar(spark, tmp_path):
     path = str(tmp_path / "legacy")
     write_inverted_index(_corpus(spark), path)
     # simulate a pre-total_tokens index
-    p, fs = _stats_path(spark, path)
-    out = fs.create(p, True)
-    out.write(json.dumps({"n_docs": 4, "avgdl": 5.25, "n_buckets": 64}).encode())
-    out.close()
+    fsio.write_bytes(
+        spark,
+        _stats_path(path),
+        json.dumps({"n_docs": 4, "avgdl": 5.25, "n_buckets": 64}).encode(),
+    )
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="total_tokens"):
@@ -518,6 +520,7 @@ def test_serving_surfaces_crashed_append_marker(spark, tmp_path):
     between data write and stats commit) surfaces AT QUERY TIME: the
     stats dict carries ``append_pending`` and serving still answers —
     drifted scores are flagged, not hidden until the next write."""
+    from endtoend_etl_openmeteo_spark import fsio
     from endtoend_etl_openmeteo_spark.operators.search import (
         _pending_path,
         read_index_stats,
@@ -528,10 +531,7 @@ def test_serving_surfaces_crashed_append_marker(spark, tmp_path):
     path = str(tmp_path / "bm25")
     write_inverted_index(_corpus(spark), path, n_buckets=4)
     assert "append_pending" not in read_index_stats(spark, path)
-    pend, pfs = _pending_path(spark, path)
-    out = pfs.create(pend, True)
-    out.write(b"{}")
-    out.close()
+    fsio.write_bytes(spark, _pending_path(path), b"{}")
     # marker + HELD lease = a healthy in-flight append: must NOT flag
     from endtoend_etl_openmeteo_spark.operators.index_maintain import (
         index_lease,

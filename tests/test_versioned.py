@@ -1413,6 +1413,7 @@ def test_concurrent_appends_both_land_via_rebase(spark, table, monkeypatch):
     import threading
 
     import endtoend_etl_openmeteo_spark.operators.versioned as vt
+    from endtoend_etl_openmeteo_spark import fsio
 
     vt_append(spark, _df(spark, 0, 10), table)
     v_start = latest_version(spark, table)
@@ -1423,7 +1424,7 @@ def test_concurrent_appends_both_land_via_rebase(spark, table, monkeypatch):
     barrier = threading.Barrier(2, timeout=60)
     raced = threading.local()
     real_read = vt.read_manifest
-    real_rename = vt._rename
+    real_rename = fsio.rename
     refusals = []
 
     def synced_read(spark_, table_, *a, **kw):
@@ -1442,7 +1443,7 @@ def test_concurrent_appends_both_land_via_rebase(spark, table, monkeypatch):
         return ok
 
     monkeypatch.setattr(vt, "read_manifest", synced_read)
-    monkeypatch.setattr(vt, "_rename", counting_rename)
+    monkeypatch.setattr(fsio, "rename", counting_rename)
 
     errors = []
 

@@ -407,7 +407,7 @@ def test_merge_raises_when_batch_parts_miss_a_partition(spark, workdir):
     assert {r.k for r in spark.read.parquet(path).collect()} == {"k1", "k2", "k3"}
 
 
-def test_merge_job_count_does_not_grow_with_partition_count(spark, workdir):
+def test_merge_job_count_does_not_grow_with_partition_count(spark, workdir, count_jobs):
     """A one-partition merge lists and reads only its own leaf directory,
     so it runs as many jobs against 40 partitions as against 2 (a listing
     of more than 32 partition directories would run a job of its own)."""
@@ -425,8 +425,7 @@ def test_merge_job_count_does_not_grow_with_partition_count(spark, workdir):
             path, ["k"], "ord", partition_cols=["p"],
         )
         batch = spark.createDataFrame([(0, 0, 2.0, t1)], schema)
-        _, n = _jobs_in(
-            spark, f"jc_merge_{n_parts}",
+        _, n = count_jobs(
             lambda: merge_upsert(spark, batch, path, ["k"], "ord", ["p"], [Row(p=0)]),
         )
         rows = {r.k: r.v for r in spark.read.parquet(path).filter("p = 0").collect()}
@@ -492,18 +491,7 @@ def test_elt_end_to_end_idempotent_and_gated(spark, workdir):
     assert spark.read.parquet(silver).count() == before
 
 
-def _jobs_in(spark, label, fn):
-    """(fn(), number of Spark jobs fn scheduled), by the status tracker."""
-    sc = spark.sparkContext
-    sc.setJobGroup(label, label)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(label))
-
-
-def test_warm_elt_cycle_job_count_stays_pinned(spark, workdir):
+def test_warm_elt_cycle_job_count_stays_pinned(spark, workdir, count_jobs):
     """One warm run_elt cycle into an existing silver and gold: the DQ
     gate's one scan also observes the touched months, the merge writes
     once, and silver and gold are read with known schemas. Any of those
@@ -519,9 +507,7 @@ def test_warm_elt_cycle_job_count_stays_pinned(spark, workdir):
     at = F.lit("2025-10-31 13:00:00").cast("timestamp")
     run_elt(spark, bronze, silver, gold, ingested_at=at)  # cold: creates both
 
-    out, n = _jobs_in(
-        spark, "jc_warm_elt", lambda: run_elt(spark, bronze, silver, gold, ingested_at=at)
-    )
+    out, n = count_jobs(lambda: run_elt(spark, bronze, silver, gold, ingested_at=at))
     assert n <= 5, f"warm run_elt cycle ran {n} jobs"
     assert _stage_dirs(silver) == []
     assert out.columns == [
@@ -543,7 +529,7 @@ def _hours_payload(hours, temp):
     }
 
 
-def test_backfill_job_count_stays_pinned(spark, workdir):
+def test_backfill_job_count_stays_pinned(spark, workdir, count_jobs):
     """One backfill_missing call that fetches payloads, into an existing
     silver and gold, runs 10 jobs: the gap search's collect 4, the bronze
     archive write 1, the gate (which also observes the months) 1, the
@@ -570,7 +556,7 @@ def test_backfill_job_count_stays_pinned(spark, workdir):
             lambda city, hours: _hours_payload(hours, 42.0), gold_path=gold,
         )
 
-    out, n = _jobs_in(spark, "jc_backfill", backfill)
+    out, n = count_jobs(backfill)
     assert n <= 10, f"backfill_missing ran {n} jobs"
     assert spark.read.parquet(silver).count() == 48
     assert _stage_dirs(silver) == []
@@ -669,7 +655,7 @@ def test_gold_refresh_and_merge_keep_other_months_under_static_overwrite(
     assert gold == {9: 18.0, 10: 20.0, 11: 30.0}
 
 
-def test_warm_elt_cycle_rewrites_only_its_month_of_24(spark, workdir):
+def test_warm_elt_cycle_rewrites_only_its_month_of_24(spark, workdir, count_jobs):
     """Silver and gold hold 24 months; a warm run_elt cycle landing in one
     of them leaves every other month's silver and gold files with the same
     names and mtimes, and it still runs at most 5 jobs (24 partition
@@ -698,9 +684,7 @@ def test_warm_elt_cycle_rewrites_only_its_month_of_24(spark, workdir):
         for c in ("Warsaw", "Berlin")
     ]), bronze)
     at = F.lit("2025-03-16 00:00:00").cast("timestamp")
-    out, n = _jobs_in(
-        spark, "jc_warm_24m", lambda: run_elt(spark, bronze, silver, gold, ingested_at=at)
-    )
+    out, n = count_jobs(lambda: run_elt(spark, bronze, silver, gold, ingested_at=at))
     assert n <= 5, f"warm run_elt cycle into 24 months ran {n} jobs"
     assert {m: (_month_files(silver, m), _month_files(gold, m)) for m in others} == before
     march = {(r.city, r.day.day): r.temperature_2m for r in out.filter(
