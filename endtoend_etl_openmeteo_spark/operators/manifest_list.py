@@ -287,7 +287,9 @@ def _write_manifest_file(
             for s in fsio.list_status(spark, src_dir)
             if s.getPath().getName().endswith(".parquet")
         )
-        fsio.rename(spark, part, f"{table}/{rel}")
+        dst = f"{table}/{rel}"
+        if not fsio.rename(spark, part, dst):
+            raise OSError(f"rename {part} -> {dst} failed; {src_dir} is kept")
         fsio.delete(spark, src_dir)
 
 

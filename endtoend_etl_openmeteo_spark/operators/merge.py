@@ -7,8 +7,7 @@ provides it as a library operator:
 
     union(the batch's existing target partitions, new batch)
       → row_number() over key ordered by order_col desc → keep first
-      → ONE partitioned write into a staging dir beside the target
-      → per-partition directory renames into the target
+      → ONE dynamic-overwrite write, partitioned, into the target
 
 Scale design:
 - **Partition-scoped, never full-table.** Only the leaf partition
@@ -20,25 +19,27 @@ Scale design:
   collected (small by construction) unless the caller passes them as
   ``batch_parts``.
 - The dedup window shuffles on the merge keys only — no global sort.
-- **Written once, committed by rename.** The merged rows are written once,
-  ``partitionBy(partition_cols)``, into a fresh staging directory on the
-  target's own filesystem, so the plan never reads the files it replaces
-  and the staged copy survives executor loss. Each staged leaf partition
-  directory then replaces its target counterpart with Hadoop
-  ``FileSystem`` renames — the rename Spark's own dynamic-overwrite
-  committer does, without its session-global ``partitionOverwriteMode``.
-  The old directory moves into staging BEFORE the new one moves into
-  place, so every partition's data exists somewhere at every instant;
-  staging is deleted only after the last partition commits. A staged leaf
-  that was not read back would replace a partition with only the batch's
-  rows, so it fails the merge before the first rename.
+- **Committed by Spark's dynamic-overwrite writer**, pinned on the writer
+  as the gold refresh pins it, not trusted from the session. Its tasks
+  write into ``<target>/.spark-staging-<job>/``, which readers skip, and
+  its ``commitJob`` replaces each written leaf partition directory by a
+  delete then a rename; no other partition is touched. The merged rows
+  carry every surviving old row of their partitions, so until the rename
+  each partition's data exists in the target or in the staging directory:
+  a crash inside ``commitJob`` leaves the not-yet-renamed partitions'
+  rows in ``.spark-staging-<job>/``, where no reader sees them and nothing
+  recovers them. A failed write job aborts and deletes its staging
+  directory before any commit.
+- **A batch row outside ``batch_parts`` fails the write.** Its partition
+  was not read back, so committing it would replace that partition with
+  the batch's rows only. Each batch row's partition values pass through
+  a ``raise_error`` guard inside the one write job, which then fails
+  before its commit and leaves the target untouched.
 """
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from endtoend_etl_openmeteo_spark import fsio
@@ -66,14 +67,13 @@ def dedup_last_write_wins(
 
 
 def leaf_path(spark: SparkSession, partition_cols: list[str], row) -> str:
-    """The relative leaf directory (``a=1/b=2``; ``""`` with no partition
-    columns) that Spark's partitioned writer gives ``row``'s values of
-    ``partition_cols``: names and values escaped by Spark's own
-    ``escapePathName``, a NULL or empty value as
+    """The relative leaf directory (``a=1/b=2``) that Spark's partitioned
+    writer gives ``row``'s values of ``partition_cols``: names and values
+    escaped by Spark's own ``escapePathName``, a NULL or empty value as
     ``__HIVE_DEFAULT_PARTITION__``. Values are rendered as strings the way
     the writer casts them for strings, integers and dates; a value the
     writer renders differently names no existing directory, and the
-    merge's staged-leaf check then raises rather than lose rows."""
+    merge's partition guard then fails the write rather than lose rows."""
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     parts = []
     for c in partition_cols:
@@ -97,64 +97,25 @@ def read_partitions(
     ``parallelPartitionDiscovery.threshold`` of 32 directories, a listing
     of the whole table runs a Spark job of its own)."""
     root = path.rstrip("/")
-    paths = [f"{root}/{rel}" if rel else root for rel in sorted(leaves)]
+    paths = [f"{root}/{rel}" for rel in sorted(leaves)]
     existing = [p for p in paths if fsio.exists(spark, p)]
     if not existing:
         return None
     return spark.read.schema(schema).option("basePath", root).parquet(*existing)
 
 
-def _leaf_partitions(spark, root: str, depth: int) -> list[tuple[str, object]]:
-    """(relative path like ``a=1/b=2``, path) of each partition directory
-    ``depth`` levels under ``root``; ``[("", root)]`` at depth 0.
-    Hidden names (``_SUCCESS``, ``.crc`` files) are skipped, as readers
-    skip them."""
-    level = [("", root)]
-    for _ in range(depth):
-        children = []
-        for rel, path in level:
-            for st in fsio.list_status(spark, path):
-                name = st.getPath().getName()
-                if st.isDirectory() and not name.startswith(("_", ".")):
-                    children.append((f"{rel}/{name}" if rel else name, st.getPath()))
-        level = children
-    return level
-
-
-def _commit_staged(spark: SparkSession, staged: str, old: str, target: str,
-                   depth: int, read_back: set[str]) -> None:
-    """Move each leaf partition under ``staged`` into ``target``, first
-    moving the partition it replaces to the same place under ``old``.
-
-    ``read_back`` is the set of leaves whose existing rows the staged write
-    merged. A staged leaf outside it holds only the batch's rows, and its
-    rename would drop the target partition's other rows, so a
-    :class:`ValueError` is raised before the first rename. Hadoop's rename
-    into an EXISTING directory nests the source inside it instead of
-    replacing it, so the target leaf is always moved away before the new
-    one is renamed in. A ``False`` rename raises :class:`OSError`."""
-    leaves = _leaf_partitions(spark, staged, depth)
-    stray = sorted(rel for rel, _ in leaves if rel not in read_back)
-    if stray:
-        raise ValueError(
-            f"merge into {target} staged partitions it did not read back: "
-            f"{stray[:5]}; batch_parts must name every partition of the batch"
-        )
-
-    def sub(root: str, rel: str) -> str:
-        root = root.rstrip("/")
-        return f"{root}/{rel}" if rel else root
-
-    def rename(src, dst: str) -> None:
-        fsio.mkdirs(spark, dst.rsplit("/", 1)[0])
-        if not fsio.rename(spark, src, dst):
-            raise OSError(f"rename {src} -> {dst} failed")
-
-    for rel, src in leaves:
-        dst = sub(target, rel)
-        if fsio.exists(spark, dst):
-            rename(dst, sub(old, rel))
-        rename(src, dst)
+def _in_partitions(partition_cols: list[str], parts: list) -> Column:
+    """Whether a row's values of ``partition_cols`` name the leaf directory
+    of one of ``parts``: compared as the strings the writer names
+    directories by, with NULL and ``""`` both the default partition, as
+    :func:`leaf_path` renders them."""
+    row = F.array(
+        *(F.coalesce(F.col(c).cast("string"), F.lit("")) for c in partition_cols)
+    )
+    return row.isin([
+        F.array(*(F.lit("" if p[c] is None else str(p[c])) for c in partition_cols))
+        for p in parts
+    ])
 
 
 def merge_upsert(
@@ -163,12 +124,18 @@ def merge_upsert(
     target_path: str,
     keys: list[str],
     order_col: str,
-    partition_cols: list[str] | None = None,
+    partition_cols: list[str],
     batch_parts: list | None = None,
 ) -> None:
     """Last-write-wins merge of ``new`` into the Parquet table at
-    ``target_path`` keyed by ``keys``, newest-by-``order_col`` winning —
-    the reference's upsert semantics (S8/J4/T4).
+    ``target_path``, partitioned by ``partition_cols``, keyed by ``keys``,
+    newest-by-``order_col`` winning — the reference's upsert semantics
+    (S8/J4/T4).
+
+    ``partition_cols`` must name at least one column: the merge replaces
+    whole partitions, and a table without one is a single partition, so
+    its overwrite would delete the table it reads. An empty list raises
+    :class:`ValueError` before anything is read or written.
 
     ``batch_parts`` is the batch's distinct partition values as rows
     (what ``new.select(*partition_cols).distinct().collect()`` returns);
@@ -176,8 +143,8 @@ def merge_upsert(
     DQ gate's scan) passes them in. Without it the merge collects them
     itself. A value with no rows in ``new`` is allowed: that partition is
     rewritten with its own rows. A batch row in a partition that
-    ``batch_parts`` misses raises ValueError, and the target is left as
-    it was.
+    ``batch_parts`` misses fails the write with an error that says it
+    "did not read back" that partition, and the target is left as it was.
 
     Only the named partitions' leaf directories are read back, with
     ``new``'s schema, so no footer-inference job runs and no other
@@ -185,74 +152,48 @@ def merge_upsert(
     last. The batch's schema is the table's: rewritten partitions carry
     exactly ``new``'s columns.
 
-    Idempotent: re-merging the same batch leaves the table unchanged.
-    An EMPTY batch is a no-op — without the early return an unpartitioned
-    table would be rewritten whole to change nothing (a quarantine gate
-    that rejects a whole micro-batch hits exactly this).
-
-    The first write into a missing target is one direct write. Otherwise
-    the merged partitions are staged and committed by rename (module
-    docstring). A failed staged write deletes staging and leaves the
-    target untouched; a commit that fails part-way keeps staging — it
-    holds the not-yet-committed and the replaced partitions — and names
-    it in the raised error.
+    Idempotent: re-merging the same batch leaves the table unchanged. An
+    EMPTY batch into an existing table is a no-op (a quarantine gate that
+    rejects a whole micro-batch hits exactly this). A missing target is
+    created by the same write, with nothing to read back.
     """
-    partition_cols = partition_cols or []
-
-    if not fsio.exists(spark, target_path):
-        writer = dedup_last_write_wins(new, keys, order_col).write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(target_path)
-        return
-
-    if partition_cols:
-        if batch_parts is None:
-            batch_parts = new.select(*partition_cols).distinct().collect()
-        if not batch_parts:
-            return  # empty batch: nothing to merge, nothing to touch
-        read_back = {leaf_path(spark, partition_cols, row) for row in batch_parts}
-    elif new.isEmpty():
-        return  # empty batch: a full-table rewrite would be a no-op
-    else:
-        read_back = {""}
+    if not partition_cols:
+        raise ValueError(
+            f"merge into {target_path} needs partition columns: an overwrite "
+            "without them would replace the whole table"
+        )
 
     # source tag: on an exact order_col tie the BATCH row must win
     # (the reference's ON CONFLICT DO UPDATE always takes the new row)
     rows = new.withColumn("__src", F.lit(1))
-    affected = read_partitions(spark, target_path, new.schema, read_back)
-    if affected is not None:
-        rows = affected.withColumn("__src", F.lit(0)).unionByName(
-            rows.select(*affected.columns, "__src")
-        )
+    if fsio.exists(spark, target_path):
+        if batch_parts is None:
+            batch_parts = new.select(*partition_cols).distinct().collect()
+        if not batch_parts:
+            return  # empty batch: nothing to merge, nothing to touch
+        read_back = _in_partitions(partition_cols, batch_parts)
+        stray = F.raise_error(F.lit(
+            f"merge into {target_path} has a batch row in a partition it did not "
+            "read back; batch_parts must name every partition of the batch"
+        ))
+        rows = rows.withColumns({
+            c: F.when(read_back, F.col(c)).otherwise(stray) for c in partition_cols
+        })
+        leaves = {leaf_path(spark, partition_cols, row) for row in batch_parts}
+        affected = read_partitions(spark, target_path, new.schema, leaves)
+        if affected is not None:
+            rows = affected.withColumn("__src", F.lit(0)).unionByName(
+                rows.select(*affected.columns, "__src")
+            )
     merged = dedup_last_write_wins(
         rows, keys, order_col, tiebreak_cols=["__src"]
     ).drop("__src")
-
-    staging = target_path.rstrip("/") + f"__stage_{uuid.uuid4().hex[:8]}"
-    staged = f"{staging}/new"
-    try:
-        writer = merged.write
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staged)
-    except BaseException:
-        fsio.delete(spark, staging)
-        raise
-    try:
-        _commit_staged(
-            spark, staged, f"{staging}/old", target_path, len(partition_cols),
-            read_back,
-        )
-    except ValueError:
-        fsio.delete(spark, staging)  # raised before the first rename
-        raise
-    except Exception as e:
-        raise RuntimeError(
-            f"merge into {target_path} failed part-way through its commit; "
-            f"uncommitted and replaced partitions are kept in {staging}"
-        ) from e
-    fsio.delete(spark, staging)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(target_path)
+    )
 
 
 def agg_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:

@@ -6,9 +6,9 @@ collapses into one function call: bronze JSON scan → flatten → DQ gate →
 partition-scoped merge into silver → daily mart. The reference's process
 boundaries (Airflow tasks, XCom, psycopg2) become Spark job boundaries. A
 warm cycle into existing silver and gold runs five jobs: the gate's scan
-(which also observes the batch's months), the merge's staged write (two
-under AQE) and the gold refresh's write (two). The only shuffles are the
-merge's key dedup and the mart's groupBy.
+(which also observes the batch's months), the merge's dynamic-overwrite
+write (two under AQE) and the gold refresh's write (two). The only
+shuffles are the merge's key dedup and the mart's groupBy.
 
 **Layout: silver and gold are partitioned by month** — the UTC calendar
 month (``ym``, ``yyyy-MM``) of silver's ``timestamp`` and of gold's

@@ -14,8 +14,8 @@ Design decisions:
   replaces only the partitions it writes, never the whole table (a
   full-table rewrite is the thing that does NOT survive a 100x scale-up).
   Writers whose correctness depends on it also pin it per write
-  (``.option("partitionOverwriteMode", "dynamic")``); ``merge_upsert``
-  does not use it at all — it commits staged partitions by rename.
+  (``.option("partitionOverwriteMode", "dynamic")``): the silver merge
+  and the gold refresh among them.
 - shuffle partitions default to the local core count; on a real cluster this
   is overridden (or left to AQE's coalescing with a high initial value).
 """

@@ -453,7 +453,7 @@ def run_streaming_elt(
 
         # Evaluate the bronze JSON flatten ONCE per epoch, not once per
         # sink: without the checkpoint the quarantine write, the
-        # touched-months collect, the merge's staged write, and the gold
+        # touched-months collect, the merge's write, and the gold
         # refresh each re-read and re-flatten the landing files — the
         # run_streaming_corpus_ingest discipline. Executor loss mid-epoch
         # fails the task and Structured Streaming replays the epoch from
@@ -578,8 +578,9 @@ def run_streaming_mart_maintenance(
         )
         # localCheckpoint before the overwrite commit: `merged` reads the
         # very files the new version supersedes — materialize first so the
-        # plan cannot observe its own write (merge_upsert stages its
-        # merged rows outside the target for the same reason).
+        # plan cannot observe its own write (merge_upsert's dynamic
+        # overwrite writes its merged rows into a staging directory first
+        # for the same reason).
         # Released after the commit: a maintenance tick must leave ZERO
         # pinned blocks behind or a long-lived mart driver leaks one
         # state copy per epoch.

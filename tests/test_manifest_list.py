@@ -269,6 +269,25 @@ def test_vt_maintain_long_session_stays_bounded(spark, table):
     assert got == list(range(n_ticks * rows_per_tick))
 
 
+def test_spark_manifest_write_keeps_its_file_when_the_rename_fails(
+    spark, table, monkeypatch
+):
+    """Off the local filesystem a manifest file is written by Spark into
+    a ``__dir`` and renamed out of it. A rename that returns False must
+    raise and keep the ``__dir``, which then holds the only copy of the
+    file, instead of deleting it."""
+    from endtoend_etl_openmeteo_spark import fsio
+
+    vt_append(spark, _wave(spark, 0, 8, 2), table, stats_cols=["id"])
+    entries = read_manifest(spark, table)["files"]
+    monkeypatch.setattr(ml, "_is_local", lambda spark, table: False)
+    monkeypatch.setattr(fsio, "rename", lambda spark, src, dst: False)
+    with pytest.raises(OSError, match="is kept"):
+        ml.spill_entries(spark, table, entries)
+    kept = list(Path(table, ml._MANIFEST_DIR).glob("*__dir"))
+    assert len(kept) == 1 and list(kept[0].glob("*.parquet"))
+
+
 def test_ref_summary_unpublishable_columns_stay_conservative():
     """The ref-level summary must stay a SUPERSET of entry-level pruning:
     a column any entry carries without summarizable bounds — [x, None] /

@@ -208,11 +208,9 @@ ELT_PATH_MODULES = (
 )
 
 
-def test_elt_path_builds_local_frames_through_local_rows():
-    """Static guard: on the ELT path, driver-local rows enter Spark only
-    through ``session.local_rows`` (a JVM local relation). A
-    ``createDataFrame(`` or ``parallelize(`` there would build a
-    pickled-row frame whose every scan starts a Python worker."""
+def _elt_path_calls():
+    """(``module:line``, called name, the called object's name or None)
+    of every call in :data:`ELT_PATH_MODULES`."""
     import ast
     from pathlib import Path
 
@@ -222,15 +220,40 @@ def test_elt_path_builds_local_frames_through_local_rows():
         p = pkg / entry
         paths += sorted(p.rglob("*.py")) if p.is_dir() else [p]
     assert all(p.is_file() for p in paths), paths
-    offenders = [
-        f"{p.relative_to(pkg)}:{node.lineno}"
+    return [
+        (
+            f"{p.relative_to(pkg)}:{node.lineno}",
+            getattr(node.func, "attr", getattr(node.func, "id", None)),
+            getattr(getattr(node.func, "value", None), "id", None),
+        )
         for p in paths
         for node in ast.walk(ast.parse(p.read_text()))
         if isinstance(node, ast.Call)
-        and getattr(node.func, "attr", getattr(node.func, "id", None))
-        in ("createDataFrame", "parallelize")
+    ]
+
+
+def test_elt_path_builds_local_frames_through_local_rows():
+    """Static guard: on the ELT path, driver-local rows enter Spark only
+    through ``session.local_rows`` (a JVM local relation). A
+    ``createDataFrame(`` or ``parallelize(`` there would build a
+    pickled-row frame whose every scan starts a Python worker."""
+    offenders = [
+        where for where, name, _ in _elt_path_calls()
+        if name in ("createDataFrame", "parallelize")
     ]
     assert not offenders, f"build these frames with session.local_rows: {offenders}"
+
+
+def test_elt_path_commits_through_spark_writers():
+    """Static guard: the ELT path commits its partitioned writes with
+    Spark's own writers (the merge and the gold refresh overwrite
+    dynamically). An ``fsio.rename(`` or ``fsio.mkdirs(`` call there would
+    be a hand-rolled commit protocol beside Spark's ``commitJob``."""
+    offenders = [
+        where for where, name, obj in _elt_path_calls()
+        if obj == "fsio" and name in ("rename", "mkdirs")
+    ]
+    assert not offenders, f"commit through a Spark writer: {offenders}"
 
 
 @pytest.fixture(scope="module")

@@ -11,6 +11,7 @@ import uuid
 from pathlib import Path
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -264,9 +265,12 @@ def test_merge_rewrites_only_touched_partitions(spark, workdir):
 
 
 def _stage_dirs(path):
-    """Staging directories left beside the table at ``path``."""
+    """Staging directories left inside the table at ``path`` (Spark's
+    dynamic-overwrite ``.spark-staging-*``) or beside it (``__stage_*``)."""
     base = Path(path)
-    return [p.name for p in base.parent.iterdir() if p.name.startswith(base.name + "__stage_")]
+    return [p.name for p in base.iterdir() if p.name.startswith(".spark-staging-")] + [
+        p.name for p in base.parent.iterdir() if p.name.startswith(base.name + "__stage_")
+    ]
 
 
 def _leaf_files(path):
@@ -381,10 +385,10 @@ def test_merge_readback_prunes_to_batch_partitions(spark, workdir):
 
 def test_merge_raises_when_batch_parts_miss_a_partition(spark, workdir):
     """``batch_parts`` names the partitions the merge reads back. A batch
-    row in a partition it misses would be staged without that partition's
-    other rows, and its rename would delete them. The merge raises before
-    its first rename instead, leaving every target file byte-identical and
-    no staging directory."""
+    row in a partition it misses would be written without that partition's
+    other rows, and the overwrite would delete them. The merge's write job
+    fails before its commit instead, leaving every target file
+    byte-identical and no staging directory."""
     path = str(workdir / "t")
     t0, t1 = dt.datetime(2026, 1, 1), dt.datetime(2026, 1, 2)
     schema = "k string, p int, v string, ord timestamp"
@@ -397,7 +401,7 @@ def test_merge_raises_when_batch_parts_miss_a_partition(spark, workdir):
     )
     before = _partition_files(path)
     batch = spark.createDataFrame([("k1", 1, "a2", t1), ("k2", 2, "b2", t1)], schema)
-    with pytest.raises(ValueError, match="did not read back"):
+    with pytest.raises(SparkRuntimeException, match="did not read back"):
         merge_upsert(
             spark, batch, path, ["k"], "ord", partition_cols=["p"],
             batch_parts=[Row(p=1)],
@@ -750,16 +754,35 @@ def test_merge_tie_on_order_col_keeps_batch_row(spark, tmp_path):
 
     path = str(tmp_path / "t")
     ts = dt.datetime(2026, 1, 1, 12)
-    schema = "k long, v string, ord timestamp"
+    schema = "k long, v string, ord timestamp, p int"
     merge_upsert(
-        spark, spark.createDataFrame([(1, "stale", ts)], schema), path,
-        ["k"], "ord",
+        spark, spark.createDataFrame([(1, "stale", ts, 0)], schema), path,
+        ["k"], "ord", ["p"],
     )
     merge_upsert(
-        spark, spark.createDataFrame([(1, "corrected", ts)], schema), path,
-        ["k"], "ord",
+        spark, spark.createDataFrame([(1, "corrected", ts, 0)], schema), path,
+        ["k"], "ord", ["p"],
     )
     assert [r.v for r in spark.read.parquet(path).collect()] == ["corrected"]
+
+
+def test_merge_without_partition_columns_raises_and_touches_nothing(spark, workdir):
+    """The merge replaces whole partitions, so with no partition column it
+    would overwrite the whole table it reads. An empty ``partition_cols``
+    raises up front and leaves every target file byte-identical."""
+    path = str(workdir / "t")
+    t0 = dt.datetime(2026, 1, 1)
+    schema = "k long, p int, v string, ord timestamp"
+    merge_upsert(
+        spark, spark.createDataFrame([(1, 0, "a", t0), (2, 1, "b", t0)], schema),
+        path, ["k"], "ord", ["p"],
+    )
+    before = _partition_files(path)
+    batch = spark.createDataFrame([(1, 0, "a2", dt.datetime(2026, 1, 2))], schema)
+    with pytest.raises(ValueError, match="partition columns"):
+        merge_upsert(spark, batch, path, ["k"], "ord", [])
+    assert _partition_files(path) == before
+    assert {r.v for r in spark.read.parquet(path).collect()} == {"a", "b"}
 
 
 def test_merge_preserves_null_partition_rows(spark, tmp_path):
