@@ -21,15 +21,19 @@ Scale design:
 - The dedup window shuffles on the merge keys only — no global sort.
 - **Committed by Spark's dynamic-overwrite writer**, pinned on the writer
   as the gold refresh pins it, not trusted from the session. Its tasks
-  write into ``<target>/.spark-staging-<job>/``, which readers skip, and
-  its ``commitJob`` replaces each written leaf partition directory by a
-  delete then a rename; no other partition is touched. The merged rows
-  carry every surviving old row of their partitions, so until the rename
-  each partition's data exists in the target or in the staging directory:
-  a crash inside ``commitJob`` leaves the not-yet-renamed partitions'
-  rows in ``.spark-staging-<job>/``, where no reader sees them and nothing
-  recovers them. A failed write job aborts and deletes its staging
-  directory before any commit.
+  write into ``<target>/.spark-staging-<job>/``, which readers skip; a
+  task failure aborts the job, and its staging directory is deleted
+  before any commit. ``commitJob`` then replaces each written leaf
+  partition directory by a delete and a rename; no other partition is
+  touched.
+- **A commit that fails part-way loses data (open risk, ROADMAP
+  direction 1).** Between a leaf's delete and its rename, its merged rows
+  (every surviving old row included) exist only in the staging
+  directory. A crash there strands them where no reader sees them and
+  nothing recovers them. A ``commitJob`` that fails with an error (a
+  rename returning false, an ``IOException``) is aborted, and the abort
+  deletes the staging directory: each partition deleted but not yet
+  renamed loses both its old and its merged rows.
 - **A batch row outside ``batch_parts`` fails the write.** Its partition
   was not read back, so committing it would replace that partition with
   the batch's rows only. Each batch row's partition values pass through
