@@ -12,6 +12,7 @@ A path is a string, or the Hadoop ``Path`` of a ``FileStatus`` that
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -49,13 +50,41 @@ def mkdirs(spark: SparkSession, path) -> None:
     fs.mkdirs(p)
 
 
+def _java_error(e: Py4JJavaError) -> str:
+    """Class name of the Java exception behind a py4j error."""
+    return e.java_exception.getClass().getName()
+
+
+def _nio_path(spark: SparkSession, fs, p):
+    """The ``java.nio.file.Path`` of a path on the local filesystem."""
+    return spark._jvm.java.io.File(fs.makeQualified(p).toUri()).toPath()
+
+
 def rename(spark: SparkSession, src, dst) -> bool:
-    """Hadoop rename. It refuses to replace an existing file, returning
-    False, which makes it a compare-and-swap on the destination name.
-    Renaming a directory onto an EXISTING directory nests the source
-    inside it instead of replacing it."""
+    """Rename ``src`` to ``dst``; False when ``dst`` already exists, which
+    makes a file rename a compare-and-swap on the destination name.
+
+    The local filesystem's Hadoop rename checks for ``dst`` and then
+    calls ``rename(2)``, which replaces, so two racing renames can both
+    win. There a file is hard-linked to ``dst`` instead (``link(2)``
+    fails atomically when ``dst`` exists) and ``src`` is then removed.
+    Directories, and files on other filesystems (HDFS renames
+    atomically), take Hadoop's rename: a directory renamed onto an
+    EXISTING directory nests inside it instead of replacing it."""
     fs, s = _resolve(spark, src)
-    return bool(fs.rename(s, _hpath(spark, dst)))
+    d = _hpath(spark, dst)
+    if fs.getScheme() != "file" or not fs.isFile(s):
+        return bool(fs.rename(s, d))
+    try:
+        spark._jvm.java.nio.file.Files.createLink(
+            _nio_path(spark, fs, d), _nio_path(spark, fs, s)
+        )
+    except Py4JJavaError as e:
+        if _java_error(e) == "java.nio.file.FileAlreadyExistsException":
+            return False
+        raise
+    fs.delete(s, False)
+    return True
 
 
 def list_status(spark: SparkSession, path):
@@ -114,21 +143,31 @@ def write_bytes(spark: SparkSession, path, payload: bytes) -> None:
 
 def create_new(spark: SparkSession, path, payload: bytes) -> bool:
     """Create ``path`` holding ``payload`` only if it does not exist: True
-    if this call created it, False if the file already existed. Atomic
-    where ``create(overwrite=False)`` is (the local filesystem, HDFS).
-    Any other failure raises."""
+    if this call created it, False if the file already existed. Any other
+    failure raises.
+
+    Atomic on the local filesystem, where the file is opened with
+    ``O_EXCL`` (Hadoop's local ``create(overwrite=False)`` checks, then
+    opens), and wherever ``create(overwrite=False)`` is (HDFS)."""
     fs, p = _resolve(spark, path)
     try:
-        out = fs.create(p, False)
-    except Exception as e:
+        if fs.getScheme() == "file":
+            nio = spark._jvm.java.nio.file
+            opts = spark.sparkContext._gateway.new_array(nio.OpenOption, 2)
+            opts[0] = nio.StandardOpenOption.CREATE_NEW
+            opts[1] = nio.StandardOpenOption.WRITE
+            fs.mkdirs(p.getParent())
+            out = nio.Files.newOutputStream(_nio_path(spark, fs, p), opts)
+        else:
+            out = fs.create(p, False)
+    except Py4JJavaError as e:
         # The create's own already-exists error decides, because whoever
         # holds the file may delete it before an exists() check could see
         # it; permission or connectivity failures raise as themselves.
-        java = getattr(e, "java_exception", None)
-        already = java is not None and java.getClass().getName() == (
-            "org.apache.hadoop.fs.FileAlreadyExistsException"
-        )
-        if not already and not fs.exists(p):
+        if _java_error(e) not in (
+            "java.nio.file.FileAlreadyExistsException",
+            "org.apache.hadoop.fs.FileAlreadyExistsException",
+        ) and not fs.exists(p):
             raise
         return False
     try:

@@ -1,13 +1,14 @@
-"""Compaction tick for stored serving indexes — the maintenance half of
+"""Compaction tick for the stored ANN indexes — the maintenance half of
 build-once / append-many.
 
-The incremental append paths (operators/similarity.append_ivf_index,
-operators/search.append_inverted_index) deliberately never rewrite
-existing files: each batch lands one file set under its ``cell=`` /
-``bkt=`` partitions. Under continuous ingestion that accretes one file
-per batch per touched partition forever — the small-file disease
-vt_maintain (operators/versioned.py) cures for the versioned table
-format, now cured for the plain partitioned serving layouts too.
+The incremental append path (operators/similarity.append_ivf_index)
+deliberately never rewrites existing files: each batch lands one file
+set under its ``cell=`` partitions. Under continuous ingestion that
+accretes one file per batch per touched partition forever — the
+small-file disease vt_maintain (operators/versioned.py) cures for the
+versioned table format, cured here for the plain partitioned serving
+layouts. (The stored BM25 index is a versioned table; its maintenance
+is ``vt_maintain``.)
 Reference analog: the reference's materialized-mart refresh keeps its
 serving artifact compact on every rebuild (dbt/models/marts/
 fct_city_day.sql:1); these indexes are append-only, so compaction is a
@@ -16,7 +17,7 @@ separate tick.
 Scale shape:
 - Fragmentation detection is pure filesystem METADATA: one directory
   listing per partition, no data read. Partition counts are bounded
-  (IVF nlist, BM25 term buckets), so the listing is O(partitions).
+  (IVF nlist), so the listing is O(partitions).
 - Only fragmented partitions are rewritten. The read is partition-pruned
   (``part IN (...)`` on the partition column → PartitionFilters), the
   write uses dynamic partition overwrite, so a 10k-cell index with 40
@@ -29,19 +30,18 @@ Scale shape:
 Concurrency contract: compaction must be SERIALIZED with appends to the
 same index. Dynamic partition overwrite replaces whole partition
 directories; an append racing the overwrite window could land a file
-that the commit then clobbers, and the BM25 append's stats-sidecar
-merge is a read-modify-write that a concurrent writer would lose. The
-serialization is ENFORCED, not documented: every writer (append tick or
-compaction tick) takes the index's ``_maintenance.lock`` via
-:func:`index_lease` — one lease, an atomic create-fails-if-exists marker
-(``fsio.create_new``) — so the losing writer raises
-:class:`LeaseConflictError` immediately and retries, instead of being
-silently clobbered. All file access goes through ``fsio``, the package's
-one Hadoop filesystem layer. Readers never take the lease: a reader racing a
-tick may briefly see a fragmented partition mid-replace — the versioned
-table format (operators/versioned.py) is the transactional story; these
-layouts trade reader snapshots (not writer safety) for zero-manifest
-serving simplicity.
+that the commit then clobbers. The serialization is ENFORCED, not
+documented: every writer (append tick or compaction tick) takes the
+index's ``_maintenance.lock`` via :func:`index_lease` — one lease, an
+atomic create-fails-if-exists marker (``fsio.create_new``) — so the
+losing writer raises :class:`LeaseConflictError` immediately and
+retries, instead of being silently clobbered. All file access goes
+through ``fsio``, the package's one Hadoop filesystem layer. Readers
+never take the lease: a reader racing a tick may briefly see a
+fragmented partition mid-replace — the versioned table format
+(operators/versioned.py) is the transactional story; these layouts trade
+reader snapshots (not writer safety) for zero-manifest serving
+simplicity.
 """
 
 from __future__ import annotations
@@ -170,7 +170,7 @@ def partition_file_counts(
 ) -> dict[str, int]:
     """Data-file count per ``part_col=<value>`` directory — the
     fragmentation signal, read from directory listings only (no data
-    scan; measured 0.04 s for a 16-bucket index — listing is never the
+    scan; measured 0.04 s for a 16-partition index — listing is never the
     tick's cost). Keys are the DECODED partition values: Spark
     URI-escapes special characters in directory names (space → %20,
     colon → %3A, ...), but the scan's DataFrame carries the unescaped
@@ -225,15 +225,15 @@ def compact_partitions(
     into ceil(rows / target_rows_per_file) files; leave every other
     partition's files byte-for-byte untouched (their directories are
     never written, listed rows never read). Root-level sidecars
-    (``_stats.json``, ``_quantizer.json``) are invisible to the
+    (``_quantizer.json``) are invisible to the
     partition overwrite and survive as-is.
 
     Takes the index's maintenance lease for the whole tick (see
     :func:`index_lease`) so an append can't land a file inside the
     overwrite window; pass ``lease=False`` only when the caller already
     holds it. A ``__HIVE_DEFAULT_PARTITION__`` directory (null partition
-    key — no current producer emits one: IVF cells and BM25 term buckets
-    are non-null by construction) is left untouched and counted in
+    key — no current producer emits one: IVF cells are non-null by
+    construction) is left untouched and counted in
     ``partitions_skipped_null`` rather than crashing the int cast or
     silently matching nothing.
 
@@ -330,12 +330,12 @@ def _read_tombstones(spark, path: str, id_col: str = "id") -> "DataFrame | None"
     O(deletes), never O(index).
 
     ``part`` is the OPTIONAL partition hint the deleter recorded
-    (``"cell=5"`` / ``"bkt=12"``) so the vacuum tick can prune its
+    (``"cell=5"``) so the vacuum tick can prune its
     discovery scan to candidate partitions; NULL means "unknown — scan".
     Sidecar files written before the hint existed carry only ``id`` and
     read as NULL ``part`` (explicit read schema = parquet column
-    back-fill). An id may repeat across parts (a BM25 doc's postings span
-    one bucket per term); consumers joining on ``id_col`` alone must
+    back-fill). An id may repeat across parts (a caller may hint several
+    partitions for one id); consumers joining on ``id_col`` alone must
     de-dup first (anti/semi joins don't care)."""
     tomb = _tombstone_path(path)
     if not fsio.exists(spark, tomb) or not any(
@@ -365,15 +365,14 @@ def delete_from_stored_index(
 
     ``vec_ids``: an iterable of ids, a one-column DataFrame, or a
     DataFrame carrying a ``part`` string column alongside the ids — the
-    partition hint (``"cell=5"`` / ``"bkt=12"``) that lets
+    partition hint (``"cell=5"``) that lets
     :func:`vacuum_index_tombstones` prune its discovery scan to the
     named partitions instead of full-scanning the index. Deleters that
-    know the partition (BM25 computes term buckets from the doc text;
-    ANN callers with the vector in hand assign its cell through the
-    stored quantizer — see similarity.ivf_cells_for_vectors) should record
-    it; bare ids stay correct and fall back to the scan. The hint MUST
-    name a partition column whose value is stable for the row (``cell``,
-    ``bkt`` — never ``_epoch``, which consolidation rewrites); vacuum
+    know the partition (callers with the vector in hand assign its cell
+    through the stored quantizer — see similarity.ivf_cells_for_vectors)
+    should record it; bare ids stay correct and fall back to the scan.
+    The hint MUST name a partition column whose value is stable for the
+    row (``cell`` — never ``_epoch``, which consolidation rewrites); vacuum
     validates the column name and ignores unstable/unknown hints loudly.
     Takes the maintenance lease (a delete racing a vacuum's sidecar
     clear would vanish). Returns the number of distinct ids tombstoned.
@@ -414,8 +413,8 @@ def delete_from_stored_index(
         )
     # The tombstone batch is bounded metadata (O(deletes)); collect it
     # ONCE and write the local rows back as a single file — evaluating
-    # the caller's id lineage a second time for the count (BM25's hinted
-    # frame tokenizes the batch) was the delete path's dominant cost. A
+    # the caller's id lineage a second time for the count was the delete
+    # path's dominant cost. A
     # batch beyond LOCAL_TOMBSTONE_ROWS_MAX (a caller outside the design
     # envelope — e.g. a 10M-id purge) is detected by the limit probe and
     # falls back to a fully distributed distinct+write instead of
@@ -515,8 +514,8 @@ def vacuum_index_tombstones(
     delete any partition left with zero survivors, then clear the
     sidecar. Layout-aware: the partition columns come from the directory
     names themselves — flat IVF/IVF-PQ indexes rewrite ``cell=``
-    directories, the BM25 index rewrites ``bkt=`` buckets, the
-    stream-managed layout rewrites ``(_epoch, cell)`` pairs. One
+    directories, the stream-managed layout rewrites ``(_epoch, cell)``
+    pairs. One
     bounded maintenance tick under the lease; serving is identical
     before and after (the serve-time anti-join already hid the rows).
     Returns {"tombstones", "rows_removed", "partitions_rewritten"}.
@@ -526,7 +525,7 @@ def vacuum_index_tombstones(
     a tombstoned id's partitions reads ONLY the hinted partitions —
     O(touched partitions), not O(index). Any bare-id tombstone, or a
     hint naming a column that isn't the layout's stable partition
-    column (``cell`` / ``bkt``; ``_epoch`` moves under consolidation so
+    column (``cell``; ``_epoch`` moves under consolidation so
     an epoch hint could silently miss the row and resurrect it when the
     sidecar clears), falls the whole tick back to the full discovery
     scan — correct first, pruned when provably safe.

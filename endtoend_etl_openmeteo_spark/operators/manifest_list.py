@@ -321,21 +321,37 @@ def load_ref_entries(
     return sorted(out, key=lambda e: e["path"])
 
 
-def prune_refs(
-    refs: list[dict], prune: tuple[str, object, object] | None
-) -> list[dict]:
+def prune_ranges(prune: tuple) -> tuple[str, list[tuple]]:
+    """A stats prune as ``(col, [(lo, hi), ...])``: the range form
+    ``(col, lo, hi)`` is one interval, the value-set form
+    ``(col, values)`` one point interval per value."""
+    if len(prune) == 3:
+        col, lo, hi = prune
+        return col, [(lo, hi)]
+    col, values = prune
+    return col, [(v, v) for v in values]
+
+
+def _numeric(v) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+def prune_refs(refs: list[dict], prune: tuple | None) -> list[dict]:
     """Ref-level summary skipping (driver, O(#refs)): drop a whole
     manifest file iff its per-column summary proves no entry can
-    intersect [lo, hi]. Conservative when the summary lacks the column."""
+    intersect the prune's ranges (:func:`prune_ranges`). Conservative
+    when the summary lacks the column."""
     if prune is None:
         return refs
-    col, lo, hi = prune
-    numeric = isinstance(lo, (int, float)) and not isinstance(lo, bool)
+    col, ranges = prune_ranges(prune)
+    if not ranges:
+        return []  # an empty value set matches no row
+    numeric = _numeric(ranges[0][0])
     kept = []
     for r in refs:
         summary = (r.get("nstats") if numeric else r.get("sstats")) or {}
         mm = summary.get(col)
-        if mm is None or (mm[0] <= hi and mm[1] >= lo):
+        if mm is None or any(mm[0] <= hi and mm[1] >= lo for lo, hi in ranges):
             kept.append(r)
     return kept
 
@@ -344,20 +360,24 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _stat_prune_sql(prune: tuple[str, object, object]) -> str:
-    col, lo, hi = prune
+def _stat_prune_sql(prune: tuple) -> str:
+    col, ranges = prune_ranges(prune)
+    if not ranges:
+        return "false"  # an empty value set matches no row
     key = _sql_str(col)
-    if isinstance(lo, (int, float)) and not isinstance(lo, bool):
-        lo_s = repr(_num_down(lo))
-        hi_s = repr(_num_up(hi))
-        return (
-            f"nstats[{key}] IS NULL OR "
-            f"(nstats[{key}].lo <= {hi_s} AND nstats[{key}].hi >= {lo_s})"
-        )
-    return (
-        f"sstats[{key}] IS NULL OR "
-        f"(sstats[{key}].lo <= {_sql_str(hi)} AND sstats[{key}].hi >= {_sql_str(lo)})"
-    )
+    if _numeric(ranges[0][0]):
+        m = f"nstats[{key}]"
+        hits = [
+            f"({m}.lo <= {_num_up(hi)!r} AND {m}.hi >= {_num_down(lo)!r})"
+            for lo, hi in ranges
+        ]
+    else:
+        m = f"sstats[{key}]"
+        hits = [
+            f"({m}.lo <= {_sql_str(hi)} AND {m}.hi >= {_sql_str(lo)})"
+            for lo, hi in ranges
+        ]
+    return f"{m} IS NULL OR " + " OR ".join(hits)
 
 
 def _bloom_prune_sql(prune_eq: tuple[str, object]) -> str:
@@ -401,7 +421,7 @@ def prune_entries_spark(
     spark: SparkSession,
     table: str,
     refs: list[dict],
-    prune: tuple[str, object, object] | None = None,
+    prune: tuple | None = None,
     prune_eq: tuple[str, object] | None = None,
 ) -> list[dict]:
     """Two-stage scan planning over a spilled manifest: ref summaries

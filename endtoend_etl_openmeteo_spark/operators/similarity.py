@@ -941,8 +941,7 @@ def _quantizer_path(index_path: str) -> str:
 
 def _write_quantizer(spark, index_path: str, payload: dict) -> None:
     """Write the stored-IVF quantizer sidecar through the Hadoop FS (not
-    open()), so it lives wherever the vector data does (file:/hdfs:/s3:),
-    same as the BM25 index's _stats.json."""
+    open()), so it lives wherever the vector data does (file:/hdfs:/s3:)."""
     payload_bytes = json.dumps(payload).encode("utf-8")
     fsio.write_bytes(spark, _quantizer_path(index_path), payload_bytes)
 
@@ -962,8 +961,7 @@ def write_ivf_index(
     """Materialize an IVF index: cell-assigned vectors stored
     ``partitionBy("cell")`` plus a ``_quantizer.json`` sidecar holding the
     trained centroids (underscore-prefixed: invisible to Spark's data-file
-    discovery — the ``_stats.json`` pattern of the stored BM25 index,
-    operators/search.py).
+    discovery).
 
     The stored layout IS the serving optimization: a query batch probes
     nprobe cells, and because ``cell`` is the partition column the scan

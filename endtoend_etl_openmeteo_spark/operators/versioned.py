@@ -12,9 +12,13 @@ designs, not their code) is a tiny commit protocol:
 - a snapshot is a MANIFEST: one small JSON listing exactly the files that
   make up a version;
 - commit = write manifest to a temp name, then RENAME to
-  ``_manifests/v%08d.json``. Hadoop's rename refuses to replace an
-  existing destination, so the version namespace is a compare-and-swap:
-  two racing writers produce two consecutive versions, never a torn one;
+  ``_manifests/v%08d.json``. ``fsio.rename`` refuses to replace an
+  existing destination, atomically (on the local filesystem by a hard
+  link), so the version namespace is a compare-and-swap: two racing
+  writers produce two consecutive versions, never a torn one;
+- a manifest may carry a ``meta`` dict — the caller's snapshot metadata,
+  committed atomically with the files (a stored BM25 index's corpus
+  stats). Commits carry it forward unless the writer derives a new one;
 - readers resolve a manifest ONCE and scan only its files — a concurrent
   compaction commits a new version without touching the files an open
   reader holds (snapshot isolation), and any historical version stays
@@ -100,6 +104,20 @@ class ConcurrentWriteError(RuntimeError):
     snapshot (merge/delete/compact). The caller must re-run the operation
     against the new current version — retrying the stale commit would
     silently erase the other writer's changes."""
+
+
+def _carry(parent: dict, meta=None, **fields) -> dict:
+    """The snapshot-level fields of a commit made from ``parent``: its
+    ``schema`` and its ``meta`` dict carry forward unchanged, ``fields``
+    override them, and ``meta`` (a function of the parent's meta, for the
+    writers that take one) replaces the carried meta. ``meta`` is the
+    caller's own snapshot metadata — a stored BM25 index keeps its corpus
+    stats there, so they commit atomically with the postings."""
+    out = {k: parent[k] for k in ("schema", "meta") if k in parent}
+    if meta is not None:
+        out["meta"] = meta(parent.get("meta", {}))
+    out.update(fields)
+    return out
 
 
 def _build_file_tier(
@@ -652,21 +670,24 @@ def _align(df: DataFrame, schema) -> DataFrame:
     )
 
 
-def _prune_entries(
-    entries: list[dict], prune: tuple[str, object, object] | None
-) -> list[dict]:
-    """Manifest-stats file skipping: keep an entry iff its recorded
-    [min, max] for ``col`` intersects [lo, hi]; entries with no recorded
-    stats are conservatively kept."""
+def _prune_entries(entries: list[dict], prune: tuple | None) -> list[dict]:
+    """Manifest-stats file skipping: ``prune=(col, lo, hi)`` keeps an entry
+    iff its recorded [min, max] for ``col`` intersects [lo, hi], and
+    ``prune=(col, values)`` iff some value lies in [min, max]; entries
+    with no recorded stats are conservatively kept."""
+    from endtoend_etl_openmeteo_spark.operators.manifest_list import prune_ranges
+
     if prune is None:
         return entries
-    col, lo, hi = prune
+    col, ranges = prune_ranges(prune)
+    if not ranges:
+        return []  # an empty value set matches no row
     kept = []
     for e in entries:
         mm = e.get("stats", {}).get(col)
         if mm is None or mm[0] is None or mm[1] is None:
             kept.append(e)  # unknown -> cannot skip
-        elif mm[0] <= hi and mm[1] >= lo:
+        elif any(mm[0] <= hi and mm[1] >= lo for lo, hi in ranges):
             kept.append(e)
     return kept
 
@@ -820,11 +841,15 @@ def vt_append(
     table: str,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
+    meta=None,
 ) -> int:
     """Append ``df`` as a new snapshot: parent's files + the new files.
     ``stats_cols`` records per-file min/max in the manifest for
     :func:`vt_files` range pruning; ``bloom_cols`` records per-file
-    bloom sidecars for ``prune_eq`` point-lookup skipping."""
+    bloom sidecars for ``prune_eq`` point-lookup skipping. ``meta``, a
+    function of the parent's manifest ``meta``, sets the new snapshot's;
+    when the commit loses its version slot it is re-applied to the
+    winner's meta, so two racing appends' contributions both count."""
     from pyspark.sql.types import StructType
 
     parent = latest_version(spark, table)
@@ -847,7 +872,9 @@ def vt_append(
         # and re-merge schemas — both appends land, in either commit order
         return (
             files,
-            {"schema": _merge_schema(winner.get("schema"), df.schema)},
+            _carry(
+                winner, meta, schema=_merge_schema(winner.get("schema"), df.schema)
+            ),
             winner,
             (),
         )
@@ -858,7 +885,7 @@ def vt_append(
         files,
         "append",
         parent,
-        extra={"schema": schema_json},
+        extra=_carry(manifest, meta, schema=schema_json),
         on_conflict=rebase,
         carry_from=manifest,
     )
@@ -870,21 +897,30 @@ def vt_overwrite(
     table: str,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
+    meta=None,
 ) -> int:
     """Replace the table contents in one snapshot (the atomic form of
-    ``mode('overwrite')`` — readers of older versions are untouched)."""
+    ``mode('overwrite')`` — readers of older versions are untouched).
+    ``meta``, a function of the parent's manifest ``meta``, sets the new
+    snapshot's; without it the parent's meta carries over."""
     files = _write_data(
         spark, df, table, stats_cols=stats_cols, bloom_cols=bloom_cols
     )
     parent = latest_version(spark, table)
+
+    def extra(m: dict) -> dict:
+        return _carry(m, meta, schema=df.schema.json())
+
     return _commit(
         spark,
         table,
         files,
         "overwrite",
         parent,
-        extra={"schema": df.schema.json()},
-        on_conflict="retry",  # output is independent of the parent snapshot
+        extra=extra(read_manifest(spark, table, parent, resolve=False)),
+        # the files are independent of the parent snapshot: retry them at
+        # the next version, with the meta re-derived from the winner's
+        on_conflict=lambda winner: (files, extra(winner), None, ()),
     )
 
 
@@ -892,7 +928,7 @@ def _plan_entries(
     spark: SparkSession,
     table: str,
     raw_manifest: dict,
-    prune: tuple[str, object, object] | None,
+    prune: tuple | None,
     prune_eq: tuple[str, object] | None,
 ) -> list[dict]:
     """Scan planning for one snapshot: entries surviving stats-range and
@@ -920,15 +956,17 @@ def vt_files(
     spark: SparkSession,
     table: str,
     version: int | None = None,
-    prune: tuple[str, object, object] | None = None,
+    prune: tuple | None = None,
     prune_eq: tuple[str, object] | None = None,
 ) -> list[str]:
     """The scan plan: absolute file paths for a version, optionally pruned
     by manifest stats. ``prune=(col, lo, hi)`` keeps a file iff its
-    recorded [min, max] for ``col`` intersects [lo, hi]; files with no
-    recorded stats for the column are conservatively kept. This skipping
-    happens BEFORE Spark lists or opens anything — at 100k-file scale the
-    footer-stats pass row-group pruning replaces is itself the bottleneck.
+    recorded [min, max] for ``col`` intersects [lo, hi], and the
+    value-set form ``prune=(col, values)`` iff some value lies in its
+    [min, max]; files with no recorded stats for the column are
+    conservatively kept. This skipping happens BEFORE Spark lists or
+    opens anything — at 100k-file scale the footer-stats pass row-group
+    pruning replaces is itself the bottleneck.
 
     Raises on snapshots holding position deletes: a raw path list cannot
     express merge-on-read, and silently returning the undeleted files
@@ -952,7 +990,7 @@ def vt_read(
     spark: SparkSession,
     table: str,
     version: int | None = None,
-    prune: tuple[str, object, object] | None = None,
+    prune: tuple | None = None,
     prune_eq: tuple[str, object] | None = None,
 ) -> DataFrame:
     """Snapshot read: resolve ONE manifest, scan exactly its files.
@@ -985,6 +1023,50 @@ def vt_read(
     raise ValueError(f"version {v} of {table} is empty — nothing to scan")
 
 
+def _rewrite(
+    spark: SparkSession,
+    table: str,
+    op: str,
+    cluster=None,
+    sort_cols=(),
+    target_mb: int = 128,
+    n_files: int | None = None,
+) -> tuple[int, int, int]:
+    """The snapshot rewrite :func:`vt_compact` and :func:`vt_optimize`
+    share: read the current version with its position deletes applied,
+    write it into ``n_files`` (default ceil(bytes/target)) files —
+    ordered by ``cluster(df, n)`` when given, else a plain repartition —
+    and commit them as a new manifest carrying the snapshot's schema and
+    meta. Recorded stats/bloom columns (plus ``sort_cols``) are rebuilt
+    for the new file boundaries, or pruning would silently degrade to
+    keep-all. Returns (new_version, files_before, files_after)."""
+    import math
+
+    table = table.rstrip("/")
+    parent = latest_version(spark, table)
+    manifest = read_manifest(spark, table, parent)
+    entries = manifest["files"]
+    if not entries:
+        return parent, 0, 0
+    n = n_files or max(
+        1, math.ceil(_total_bytes(spark, table, entries) / (target_mb * 1024 * 1024))
+    )
+    df = _entries_df(spark, table, entries, _snapshot_schema(manifest))
+    stats_cols = sorted(
+        {c for e in entries for c in e.get("stats", {})} | set(sort_cols)
+    )
+    bloom_cols = sorted({c for e in entries for c in e.get("bloom", {})})
+    files = _write_data(
+        spark,
+        cluster(df, n) if cluster else df.repartition(n),
+        table,
+        stats_cols=stats_cols or None,
+        bloom_cols=bloom_cols or None,
+    )
+    new_v = _commit(spark, table, files, op, parent, extra=_carry(manifest))
+    return new_v, len(entries), len(files)
+
+
 def vt_compact(
     spark: SparkSession, table: str, target_mb: int = 128
 ) -> tuple[int, int, int]:
@@ -1000,32 +1082,7 @@ def vt_compact(
 
     Returns (new_version, files_before, files_after).
     """
-    import math
-
-    table = table.rstrip("/")
-    parent = latest_version(spark, table)
-    manifest = read_manifest(spark, table, parent)
-    if not manifest["files"]:
-        return parent, 0, 0
-    total = _total_bytes(spark, table, manifest["files"])
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    schema = _snapshot_schema(manifest)
-    df = _entries_df(spark, table, manifest["files"], schema)
-    # carry forward whichever stats/bloom columns the parent recorded —
-    # compaction rewrites files, so sidecars must be rebuilt for the new
-    # file boundaries or point-lookup pruning silently degrades to keep-all
-    stats_cols = sorted({c for e in manifest["files"] for c in e.get("stats", {})})
-    bloom_cols = sorted({c for e in manifest["files"] for c in e.get("bloom", {})})
-    files = _write_data(
-        spark,
-        df.repartition(n),
-        table,
-        stats_cols=stats_cols or None,
-        bloom_cols=bloom_cols or None,
-    )
-    extra = {"schema": manifest["schema"]} if "schema" in manifest else None
-    new_v = _commit(spark, table, files, "compact", parent, extra=extra)
-    return new_v, len(manifest["files"]), len(files)
+    return _rewrite(spark, table, "compact", target_mb=target_mb)
 
 
 def vt_merge(
@@ -1144,7 +1201,7 @@ def vt_merge(
             new_files,
             "merge",
             parent,
-            extra={"schema": schema_json},
+            extra=_carry(manifest, schema=schema_json),
             carry_from=manifest,
             dirty_paths={e["path"] for e in touched},
         )
@@ -1221,10 +1278,11 @@ def vt_append_epoch(
             raise _EpochReplayedMidCommit()
         return (
             files,
-            {
-                "epoch": {"run": run_id, "epoch": int(epoch_id)},
-                "schema": _merge_schema(winner.get("schema"), df.schema),
-            },
+            _carry(
+                winner,
+                epoch={"run": run_id, "epoch": int(epoch_id)},
+                schema=_merge_schema(winner.get("schema"), df.schema),
+            ),
             winner,
             (),
         )
@@ -1236,10 +1294,11 @@ def vt_append_epoch(
             files,
             "stream-append",
             parent,
-            extra={
-                "epoch": {"run": run_id, "epoch": int(epoch_id)},
-                "schema": schema_json,
-            },
+            extra=_carry(
+                manifest,
+                epoch={"run": run_id, "epoch": int(epoch_id)},
+                schema=schema_json,
+            ),
             on_conflict=rebase,
             carry_from=manifest,
         )
@@ -1414,7 +1473,7 @@ def vt_rename_column(spark: SparkSession, table: str, old: str, new: str) -> int
         changed,
         "rename",
         parent,
-        extra={"schema": renamed.json()},
+        extra=_carry(manifest, schema=renamed.json()),
         carry_from=manifest,
         dirty_paths={e["path"] for e in changed},
     )
@@ -1663,7 +1722,7 @@ def vt_delete(
         new_files,
         "delete",
         parent,
-        extra={"schema": manifest["schema"]} if "schema" in manifest else None,
+        extra=_carry(manifest),
         carry_from=manifest,
         dirty_paths=hit,
     )
@@ -1674,6 +1733,7 @@ def vt_delete_mor(
     spark: SparkSession,
     table: str,
     predicate,
+    meta=None,
 ) -> tuple[int, int, int]:
     """Merge-on-read DELETE: commit POSITION DELETES instead of rewriting
     data. One scan finds the matching live rows' identities
@@ -1697,8 +1757,10 @@ def vt_delete_mor(
     until the next compaction. NULL-predicate rows survive (SQL DELETE
     semantics), matching :func:`vt_delete`.
 
-    Returns (version, files_touched, rows_deleted); no commit when
-    nothing matches.
+    ``meta``, a function of the parent's manifest ``meta``, sets the new
+    snapshot's. Returns (version, files_touched, rows_deleted); nothing
+    matching commits nothing — unless ``meta`` is given, when the commit
+    carries only the new meta.
     """
     from pyspark.sql import functions as F
 
@@ -1706,17 +1768,17 @@ def vt_delete_mor(
     parent = latest_version(spark, table)
     manifest = read_manifest(spark, table, parent)
     entries = manifest["files"]
-    if not entries:
-        return parent, 0, 0
-    schema = _snapshot_schema(manifest)
-    pred = F.coalesce(predicate, F.lit(False))
-    matches = (
-        _entries_df(spark, table, entries, schema, keep_meta=True)
-        .filter(pred)
-        .select("__file", "__pos")
-    )
-    del_paths, per_file, rows_deleted = _write_delete_files(spark, table, matches)
-    if not del_paths:
+    del_paths, per_file, rows_deleted = [], {}, 0
+    if entries:
+        matches = (
+            _entries_df(
+                spark, table, entries, _snapshot_schema(manifest), keep_meta=True
+            )
+            .filter(F.coalesce(predicate, F.lit(False)))
+            .select("__file", "__pos")
+        )
+        del_paths, per_file, rows_deleted = _write_delete_files(spark, table, matches)
+    if not del_paths and meta is None:
         return parent, 0, 0  # nothing matched: no commit
     hit = set(per_file)
     modified = []
@@ -1736,7 +1798,7 @@ def vt_delete_mor(
         modified,
         "delete-mor",
         parent,
-        extra={"schema": manifest["schema"]} if "schema" in manifest else None,
+        extra=_carry(manifest, meta),
         carry_from=manifest,
         dirty_paths=hit,
     )
@@ -1847,17 +1909,22 @@ def vt_overwrite_epoch(
         return None  # replayed epoch — already durable
     files = _write_data(spark, df, table_s, stats_cols=stats_cols)
     parent = latest_version(spark, table_s)
+
+    def extra(m: dict) -> dict:
+        return _carry(
+            m, epoch={"run": run_id, "epoch": int(epoch_id)}, schema=df.schema.json()
+        )
+
     return _commit(
         spark,
         table_s,
         files,
         "stream-overwrite",
         parent,
-        extra={
-            "epoch": {"run": run_id, "epoch": int(epoch_id)},
-            "schema": df.schema.json(),
-        },
-        on_conflict="retry",  # output is independent of the parent snapshot
+        extra=extra(read_manifest(spark, table_s, parent, resolve=False)),
+        # output is independent of the parent snapshot: retry at the next
+        # version, carrying the winner's meta
+        on_conflict=lambda winner: (files, extra(winner), None, ()),
     )
 
 
@@ -1993,7 +2060,7 @@ def vt_apply_cdc(
             new_files,
             "cdc-apply",
             parent,
-            extra={"schema": schema.json()},
+            extra=_carry(manifest, schema=schema.json()),
             carry_from=manifest,
             dirty_paths={e["path"] for e in touched},
         )
@@ -2171,7 +2238,7 @@ def vt_merge_mor(
             modified + new_files,
             "merge-mor",
             parent,
-            extra={"schema": schema_json, **(extra_meta or {})},
+            extra=_carry(manifest, schema=schema_json, **(extra_meta or {})),
             carry_from=manifest,
             dirty_paths=hit,
         )
@@ -2204,37 +2271,24 @@ def vt_optimize(
     keeps every dimension's per-file min/max tight, so predicates on any
     of the columns prune — OPTIMIZE ZORDER BY for the manifest format.
     Returns (version, files_before, files_after)."""
-    import math
-
-    table = table.rstrip("/")
-    parent = latest_version(spark, table)
-    manifest = read_manifest(spark, table, parent)
-    if not manifest["files"]:
-        return parent, 0, 0
-    total = _total_bytes(spark, table, manifest["files"])
-    n = n_files or max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    schema = _snapshot_schema(manifest)
-    df = _entries_df(spark, table, manifest["files"], schema)
-    stats_cols = sorted(
-        {c for e in manifest["files"] for c in e.get("stats", {})} | set(sort_cols)
-    )
-    bloom_cols = sorted({c for e in manifest["files"] for c in e.get("bloom", {})})
     if strategy == "zorder":
         from endtoend_etl_openmeteo_spark.operators.layout import zorder_layout
 
-        clustered = zorder_layout(df, sort_cols, n)
+        def cluster(df, n):
+            return zorder_layout(df, sort_cols, n)
+
     elif strategy == "range":
-        clustered = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
+
+        def cluster(df, n):
+            return df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
+                *sort_cols
+            )
+
     else:
         raise ValueError(f"unknown optimize strategy {strategy!r}")
-    files = _write_data(
-        spark, clustered, table, stats_cols=stats_cols, bloom_cols=bloom_cols or None
+    return _rewrite(
+        spark, table, "optimize", cluster, sort_cols, target_mb, n_files
     )
-    extra = {"schema": manifest["schema"]} if "schema" in manifest else None
-    new_v = _commit(spark, table, files, "optimize", parent, extra=extra)
-    return new_v, len(manifest["files"]), len(files)
 
 
 def vt_merge_mor_epoch(
@@ -2285,16 +2339,13 @@ def vt_merge_mor_epoch(
         # empty/stale batch committed nothing; still record the epoch so a
         # replay of THIS epoch short-circuits instead of re-deriving
         m = read_manifest(spark, table_s, version, resolve=False)
-        extra = dict(tag_meta)
-        if "schema" in m:
-            extra["schema"] = m["schema"]
         return _commit(
             spark,
             table_s,
             [],
             "stream-merge-noop",
             version,
-            extra=extra,
+            extra=_carry(m, **tag_meta),
             carry_from=m,
         )
     return version

@@ -1578,12 +1578,13 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored GROUP BY doc_id
     ORDER BY score DESC, doc_id LIMIT 10
     """,
-    doc="BM25 ranked retrieval served from the STORED term-bucket-"
-    "partitioned index (operators/search.write_inverted_index + "
-    "stored_bm25_topk, built once per corpus fingerprint and reused — "
-    "the build-once/serve-many production shape): the bkt partition "
-    "filter skips every non-matching bucket directory before a data "
-    "file opens, the term IN residual dictionary-filters surviving row "
+    doc="BM25 ranked retrieval served from the STORED index, a versioned "
+    "table of term-clustered postings (operators/search."
+    "write_inverted_index + stored_bm25_topk, built once per corpus "
+    "fingerprint and reused — the build-once/serve-many production "
+    "shape): one snapshot's manifest gives the corpus stats and prunes "
+    "the scan to the files whose term range holds a query term before "
+    "a file opens, and the term IN residual filters surviving row "
     "groups (pruning pinned in tests/test_search.py). df is |terms| "
     "rows broadcast back; the per-doc sum aggregates <=|terms| rows per "
     "candidate; top-k is TakeOrdered, never a global window. avgdl is "
@@ -1635,45 +1636,43 @@ def _stored_index(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q_bm25_delete",
-    # The deletion lifecycle is exactly checkable: tombstone-filtered
+    # The deletion lifecycle is exactly checkable: position-delete
     # serving with exactly-reversed stats must equal a fresh index built
     # over the survivors, bit-for-bit (same integer totals, same JVM
-    # rounding), and the layout-generic vacuum must change nothing
-    # served while physically removing the postings.
+    # rounding), and compaction must change nothing served while
+    # physically removing the postings.
     oracle="""
     SELECT 'delete_equals_survivor_rebuild' AS contract, TRUE AS ok
     UNION ALL SELECT 'vacuum_physical_and_serving_stable', TRUE
     """,
     doc="Document deletion for the stored BM25 index (operators/search."
-    "delete_from_inverted_index): the stored-ANN tombstone discipline "
-    "applied to retrieval — doc ids land in the _tombstones/ sidecar "
-    "(O(batch), no postings rewrite), serving hides their postings with "
-    "a broadcast anti-join so per-term df shrinks exactly, and the "
-    "stats sidecar reverses the batch's exact integer totals with "
-    "rebuild-identical rounding. Contracts hash-checked: post-delete "
-    "serving equals the in-plan bm25_topk over the survivor corpus "
-    "row-for-row, scores included (same idf/norm formulas, same "
+    "delete_from_inverted_index): one scan of the live postings commits "
+    "the docs' rows as versioned-table position deletes (no postings "
+    "rewrite), so per-term df shrinks exactly, and the same manifest "
+    "commit reverses the batch's exact integer totals in the corpus "
+    "stats with rebuild-identical rounding. Contracts hash-checked: "
+    "post-delete serving equals the in-plan bm25_topk over the survivor "
+    "corpus row-for-row, scores included (same idf/norm formulas, same "
     "rounding — a full survivor-index rebuild gives the identical rows, "
-    "pinned in tests/test_search.py), and after vacuum_index_tombstones "
-    "(partition-pruned bucket rewrite, the same generic tick the ANN "
-    "layouts use) serving is unchanged with the tombstones physically "
-    "gone.",
+    "pinned in tests/test_search.py), and after compact_inverted_index "
+    "(vt_maintain clustered on term, which materializes the deletes) "
+    "serving is unchanged with the deleted postings physically gone "
+    "from the snapshot's files.",
     tags=("text", "search"),
 )
 def q_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        vacuum_index_tombstones,
-    )
     from endtoend_etl_openmeteo_spark.operators.search import (
         bm25_topk,
+        compact_inverted_index,
         corpus_stats,
         delete_from_inverted_index,
         inverted_index,
         stored_bm25_topk,
         write_inverted_index,
     )
+    from endtoend_etl_openmeteo_spark.operators.versioned import vt_files
     from endtoend_etl_openmeteo_spark.session import (
         bounded_shuffle,
         overlap,
@@ -1694,12 +1693,12 @@ def q_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Harness shuffle pin: bounded 500-doc slice, lifecycle proof —
         # the q_index_compact rationale. The survivor rebuild never
         # touches the index dir, so it runs CONCURRENTLY with
-        # build→delete→serve; post-vacuum count and re-serve are
-        # likewise independent reads of the vacuumed index.
+        # build→delete→serve; post-compaction count and re-serve are
+        # likewise independent reads of the compacted index.
         with bounded_shuffle(spark, 8):
 
             def build_delete_serve() -> list:
-                write_inverted_index(docs, idx, n_buckets=16)
+                write_inverted_index(docs, idx)
                 delete_from_inverted_index(
                     docs.filter(F.col("doc_id") < 10), idx
                 )
@@ -1716,9 +1715,13 @@ def q_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             served, want = overlap(build_delete_serve, survivor_rebuild)
             equal = bool(served) and served == want
-            vacuum_index_tombstones(spark, idx, id_col="doc_id")
+            compact_inverted_index(spark, idx)
+            # vt_files refuses a snapshot that still carries deletes, and
+            # the raw files it lists are read with none applied
             gone, reserved = overlap(
-                lambda: spark.read.parquet(idx).filter(F.col("doc_id") < 10).count(),
+                lambda: spark.read.parquet(*vt_files(spark, idx))
+                .filter(F.col("doc_id") < 10)
+                .count(),
                 lambda: rows_of(stored_bm25_topk(spark, idx, SEARCH_TERMS, k=10)),
             )
             vac_ok = gone == 0 and reserved == served
@@ -1795,7 +1798,7 @@ def q_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "touches is k-bounded metadata: two 20-row ranked lists union, one "
     "40-row aggregate, one 9dp-rounded rank — the heavy lifting stays "
     "in the two producers, each with its own pruned serving path "
-    "(term-bucket partitions; broadcast query vector).",
+    "(manifest term-range file pruning; broadcast query vector).",
     tags=("text", "search", "similarity"),
 )
 def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1836,7 +1839,8 @@ MAINT_TERMS = ("data", "model", "training", "quality")
     # reaches the same rows only if build + 2 appends + compaction is
     # byte-equivalent to a single fresh build — the file shuffling is thus
     # hash-checked, not just boolean-asserted. `maintained` additionally
-    # pins that compaction actually ran and left every bucket at one file.
+    # pins that compaction actually ran and left every query term in one
+    # file.
     oracle=r"""
     WITH toks AS (
       SELECT doc_id,
@@ -1862,31 +1866,28 @@ MAINT_TERMS = ("data", "model", "training", "quality")
     ORDER BY score DESC, doc_id LIMIT 10
     """,
     doc="Full stored-index maintenance lifecycle in one plan: build the "
-    "term-bucket BM25 index over a third of the corpus, APPEND the other "
-    "two thirds (operators/search.append_inverted_index — per-batch "
-    "posting files accrete inside each bucket), run the compaction tick "
-    "(compact_inverted_index: only fragmented buckets rewritten, "
-    "right-sized files, _stats.json untouched), then SERVE from the "
-    "compacted index. The oracle computes exact BM25 over the whole "
-    "corpus in SQL, so the served top-k hash-matches only if "
-    "append+compact is byte-equivalent to one fresh build — the "
-    "vt_maintain discipline applied to the plain serving layouts "
-    "(scale proof: tools/scale_smoke.index_maintenance_smoke holds "
-    "files/bucket bounded under continuous appends).",
+    "versioned BM25 index over a third of the corpus, APPEND the other "
+    "two thirds (operators/search.append_inverted_index — each batch's "
+    "posting files overlap every earlier file's term range), run the "
+    "compaction tick (compact_inverted_index: vt_maintain re-clusters "
+    "the fragmented files on term, the manifest's corpus stats carried "
+    "unchanged), then SERVE from the compacted index. The oracle "
+    "computes exact BM25 over the whole corpus in SQL, so the served "
+    "top-k hash-matches only if append+compact is byte-equivalent to one "
+    "fresh build (scale proof: tools/scale_smoke.index_maintenance_smoke "
+    "holds files read per query term bounded under continuous appends).",
     tags=("text", "search", "maintenance"),
 )
 def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        partition_file_counts,
-    )
     from endtoend_etl_openmeteo_spark.operators.search import (
         append_inverted_index,
         compact_inverted_index,
         stored_bm25_topk,
         write_inverted_index,
     )
+    from endtoend_etl_openmeteo_spark.operators.versioned import vt_files
     from endtoend_etl_openmeteo_spark.session import scratch_dir
 
     # doc_id < 2000 slice: the lifecycle proof (fragment -> compact ->
@@ -1901,23 +1902,26 @@ def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = scratch_dir(prefix="bm25_maint_")
     path = root + "/postings"
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev_coalesce = spark.conf.get(coalesce)
     try:
-        # 16 buckets, not the 64 serving default: the per-directory write/
-        # list/commit overhead of three builds dominates this bounded
-        # lifecycle query; bucket count changes layout, never results.
-        # Same reasoning for the 8-partition shuffle pin: the 2000-doc
-        # slice's three builds are all exchange fixed cost at 32
-        # (measured 5.5 -> 4.5 s warm), and the slice is
-        # corpus-size-independent so the pin is scale-neutral.
+        # Harness pins: the 2000-doc slice's three builds are all exchange
+        # fixed cost at 32 shuffle partitions (measured 5.5 -> 4.5 s warm
+        # at 8), and with AQE's coalescing off each write lands one
+        # range-clustered file per partition — the fragmentation a large
+        # corpus's appends produce, which the tick must then repair. The
+        # slice is corpus-size-independent, so the pins are scale-neutral;
+        # file layout never changes results.
+        spark.conf.set(coalesce, "false")
         with bounded_shuffle(spark, 8):
-            write_inverted_index(
-                docs.filter(F.col("doc_id") % 3 == 0), path, n_buckets=16
-            )
+            write_inverted_index(docs.filter(F.col("doc_id") % 3 == 0), path)
             append_inverted_index(docs.filter(F.col("doc_id") % 3 == 1), path)
             append_inverted_index(docs.filter(F.col("doc_id") % 3 == 2), path)
-            res = compact_inverted_index(spark, path, max_files_per_bucket=1)
-            worst_after = max(partition_file_counts(spark, path, "bkt").values())
-            maintained = res["partitions_compacted"] >= 1 and worst_after == 1
+            res = compact_inverted_index(spark, path)
+            per_term = [
+                len(vt_files(spark, path, prune=("term", [t]))) for t in MAINT_TERMS
+            ]
+            maintained = res["action"] == "optimize" and max(per_term) == 1
             return (
                 stored_bm25_topk(spark, path, MAINT_TERMS, k=10)
                 .withColumn("maintained", F.lit(bool(maintained)))
@@ -1925,6 +1929,7 @@ def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
     finally:
+        spark.conf.set(coalesce, prev_coalesce)
         shutil.rmtree(root, ignore_errors=True)
 
 

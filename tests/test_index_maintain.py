@@ -246,34 +246,75 @@ def test_lease_serializes_writers_and_loser_retries(spark, tmp_path):
     assert not (Path(path) / "_maintenance.lock").exists()
 
 
-def test_bm25_append_takes_lease(spark, tmp_path):
-    """append_inverted_index's stats merge is a read-modify-write; under a
-    held lease it must raise instead of losing a batch's counts."""
-    import pytest
+def test_bm25_racing_appends_sum_stats(spark, tmp_path, monkeypatch):
+    """Two BM25 appends read the same parent snapshot and reach their
+    manifest commits together (a barrier in front of the rename): one
+    wins the version slot, the other rebases and re-derives its stats
+    from the winner's, so both batches land and the stats are the exact
+    sums a single build over all three batches gives. No lease."""
+    import threading
 
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        LeaseConflictError,
-        index_lease,
-    )
+    from endtoend_etl_openmeteo_spark import fsio
     from endtoend_etl_openmeteo_spark.operators.search import (
         append_inverted_index,
         read_index_stats,
+        stored_bm25_topk,
         write_inverted_index,
     )
 
+    schema = "doc_id long, text string"
+    base = [(1, "alpha beta"), (2, "beta gamma")]
+    batches = [[(3, "gamma delta")], [(4, "delta delta alpha"), (5, None)]]
     path = str(tmp_path / "bm25")
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
-    )
-    write_inverted_index(docs, path, n_buckets=4)
-    batch = spark.createDataFrame([(3, "gamma delta")], "doc_id long, text string")
+    write_inverted_index(spark.createDataFrame(base, schema), path)
 
-    with index_lease(spark, path, owner="compact"):
-        with pytest.raises(LeaseConflictError):
-            append_inverted_index(batch, path)
-    # after release the same call lands, stats exact
-    n_docs, _ = append_inverted_index(batch, path)
-    assert n_docs == 3 and read_index_stats(spark, path)["n_docs"] == 3
+    real_rename = fsio.rename
+    barrier = threading.Barrier(2, timeout=60)
+    armed = {"racer-0", "racer-1"}
+    refused = []
+
+    def gated(spark_, src, dst):
+        name = threading.current_thread().name
+        if name in armed and "/_manifests/v" in str(dst):
+            armed.discard(name)
+            barrier.wait()
+        ok = real_rename(spark_, src, dst)
+        if not ok:
+            refused.append(name)
+        return ok
+
+    monkeypatch.setattr(fsio, "rename", gated)
+    errors = []
+
+    def run(rows):
+        try:
+            append_inverted_index(spark.createDataFrame(rows, schema), path)
+        except Exception as e:  # pragma: no cover - fail loudly below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=run, args=(rows,), name=f"racer-{i}")
+        for i, rows in enumerate(batches)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+        assert not t.is_alive()
+    monkeypatch.setattr(fsio, "rename", real_rename)
+    assert not errors, errors
+    assert len(refused) == 1  # the race happened: one commit rebased
+
+    full = str(tmp_path / "full")
+    write_inverted_index(
+        spark.createDataFrame(base + batches[0] + batches[1], schema), full
+    )
+    assert read_index_stats(spark, path) == read_index_stats(spark, full)
+    assert read_index_stats(spark, path)["n_docs"] == 5
+    terms = ("alpha", "delta")
+    assert [tuple(r) for r in stored_bm25_topk(spark, path, terms).collect()] == [
+        tuple(r) for r in stored_bm25_topk(spark, full, terms).collect()
+    ]
 
 
 def test_broken_then_reacquired_lease_not_deleted_by_stale_holder(spark, tmp_path):

@@ -118,6 +118,45 @@ def test_mor_merge_rewrites_only_intersecting_refs(spark, table):
     assert rows[3] == "new" and rows[7] == "new" and rows[4] == "base"
 
 
+def test_spilled_value_set_pruning_keeps_only_holding_files(spark, table):
+    """Set-of-values pruning on a spilled manifest: a file is kept iff some
+    value lies in its recorded [min, max] — the same files the driver loop
+    keeps, fewer than all, and the read stays exact."""
+    words = [f"w{i:03d}" for i in range(40)]
+    for wave in range(3):
+        vt_append(
+            spark,
+            spark.createDataFrame([(w, wave) for w in words], "w string, wave int")
+            .repartitionByRange(2, "w")
+            .sortWithinPartitions("w"),
+            table,
+            stats_cols=["w"],
+        )
+    raw = read_manifest(spark, table, resolve=True)
+    assert read_manifest(
+        spark, table, latest_version(spark, table), resolve=False
+    ).get("files_ref")
+    for values in (["w001"], ["w001", "w039"], ["zzz"], []):
+        prune = ("w", values)
+        kept = set(vt_files(spark, table, prune=prune))
+        driver = {
+            f"{table}/{e['path']}" for e in vt._prune_entries(raw["files"], prune)
+        }
+        holding = {
+            f"{table}/{e['path']}"
+            for e in raw["files"]
+            if any(e["stats"]["w"][0] <= v <= e["stats"]["w"][1] for v in values)
+        }
+        assert kept == driver == holding
+    assert len(vt_files(spark, table, prune=("w", ["w001"]))) == 3 < len(raw["files"])
+    got = vt_read(spark, table, prune=("w", ["w001", "w039"])).filter(
+        F.col("w").isin("w001", "w039")
+    )
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        (w, wave) for w in ("w001", "w039") for wave in range(3)
+    )
+
+
 def test_spilled_pruning_matches_driver_loops(spark, table):
     # interleaved ids -> range pruning can't skip, blooms can
     for wave in range(3):
@@ -137,7 +176,14 @@ def test_spilled_pruning_matches_driver_loops(spark, table):
     ).get("files_ref")
 
     # range pruning: Spark path == driver loop on resolved entries
-    for prune in (("id", 0, 50), ("id", 250, 299), ("id", 1000, 2000)):
+    for prune in (
+        ("id", 0, 50),
+        ("id", 250, 299),
+        ("id", 1000, 2000),
+        ("id", [3, 260]),
+        ("id", [1000, 2000]),
+        ("id", []),
+    ):
         spark_side = set(vt_files(spark, table, prune=prune))
         driver_side = {
             f"{table}/{e['path']}"

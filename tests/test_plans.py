@@ -193,6 +193,31 @@ def test_hadoop_file_access_goes_through_fsio():
     assert "LeaseBackend" not in lease and "backend=" not in lease
 
 
+def test_stored_bm25_index_commits_through_the_versioned_format():
+    """Static guard: the stored BM25 index is one versioned table whose
+    manifest commits the postings and the corpus stats together, so
+    ``operators/search.py`` takes nothing from ``index_maintain`` and names
+    none of the stats sidecar, pending marker, writer lease, tombstones or
+    term buckets of the layout it replaced."""
+    import ast
+    from pathlib import Path
+
+    src = (
+        Path(plans.__file__).resolve().parents[1] / "operators" / "search.py"
+    ).read_text()
+    imported = {
+        node.module
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.ImportFrom)
+    }
+    assert not [m for m in imported if m and "index_maintain" in m]
+    assert "index_maintain" not in src
+    banned = (
+        "_stats.json", "_append_pending", "_maintenance.lock", "_tombstones", "bkt",
+    )
+    assert not [t for t in banned if t in src]
+
+
 #: The ELT path's modules: bronze landing → DQ gate → merge → gold, and
 #: the stored-index maintenance that shares its one-file metadata writes.
 ELT_PATH_MODULES = (

@@ -6,6 +6,7 @@ q_inverted_index / q_bm25_search oracles.
 """
 
 import math
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -91,7 +92,7 @@ def test_bm25_absent_terms_are_inert(spark):
 
 def test_index_filter_prunes_before_scan(spark):
     # the serving path's `term IN (...)` must reach the posting scan as a
-    # filter (on a stored term-partitioned index this is partition pruning)
+    # filter (on the stored index it is pushed into the parquet scan)
     idx = inverted_index(_corpus(spark)).filter(F.col("term").isin(["spark"]))
     plan = idx._jdf.queryExecution().executedPlan().toString()
     assert "spark" in plan and "Filter" in plan
@@ -106,11 +107,10 @@ def test_stored_index_round_trip_matches_inplan_build(spark, tmp_path):
 
     docs = _corpus(spark)
     path = str(tmp_path / "postings")
-    n, avgdl = write_inverted_index(docs, path, n_buckets=8)
+    n, avgdl = write_inverted_index(docs, path)
     assert read_index_stats(spark, path) == {
         "n_docs": n,
         "avgdl": avgdl,
-        "n_buckets": 8,
         "total_tokens": 21,  # exact integer total for the append path
         "n_text_docs": n,  # avgdl denominator; == n_docs when no NULL text
     }
@@ -119,41 +119,62 @@ def test_stored_index_round_trip_matches_inplan_build(spark, tmp_path):
     assert [tuple(r) for r in stored] == [tuple(r) for r in inplan]
 
 
-def test_stored_index_scan_prunes_term_buckets(spark, tmp_path):
-    """The stored-index serving claim (round-5 verdict gap): the scan must
-    carry a PARTITION filter on bkt — only the query terms' bucket
-    directories are listed/read — plus the pushed term IN residual. Pinned
-    the way test_layout_sql_http.py pins footer-stats skipping."""
+@contextmanager
+def _uncoalesced(spark):
+    """AQE's coalescing off for the duration: a tiny corpus then writes one
+    range-clustered file per shuffle partition instead of one file."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stored_index_scan_prunes_term_files(spark, tmp_path):
+    """The stored-index serving claim: the scan opens only the files
+    whose manifest ``term`` range holds a query term — fewer than all of
+    them, and every file that holds one — plus the pushed term IN
+    residual. Checked against the files' own parquet footers."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
     from endtoend_etl_openmeteo_spark.operators.search import (
-        _query_term_buckets,
         stored_postings,
         write_inverted_index,
     )
+    from endtoend_etl_openmeteo_spark.operators.versioned import vt_files
 
-    # a corpus wide enough that the 4 query terms cannot touch all buckets
     rows = [(i, f"term{i} filler{i} spark join") for i in range(200)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     path = str(tmp_path / "postings")
-    write_inverted_index(docs, path, n_buckets=32)
+    with _uncoalesced(spark):
+        write_inverted_index(docs, path)
 
-    post = stored_postings(spark, path, ["spark", "join"])
+    query = ["spark", "join"]
+    post = stored_postings(spark, path, query)
     plan = post._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bkt" in plan.split("PartitionFilters")[1][:200]
     assert "PushedFilters" in plan and "term" in plan.split("PushedFilters")[1][:200]
 
-    # the scan reads ONLY the matching bucket directories
-    bkts = _query_term_buckets(spark, ["spark", "join"], 32)
-    assert len(bkts) <= 2
-    files = {r[0] for r in post.select(F.input_file_name()).distinct().collect()}
-    assert files, "postings for the query terms must exist"
-    assert all(any(f"bkt={b}/" in f for b in bkts) for f in files)
+    every = vt_files(spark, path)
+    read = {urlparse(f).path for f in post.inputFiles()}
+
+    def holds_query_term(f):
+        col = pq.ParquetFile(f).metadata.row_group(0).column(0)
+        assert col.path_in_schema == "term"
+        return any(col.statistics.min <= t <= col.statistics.max for t in query)
+
+    holding = {f for f in every if holds_query_term(f)}
+    assert len(every) > 2 and read == holding and len(read) < len(every)
     # and the postings content is exactly the two terms'
     assert set(r["term"] for r in post.collect()) == {"spark", "join"}
 
 
 def test_append_inverted_index_equals_full_rebuild(spark, tmp_path):
     """Incremental maintenance contract: N appends serve bit-for-bit what
-    one full build over the union serves — postings identical, sidecar
+    one full build over the union serves — postings identical, manifest
     stats re-derived from exact integer totals (not compounded rounded
     doubles)."""
     from endtoend_etl_openmeteo_spark.operators.search import (
@@ -189,30 +210,6 @@ def test_append_inverted_index_equals_full_rebuild(spark, tmp_path):
     assert got == want and len(got) >= 5
 
 
-def test_append_refuses_legacy_sidecar(spark, tmp_path):
-    import json
-
-    from endtoend_etl_openmeteo_spark import fsio
-    from endtoend_etl_openmeteo_spark.operators.search import (
-        _stats_path,
-        append_inverted_index,
-        write_inverted_index,
-    )
-
-    path = str(tmp_path / "legacy")
-    write_inverted_index(_corpus(spark), path)
-    # simulate a pre-total_tokens index
-    fsio.write_bytes(
-        spark,
-        _stats_path(path),
-        json.dumps({"n_docs": 4, "avgdl": 5.25, "n_buckets": 64}).encode(),
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="total_tokens"):
-        append_inverted_index(_corpus(spark), path)
-
-
 def test_null_text_docs_share_oracle_avgdl_convention(spark, tmp_path):
     """NULL-text docs count in n_docs (BM25's N) but are EXCLUDED from
     avgdl — the convention corpus_stats and the DuckDB oracles use
@@ -227,7 +224,7 @@ def test_null_text_docs_share_oracle_avgdl_convention(spark, tmp_path):
     with_null = DOCS + [(7, None)]
     base = spark.createDataFrame(with_null, "doc_id long, text string")
     path = str(tmp_path / "nulls")
-    n, avgdl = write_inverted_index(base, path, n_buckets=8)
+    n, avgdl = write_inverted_index(base, path)
     assert n == 5  # NULL doc is a corpus member
     assert avgdl == round((4 + 4 + 8 + 5) / 4, 6)  # but not in avgdl
     stats = read_index_stats(spark, path)
@@ -239,51 +236,53 @@ def test_null_text_docs_share_oracle_avgdl_convention(spark, tmp_path):
     n2, avgdl2 = append_inverted_index(batch, path)
     full_path = str(tmp_path / "full")
     full = spark.createDataFrame(with_null + extra, "doc_id long, text string")
-    n3, avgdl3 = write_inverted_index(full, full_path, n_buckets=8)
+    n3, avgdl3 = write_inverted_index(full, full_path)
     assert (n2, avgdl2) == (n3, avgdl3)
     assert read_index_stats(spark, path) == read_index_stats(spark, full_path)
 
 
 def test_compact_inverted_index_bounds_files_and_preserves_serving(spark, tmp_path):
-    """Append-accreted posting files inside term buckets get compacted
-    without changing a single served score; the stats sidecar and the
-    tidy buckets' files are untouched."""
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        partition_file_counts,
-    )
+    """Appends accrete posting files whose term ranges overlap, so every
+    query term reads all of them; a delete leaves position deletes. The
+    compaction tick re-clusters the live postings on term — each term
+    back in one file, the deletes materialized — without changing a
+    single served score or the manifest stats."""
     from endtoend_etl_openmeteo_spark.operators.search import (
         append_inverted_index,
         compact_inverted_index,
+        delete_from_inverted_index,
         read_index_stats,
         stored_bm25_topk,
         write_inverted_index,
     )
+    from endtoend_etl_openmeteo_spark.operators.versioned import vt_files
 
     path = str(tmp_path / "postings")
-    write_inverted_index(_corpus(spark), path, n_buckets=4)
+    write_inverted_index(_corpus(spark), path)
     for m in range(5):  # 5 append batches over the same term space
         batch = spark.createDataFrame(
             [(100 + m, f"spark join window batch extra{m}")],
             "doc_id long, text string",
         )
         append_inverted_index(batch, path)
+    delete_from_inverted_index(_corpus(spark).filter("doc_id = 1"), path)
 
-    before = partition_file_counts(spark, path, "bkt")
-    assert max(before.values()) > 3
     served_before = sorted(
         tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=20).collect()
     )
     stats_before = read_index_stats(spark, path)
 
-    res = compact_inverted_index(spark, path, max_files_per_bucket=3)
-    assert res["partitions_compacted"] >= 1 and res["files_after"] < res["files_before"]
-    after = partition_file_counts(spark, path, "bkt")
-    assert max(after.values()) <= 3
+    res = compact_inverted_index(spark, path)
+    assert res["action"] == "optimize"
+    assert res["files_before"] == 6 and res["files_after"] < res["files_before"]
+    for t in TERMS:  # vt_files refuses a snapshot that still has deletes
+        assert len(vt_files(spark, path, prune=("term", [t]))) == 1
     assert read_index_stats(spark, path) == stats_before
     served_after = sorted(
         tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=20).collect()
     )
     assert served_after == served_before and len(served_after) >= 5
+    assert compact_inverted_index(spark, path)["action"] is None  # tidy now
 
 
 def test_corpus_stats_empty_and_null_text_corpora(spark):
@@ -296,136 +295,82 @@ def test_corpus_stats_empty_and_null_text_corpora(spark):
     assert corpus_stats(nulls) == (2, 0.0)
 
 
-def test_append_refuses_leftover_pending_marker_and_rebuild_clears_it(
-    spark, tmp_path
-):
-    """Crash detection (not silence): a leftover _append_pending marker
-    means a prior append died between its postings write and its stats
-    commit — the next append must refuse (re-appending would
-    double-count), and the prescribed write_inverted_index rebuild must
-    clear the marker and restore exact serving."""
-    import json
-    from pathlib import Path
-
-    import pytest
-
-    from endtoend_etl_openmeteo_spark.operators.search import (
-        append_inverted_index,
-        read_index_stats,
-        stored_bm25_topk,
-        write_inverted_index,
-    )
-
-    path = str(tmp_path / "bm25")
-    write_inverted_index(_corpus(spark), path, n_buckets=4)
-    # simulate the crash window
-    (Path(path) / "_append_pending.json").write_text(json.dumps({"b_docs": 1}))
-    batch = spark.createDataFrame([(9, "spark stream")], "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="_append_pending"):
-        append_inverted_index(batch, path)
-    # rebuild = recovery: marker gone, appends work again, marker cleaned
-    write_inverted_index(_corpus(spark), path, n_buckets=4)
-    assert not (Path(path) / "_append_pending.json").exists()
-    append_inverted_index(batch, path)
-    assert not (Path(path) / "_append_pending.json").exists()
-    assert read_index_stats(spark, path)["n_docs"] == 5
-    got = {r["doc_id"] for r in stored_bm25_topk(spark, path, ("spark",), k=5).collect()}
-    assert got == {1, 2, 9}
-
-
-def test_rebuild_takes_lease_and_replaces_layout_exactly(spark, tmp_path):
-    """write_inverted_index serializes with other writers (a rebuild
-    racing an append would delete its fresh postings) and must fully
-    replace the prior layout — including stale postings written under a
-    different bucket count — while the lock itself survives the clear."""
-    import pytest
-
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        LeaseConflictError,
-        index_lease,
-    )
+def test_rebuild_replaces_index_exactly(spark, tmp_path):
+    """A rebuild replaces the postings and stats in one snapshot, and the
+    snapshot it replaced stays readable whole to a reader pinned on it."""
     from endtoend_etl_openmeteo_spark.operators.search import (
         read_index_stats,
         stored_bm25_topk,
+        stored_postings,
         write_inverted_index,
     )
+    from endtoend_etl_openmeteo_spark.operators.versioned import latest_version
 
     path = str(tmp_path / "bm25")
-    write_inverted_index(_corpus(spark), path, n_buckets=8)
-    with index_lease(spark, path, owner="other"):
-        with pytest.raises(LeaseConflictError):
-            write_inverted_index(_corpus(spark), path, n_buckets=4)
-    # rebuild with a DIFFERENT bucket count: stale bkt= dirs must not survive
-    smaller = _corpus(spark).filter("doc_id <= 2")
-    write_inverted_index(smaller, path, n_buckets=4)
-    stats = read_index_stats(spark, path)
-    assert stats["n_docs"] == 2 and stats["n_buckets"] == 4
+    write_inverted_index(_corpus(spark), path)
+    old = latest_version(spark, path)
+    write_inverted_index(_corpus(spark).filter("doc_id <= 2"), path)
+    assert read_index_stats(spark, path)["n_docs"] == 2
     got = {r["doc_id"] for r in stored_bm25_topk(spark, path, ("spark",), k=5).collect()}
     assert got == {1, 2}
+    assert read_index_stats(spark, path, old)["n_docs"] == 4
+    pinned = stored_postings(spark, path, ("window",), old).collect()
+    assert {r["doc_id"] for r in pinned} == {2, 3}
 
 
 def test_delete_reverses_stats_and_matches_survivor_rebuild(spark, tmp_path):
-    """BM25 deletion via tombstones: served scores after a delete are
-    bit-for-bit the fresh survivor-index result (postings hidden by the
-    anti-join shrink per-term df exactly; the stats sidecar reverses the
-    batch's exact integer totals with rebuild-identical rounding), and
-    the layout-generic vacuum physically removes the postings without
-    changing serving."""
-    from pathlib import Path
-
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        vacuum_index_tombstones,
-    )
+    """BM25 deletion via position deletes: served scores after a delete
+    are bit-for-bit the fresh survivor-index result (per-term df shrinks
+    exactly; the manifest stats subtract the batch's exact integer
+    totals with rebuild-identical rounding), and compaction physically
+    drops the postings without changing serving. A posting-less
+    (NULL-text) doc's delete matches no posting yet still commits its
+    stats."""
     from endtoend_etl_openmeteo_spark.operators.search import (
+        compact_inverted_index,
         delete_from_inverted_index,
         read_index_stats,
         stored_bm25_topk,
         write_inverted_index,
     )
+    from endtoend_etl_openmeteo_spark.operators.versioned import vt_files
 
+    corpus = spark.createDataFrame(DOCS + [(9, None)], "doc_id long, text string")
     path = str(tmp_path / "bm25")
-    write_inverted_index(_corpus(spark), path, n_buckets=4)
-    victim = _corpus(spark).filter("doc_id = 3")  # the 'window' doc
+    write_inverted_index(corpus, path)
+    victim = corpus.filter("doc_id = 3")  # the 'window' doc
     n_docs, avgdl = delete_from_inverted_index(victim, path)
-    assert n_docs == 3
+    assert n_docs == 4
     served = [
         tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
     ]
     assert 3 not in {r[0] for r in served}
     # bit-for-bit equality with a fresh index over the survivors
     ref = str(tmp_path / "bm25_ref")
-    write_inverted_index(
-        _corpus(spark).filter("doc_id != 3"), ref, n_buckets=4
-    )
+    write_inverted_index(corpus.filter("doc_id != 3"), ref)
     assert served == [
         tuple(r) for r in stored_bm25_topk(spark, ref, TERMS, k=5).collect()
     ]
-    want = read_index_stats(spark, ref)
-    got = read_index_stats(spark, path)
-    assert got == want
-    # layout-generic vacuum: postings physically gone, serving unchanged
-    stats = vacuum_index_tombstones(spark, path, id_col="doc_id")
-    assert stats["rows_removed"] > 0
-    assert not (Path(path) / "_tombstones").exists()
-    assert (
-        spark.read.parquet(path).filter("doc_id = 3").count() == 0
-    )
+    assert read_index_stats(spark, path) == read_index_stats(spark, ref)
+    # compaction: postings physically gone from the snapshot's files
+    assert compact_inverted_index(spark, path)["action"] == "optimize"
+    assert spark.read.parquet(*vt_files(spark, path)).filter("doc_id = 3").count() == 0
     assert served == [
         tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
     ]
+    # the NULL-text doc: n_docs drops, the token totals do not
+    before = read_index_stats(spark, path)
+    delete_from_inverted_index(corpus.filter("doc_id = 9"), path)
+    got = read_index_stats(spark, path)
+    assert got["n_docs"] == before["n_docs"] - 1
+    assert got["total_tokens"] == before["total_tokens"]
+    assert got["n_text_docs"] == before["n_text_docs"]
 
 
-def test_append_refuses_tombstoned_doc_until_vacuum(spark, tmp_path):
-    """Re-ingesting a deleted doc id is REFUSED while its tombstone is
-    live (the serve-time anti-join would silently hide the new postings),
-    and serves correctly once a vacuum clears the sidecar — the silent
-    serving gap turned into an explicit error."""
-    import pytest
-
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        TombstonedIdError,
-        vacuum_index_tombstones,
-    )
+def test_deleted_then_reappended_doc_is_served(spark, tmp_path):
+    """A deleted document appended again is served again: the delete's
+    position deletes hide only its old postings. After the round trip
+    the index serves bit-for-bit the fresh full-corpus build."""
     from endtoend_etl_openmeteo_spark.operators.search import (
         append_inverted_index,
         delete_from_inverted_index,
@@ -435,122 +380,78 @@ def test_append_refuses_tombstoned_doc_until_vacuum(spark, tmp_path):
     )
 
     path = str(tmp_path / "bm25")
-    write_inverted_index(_corpus(spark), path, n_buckets=4)
+    write_inverted_index(_corpus(spark), path)
     victim = _corpus(spark).filter("doc_id = 3")
     delete_from_inverted_index(victim, path)
-    with pytest.raises(TombstonedIdError):
-        append_inverted_index(victim, path)
-    # the refused append must leave no half-applied state behind: stats
-    # unchanged, no crash marker, serving still hides the doc
-    assert read_index_stats(spark, path)["n_docs"] == 3
     assert 3 not in {
         r["doc_id"] for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
     }
-    vacuum_index_tombstones(spark, path, id_col="doc_id")
     append_inverted_index(victim, path)
     served = [
         tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
     ]
     assert 3 in {r[0] for r in served}
-    # bit-for-bit the fresh full-corpus index after the round trip
     ref = str(tmp_path / "bm25_ref")
-    write_inverted_index(_corpus(spark), ref, n_buckets=4)
+    write_inverted_index(_corpus(spark), ref)
     assert served == [
         tuple(r) for r in stored_bm25_topk(spark, ref, TERMS, k=5).collect()
     ]
     assert read_index_stats(spark, path) == read_index_stats(spark, ref)
 
 
-def test_bm25_delete_records_bucket_hints(spark, tmp_path):
-    """The BM25 delete computes its doc's term buckets (the text is in
-    hand) and records them as partition hints, so the vacuum tick prunes
-    its discovery scan to exactly the touched ``bkt=`` directories. A
-    posting-less (NULL-text) doc writes a BARE tombstone — harmless for
-    a genuinely posting-less doc, but it makes vacuum's full-scan
-    fallback catch a text-mismatched (out-of-contract) delete instead
-    of leaving the doc's real postings serving forever."""
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        _read_tombstones,
-        vacuum_index_tombstones,
-    )
-    from endtoend_etl_openmeteo_spark.operators.search import (
-        _term_bucket,
-        delete_from_inverted_index,
-        inverted_index,
-        read_index_stats,
-        write_inverted_index,
-    )
+def test_append_crash_before_commit_leaves_serving_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """The postings and the stats are one manifest commit: an append that
+    dies after writing its postings but before the commit leaves the
+    served results and stats exactly as they were, and a retry lands the
+    batch exactly once."""
+    import pytest
 
-    docs = spark.createDataFrame(
-        DOCS + [(9, None)], "doc_id long, text string"
-    )
-    path = str(tmp_path / "bm25")
-    write_inverted_index(docs, path, n_buckets=4)
-    victim = docs.filter("doc_id = 1")
-    delete_from_inverted_index(victim, path)
-    tomb = _read_tombstones(spark, path, id_col="doc_id").collect()
-    want = {
-        f"bkt={r[0]}"
-        for r in inverted_index(victim)
-        .select(_term_bucket(F.col("term"), 4))
-        .distinct()
-        .collect()
-    }
-    assert {r["part"] for r in tomb} == want
-    assert {r["doc_id"] for r in tomb} == {1}
-    stats = vacuum_index_tombstones(spark, path, id_col="doc_id")
-    assert stats["rows_removed"] == 2  # doc 1 posts 'spark' and 'join'
-    assert spark.read.parquet(path).filter("doc_id = 1").count() == 0
-    # NULL-text doc: a bare (hint-less) tombstone, stats reverse exactly
-    before = read_index_stats(spark, path)
-    delete_from_inverted_index(docs.filter("doc_id = 9"), path)
-    tomb = _read_tombstones(spark, path, id_col="doc_id").collect()
-    assert [(r["doc_id"], r["part"]) for r in tomb] == [(9, None)]
-    got = read_index_stats(spark, path)
-    assert got["n_docs"] == before["n_docs"] - 1
-    assert got["total_tokens"] == before["total_tokens"]
-    stats = vacuum_index_tombstones(spark, path, id_col="doc_id")
-    assert stats == {
-        "tombstones": 1, "rows_removed": 0, "partitions_rewritten": 0,
-    }
-
-
-def test_serving_surfaces_crashed_append_marker(spark, tmp_path):
-    """A leftover ``_append_pending`` marker (append/delete crashed
-    between data write and stats commit) surfaces AT QUERY TIME: the
-    stats dict carries ``append_pending`` and serving still answers —
-    drifted scores are flagged, not hidden until the next write."""
     from endtoend_etl_openmeteo_spark import fsio
     from endtoend_etl_openmeteo_spark.operators.search import (
-        _pending_path,
+        append_inverted_index,
         read_index_stats,
         stored_bm25_topk,
         write_inverted_index,
     )
 
     path = str(tmp_path / "bm25")
-    write_inverted_index(_corpus(spark), path, n_buckets=4)
-    assert "append_pending" not in read_index_stats(spark, path)
-    fsio.write_bytes(spark, _pending_path(path), b"{}")
-    # marker + HELD lease = a healthy in-flight append: must NOT flag
-    from endtoend_etl_openmeteo_spark.operators.index_maintain import (
-        index_lease,
+    write_inverted_index(_corpus(spark), path)
+    before = read_index_stats(spark, path)
+    served = [tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()]
+    batch = spark.createDataFrame(
+        [(9, "spark spark batch")], "doc_id long, text string"
     )
 
-    with index_lease(spark, path, owner="in_flight_append"):
-        assert "append_pending" not in read_index_stats(spark, path)
-    # marker + free lease = a crashed write: flag it
-    stats = read_index_stats(spark, path)
-    assert stats["append_pending"] is True
-    assert {
-        r["doc_id"] for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
-    } == {1, 2, 3}
+    real_rename = fsio.rename
+
+    def crash(spark_, src, dst):
+        if "/_manifests/v" in str(dst):
+            raise RuntimeError("crash before the manifest commit")
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsio, "rename", crash)
+    with pytest.raises(RuntimeError, match="crash before"):
+        append_inverted_index(batch, path)
+    monkeypatch.setattr(fsio, "rename", real_rename)
+    assert read_index_stats(spark, path) == before
+    assert served == [
+        tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
+    ]
+
+    append_inverted_index(batch, path)
+    ref = str(tmp_path / "bm25_ref")
+    write_inverted_index(_corpus(spark).unionByName(batch), ref)
+    assert read_index_stats(spark, path) == read_index_stats(spark, ref)
+    assert [
+        tuple(r) for r in stored_bm25_topk(spark, path, TERMS, k=5).collect()
+    ] == [tuple(r) for r in stored_bm25_topk(spark, ref, TERMS, k=5).collect()]
 
 
 def test_index_build_jobs_stay_in_the_callers_job_group(spark, tmp_path):
-    """write_inverted_index overlaps its corpus-stats job with the
-    postings write; both must carry the caller's job group, so a traced
-    query can attribute every job it schedules."""
+    """Every job write_inverted_index schedules carries the caller's job
+    group, so a traced query can attribute every job it schedules."""
     from endtoend_etl_openmeteo_spark.operators.search import write_inverted_index
 
     sc = spark.sparkContext
@@ -558,7 +459,7 @@ def test_index_build_jobs_stay_in_the_callers_job_group(spark, tmp_path):
     ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup("bm25-build", "index build")
     try:
-        write_inverted_index(_corpus(spark), str(tmp_path / "idx"), n_buckets=4)
+        write_inverted_index(_corpus(spark), str(tmp_path / "idx"))
     finally:
         sc.setJobGroup(None, None)
     assert tracker.getJobIdsForGroup("bm25-build")

@@ -1848,3 +1848,171 @@ def test_entries_record_bytes_and_size_totals_use_them(spark, table):
     # legacy fallback: strip the field, totals still exact
     stripped = [{k: v for k, v in e.items() if k != "bytes"} for e in entries]
     assert _total_bytes(spark, table, stripped) == want
+
+
+def _race(n: int, attempt) -> list[int]:
+    """Run ``attempt(i)`` for i in range(n) on n threads released together
+    by a barrier; the indexes whose attempt returned True."""
+    import threading
+
+    barrier = threading.Barrier(n, timeout=60)
+    wins = []
+
+    def run(i):
+        barrier.wait()
+        if attempt(i):
+            wins.append(i)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+        assert not t.is_alive()
+    return wins
+
+
+def test_local_rename_and_create_new_have_one_winner(spark, tmp_path):
+    """The manifest CAS and the writer lease rest on these two calls. Four
+    threads released by a barrier race one target name, 200 times: on the
+    local filesystem exactly one rename and exactly one create-if-absent
+    may win every time, and the winner's payload is the one that stays."""
+    from endtoend_etl_openmeteo_spark import fsio
+
+    for trial in range(200):
+        srcs = [str(tmp_path / f"s{trial}_{i}") for i in range(4)]
+        for i, src in enumerate(srcs):
+            fsio.write_bytes(spark, src, b"%d" % i)
+        dst = str(tmp_path / f"r{trial}")
+        wins = _race(4, lambda i: fsio.rename(spark, srcs[i], dst))
+        assert len(wins) == 1, (trial, wins)
+        assert fsio.read_bytes(spark, dst) == b"%d" % wins[0]
+        lock = str(tmp_path / f"c{trial}")
+        wins = _race(4, lambda i: fsio.create_new(spark, lock, b"%d" % i))
+        assert len(wins) == 1, (trial, wins)
+        assert fsio.read_bytes(spark, lock) == b"%d" % wins[0]
+
+
+def test_racing_append_commits_both_land(spark, table, monkeypatch):
+    """Two appends whose manifest commits are released together by a
+    barrier in front of the real rename, 25 times over: each time one
+    wins the version slot and the other rebases onto it, so every row of
+    both lands. A rename that checks and then replaces would let both
+    commits take the slot and one batch vanish."""
+    import threading
+
+    from endtoend_etl_openmeteo_spark import fsio
+
+    real_rename = fsio.rename
+    armed: dict[str, threading.Barrier] = {}
+
+    def gated(spark_, src, dst):
+        gate = armed.pop(threading.current_thread().name, None)
+        if gate is not None and "/_manifests/v" in str(dst):
+            gate.wait()
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsio, "rename", gated)
+    errors = []
+
+    def run(lo):
+        try:
+            vt_append(spark, _df(spark, lo, lo + 1), table)
+        except Exception as e:  # pragma: no cover - fail loudly below
+            errors.append(e)
+
+    for trial in range(25):
+        barrier = threading.Barrier(2, timeout=60)
+        threads = []
+        for j in range(2):
+            name = f"racer-{trial}-{j}"
+            armed[name] = barrier
+            threads.append(
+                threading.Thread(target=run, args=(2 * trial + j,), name=name)
+            )
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+            assert not t.is_alive()
+    assert not errors, errors
+    assert sorted(r.id for r in vt_read(spark, table).collect()) == list(range(50))
+    assert latest_version(spark, table) == 50
+
+
+def _meta_ops():
+    from pyspark.sql import functions as F
+
+    from endtoend_etl_openmeteo_spark.operators import versioned as vt
+
+    def cdc(spark, table):
+        changes = _df(spark, 3, 5).withColumn("change_type", F.lit("update"))
+        return vt.vt_apply_cdc(spark, changes, table, keys=["id"])
+
+    return {
+        "append": lambda spark, t: vt.vt_append(spark, _df(spark, 10, 12), t),
+        "overwrite": lambda spark, t: vt.vt_overwrite(spark, _df(spark, 0, 3), t),
+        "merge": lambda spark, t: vt.vt_merge(
+            spark, _df(spark, 5, 12), t, keys=["id"], order_col="v"
+        ),
+        "merge_mor": lambda spark, t: vt.vt_merge_mor(
+            spark, _df(spark, 5, 12), t, keys=["id"], order_col="v"
+        ),
+        "cdc_apply": cdc,
+        "delete": lambda spark, t: vt.vt_delete(spark, t, F.col("id") < 3),
+        "delete_mor": lambda spark, t: vt.vt_delete_mor(spark, t, F.col("id") < 3),
+        "compact": lambda spark, t: vt.vt_compact(spark, t),
+        "optimize": lambda spark, t: vt.vt_optimize(spark, t, ["id"]),
+        "rename": lambda spark, t: vt.vt_rename_column(spark, t, "v", "w"),
+        "append_epoch": lambda spark, t: vt.vt_append_epoch(
+            spark, _df(spark, 10, 12), t, "run", 0
+        ),
+        "overwrite_epoch": lambda spark, t: vt.vt_overwrite_epoch(
+            spark, _df(spark, 0, 5), t, "run", 0
+        ),
+        "merge_mor_epoch": lambda spark, t: vt.vt_merge_mor_epoch(
+            spark, _df(spark, 5, 12), t, "run", 0, keys=["id"], order_col="v"
+        ),
+        "merge_mor_epoch_noop": lambda spark, t: vt.vt_merge_mor_epoch(
+            spark, _df(spark, 0, 0), t, "run", 0, keys=["id"]
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_meta_ops()))
+def test_commits_carry_the_parent_meta_unchanged(spark, table, op):
+    """A manifest's ``meta`` (a stored BM25 index's corpus stats) is set
+    only by a writer given a ``meta`` function; every other commit made
+    from a parent snapshot carries it forward unchanged."""
+    vt_overwrite(
+        spark, _df(spark, 0, 10), table, stats_cols=["id"], meta=lambda _: {"k": 1}
+    )
+    before = latest_version(spark, table)
+    _meta_ops()[op](spark, table)
+    after = latest_version(spark, table)
+    assert after > before
+    assert read_manifest(spark, table, after, resolve=False)["meta"] == {"k": 1}
+
+
+def test_meta_functions_apply_to_the_parent_meta(spark, table):
+    """``vt_overwrite``, ``vt_append`` and ``vt_delete_mor`` derive the new
+    snapshot's meta from the parent's; a delete that matches nothing still
+    commits its meta."""
+    from pyspark.sql import functions as F
+
+    from endtoend_etl_openmeteo_spark.operators.versioned import vt_delete_mor
+
+    def meta():
+        return read_manifest(spark, table, latest_version(spark, table), resolve=False)[
+            "meta"
+        ]
+
+    vt_overwrite(spark, _df(spark, 0, 4), table, meta=lambda m: {"n": 4})
+    vt_append(spark, _df(spark, 4, 6), table, meta=lambda m: {"n": m["n"] + 2})
+    assert meta() == {"n": 6}
+    vt_delete_mor(spark, table, F.col("id") < 1, meta=lambda m: {"n": m["n"] - 1})
+    assert meta() == {"n": 5}
+    v = latest_version(spark, table)
+    vt_delete_mor(spark, table, F.col("id") > 99, meta=lambda m: {"n": m["n"] - 1})
+    assert latest_version(spark, table) == v + 1 and meta() == {"n": 4}
+    assert sorted(r.id for r in vt_read(spark, table).collect()) == [1, 2, 3, 4, 5]
